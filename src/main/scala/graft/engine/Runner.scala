@@ -56,7 +56,7 @@ class Runner(spark: SparkSession, journal: Journal,
       val started = clock()
       val (status, result) =
         try { val r = job.fn(spark); ("SUCCEED", String.valueOf(r)) }
-        catch { case e: Exception => ("FAILED", String.valueOf(e.getMessage)) }
+        catch { case e: Exception => ("FAILED", Runner.describe(e)) }
         // a job's terminal action is inside fn by contract, so this IS the
         // materialization boundary: release engine-owned operator pins
         // (graft.Pins) or a ticking scheduler stacks MEMORY_AND_DISK
@@ -66,25 +66,6 @@ class Runner(spark: SparkSession, journal: Journal,
       journal.save(ExecutionRecord(job.name, started, clock(), result, status))
       job.name -> status
     }
-
-  /** Scheduler loop, reference tick = 1 minute
-    * (reference: InterpreterLoader.scala:25,127-131). Bounded for testability;
-    * stops early if any job throws a Throwable-valued result? No — the
-    * reference stops when the *entrance script* returns a Throwable; here a
-    * `stop` predicate generalizes that.
-    */
-  def loop(ticks: Int, tickMs: Long = 60000L,
-      stop: Seq[(String, String)] => Boolean = _ => false): Int = {
-    var i = 0
-    var halted = false
-    while (i < ticks && !halted) {
-      val results = runOnce()
-      halted = stop(results)
-      i += 1
-      if (i < ticks && !halted) Thread.sleep(tickMs)
-    }
-    i
-  }
 }
 
 /** Mtime-keyed hot reload of script jobs
@@ -114,8 +95,6 @@ class ScriptJobs[T](compile: String => T, mtimeOf: String => Long,
     }
   }
 
-  def cachedPaths: Seq[String] = cache.keys.toSeq.sorted
-
   /** Close every cached Closeable instance and drop the cache — the
     * shutdown-hook path (reference closes instances on replacement only;
     * engine TERM handling needs the same cleanup for all of them).
@@ -127,4 +106,15 @@ class ScriptJobs[T](compile: String => T, mtimeOf: String => Long,
     })
     cache.clear()
   }
+}
+
+object Runner {
+  /** A failure's journal text: each throwable's class and message
+    * (`Throwable.toString`) along its cause chain, outermost first — an
+    * NPE without a message still names its class, where `getMessage`
+    * alone would read "null". At most 16 links, so a cyclic chain ends.
+    */
+  private[engine] def describe(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
+      .map(_.toString).mkString(" <- caused by: ")
 }

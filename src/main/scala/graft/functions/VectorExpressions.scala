@@ -217,13 +217,13 @@ case class DotInt(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Packs `array<int>` int8 codes (each in [-128, 127], as produced by
-  * [[QuantizeInt8]]) into a `binary` column — one byte per coordinate, so
-  * the stored/shuffled/cached corpus really is 4× smaller than `array<int>`
-  * (whose on-wire layout is 4 bytes per element plus array headers).
-  * Write-side compaction: quantize → pack once, then every scan moves a
-  * quarter of the bytes; [[DotInt8Packed]] scores the packed codes
-  * directly, so they are never unpacked into arrays at query time.
+/** Packs `array<int>` small-integer codes (each in [-128, 127] — int8
+  * codes from [[QuantizeInt8]], or PQ entry ids from `Similarity.pqPack`)
+  * into a `binary` column — one byte per element, so the stored/shuffled/
+  * cached codes really are 4× smaller than `array<int>` (whose on-wire
+  * layout is 4 bytes per element plus array headers). [[PqAdcPacked]]
+  * scores packed PQ codes directly, so they are never unpacked into
+  * arrays at query time.
   */
 case class PackInt8(child: Expression)
     extends UnaryExpression with ExpectsInputTypes {
@@ -260,53 +260,6 @@ case class PackInt8(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-/** Exact integer dot product of two packed int8 `binary` code vectors —
-  * the packed-storage counterpart of [[DotInt]]: same long accumulation,
-  * identical result on codes that round-trip through [[PackInt8]]. Returns
-  * null on length mismatch.
-  */
-case class DotInt8Packed(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(org.apache.spark.sql.types.BinaryType, org.apache.spark.sql.types.BinaryType)
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "dot_int8_packed"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[Array[Byte]]
-    val y = b.asInstanceOf[Array[Byte]]
-    if (x.length != y.length) return null
-    var dot = 0L
-    var i = 0
-    while (i < x.length) { dot += x(i).toLong * y(i).toLong; i += 1 }
-    dot
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      s"""
-         |if ($x.length != $y.length) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long $dot = 0L;
-         |  for (int $i = 0; $i < $x.length; $i++) {
-         |    $dot += ((long) $x[$i]) * ((long) $y[$i]);
-         |  }
-         |  ${ev.value} = $dot;
-         |}
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** ADC (asymmetric distance computation) scoring of a packed PQ code
@@ -490,13 +443,6 @@ object VectorFunctions {
   /** Pack int8 codes into a binary column (see [[PackInt8]]). */
   def packInt8(codes: Column): Column =
     ExpressionUtils.column(PackInt8(ExpressionUtils.expression(codes)))
-
-  /** Exact integer dot product of two packed binary code columns (see
-    * [[DotInt8Packed]]).
-    */
-  def dotInt8Packed(a: Column, b: Column): Column =
-    ExpressionUtils.column(
-      DotInt8Packed(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
 
   /** ADC score of a packed PQ code against a flattened per-query LUT (see
     * [[PqAdcPacked]]).

@@ -74,95 +74,39 @@ object Bpe {
 
   /** Learns `numMerges` merges from a [[wordCounts]] dictionary, one per
     * dictionary pass — exact classic BPE (ties → lexicographically smallest,
-    * for engine-independent determinism). Delegates to [[trainBpeBatched]]
-    * with `batch = 1`; use a larger batch for production vocabulary sizes
-    * (30k–50k merges), where one Spark job per merge is days of scheduler
-    * overhead regardless of cluster size.
-    */
-  def trainBpe(dict0: DataFrame, numMerges: Int): Seq[(String, String)] =
-    trainBpeBatched(dict0, numMerges, batch = 1)
-
-  /** Batched BPE training: each dictionary pass counts adjacent pairs ONCE
-    * (one small agg job), then learns up to `batch` merges from that single
-    * snapshot — the top pairs by (count desc, l, r) that are pairwise
-    * SYMBOL-DISJOINT (no shared l/r symbols, and no pair uses another's
-    * merged `l+r` output). Disjointness makes the snapshot exact for every
-    * selected pair — none of the batch's earlier merges can change a later
-    * member's occurrences — so applying the batch in rank order in one
-    * stacked rewrite is identical to applying those same merges one pass
-    * each. This is the classic batched-BPE trade (what production trainers
-    * do to avoid a counting round per merge): jobs drop ~batch×, and the
-    * deviations from strict sequential BPE are ORDERING ones, two ways:
-    * across batches, a merge can CREATE a new pair (e.g. `(x, l+r)`) whose
-    * count exceeds a later batch member's, which strict BPE would learn
-    * first; and within a batch, a skipped non-disjoint pair (it shared a
-    * symbol with a higher-ranked member) may still outrank the remaining
-    * members under strict BPE if its post-merge count stays high — the
-    * snapshot exactness claim above covers the SELECTED pairs' counts, not
-    * the skipped pair's rank. At `batch = 1` the algorithm is exactly
-    * sequential.
+    * for engine-independent determinism). Each pass is one small pair-count
+    * job over the dictionary, so this is the reference trainer, not the
+    * production one: at production vocabulary sizes (30k–50k merges) one
+    * Spark job per merge is days of scheduler overhead regardless of
+    * cluster size — use [[trainBpeLocal]], which learns the same merges.
     *
     * The dictionary is localCheckpointed every few applied merges so plan
     * depth stays O(1). Stops early when no pair is left. Returns the ranked
     * merge table — driver-sized (≤ numMerges rows) by construction.
     */
-  def trainBpeBatched(dict0: DataFrame, numMerges: Int, batch: Int)
-      : Seq[(String, String)] = {
-    require(batch >= 1, s"batch must be >= 1, got $batch")
+  def trainBpe(dict0: DataFrame, numMerges: Int): Seq[(String, String)] = {
     var dict = dict0.select(col("n"), col("syms")).localCheckpoint()
     val merges = Seq.newBuilder[(String, String)]
     var learned = 0
     var done = false
-    var pendingMerges = 0
     while (learned < numMerges && !done) {
-      val want = math.min(batch, numMerges - learned)
-      // over-collect so the disjointness filter can still fill the batch;
-      // driver-sized by construction (a few × batch rows)
       val top = pairCounts(dict)
         .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(math.max(4 * want, 16))
+        .limit(1)
         .collect()
       if (top.isEmpty) done = true
       else {
-        val sel = selectDisjoint(
-          top.map(r => (r.getString(0), r.getString(1))).toSeq, want)
-        merges ++= sel // never empty: the top-1 row always passes
-        learned += sel.length
-        sel.foreach { case (l, r) =>
-          dict = dict.withColumn("syms", mergeOnce(col("syms"), l, r))
-        }
+        val (l, r) = (top(0).getString(0), top(0).getString(1))
+        merges += ((l, r))
+        learned += 1
+        dict = dict.withColumn("syms", mergeOnce(col("syms"), l, r))
         // checkpoint every few merges, not every merge: a handful of
         // stacked fold projections over the dictionary is cheaper than a
         // materialization job per iteration, while plan depth stays O(1)
-        pendingMerges += sel.length
-        if (pendingMerges >= 4) {
-          dict = dict.localCheckpoint()
-          pendingMerges = 0
-        }
+        if (learned % 4 == 0) dict = dict.localCheckpoint()
       }
     }
     merges.result()
-  }
-
-  /** Greedy prefix of `ranked` (already sorted by priority) whose members
-    * are pairwise symbol-disjoint: no shared l/r symbols, and no member
-    * uses another's merged `l+r` output. Keeps at most `want`.
-    */
-  private[operators] def selectDisjoint(ranked: Seq[(String, String)],
-      want: Int): Seq[(String, String)] = {
-    val used = scala.collection.mutable.Set.empty[String]
-    val picked = Seq.newBuilder[(String, String)]
-    var n = 0
-    val it = ranked.iterator
-    while (it.hasNext && n < want) {
-      val (l, r) = it.next()
-      if (!used(l) && !used(r) && !used(l + r)) {
-        picked += ((l, r))
-        used ++= Seq(l, r, l + r)
-        n += 1
-      }
-    }
-    picked.result()
   }
 
   /** EXACT sequential BPE at production vocabulary sizes: one Spark job
@@ -175,8 +119,7 @@ object Bpe {
     * so a 50k-merge vocabulary costs no scheduler round-trips at all.
     * Semantics are identical to [[trainBpe]] (same (count desc, l, r)
     * tie-break, same greedy left-to-right pass); BpeSpec asserts the
-    * equivalence. Use [[trainBpeBatched]] only when the dictionary itself
-    * exceeds driver memory.
+    * equivalence.
     */
   def trainBpeLocal(dict0: DataFrame, numMerges: Int): Seq[(String, String)] = {
     val rows = dict0.select(col("n"), col("syms")).collect()

@@ -505,8 +505,9 @@ object Diagnostics {
     *
     * One partial-aggregated groupBy over the key (the same shuffle the
     * prospective join would pay on its small side) plus a driver-sized
-    * top-N. Use [[graft.functions.HeavyHitters]] instead when even one
-    * exact pass is too much and an approximate answer steers the decision.
+    * top-N. Use [[graft.functions.FrequencySketch.mgTopK]] instead when
+    * even one exact pass is too much and an approximate answer steers the
+    * decision.
     * Output: (key, cnt, share, salt_factor), heaviest first.
     */
   def skewReport(df: DataFrame, key: Column, topN: Int = 20,

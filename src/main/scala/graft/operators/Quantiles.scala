@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{NumericType, TimestampNTZType, TimestampType}
 
 /** Distributed exact discrete quantiles — the scale-safe twin of Spark's
   * `percentile_disc` aggregate.
@@ -39,8 +40,9 @@ import org.apache.spark.sql.functions._
   * casts (long -> double above 2^53 loses the same bits in both).
   *
   * Caveats (documented, not load-bearing for any current caller):
-  * - All spec'd value columns must share one numeric type (the melt is
-  *   monomorphic).
+  * - All spec'd value columns must share one numeric or timestamp type
+  *   (the melt is monomorphic, and bucket placement casts to double, which
+  *   preserves order only for those types); anything else is refused.
   * - DOUBLE inputs containing BOTH -0.0 and +0.0 can differ in sign of a
   *   zero pick: groupBy normalizes -0.0 == +0.0 into one count while the
   *   OpenHashMap keeps boxed -0.0 distinct. No engine-table column carries
@@ -105,6 +107,16 @@ object Quantiles {
     val vTypes = valCols.map(c => df.schema(c).dataType).distinct
     require(vTypes.size == 1,
       s"discPicks value columns must share one type, got $vTypes")
+    // buckets are placed by the value's double cast, which is
+    // order-monotonic only for numeric and timestamp types
+    val castMonotonic = vTypes.head match {
+      case _: NumericType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    require(castMonotonic,
+      s"discPicks value columns must be numeric or timestamp, got ${vTypes.head}")
+    // the NaN bucket is nb + 1, so nb must leave room above it
+    require(buckets < Int.MaxValue, s"buckets must be < Int.MaxValue, got $buckets")
 
     // melt to (grp..., __w, __v): one row per (input row, value column),
     // nulls dropped (percentile_disc skips null child values) — EXCEPT the

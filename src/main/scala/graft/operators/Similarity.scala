@@ -235,41 +235,6 @@ object Similarity {
         col("cos").cast("long").as("dot"))
   }
 
-  /** Write-side compaction for the quantized scan: (vec_id, code binary) —
-    * int8 codes packed one byte per coordinate, 4× smaller than the
-    * `array<int>` form on disk, in shuffles and in cache. Persist this once
-    * (parquet binary column), then run [[quantizedTopKPacked]] scans
-    * against it without ever re-reading the float embeddings.
-    */
-  def quantizePacked(df: DataFrame): DataFrame =
-    df.select(col("vec_id"),
-      VectorFunctions.packInt8(
-        VectorFunctions.quantizeInt8(col("embedding"))).as("code"))
-
-  /** [[quantizedTopK]] over packed binary codes: identical ranking and dot
-    * values (PackInt8 is lossless on ±127 codes; DotInt8Packed accumulates
-    * the same longs), but the corpus side moves 1/4 the bytes — at 10⁹+
-    * vectors the scan is memory-bandwidth-bound, so the packing IS the
-    * speedup. Accepts either raw embeddings (quantizes+packs inline) or
-    * pre-packed (vec_id, code) frames from [[quantizePacked]].
-    */
-  def quantizedTopKPacked(queries: DataFrame, corpus: DataFrame, k: Int,
-      includeSelf: Boolean = false): DataFrame = {
-    def packed(df: DataFrame, idOut: String, codeOut: String) =
-      (if (df.columns.contains("code")) df.select(col("vec_id"), col("code"))
-       else quantizePacked(df))
-        .select(col("vec_id").as(idOut), col("code").as(codeOut))
-    val q = broadcast(packed(queries, "query_id", "qc"))
-    val c = packed(corpus, "neighbor_id", "cc")
-    val scored = c.join(q,
-        if (includeSelf) lit(true) else col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.dotInt8Packed(col("qc"), col("cc")).cast("double").as("cos"))
-    topKPerQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cos").cast("long").as("dot"))
-  }
-
   /** Johnson–Lindenstrauss projection of an embedding column to `outDims`
     * (content-addressed ±1 matrix — no codebook to train or distribute; see
     * [[org.apache.spark.sql.graft.JlProject]]). The dimensionality-reduction
@@ -357,83 +322,11 @@ object Similarity {
     array_union(array(bucket),
       array((0 until bits).map(j => bucket.bitwiseXOR(lit(1L << j))): _*))
 
-  /** IVF-Flat approximate top-k: a deterministic coarse quantizer (every
-    * `centroidEvery`-th corpus vector by id acts as a centroid — content-
-    * independent and reproducible, where k-means would make the oracle
-    * irreproducible), corpus vectors assigned to their nearest centroid's
-    * cell, queries probing the `nprobe` nearest cells and rescoring exactly
-    * inside them.
-    *
-    * Scale shape: centroids broadcast (tiny), assignment is map-side, the
-    * only shuffle is the cell-keyed candidate join — each query touches
-    * nprobe/centroids of the corpus. Swap the modulus sampler for trained
-    * centroids without touching the plan.
-    *
-    * `maxCentroids` caps the cell count at a FIXED size (default 128,
-    * like real IVF's fixed nlist): an uncapped modulus sampler grows C
-    * with the corpus (C = n/centroidEvery) and assignment becomes
-    * n×C = n²/centroidEvery — measured super-linear in the stress harness
-    * (905 s at stress ×64 pre-cap). The cap takes the FIRST `maxCentroids`
-    * pmod-selected ids in `vec_id` order, so it is deterministic,
-    * oracle-replayable (`ORDER BY vec_id LIMIT maxCentroids`), and —
-    * unlike a `vec_id < centroidEvery*maxCentroids` range predicate —
-    * correct for corpora whose ids do NOT start at 0: any corpus
-    * containing at least one multiple of `centroidEvery` yields a
-    * non-empty centroid set (and an empty selection now fails loudly
-    * instead of silently returning zero neighbors). Cells then grow with
-    * n at fixed C — each query still touches nprobe/C of the corpus,
-    * which is how production IVF scales. [[trainCentroids]] remains the
-    * content-adaptive quantizer (tighter cells → fewer probes at equal
-    * recall).
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      centroidEvery: Long = 50, nprobe: Int = 2,
-      maxCentroids: Int = 128): DataFrame =
-    ivfTopKWith(queries, corpus,
-      modulusCentroids(corpus, centroidEvery, maxCentroids), k, nprobe)
-
-  /** First `maxCentroids` corpus vectors whose id is a multiple of
-    * `centroidEvery`, in `vec_id` order, as a `(cid, cv)` centroid frame.
-    * The cutoff id comes from [[selectionBound]] (one tiny scalar job), so
-    * the frame itself is a plain `pmod = 0 AND vec_id <= bound` filter —
-    * the bound is a LITERAL, so the parquet scan prunes on it
-    * (PushedFilters) and every re-execution of this subplan (it feeds two
-    * broadcast exchanges in [[ivfTopKWith]]) stays a pruned scan rather
-    * than a full-corpus sort: a naive `orderBy.limit` selection here
-    * measured +75% on `sim_pq_topk` at stress ×16 purely from losing
-    * pushdown on the re-executed subplan.
-    */
-  private def modulusCentroids(corpus: DataFrame, centroidEvery: Long,
-      maxCentroids: Int): DataFrame = {
-    val bound = selectionBound(corpus, centroidEvery, maxCentroids)
-    corpus.filter(pmod(col("vec_id"), lit(centroidEvery)) === 0 &&
-        col("vec_id") <= bound)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-  }
-
-  /** The `max`-th smallest corpus id divisible by `every` (or the largest
-    * such id when fewer exist), computed once as a driver-side scalar from
-    * a column-pruned top-k job — the id-offset-robust replacement for the
-    * old dense-id `< every * max` bound. Fails loudly when NO id is
-    * divisible by `every` (the silent-empty-result footgun this selection
-    * family had pre-round-8).
-    */
-  private def selectionBound(corpus: DataFrame, every: Long, max: Int): Long = {
-    val rows = corpus.select(col("vec_id"))
-      .filter(pmod(col("vec_id"), lit(every)) === 0)
-      .orderBy(col("vec_id")).limit(max)
-      .agg(org.apache.spark.sql.functions.max(col("vec_id"))).collect()
-    require(rows.nonEmpty && !rows(0).isNullAt(0),
-      s"no vec_id divisible by $every — the modulus quantizer selection " +
-        "is empty; lower the sampling interval or use a trained quantizer")
-    rows(0).getLong(0)
-  }
-
   /** Trained coarse quantizer for IVF: seeded k-means|| over the corpus
     * embeddings, returned as a `(cid, cv)` centroid frame for
-    * [[ivfTopKWith]]. The deterministic modulus sampler in [[ivfTopK]] stays
-    * the oracle-reproducible default; trained centroids are the production
-    * path — tighter cells mean fewer probes for the same recall. Training
+    * [[ivfTopKWith]]. The registry's oracle-reproducible quantizer is the
+    * pinned output of this trainer (`PinnedArtifacts.IvfCentroids16`);
+    * tighter cells mean fewer probes for the same recall. Training
     * cost is MLlib's k-means|| (a handful of passes over the corpus); the
     * result is tiny (k × dims) and broadcasts like any centroid set.
     */
@@ -452,8 +345,17 @@ object Similarity {
       .toSeq.toDF("cid", "cv")
   }
 
-  /** IVF-Flat with an explicit centroid set (`cid`, `cv: array<float>`) —
-    * from [[trainCentroids]] or any external quantizer.
+  /** IVF-Flat approximate top-k over an explicit centroid set (`cid`,
+    * `cv: array<float>`) — from [[trainCentroids]], a pinned literal table
+    * or any external quantizer: corpus vectors are assigned to their
+    * nearest centroid's cell, queries probe the `nprobe` nearest cells and
+    * rescore exactly inside them.
+    *
+    * Scale shape: centroids broadcast (tiny, FIXED count — a quantizer is
+    * a model and must not grow with the corpus, or assignment turns n×C
+    * quadratic), assignment is map-side, the only shuffle is the
+    * cell-keyed candidate join — each query touches nprobe/C of the
+    * corpus.
     */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
       k: Int, nprobe: Int = 2): DataFrame = {
@@ -497,8 +399,7 @@ object Similarity {
     * embeddings: the vector is split into `m` equal subspaces, and entry
     * `e` of EVERY subspace is the corresponding slice of the int8 code of
     * corpus vector `vec_id = e * entryEvery` — content-independent and
-    * SQL-replayable, the PQ analogue of [[ivfTopK]]'s modulus-sampled
-    * centroids (k-means sub-codebooks would make the oracle
+    * SQL-replayable (k-means sub-codebooks would make the oracle
     * irreproducible; see [[pqCodebookTrained]] for the production
     * quantizer). Returns `(sub, entry, scode: array<int>)` — m × J rows,
     * tiny, always broadcast.
@@ -511,12 +412,13 @@ object Similarity {
     * `maxEntries` caps the codebook at a FIXED size (default 128, so
     * entry ids pack one byte per subspace): a codebook is a model, and
     * letting J track the corpus (J = n/entryEvery) made encode-side
-    * assignment n×m×J = quadratic in n — the same pathology as
-    * [[ivfTopK]]'s modulus centroids, but here it is avoidable without
-    * losing SQL replayability. The cap takes the FIRST `maxEntries`
-    * pmod-selected vectors in `vec_id` order — via [[selectionBound]]'s
-    * literal cutoff, so the selection scan stays pushdown-pruned on every
-    * re-execution (see [[modulusCentroids]]) — and assigns entry ids by
+    * assignment n×m×J = quadratic in n. The cap takes the FIRST
+    * `maxEntries` pmod-selected vectors in `vec_id` order — via
+    * [[selectionBound]]'s literal cutoff, so the parquet scan prunes on it
+    * (PushedFilters) and every re-execution of the codebook subtree (one
+    * per consumer: encode and LUT) stays a pruned scan rather than a
+    * full-corpus sort (a naive `orderBy.limit` selection measured +75% on
+    * `sim_pq_topk` at stress ×16) — and assigns entry ids by
     * RANK in that order (0..J−1, dense by construction — the packed
     * one-byte-per-subspace layout requires it) rather than
     * `vec_id div entryEvery`, so corpora whose ids do not start at 0
@@ -536,6 +438,24 @@ object Similarity {
           .as("entry"),
         VectorFunctions.quantizeInt8(col("embedding")).as("code"))
     subSplit(sel, m).select(col("sub"), col("entry"), col("scode"))
+  }
+
+  /** The `max`-th smallest corpus id divisible by `every` (or the largest
+    * such id when fewer exist), computed once as a driver-side scalar from
+    * a column-pruned top-k job — the id-offset-robust replacement for the
+    * old dense-id `< every * max` bound. Fails loudly when NO id is
+    * divisible by `every` (the silent-empty-result footgun this selection
+    * family had pre-round-8).
+    */
+  private def selectionBound(corpus: DataFrame, every: Long, max: Int): Long = {
+    val rows = corpus.select(col("vec_id"))
+      .filter(pmod(col("vec_id"), lit(every)) === 0)
+      .orderBy(col("vec_id")).limit(max)
+      .agg(org.apache.spark.sql.functions.max(col("vec_id"))).collect()
+    require(rows.nonEmpty && !rows(0).isNullAt(0),
+      s"no vec_id divisible by $every — the modulus quantizer selection " +
+        "is empty; lower the sampling interval or use a trained quantizer")
+    rows(0).getLong(0)
   }
 
   /** Trained PQ codebook: an independent seeded k-means per subspace over
@@ -614,7 +534,7 @@ object Similarity {
     * m bytes vs 4·dims for `array<int>` int8 codes vs 4·dims for float32:
     * at dims=64, m=8 that is a 32× compression of the corpus — the reason
     * PQ is the standard 10⁹⁺-vector ANN representation. Persist once;
-    * [[pqTopKPacked]] scans it without ever reconstructing vectors.
+    * [[ivfPqTopKWith]] scans it without ever reconstructing vectors.
     */
   def pqPack(codes: DataFrame): DataFrame =
     codes.groupBy(col("vec_id"))
@@ -649,9 +569,10 @@ object Similarity {
     * arithmetic end to end. Returns (query_id, neighbor_id, rank, adc).
     *
     * This relational form (exploded codes ⋈ exploded LUT rows, long-sum
-    * per pair) exists to be DuckDB-replayable; [[pqTopKPacked]] is the
-    * byte-identical scale form (binary codes, native scoring expression,
-    * no per-subspace rows at all).
+    * per pair) exists to be DuckDB-replayable; [[ivfPqTopKWith]] with every
+    * cell probed is the byte-identical scale form (binary codes, native
+    * scoring expression, no per-subspace rows at all — specs assert the
+    * equality).
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, m: Int = 8,
       entryEvery: Long = 25, includeSelf: Boolean = false): DataFrame =
@@ -683,65 +604,26 @@ object Similarity {
         col("cos").cast("long").as("adc"))
   }
 
-  /** [[pqTopK]] over packed codes: identical ranks and adc values (specs
-    * assert equality), but the corpus side is m bytes per vector and the
-    * scoring is one native [[org.apache.spark.sql.graft.PqAdcPacked]]
-    * lookup loop inside whole-stage codegen — no join on (sub, entry), no
-    * n×m row explosion, no long-sum aggregation. The scan shape matches
-    * [[quantizedTopKPacked]]: broadcast the per-query LUTs, stream the
-    * packed corpus, bounded partial top-k.
-    */
-  def pqTopKPacked(queries: DataFrame, corpus: DataFrame, k: Int, m: Int = 8,
-      entryEvery: Long = 25, includeSelf: Boolean = false): DataFrame =
-    pqTopKPackedWith(queries, corpus, pqCodebook(corpus, m, entryEvery), k, m,
-      includeSelf)
-
-  /** [[pqTopKPacked]] with an explicit codebook — see [[pqTopKWith]]. */
-  def pqTopKPackedWith(queries: DataFrame, corpus: DataFrame,
-      codebook: DataFrame, k: Int, m: Int,
-      includeSelf: Boolean = false): DataFrame = {
-    val cb = codebook
-    val packed = pqPack(pqEncode(corpus, cb, m))
-      .select(col("vec_id").as("neighbor_id"), col("pqcode"))
-    val luts = broadcast(pqLut(queries.select(col("vec_id"), col("embedding")), cb, m))
-    val scored = packed.join(luts,
-        if (includeSelf) lit(true) else col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.pqAdcPacked(col("pqcode"), col("lut")).cast("double").as("cos"))
-    topKPerQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cos").cast("long").as("adc"))
-  }
-
-  /** IVF-PQ: the coarse quantizer prunes the scan to `nprobe` cells per
-    * query and PQ-ADC scores the survivors from their m-byte codes — the
-    * standard composition for 10⁹⁺-vector corpora (public FAISS design;
-    * this is the `by_residual=false` variant: codes encode the vectors
-    * themselves, not cell residuals, which keeps every score in the exact
+  /** IVF-PQ with explicit centroids (`cid`, `cv`) and PQ codebook (`sub`,
+    * `entry`, `scode`) — from [[pqCodebook]], the trained quantizers
+    * ([[trainCentroids]], [[pqCodebookTrained]]) or pinned literal tables.
+    * The coarse quantizer prunes the scan to `nprobe` cells per query and
+    * PQ-ADC scores the survivors from their m-byte codes — the standard
+    * composition for 10⁹⁺-vector corpora (public FAISS design; this is
+    * the `by_residual=false` variant: codes encode the vectors themselves,
+    * not cell residuals, which keeps every score in the exact
     * long-arithmetic ADC contract — residual encoding would need a
-    * magnitude-preserving re-quantization that breaks it).
+    * magnitude-preserving re-quantization that breaks it). Probing every
+    * cell reproduces [[pqTopKWith]] exactly.
     *
     * Scale shape: centroids and codebook broadcast; cell assignment and PQ
     * encoding are one-time map-side passes over the corpus (persist the
     * `(neighbor_id, cid, pqcode)` frame — m bytes + 12 per vector); at
     * query time the probe set and LUTs broadcast, each query touches
-    * ~nprobe/C of the corpus, and scoring is the native lookup loop. The
-    * only corpus-sized exchange anywhere is the encode's n×m-row min_by
-    * partial agg, paid once at build time.
-    */
-  def ivfPqTopK(queries: DataFrame, corpus: DataFrame, k: Int, m: Int = 8,
-      entryEvery: Long = 25, centroidEvery: Long = 50, nprobe: Int = 2,
-      includeSelf: Boolean = false, maxCentroids: Int = 128): DataFrame =
-    ivfPqTopKWith(queries, corpus,
-      // same fixed-size cap as ivfTopK/pqCodebook: both the coarse cells
-      // and the codebook are MODELS — neither may grow with the corpus,
-      // or assignment turns quadratic (232 s at stress ×64 pre-cap)
-      modulusCentroids(corpus, centroidEvery, maxCentroids),
-      pqCodebook(corpus, m, entryEvery), k, m, nprobe, includeSelf)
-
-  /** [[ivfPqTopK]] with explicit centroids (`cid`, `cv`) and PQ codebook
-    * (`sub`, `entry`, `scode`) — from the deterministic samplers or the
-    * trained quantizers ([[trainCentroids]], [[pqCodebookTrained]]).
+    * ~nprobe/C of the corpus, and scoring is the native
+    * [[org.apache.spark.sql.graft.PqAdcPacked]] lookup loop. The only
+    * corpus-sized exchange anywhere is the encode's n×m-row min_by partial
+    * agg, paid once at build time.
     */
   def ivfPqTopKWith(queries: DataFrame, corpus: DataFrame,
       centroids: DataFrame, codebook: DataFrame, k: Int, m: Int,

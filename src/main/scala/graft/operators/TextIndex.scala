@@ -955,9 +955,10 @@ object TextIndex {
     * the same query-term posting subplan the candidates use and the total
     * token count folds over the dl dim instead of re-aggregating the
     * postings, so the plan holds three (doc, term) posting aggregations
-    * over narrow 2-column scans plus a column-less count — measured in
-    * `graft.tools.PlanProbe`: AQE does NOT currently fuse the identical
-    * posting exchanges across the branches, so at an extreme corpus the
+    * over narrow 2-column scans plus a column-less count. AQE does NOT
+    * currently fuse the identical posting exchanges across the branches
+    * (the executed plan — `df.explain("formatted")` after an action —
+    * shows no ReusedExchange for them), so at an extreme corpus the
     * further step is materializing `postings` once (the production move
     * is a persisted inverted index anyway — see [[postingsIncremental]]).
     */
@@ -967,8 +968,9 @@ object TextIndex {
     val src = df.select(id.as("__id"), text.as("__text"))
     val nDim = src.agg(count(lit(1)).as("__n"))
     // Two inline-build optimizations over the naive postings() feed, both
-    // exact (AQE does not fuse identical posting exchanges —
-    // PlanProbe-verified — so every avoided aggregation is real):
+    // exact (AQE does not fuse identical posting exchanges — no
+    // ReusedExchange in the executed plan — so every avoided aggregation
+    // is real):
     // 1. the query-term prune is pushed BELOW the posting aggregation:
     //    tokens semi-join the broadcast term set before the (doc, term)
     //    count, so the aggregation and its exchange carry query-term
@@ -1033,14 +1035,15 @@ object TextIndex {
     // Pin the two SMALL derived dims (r20 guide §2.4 — remove repeated
     // passes): each is referenced twice downstream (dl by totDim + the
     // candidate join, qp by the df dim + the candidates), and AQE does
-    // not fuse the identical subtrees (PlanProbe-verified), so unpinned
-    // each reference RE-EXECUTES the full posting derivation — for the
-    // from-postings path that was 4 evaluations of the caller's posting
-    // table (an in-query incremental FOLD for bm25_from_index). Both
-    // pins are docs-/query-bounded (one 16-byte row per doc; postings of
-    // the query's terms only), NEVER corpus-token-sized — the phraseMining
-    // stance on corpus-sized pins holds. Released at the caller's
-    // materialization boundary (graft.Pins contract).
+    // not fuse the identical subtrees (no ReusedExchange in the executed
+    // plan), so unpinned each reference RE-EXECUTES the full posting
+    // derivation — for the from-postings path that was 4 evaluations of
+    // the caller's posting table (an in-query incremental FOLD for
+    // bm25_from_index). Both pins are docs-/query-bounded (one 16-byte row
+    // per doc; postings of the query's terms only), NEVER
+    // corpus-token-sized — the phraseMining stance on corpus-sized pins
+    // holds. Released at the caller's materialization boundary
+    // (graft.Pins contract).
     val dl = graft.Pins.pin(dlDim)
     val totDim = dl.agg(coalesce(sum(col("dl")), lit(0L)).as("__tot"))
     val statsDim = corpusSize.crossJoin(totDim)
@@ -1098,10 +1101,11 @@ object TextIndex {
     * Scale shape: the corpus tokenizes twice — once into the unigram
     * aggregation (dictionary-sized by Heaps' law; the aggregated dim is
     * CHECKPOINTED because it feeds three consumers — N and both count
-    * joins — and identical subtrees are not fused, PlanProbe-verified on
-    * bm25), once into the map-side adjacent-pair zip (the token array
-    * with its tail — no self-join of positions; pinning the tokenized
-    * corpus to save this second pass would cost corpus-sized storage).
+    * joins — and identical subtrees are not fused: the executed bm25 plan
+    * shows no ReusedExchange), once into the map-side adjacent-pair zip
+    * (the token array with its tail — no self-join of positions; pinning
+    * the tokenized corpus to save this second pass would cost
+    * corpus-sized storage).
     * The pair aggregation is bigram-dictionary-sized, the unigram joins
     * attach a dictionary dim (AQE broadcasts when genuinely small), and
     * the final top-k is a TakeOrdered — never a corpus-sized sort.

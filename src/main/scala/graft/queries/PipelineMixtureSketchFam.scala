@@ -208,18 +208,19 @@ trait PipelineMixtureSketchFam extends PipelineSimilarityFam {
   // ---------------------------------------------------------------- heavy hitters
 
   /** Frequent items over a token-derived term (first character): the
-    * Misra-Gries summary shuffles O(capacity) state per partition instead of
-    * one row per distinct term. capacity=128 exceeds the ASCII first-char
-    * domain, so the summary is exact and the oracle is a plain GROUP BY.
+    * Misra-Gries summary ([[graft.functions.FrequencySketch.mgTopK]])
+    * shuffles O(k) state per partition instead of one row per distinct
+    * term. k = topN = 128 exceeds the ASCII first-char domain, so the
+    * summary is exact and the oracle is a plain GROUP BY.
     */
   def heavyHittersQ(s: SparkSession, dir: String): DataFrame = {
     val terms = T(s, dir, "documents")
       .select(explode(TextFunctions.tokensWs(col("text"))).as("tok"))
       .select(substring(col("tok"), 1, 1).as("term"))
     terms
-      .agg(graft.functions.HeavyHitters.heavyHitters(128)(col("term")).as("hh"))
+      .agg(graft.functions.FrequencySketch.mgTopK(128, 128)(col("term")).as("hh"))
       .select(explode(col("hh")).as("e"))
-      .select(col("e.term").as("term"), col("e.cnt").as("cnt"))
+      .select(col("e._1").as("term"), col("e._2").as("cnt"))
       .orderBy(col("cnt").desc, col("term"))
   }
 
@@ -1064,10 +1065,8 @@ trait PipelineMixtureSketchFam extends PipelineSimilarityFam {
   def winnowFps(s: SparkSession, dir: String): DataFrame = {
     // widen before the per-row fingerprint loop — see Dedup.widen's note on
     // why a declarative minPartitionNum can't do this for small files
-    val target = s.sparkContext.defaultParallelism
-    val docs = T(s, dir, "documents").select(col("doc_id"), col("text"))
-    val widened = if (docs.rdd.getNumPartitions < target) docs.repartition(target) else docs
-    widened
+    graft.operators.Dedup.widen(
+        T(s, dir, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         explode(graft.operators.Dedup.winnowFingerprints(col("text"), 3, 4)).as("fp"))
       .orderBy(col("doc_id"), col("fp"))

@@ -513,13 +513,10 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
   /** IVF-Flat top-5 over the PINNED trained quantizer at nprobe = 3 —
     * wider probing than `sim_ivf_trained`'s nprobe = 2, so the two
     * entries gate different probe fan-outs of the same fixed-K plan.
-    * Until round 17 this entry ran the deterministic modulus-sampled
-    * quantizer ([[graft.operators.Similarity.ivfTopK]]); that sampler is
-    * now a SPEC-ONLY fixture (SimilaritySpec covers it directly), and
-    * since round 19 `sim_ivfpq_topk`'s COARSE quantizer is pinned too —
-    * every registry IVF coarse assignment runs against a fixed-size
-    * trained centroid broadcast, the shape that scales (n×K map-side
-    * assignment, K constant in n). The PQ CODEBOOKS of `sim_pq_topk` /
+    * `sim_ivfpq_topk`'s COARSE quantizer is pinned too — every registry
+    * IVF coarse assignment runs against a fixed-size trained centroid
+    * broadcast, the shape that scales (n×K map-side assignment, K
+    * constant in n). The PQ CODEBOOKS of `sim_pq_topk` /
     * `sim_ivfpq_topk` remain the documented modulus-sampled fixture
     * (fixed 128 entries, capped — deterministic and size-bounded, so not
     * a scale risk; [[graft.operators.Similarity.pqCodebookTrained]] is
@@ -1115,8 +1112,9 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * L2, then score queries against the reconstructed codes via per-query
     * lookup tables — long arithmetic end to end, so the oracle replays
     * assignment ties, ADC sums, and ranking bit-for-bit. The packed-binary
-    * variant (`pqTopKPacked`, m bytes per corpus vector = 32× compression
-    * at dims 64) is spec-gated equal to this relational form.
+    * scan (`ivfPqTopKWith` probing every cell, m bytes per corpus vector =
+    * 32× compression at dims 64) is spec-gated equal to this relational
+    * form.
     */
   def simPq(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")

@@ -49,8 +49,24 @@ class RunnerSpec extends SparkSpec {
     runner.register(Job("fine", Duration.ZERO, _ => 42))
     assert(runner.runOnce().toMap === Map("boom" -> "FAILED", "fine" -> "SUCCEED"))
     assert(j.lastExecution("boom").get.status === "FAILED")
-    assert(j.lastExecution("boom").get.result === "nope")
+    assert(j.lastExecution("boom").get.result === "java.lang.RuntimeException: nope")
     assert(j.lastExecution("fine").get.result === "42")
+  }
+
+  test("failure records carry the exception class and the cause chain") {
+    val j = new Journal(spark, tmpDir())
+    val runner = new Runner(spark, j, clock = () => 7000000L)
+    // a bare NPE has no message: getMessage alone would journal "null"
+    runner.register(Job("npe", Duration.ZERO, _ => throw new NullPointerException()))
+    runner.register(Job("wrapped", Duration.ZERO, _ =>
+      throw new IllegalStateException("load failed",
+        new java.io.IOException("disk gone", new NullPointerException()))))
+    assert(runner.runOnce().toMap === Map("npe" -> "FAILED", "wrapped" -> "FAILED"))
+    assert(j.lastExecution("npe").get.result === "java.lang.NullPointerException")
+    assert(j.lastExecution("wrapped").get.result ===
+      "java.lang.IllegalStateException: load failed" +
+        " <- caused by: java.io.IOException: disk gone" +
+        " <- caused by: java.lang.NullPointerException")
   }
 
   test("ScriptJobs recompiles only when mtime changes, closes old instances") {

@@ -1,8 +1,14 @@
 package graft.functions
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
+/** The heavy-hitters column form ([[FrequencySketch.mgTopK]], the one
+  * Misra-Gries aggregator) end to end through Spark's aggregation:
+  * partial buffers, shuffle merge, null handling and output order.
+  * FrequencySketchSpec/Props drive the aggregator object directly.
+  */
 class HeavyHittersSpec extends SparkSpec {
   import spark.implicits._
 
@@ -11,24 +17,21 @@ class HeavyHittersSpec extends SparkSpec {
     Seq.fill(200)("mild") ++ (0 until 100).map(i => s"t$i"))
     .toDF("term").repartition(8)
 
+  private def topK(df: DataFrame, k: Int): Array[(String, Long)] =
+    df.agg(FrequencySketch.mgTopK(k, k)(col("term")).as("hh"))
+      .select(explode(col("hh")).as("e"))
+      .select($"e._1", $"e._2").as[(String, Long)].collect()
+
   test("exact when capacity >= distinct terms, partitioning-invariant") {
     val exact = terms.groupBy("term").count().as[(String, Long)].collect().toMap
-    def run(parts: Int): Map[String, Long] =
-      terms.repartition(parts)
-        .agg(HeavyHitters.heavyHitters(200)(col("term")).as("hh"))
-        .select(explode(col("hh")).as("e"))
-        .select($"e.term", $"e.cnt").as[(String, Long)].collect().toMap
-    assert(run(1) === exact)
-    assert(run(8) === exact)
+    assert(topK(terms.repartition(1), 200).toMap === exact)
+    assert(topK(terms.repartition(8), 200).toMap === exact)
   }
 
   test("MG guarantee: terms above n/(capacity+1) survive, counts never overestimate") {
     val n = 1000L
     val capacity = 9 // threshold n/(k+1) = 100 — hot/warm/mild must survive
-    val out = terms
-      .agg(HeavyHitters.heavyHitters(capacity)(col("term")).as("hh"))
-      .select(explode(col("hh")).as("e"))
-      .select($"e.term", $"e.cnt").as[(String, Long)].collect().toMap
+    val out = topK(terms, capacity).toMap
     assert(out.size <= capacity)
     assert(out.contains("hot") && out.contains("warm") && out.contains("mild"), out)
     val exact = Map("hot" -> 400L, "warm" -> 300L, "mild" -> 200L)
@@ -41,21 +44,12 @@ class HeavyHittersSpec extends SparkSpec {
   test("nulls are ignored; empty input yields empty summary") {
     val withNulls = Seq(Some("a"), None, Some("a"), None, Some("b"))
       .toDF("term")
-    val out = withNulls
-      .agg(HeavyHitters.heavyHitters(10)(col("term")).as("hh"))
-      .select(explode(col("hh")).as("e"))
-      .select($"e.term", $"e.cnt").as[(String, Long)].collect().toMap
-    assert(out === Map("a" -> 2L, "b" -> 1L))
-    val empty = Seq.empty[String].toDF("term")
-      .agg(HeavyHitters.heavyHitters(10)(col("term")).as("hh"))
-      .select(size(col("hh"))).as[Int].head()
-    assert(empty === 0)
+    assert(topK(withNulls, 10).toMap === Map("a" -> 2L, "b" -> 1L))
+    assert(topK(Seq.empty[String].toDF("term"), 10).isEmpty)
   }
 
   test("finish orders by (-count, term)") {
-    val out = Seq("b", "a", "b", "c", "a", "b").toDF("term")
-      .agg(HeavyHitters.heavyHitters(10)(col("term")).as("hh"))
-      .select(col("hh")).as[Seq[HHEntry]].head()
-    assert(out === Seq(HHEntry("b", 3), HHEntry("a", 2), HHEntry("c", 1)))
+    val out = topK(Seq("b", "a", "b", "c", "a", "b").toDF("term"), 10)
+    assert(out.toSeq === Seq(("b", 3L), ("a", 2L), ("c", 1L)))
   }
 }

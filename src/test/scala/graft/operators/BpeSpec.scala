@@ -89,38 +89,6 @@ class BpeSpec extends SparkSpec {
     assert(dist.head === ("�", "x"))
   }
 
-  test("batched training: batch = 1 is exactly sequential; larger batches " +
-      "pick disjoint snapshot pairs (documented cross-batch reordering)") {
-    val df = corpus.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      .toDF("doc_id", "text")
-    val dict = Bpe.wordCounts(df, col("text"))
-    val sequential = Bpe.trainBpe(dict, numMerges = 12)
-    assert(Bpe.trainBpeBatched(dict, numMerges = 12, batch = 1) === sequential)
-    for (b <- Seq(2, 4, 8)) {
-      val batched12 = Bpe.trainBpeBatched(dict, numMerges = 12, batch = b)
-      // every batch head is the true sequential argmax of its snapshot
-      assert(batched12.head === sequential.head, s"batch=$b")
-      // cross-batch REORDERING may spend a fixed budget differently, but
-      // training to exhaustion fully merges every word under any order
-      val exhausted = Bpe.trainBpeBatched(dict, numMerges = 500, batch = b)
-      for (w <- Seq("low", "newest", "widest"))
-        assert(Bpe.applyMerges(w, exhausted) === Seq(w + Bpe.EndMark),
-          s"batch=$b word=$w")
-    }
-  }
-
-  test("selectDisjoint keeps rank order and rejects symbol/output overlap") {
-    val ranked = Seq(
-      ("e", "s"),  // kept
-      ("s", "t"),  // rejected: shares s
-      ("es", "t"), // rejected: uses the merged output "es"
-      ("t", "u"),  // kept
-      ("a", "b"),  // kept
-      ("c", "d"))  // over want
-    assert(Bpe.selectDisjoint(ranked, want = 3)
-      === Seq(("e", "s"), ("t", "u"), ("a", "b")))
-  }
-
   test("trainBpe stops early when the dictionary is fully merged") {
     val df = Seq((1L, "ab ab")).toDF("doc_id", "text")
     val got = Bpe.trainBpe(Bpe.wordCounts(df, col("text")), numMerges = 50)

@@ -247,4 +247,34 @@ class QuantilesSpec extends SparkSpec {
       .collect()
     assert(ours.length == 1 && ours(0) === ref(0))
   }
+
+  test("discPicks refuses a string value column instead of ranking it by " +
+      "its double cast") {
+    import spark.implicits._
+    // "10" < "9" as strings but 10.0 > 9.0 as doubles: a string column
+    // would be bucketed by a non-monotonic map and picked wrong
+    val df = Seq((0, "9"), (0, "10"), (0, "11")).toDF("g", "v")
+    val e = intercept[IllegalArgumentException] {
+      Quantiles.discPicks(df, Seq("g"), Seq(("p50", "v", 0.5)))
+    }
+    assert(e.getMessage.contains("numeric or timestamp"), e.getMessage)
+  }
+
+  test("discPicks refuses a bucket count whose NaN bucket (nb + 1) " +
+      "overflows Int; the largest accepted count stays exact") {
+    import spark.implicits._
+    val df = Seq((0, 3.0), (0, Double.NaN), (0, 1.0), (0, 2.0), (0, 2.0))
+      .toDF("g", "v")
+    val specs = Seq(("p50", "v", 0.5), ("p100", "v", 1.0))
+    intercept[IllegalArgumentException] {
+      Quantiles.discPicks(df, Seq("g"), specs, buckets = Int.MaxValue)
+    }
+    val ref = df.groupBy(col("g")).agg(
+      expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY v)").as("p50"),
+      expr("percentile_disc(1.0) WITHIN GROUP (ORDER BY v)").as("p100"))
+      .collect()
+    val ours = Quantiles.discPicks(df, Seq("g"), specs,
+      buckets = Int.MaxValue - 1).collect()
+    assert(ours.toSeq.map(_.toString) === ref.toSeq.map(_.toString))
+  }
 }

@@ -13,6 +13,15 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
   }
 
+  /** Explicit `(cid, cv)` centroid frame: the first `max` corpus vectors
+    * whose id is a multiple of `every`, keyed by their own ids.
+    */
+  private def everyNth(corpus: org.apache.spark.sql.DataFrame, every: Long,
+      max: Int) =
+    corpus.filter(pmod(col("vec_id"), lit(every)) === 0)
+      .orderBy(col("vec_id")).limit(max)
+      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
+
   test("bruteForceTopK matches a driver-side exact computation") {
     val df = vectors(30, 8, seed = 1).cache()
     val got = Similarity.bruteForceTopK(df.filter(col("vec_id") < 3), df, k = 4)
@@ -59,6 +68,15 @@ class SimilaritySpec extends SparkSpec {
       .select(explode(VectorFunctions.quantizeInt8(col("embedding"))).as("v"))
       .as[Int].collect()
     assert(rand.forall(v => v >= -127 && v <= 127))
+    // packing is lossless on the codes and really is 1 B/coord
+    val (code, arr) = vectors(1, 16, seed = 7)
+      .select(
+        VectorFunctions.packInt8(
+          VectorFunctions.quantizeInt8(col("embedding"))).as("code"),
+        VectorFunctions.quantizeInt8(col("embedding")).as("arr"))
+      .as[(Array[Byte], Array[Int])].head()
+    assert(code.length === 16)
+    assert(code.map(_.toInt).toSeq === arr.toSeq)
   }
 
   test("dotInt: exact integer dot; null on length mismatch") {
@@ -93,37 +111,6 @@ class SimilaritySpec extends SparkSpec {
       .filter(col("rank") === 1).select("query_id", "neighbor_id")
       .as[(Long, Long)].collect()
     assert(self.forall(p => p._1 == p._2))
-  }
-
-  test("packed int8 path: identical output to the array path, codes " +
-      "round-trip losslessly, 1/4 the bytes") {
-    import org.apache.spark.sql.graft.VectorFunctions
-    val df = vectors(40, 16, seed = 7).cache()
-    val queries = df.filter(col("vec_id") < 4)
-
-    val arrayPath = Similarity.quantizedTopK(queries, df, k = 5)
-      .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val packedInline = Similarity.quantizedTopKPacked(queries, df, k = 5)
-      .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    assert(packedInline.toSeq === arrayPath.toSeq)
-
-    // pre-packed write-side frames give the same answer (the persist-once,
-    // scan-many shape)
-    val packedCorpus = Similarity.quantizePacked(df)
-    val prePacked = Similarity.quantizedTopKPacked(
-        Similarity.quantizePacked(queries), packedCorpus, k = 5)
-      .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    assert(prePacked.toSeq === arrayPath.toSeq)
-
-    // pack/unpack round-trip is lossless and the binary really is 1 B/coord
-    val (code, codes) = df
-      .select(
-        VectorFunctions.packInt8(
-          VectorFunctions.quantizeInt8(col("embedding"))).as("code"),
-        VectorFunctions.quantizeInt8(col("embedding")).as("arr"))
-      .as[(Array[Byte], Array[Int])].head()
-    assert(code.length === 16)
-    assert(code.map(_.toInt).toSeq === codes.toSeq)
   }
 
   test("knnLabel takes the majority label of the k nearest; ties → smaller label") {
@@ -244,39 +231,24 @@ class SimilaritySpec extends SparkSpec {
     assert(pq.toSeq === exact.toSeq)
   }
 
-  test("pqTopKPacked: identical output to the relational PQ form; codes " +
-      "are m bytes per vector") {
-    val df = vectors(40, 16, seed = 17).cache()
-    val qs = df.filter(col("vec_id") < 4)
-    val relational = Similarity.pqTopK(qs, df, k = 5, m = 4, entryEvery = 5)
-      .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val packed = Similarity.pqTopKPacked(qs, df, k = 5, m = 4, entryEvery = 5)
-      .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    assert(packed.toSeq === relational.toSeq)
-    assert(relational.nonEmpty)
-
-    val cb = Similarity.pqCodebook(df, m = 4, entryEvery = 5)
-    val codes = Similarity.pqPack(Similarity.pqEncode(df, cb, m = 4))
-      .select("pqcode").as[Array[Byte]].collect()
-    assert(codes.length === 40)
-    assert(codes.forall(_.length === 4)) // m bytes, 16× smaller than floats
-  }
-
   test("sampling quantizers are CAPPED: codebook entries and coarse cells " +
       "stop growing with the corpus (the models-don't-track-data contract)") {
-    // 400 vectors with entryEvery=4/maxEntries=32 and centroidEvery=4/
-    // maxCentroids=16: uncapped would give 100 entries and 100 cells
+    // 400 vectors with entryEvery=4/maxEntries=32: uncapped would give 100
+    // entries; the coarse cells are a fixed explicit set of 16
     val corpus = vectors(400, 16, seed = 11).cache()
-    val cb = Similarity.pqCodebook(corpus, m = 4, entryEvery = 4, maxEntries = 32)
+    val codebook = Similarity.pqCodebook(corpus, m = 4, entryEvery = 4,
+      maxEntries = 32)
+    val cb = codebook
       .groupBy(col("sub")).agg(countDistinct(col("entry")).as("j"))
       .select(col("j")).distinct().as[Long].collect()
     assert(cb === Array(32L), "codebook must be rectangular at exactly maxEntries")
-    // capped queries still return full, well-formed top-k
+    // capped quantizers still return full, well-formed top-k
+    val cents = everyNth(corpus, 4, 16)
     val probes = corpus.filter(col("vec_id") < 2)
-    assert(Similarity.ivfTopK(probes, corpus, k = 3, centroidEvery = 4,
-      nprobe = 2, maxCentroids = 16).count() === 6)
-    assert(Similarity.ivfPqTopK(probes, corpus, k = 3, entryEvery = 4,
-      centroidEvery = 4, nprobe = 16, maxCentroids = 16).count() === 6)
+    assert(Similarity.ivfTopKWith(probes, corpus, cents, k = 3, nprobe = 2)
+      .count() === 6)
+    assert(Similarity.ivfPqTopKWith(probes, corpus, cents, codebook, k = 3,
+      m = 4, nprobe = 16).count() === 6)
     corpus.unpersist()
   }
 
@@ -290,7 +262,9 @@ class SimilaritySpec extends SparkSpec {
     assert(rows.forall { case (s, e, sc) => s < 4 && e < 128 && sc.length == 4 })
     val relational = Similarity.pqTopKWith(qs, df, cb, k = 5, m = 4)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val packed = Similarity.pqTopKPackedWith(qs, df, cb, k = 5, m = 4)
+    // one coarse cell holds the whole corpus: the packed native-ADC scan
+    val packed = Similarity.ivfPqTopKWith(qs, df, everyNth(df, 60, 1), cb,
+        k = 5, m = 4, nprobe = 1)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     assert(packed.toSeq === relational.toSeq)
     // k-means sub-codebooks should beat random chance by a wide margin:
@@ -302,23 +276,31 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.4, s"recall $recall")
   }
 
-  test("ivfPqTopK: probing every cell degenerates to the full PQ scan; " +
+  test("ivfPqTopKWith: probing every cell degenerates to the full PQ scan; " +
       "nprobe=1 only returns neighbors from the query's nearest cell") {
     val df = vectors(40, 16, seed = 23).cache()
     val qs = df.filter(col("vec_id") < 4)
-    // centroidEvery=10 → 4 cells; probing all 4 = unpruned PQ scan
-    val full = Similarity.pqTopKPacked(qs, df, k = 5, m = 4, entryEvery = 5)
+    val cb = Similarity.pqCodebook(df, m = 4, entryEvery = 5)
+    // every 10th id → 4 cells; probing all 4 = unpruned PQ scan, identical
+    // to the relational form
+    val cents = everyNth(df, 10, 4)
+    val full = Similarity.pqTopKWith(qs, df, cb, k = 5, m = 4)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val allCells = Similarity.ivfPqTopK(qs, df, k = 5, m = 4, entryEvery = 5,
-        centroidEvery = 10, nprobe = 4)
+    val allCells = Similarity.ivfPqTopKWith(qs, df, cents, cb, k = 5, m = 4,
+        nprobe = 4)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
+    assert(full.nonEmpty)
     assert(allCells.toSeq === full.toSeq)
+    // the packed codes the scan reads are m bytes per vector (16× smaller
+    // than the float embeddings)
+    val codes = Similarity.pqPack(Similarity.pqEncode(df, cb, m = 4))
+      .select("pqcode").as[Array[Byte]].collect()
+    assert(codes.length === 40)
+    assert(codes.forall(_.length === 4))
 
     // nprobe=1: every neighbor must sit in its query's single probed cell
-    val cents = df.filter(col("vec_id") % 10 === 0)
-      .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    val one = Similarity.ivfPqTopK(qs, df, k = 5, m = 4, entryEvery = 5,
-        centroidEvery = 10, nprobe = 1)
+    val one = Similarity.ivfPqTopKWith(qs, df, cents, cb, k = 5, m = 4,
+        nprobe = 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     assert(one.nonEmpty)
     import org.apache.spark.sql.graft.VectorFunctions
@@ -341,7 +323,7 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.ivfPqTopKWith(qs, df, cents, cb, k = 5, m = 4,
         nprobe = 3) // all 3 cells probed → full trained-PQ scan
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val full = Similarity.pqTopKPackedWith(qs, df, cb, k = 5, m = 4)
+    val full = Similarity.pqTopKWith(qs, df, cb, k = 5, m = 4)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     assert(got.toSeq === full.toSeq)
     assert(got.nonEmpty)
@@ -368,10 +350,11 @@ class SimilaritySpec extends SparkSpec {
   test("capped quantizers survive non-dense ids: corpus offset by 10^9 " +
       "returns the id-shifted dense results, never empty") {
     // The old `vec_id < every*max` cap predicate assumed ids dense from 0;
-    // a corpus whose ids all exceed the bound produced an EMPTY centroid
-    // table / codebook and silently zero neighbors. The sort+limit +
-    // rank-entry selection must pick the same vectors under any id offset
-    // that preserves the modulus classes (10^9 is divisible by 25 and 50).
+    // a corpus whose ids all exceed the bound produced an EMPTY codebook
+    // and silently zero neighbors. The sort+limit + rank-entry selection
+    // must pick the same vectors under any id offset that preserves the
+    // modulus classes (10^9 is divisible by 25 and 50), and a selection
+    // with no divisible id at all must fail loudly.
     val off = 1_000_000_000L
     val dense = vectors(400, 16, seed = 13).cache()
     val shifted = dense.select((col("vec_id") + off).as("vec_id"),
@@ -383,12 +366,14 @@ class SimilaritySpec extends SparkSpec {
       df.select("query_id", "neighbor_id", "rank")
         .orderBy("query_id", "rank").as[(Long, Long, Int)].collect().toSeq
 
-    // IVF: centroidEvery=50, maxCentroids=4 — dense corpus uses ids
-    // {0,50,100,150}; shifted must use {off, off+50, …}, not go empty.
-    val ivfDense = collect3(Similarity.ivfTopK(qDense, dense, k = 3,
-      centroidEvery = 50, nprobe = 2, maxCentroids = 4))
-    val ivfShift = collect3(Similarity.ivfTopK(qShift, shifted, k = 3,
-      centroidEvery = 50, nprobe = 2, maxCentroids = 4))
+    // IVF over explicit centroids: ids {0,50,100,150} and their shifted
+    // twins {off, off+50, …} — cell ids carry the offset too
+    val centsDense = everyNth(dense, 50, 4)
+    val centsShift = everyNth(shifted, 50, 4)
+    val ivfDense = collect3(Similarity.ivfTopKWith(qDense, dense, centsDense,
+      k = 3, nprobe = 2))
+    val ivfShift = collect3(Similarity.ivfTopKWith(qShift, shifted, centsShift,
+      k = 3, nprobe = 2))
     assert(ivfDense.nonEmpty)
     assert(ivfShift === ivfDense.map { case (q, n, r) => (q + off, n + off, r) })
 
@@ -399,6 +384,11 @@ class SimilaritySpec extends SparkSpec {
     val entries = cb.select("entry").distinct()
       .as[Long].collect().toSet
     assert(entries === (0L until 8L).toSet)
+    val noneDivisible = intercept[IllegalArgumentException] {
+      Similarity.pqCodebook(shifted.filter(pmod(col("vec_id"), lit(25L)) =!= 0),
+        m = 4, entryEvery = 25)
+    }
+    assert(noneDivisible.getMessage.contains("no vec_id divisible by 25"))
     val pqDense = collect3(Similarity.pqTopK(qDense, dense, k = 3, m = 4,
       entryEvery = 25))
     val pqShift = collect3(Similarity.pqTopK(qShift, shifted, k = 3, m = 4,
@@ -407,10 +397,10 @@ class SimilaritySpec extends SparkSpec {
     assert(pqShift === pqDense.map { case (q, n, r) => (q + off, n + off, r) })
 
     // IVF-PQ composed
-    val ipDense = collect3(Similarity.ivfPqTopK(qDense, dense, k = 3, m = 4,
-      entryEvery = 25, centroidEvery = 50, nprobe = 2, maxCentroids = 4))
-    val ipShift = collect3(Similarity.ivfPqTopK(qShift, shifted, k = 3, m = 4,
-      entryEvery = 25, centroidEvery = 50, nprobe = 2, maxCentroids = 4))
+    val ipDense = collect3(Similarity.ivfPqTopKWith(qDense, dense, centsDense,
+      Similarity.pqCodebook(dense, m = 4, entryEvery = 25), k = 3, m = 4))
+    val ipShift = collect3(Similarity.ivfPqTopKWith(qShift, shifted, centsShift,
+      Similarity.pqCodebook(shifted, m = 4, entryEvery = 25), k = 3, m = 4))
     assert(ipDense.nonEmpty)
     assert(ipShift === ipDense.map { case (q, n, r) => (q + off, n + off, r) })
   }

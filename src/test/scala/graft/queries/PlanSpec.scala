@@ -173,21 +173,25 @@ class PlanSpec extends SparkSpec {
 
   test("pq packed scan: LUTs broadcast, native ADC scoring, windows only " +
       "as constant-size codebook entry-rankers") {
+    import spark.implicits._
     val emb = T(spark, dir, "embeddings")
-    val p = plan(graft.operators.Similarity.pqTopKPacked(
-      emb.filter(org.apache.spark.sql.functions.col("vec_id") < 20),
-      emb, k = 5, m = 8, entryEvery = 25))
-    assert(p.contains("BroadcastNestedLoopJoin"), p) // corpus codes × broadcast LUTs
-    assert(p.contains("pq_adc_packed"), p)           // native scoring expression
-    // The ONLY Window nodes are pqCodebook's entry-rankers, one per
-    // consumer of the codebook subtree (pqEncode + pqLut), each running
-    // over the ≤maxEntries rows of the literal-bound selection — never
-    // over corpus-sized input (the 128th-id cutoff is computed in a
-    // separate scalar job, so no Limit node appears here at all).
-    // Ranking/top-k of scored pairs stays the bounded
-    // ObjectHashAggregate, not a window.
+    // every one of the 16 pinned cells probed: the full packed PQ scan
+    val p = plan(graft.operators.Similarity.ivfPqTopKWith(
+      emb.filter(org.apache.spark.sql.functions.col("vec_id") < 20), emb,
+      PinnedArtifacts.IvfCentroids16.toDF("cid", "cv"),
+      graft.operators.Similarity.pqCodebook(emb, m = 8, entryEvery = 25),
+      k = 5, m = 8, nprobe = 16))
+    assert(p.contains("BroadcastHashJoin"), p) // corpus codes ⋈ broadcast LUTs
+    assert(p.contains("pq_adc_packed"), p)     // native scoring expression
+    // Window nodes: pqCodebook's entry-rankers, one per consumer of the
+    // codebook subtree (pqEncode + pqLut), each running over the
+    // ≤maxEntries rows of the literal-bound selection (the 128th-id
+    // cutoff is computed in a separate scalar job, so no Limit node
+    // appears here at all), plus the probe ranker over the 20×16
+    // query-cell rows — never over corpus-sized input. Ranking/top-k of
+    // scored pairs stays the bounded ObjectHashAggregate, not a window.
     val windows = """\(\d+\) Window\b""".r.findAllIn(p).size
-    assert(windows <= 2, p)
+    assert(windows <= 3, p)
     // the selection's id cutoff reaches the parquet scan as a pushed
     // range filter, so re-executions of the codebook subtree stay pruned
     assert(p.contains("LessThanOrEqual(vec_id"), p)
@@ -680,8 +684,8 @@ class PlanSpec extends SparkSpec {
       !p.contains("ShuffledHashJoin") && !p.contains("CartesianProduct"), p)
     // the static plan repeats the widened-scan subtree per pick consumer
     // (bounds + bucket-counts + bases); at runtime the identical widen
-    // exchange dedups to one scan (ReusedExchange — PlanProbe-verified,
-    // plans/r21/table_profile_final.txt)
+    // exchange dedups to one scan (ReusedExchange in the executed plan,
+    // recorded in plans/r21/table_profile_final.txt)
     assert("Scan parquet".r.findAllIn(p).size <= 12, p)
   }
 
