@@ -2,12 +2,31 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
+import scala.util.matching.Regex
 
 /** Plan-audit main: dumps `explain("formatted")` for the flagship queries so
   * the physical plans can be reviewed (and diffed across rounds) without a
   * REPL. Usage: `runMain graft.Plans <sfDir> <outFile> [queryName...]`.
+  *
+  * Expression ids (`#1234`) and exchange plan ids (`plan_id=57`) come from
+  * JVM-global counters, so [[normalizeIds]] renumbers them by first
+  * appearance within each entry and cuts JVM lambda identities
+  * (`Foo$$$Lambda$8853/0x00007f0c89e25bf0@dfab3fb`) to `Foo$$$Lambda`:
+  * the same plan dumped from two builds diffs line for line.
   */
 object Plans {
+  def normalizeIds(explain: String): String = {
+    def renumber(text: String, re: Regex, prefix: String): String = {
+      val seen = scala.collection.mutable.Map.empty[String, Int]
+      re.replaceAllIn(text, m => Regex.quoteReplacement(
+        prefix + seen.getOrElseUpdate(m.group(1), seen.size)))
+    }
+    val noLambdas = """\$\$Lambda[^@\s]*@[0-9a-f]+""".r
+      .replaceAllIn(explain, Regex.quoteReplacement("$$Lambda"))
+    renumber(renumber(noLambdas, """#(\d+)""".r, "#"),
+      """plan_id=(\d+)""".r, "plan_id=")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("/tmp/plans.txt")
@@ -27,8 +46,8 @@ object Plans {
     SparkEntry.queries.toSeq.sortBy(_._1).filter(q => names(q._1)).foreach {
       case (name, fn) =>
         sb.append(s"\n================ $name ================\n")
-        sb.append(fn(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted")))
+        sb.append(normalizeIds(fn(spark, sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))))
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), sb.toString)
     println(s"wrote $outFile")

@@ -163,17 +163,28 @@ object Kv {
       (c, a) => c.mget(strSeq(a.head))
     }
 
-  /** jd_mset: `kvs` is array<struct<k,v>> or map; appends `ret: string`. */
+  /** jd_mset: `pairs` is array<struct<k,v>> or map; appends `ret: string`.
+    * A null `pairs` cell yields a null `ret`. A null key, value or array
+    * element has no MSET form and is refused with an
+    * IllegalArgumentException naming it; none of that row's pairs is
+    * written.
+    */
   def withMSet(df: DataFrame, pairs: Column, factory: KvClientFactory,
       ret: String = "ret"): DataFrame =
     append(df, factory, Seq(pairs), StructField(ret, StringType)) { (c, a) =>
+      def pair(k: Any, v: Any): (String, String) =
+        if (k == null) throw new IllegalArgumentException("withMSet: null key")
+        else if (v == null)
+          throw new IllegalArgumentException(s"withMSet: null value for key $k")
+        else (String.valueOf(k), String.valueOf(v))
       a.head match {
         case null => null
-        case m: Map[_, _] =>
-          c.mset(m.toSeq.map { case (k, v) => (String.valueOf(k), String.valueOf(v)) })
+        case m: Map[_, _] => c.mset(m.toSeq.map { case (k, v) => pair(k, v) })
         case s: scala.collection.Seq[_] =>
-          c.mset(s.toSeq.map { case r: org.apache.spark.sql.Row =>
-            (r.getString(0), r.getString(1))
+          c.mset(s.toSeq.map {
+            case r: org.apache.spark.sql.Row => pair(r.getString(0), r.getString(1))
+            case null =>
+              throw new IllegalArgumentException("withMSet: null array element")
           })
       }
     }

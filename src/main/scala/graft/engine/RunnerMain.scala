@@ -4,7 +4,7 @@ import java.time.Duration
 
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
-import graft.etl.SqlRunner
+import graft.etl.{SqlRunner, SqlScript}
 
 /** Deployable runner — the engine's answer to the reference's
   * `InterpreterLoader.main` + `ProcessorLoader` pair (reference:
@@ -15,7 +15,8 @@ import graft.etl.SqlRunner
   *  - `*.scala` files must evaluate to `SparkSession => Any` (ToolBox
   *    compile — the reference's interpreted script type);
   *  - `*.sql` files run statement-by-statement through [[SqlRunner]]
-  *    (the reference's Beeline script type), macros included;
+  *    (the reference's Beeline script type), macros included; the first
+  *    failing statement stops the script and fails the job;
   *  - per-script interval from a leading `-- interval: PT5M` /
   *    `// interval: PT5M` line, default PT1M
   *    (reference: annotation/ProcDescription.java:20);
@@ -46,8 +47,12 @@ object RunnerMain {
           if (path.endsWith(".scala"))
             Job(path, intervalOf(src), s => scalaJobs.instance(path)(s))
           else
-            Job(path, intervalOf(src), s =>
-              new SqlRunner(s).runScript(src)._1.map(_.status).mkString(","))
+            Job(path, intervalOf(src), { s =>
+              // a failing statement throws, so the job journals FAILED
+              // with the statement and its cause
+              new SqlRunner(s).runScriptStrict(src)
+              SqlScript.split(src).map(_ => "OK").mkString(",")
+            })
         runner.register(job)
       }
     runner.runOnce()

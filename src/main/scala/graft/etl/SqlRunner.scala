@@ -119,39 +119,52 @@ object SqlMacro {
 final case class StatementResult(
     index: Int, sql: String, status: String, error: Option[String])
 
+/** Statement `index` of a script threw `cause`; the statements after it
+  * did not run.
+  */
+final class ScriptStatementException(val index: Int, val sql: String,
+    cause: Exception)
+    extends IllegalStateException(
+      s"statement $index failed: ${String.valueOf(cause.getMessage)}\n$sql", cause)
+
 /** Runs a script statement-by-statement; macro DDLs register functions, all
-  * else goes to `spark.sql`. Per-statement status mirrors the reference's
-  * per-command Beeline result capture (HiveBeeLine.scala:124-166); the last
-  * statement's DataFrame is returned for composition.
+  * else goes to `spark.sql`. Like Beeline without `--force`, a script stops
+  * at its first failing statement, so a later statement never reads what a
+  * failed one should have created. Per-statement status mirrors the
+  * reference's per-command Beeline result capture (HiveBeeLine.scala:124-166);
+  * the last statement's DataFrame is returned for composition.
   */
 class SqlRunner(spark: SparkSession) {
 
+  /** Per-statement status up to and including the first failure (`ERROR`,
+    * with its message); the last DataFrame only when every statement ran.
+    */
   def runScript(text: String): (Seq[StatementResult], Option[DataFrame]) = {
-    var lastDf: Option[DataFrame] = None
-    val results = SqlScript.split(text).zipWithIndex.map { case (stmt, i) =>
-      try {
-        if (SqlMacro.maybeRegister(spark, stmt))
-          StatementResult(i, stmt, "OK", None)
-        else {
-          lastDf = Some(spark.sql(stmt))
-          StatementResult(i, stmt, "OK", None)
-        }
-      } catch {
-        case e: Exception =>
-          lastDf = None
-          StatementResult(i, stmt, "ERROR", Some(String.valueOf(e.getMessage)))
-      }
+    val stmts = SqlScript.split(text)
+    def ok(n: Int) = stmts.take(n).zipWithIndex
+      .map { case (sql, i) => StatementResult(i, sql, "OK", None) }
+    try {
+      val df = runScriptStrict(text)
+      (ok(stmts.length), df)
+    } catch {
+      case e: ScriptStatementException =>
+        (ok(e.index) :+ StatementResult(e.index, e.sql, "ERROR",
+          Some(String.valueOf(e.getCause.getMessage))), None)
     }
-    (results, lastDf)
   }
 
-  /** Strict variant: throws on the first failing statement. */
+  /** Strict variant: throws [[ScriptStatementException]] (index, statement,
+    * the original exception as cause) on the first failing statement.
+    */
   def runScriptStrict(text: String): Option[DataFrame] = {
-    val (results, df) = runScript(text)
-    results.find(_.status == "ERROR").foreach { r =>
-      throw new IllegalStateException(
-        s"statement ${r.index} failed: ${r.error.getOrElse("")}\n${r.sql}")
+    var lastDf: Option[DataFrame] = None
+    SqlScript.split(text).zipWithIndex.foreach { case (stmt, i) =>
+      try {
+        if (!SqlMacro.maybeRegister(spark, stmt)) lastDf = Some(spark.sql(stmt))
+      } catch {
+        case e: Exception => throw new ScriptStatementException(i, stmt, e)
+      }
     }
-    df
+    lastDf
   }
 }

@@ -330,14 +330,4 @@ object Bpe {
         when(col("n_tokens") === 0, lit(0.0))
           .otherwise(col("n_chars").cast("double") / col("n_tokens").cast("double")))
   }
-
-  /** Train on a corpus and tokenize it in one call (the registry entry's
-    * shape): one corpus pass for counts, `numMerges` dictionary jobs, one
-    * dictionary tokenization, one corpus join.
-    */
-  def trainAndTokenize(df: DataFrame, id: Column, text: Column,
-      numMerges: Int): DataFrame = {
-    val merges = trainBpe(wordCounts(df, text), numMerges)
-    tokenizeCorpus(df, id, text, merges)
-  }
 }

@@ -1642,7 +1642,7 @@ object Dedup {
     *
     * Scale shape: the quantizer is broadcast and assignment is an argmax
     * partial-aggregated before its shuffle (n rows exchanged, not n×K, same
-    * as [[graft.operators.Similarity.ivfTopKWith]]); the pair scan is an
+    * as [[graft.operators.Similarity.assignToCentroids]]); the pair scan is an
     * equality self-join on `cid`, so candidate count is Σ cluster² — K
     * controls the quadratic term exactly as in the paper (K ≈ n/expected
     * cluster size; with balanced clusters the scan is n²/K, and vectors
@@ -1713,7 +1713,7 @@ object Dedup {
     * aggregated before its exchange, so the one shuffle carries a single
     * (id, needle, cos, flag)-sized row per corpus document and corpus
     * vectors never shuffle. Beyond broadcastable needle sets, pre-bucket
-    * both sides by SRP key ([[Similarity.lshTopK]]'s shape) and screen
+    * both sides by SRP key ([[Similarity.Index.Lsh]]'s shape) and screen
     * within buckets. Zero-norm vectors have no cosine — exclude them
     * upstream (their NaN would rank as the max on both engines, but the
     * report would be meaningless).

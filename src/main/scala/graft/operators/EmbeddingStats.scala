@@ -241,7 +241,7 @@ object EmbeddingStats {
   }
 
   /** Int8-quantization error audit — the acceptance gate before switching
-    * a serving corpus to [[graft.operators.Similarity.quantizedTopK]]'s
+    * a serving corpus to [[graft.operators.Similarity.Index.Int8]]'s
     * 4×-smaller codes: per label (or any grouping), the distribution of
     * per-vector reconstruction error between the L2-normalized vector and
     * its ±127 code ([[org.apache.spark.sql.graft.QuantizeInt8]] — same

@@ -3,23 +3,19 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.{TextFunctions, TopKAggregator}
+import graft.functions.TopKAggregator
 import org.apache.spark.sql.graft.VectorFunctions
 
-/** Approximate-nearest-neighbor search over an embedding column.
+/** Nearest-neighbor search over an embedding column.
   *
-  * Two paths:
-  *  - `bruteForceTopK` — exact baseline: queries × corpus with the query side
-  *    broadcast, scored by the codegen'd [[graft.functions.CosineSimilarity]]
-  *    expression, per-query top-k via TakeOrdered-style window. Correct at
-  *    any corpus size as long as the *query* set fits in a broadcast
-  *    (classic "small probes against a huge corpus" shape: one scan of the
-  *    corpus, no shuffle of corpus rows at all).
-  *  - `lshTopK` — scale path: sign-random-projection buckets (deterministic
-  *    md5-derived hyperplanes), candidates only from the query's bucket
-  *    (plus optional multi-probe by flipping each bit), then exact rescoring.
-  *    Trades recall for touching only a 2^-bits fraction of the corpus per
-  *    probe.
+  * One entry point: [[Similarity.search]] ranks, for every query vector,
+  * the `k` best corpus vectors under an [[Similarity.Index]]. The index
+  * decides how candidate pairs are generated and scored; everything after
+  * that is shared: pairs with `query_id = neighbor_id` are dropped, the
+  * bounded [[graft.functions.TopKAggregator]] keeps the top k per query
+  * (score desc, neighbor_id asc), and integer scores are cast back to
+  * long. MMR, kNN labels and the label-noise screen search through it, and
+  * margin mining draws its candidate pairs from the same generator.
   */
 object Similarity {
 
@@ -40,19 +36,179 @@ object Similarity {
         (col("pos") + 1).cast("int").as("rank"), col("s.score").as("cos"))
   }
 
-  /** Exact top-k neighbors by cosine for each query vector.
-    * Output: (query_id, neighbor_id, rank, cos).
+  /** A query never counts as its own neighbor. */
+  private def notSelf: Column = col("query_id") =!= col("neighbor_id")
+
+  /** How [[search]] generates and scores candidate pairs. */
+  sealed trait Index
+
+  object Index {
+
+    /** The indexes [[Ivf]] can run inside its probed cells. */
+    sealed trait InCell extends Index
+
+    /** The candidate sources [[marginMine]] accepts: both score pairs by
+      * exact cosine.
+      */
+    sealed trait Shortlist extends Index
+
+    /** Every (query, corpus) pair, scored by the codegen'd
+      * [[graft.functions.CosineSimilarity]]; score column `cos` (double).
+      * The query side broadcasts into one scan of the corpus: no shuffle
+      * of corpus rows at any corpus size.
+      */
+    case object Exact extends InCell with Shortlist
+
+    /** The [[Exact]] scan over ±127 codes
+      * ([[org.apache.spark.sql.graft.QuantizeInt8]]: L2-normalize, round),
+      * scored by their exact integer dot product; score column `dot`
+      * (long). Codes are 4× smaller than float32, and integer scores do not
+      * diverge across engines.
+      */
+    case object Int8 extends Index
+
+    /** Product quantization with asymmetric distance computation (Jégou et
+      * al.): corpus vectors are encoded once against `codebook` (`sub`,
+      * `entry`, `scode` — from [[pqCodebook]], [[pqCodebookTrained]] or any
+      * external quantizer) in `m` subspaces, and a query scores a code as
+      * Σ_sub lut[sub][code[sub]], exact long arithmetic end to end; score
+      * column `adc` (long). This relational form (exploded codes ⋈ exploded
+      * LUT rows, long sum per pair) is DuckDB-replayable; [[Ivf]] over
+      * `Pq` with every cell probed is the byte-identical packed scan
+      * (specs assert the equality).
+      */
+    final case class Pq(codebook: DataFrame, m: Int) extends InCell
+
+    /** Inverted file over an explicit centroid set (`cid`, `cv`) — from
+      * [[trainCentroids]], a pinned literal table or any external
+      * quantizer: corpus vectors are assigned to their nearest centroid's
+      * cell ([[assignToCentroids]]), each query probes its `nprobe` nearest
+      * cells and `inner` scores inside them. The centroids broadcast (a
+      * quantizer is a model of FIXED size); each query touches ~nprobe/C of
+      * the corpus. `inner = Pq` scores packed m-byte codes with the native
+      * [[org.apache.spark.sql.graft.PqAdcPacked]] loop (FAISS's
+      * `by_residual=false` IVF-PQ: codes encode the vectors themselves,
+      * keeping the exact long ADC contract).
+      */
+    final case class Ivf(centroids: DataFrame, nprobe: Int, inner: InCell)
+        extends Index
+
+    /** Sign-random-projection buckets ([[srpBucket]], `bits` sign bits):
+      * candidates share the query's bucket and are rescored by exact
+      * cosine; score column `cos`. A small bucket may give fewer than k
+      * rows. `multiProbe` also probes the `bits` Hamming-1 buckets
+      * ([[multiProbeKeys]]) on the query side, for recall.
+      */
+    final case class Lsh(bits: Int, multiProbe: Boolean) extends Shortlist
+  }
+
+  /** Top-`k` corpus neighbors of every query under `index`. Both frames
+    * carry (vec_id, embedding). Output: (query_id, neighbor_id, rank,
+    * score) with the score column named and typed by the index — `cos`
+    * (double), `dot` or `adc` (long).
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      includeSelf: Boolean = false): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
-    val scored = c.join(q,
-        if (includeSelf) lit(true) else col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosineSim(col("qv"), col("cv")).as("cos"))
-    topKPerQuery(scored, k)
+  def search(queries: DataFrame, corpus: DataFrame, k: Int,
+      index: Index): DataFrame = {
+    val top = topKPerQuery(pairs(queries, corpus, index).filter(notSelf), k)
+    scoreColumn(index) match {
+      case "cos" => top
+      // integer scores ride the aggregator's double exactly (≪ 2⁵³)
+      case score => top.select(col("query_id"), col("neighbor_id"),
+        col("rank"), col("cos").cast("long").as(score))
+    }
+  }
+
+  private def scoreColumn(index: Index): String = index match {
+    case Index.Exact | _: Index.Lsh => "cos"
+    case Index.Int8 => "dot"
+    case _: Index.Pq => "adc"
+    case Index.Ivf(_, _, inner) => scoreColumn(inner)
+  }
+
+  /** The candidate pairs of `index`, self-pairs included, scored as
+    * (query_id, neighbor_id, cos) with `cos` the index's score as a double.
+    */
+  private def pairs(queries: DataFrame, corpus: DataFrame,
+      index: Index): DataFrame = {
+    val cosine = VectorFunctions.cosineSim(col("qv"), col("cv")).as("cos")
+    // the query side broadcast into one scan of the corpus
+    def scan(code: Column) =
+      corpus.select(col("vec_id").as("neighbor_id"), code.as("cv"))
+        .join(broadcast(queries.select(col("vec_id").as("query_id"),
+          code.as("qv"))), lit(true))
+    index match {
+      case Index.Exact =>
+        scan(col("embedding")).select(col("query_id"), col("neighbor_id"),
+          cosine)
+      case Index.Int8 =>
+        scan(VectorFunctions.quantizeInt8(col("embedding")))
+          .select(col("query_id"), col("neighbor_id"),
+            VectorFunctions.dotInt(col("qv"), col("cv")).cast("double")
+              .as("cos"))
+      case Index.Lsh(bits, multiProbe) =>
+        val q0 = queries.select(col("vec_id").as("query_id"),
+          col("embedding").as("qv"),
+          srpBucket(col("embedding"), bits).as("bucket"))
+        val q =
+          if (!multiProbe) q0
+          else q0.select(col("query_id"), col("qv"),
+            explode(multiProbeKeys(col("bucket"), bits)).as("bucket"))
+        q.join(corpus.select(col("vec_id").as("neighbor_id"),
+            col("embedding").as("cv"),
+            srpBucket(col("embedding"), bits).as("bucket")), Seq("bucket"))
+          .select(col("query_id"), col("neighbor_id"), cosine)
+      case Index.Pq(codebook, m) =>
+        pqEncode(corpus, codebook, m)
+          .withColumnRenamed("vec_id", "neighbor_id")
+          .join(broadcast(pqLutRows(queries, codebook, m)), Seq("sub", "entry"))
+          .groupBy(col("query_id"), col("neighbor_id"))
+          .agg(sum(col("pdot")).cast("double").as("cos"))
+      case Index.Ivf(centroids, nprobe, inner) =>
+        val cents = broadcast(centroids.select(col("cid"), col("cv")))
+        // query → its nprobe nearest cells: the probe side is the small
+        // one, and nprobe > 1 needs top-n, not argmax, so a window is fine
+        val probeW = Window.partitionBy(col("query_id"))
+          .orderBy(col("__ccos").desc, col("cid"))
+        val probes = queries
+          .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+          .join(cents, lit(true))
+          .withColumn("__ccos",
+            VectorFunctions.cosineSim(col("qv"), col("cv")))
+          .withColumn("__crn", row_number().over(probeW))
+          .filter(col("__crn") <= nprobe)
+          .select(col("query_id"), col("qv"), col("cid"))
+        inner match {
+          case Index.Exact =>
+            probes.join(
+                assignToCentroids(corpus, col("vec_id"), col("embedding"),
+                  centroids).select(col("id").as("neighbor_id"), col("cid"),
+                  col("v").as("cv")),
+                Seq("cid"))
+              .select(col("query_id"), col("neighbor_id"), cosine)
+          case Index.Pq(codebook, m) =>
+            // build side (one-time, persistable): cell id + packed PQ code
+            // per vector; the assignment carries only the cell id
+            val assigned = corpus
+              .select(col("vec_id").as("neighbor_id"),
+                col("embedding").as("nv"))
+              .join(cents, lit(true))
+              .withColumn("__ccos",
+                VectorFunctions.cosineSim(col("nv"), col("cv")))
+              .groupBy(col("neighbor_id"))
+              .agg(max_by(col("cid"),
+                struct(col("__ccos"), (-col("cid")).as("nc"))).as("cid"))
+            val luts = pqLut(queries.select(col("vec_id"), col("embedding")),
+              codebook, m)
+            pqPack(pqEncode(corpus, codebook, m))
+              .select(col("vec_id").as("neighbor_id"), col("pqcode"))
+              .join(assigned, Seq("neighbor_id"))
+              .join(broadcast(probes.select(col("query_id"), col("cid"))
+                .join(luts, Seq("query_id"))), Seq("cid"))
+              .select(col("query_id"), col("neighbor_id"),
+                VectorFunctions.pqAdcPacked(col("pqcode"), col("lut"))
+                  .cast("double").as("cos"))
+        }
+    }
   }
 
   /** Diverse top-k by maximal marginal relevance (Carbonell & Goldstein
@@ -68,8 +224,8 @@ object Similarity {
     * rows by construction — O(k·shortlist·dim) work per query, no window
     * over the corpus, and the only data past the shortlist scan is
     * shortlist×(8-byte id + vector) per query. The corpus-sized work stays
-    * in [[bruteForceTopK]]'s broadcast scan (swap in an ANN shortlist —
-    * [[lshTopK]]/[[ivfTopKWith]] — for 10⁹-vector corpora).
+    * in the [[Index.Exact]] broadcast scan (swap in an ANN shortlist —
+    * [[Index.Lsh]]/[[Index.Ivf]] — for 10⁹-vector corpora).
     *
     * Float discipline: rel and pairwise cos come from the same index-order
     * double folds as the native expression, and the score is always
@@ -82,7 +238,7 @@ object Similarity {
     require(k <= shortlist, s"k=$k must be <= shortlist=$shortlist")
     val spark = corpus.sparkSession
     import spark.implicits._
-    val short = bruteForceTopK(queries, corpus, shortlist)
+    val short = search(queries, corpus, shortlist, Index.Exact)
     val cand = short.join(
         corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv")),
         Seq("neighbor_id"))
@@ -137,7 +293,7 @@ object Similarity {
     * quantizer (`cid`, `cv`): argmax over cosine, ties toward the smaller
     * cid — partial-aggregated before its shuffle so the exchange carries n
     * rows, not n×K. Output: (id, cid, v). The shared cell-assignment step
-    * of [[ivfTopKWith]], [[graft.operators.Dedup.semanticDedup]] and
+    * of [[Index.Ivf]], [[graft.operators.Dedup.semanticDedup]] and
     * [[graft.operators.Sampling.clusterBalancedSample]].
     */
   def assignToCentroids(df: DataFrame, id: Column, vec: Column,
@@ -159,7 +315,7 @@ object Similarity {
     * (vec_id, embedding, label). Output: (query_id, neighbor_id,
     * neighbor_label, rank, cos).
     *
-    * Same scale shape as [[bruteForceTopK]]: queries broadcast, one corpus
+    * Same scale shape as [[Index.Exact]]: queries broadcast, one corpus
     * scan, the label predicate fused into the join condition (filtered
     * before scoring), bounded partial top-k — no window, no shuffle of
     * corpus rows. For 10⁹-vector corpora swap the scan for an ANN
@@ -170,8 +326,7 @@ object Similarity {
       col("embedding").as("qv"), col("label").as("qlabel")))
     val c = corpus.select(col("vec_id").as("neighbor_id"),
       col("embedding").as("cv"), col("label").as("nlabel"))
-    val scored = c.join(q,
-        col("query_id") =!= col("neighbor_id") && col("qlabel") =!= col("nlabel"))
+    val scored = c.join(q, notSelf && col("qlabel") =!= col("nlabel"))
       .select(col("query_id"), col("neighbor_id"), col("nlabel"),
         VectorFunctions.cosineSim(col("qv"), col("cv")).as("cos"))
     // carry the label through the bounded top-k by re-joining on the
@@ -181,58 +336,6 @@ object Similarity {
         Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("neighbor_label"),
         col("rank"), col("cos"))
-  }
-
-  /** Metadata-filtered (pre-filter) top-k: restricts the corpus to ids in
-    * `keep` (a one-column `vec_id` frame — e.g. doc ids passing a language
-    * or quality predicate on another table) BEFORE any scoring, then runs
-    * the exact scan. Pre-filtering is the standard shape for selective
-    * predicates: post-filtering an ANN result under-delivers k when the
-    * predicate is selective, while here selectivity directly shrinks the
-    * scored space.
-    *
-    * Scale shape: one equality semi-join on 8-byte ids reduces the corpus
-    * (bucket/co-partition both sides by id to make it shuffle-free), then
-    * the scan streams with broadcast probes and bounded top-k aggregation
-    * — no window, no candidate blowup. For low-selectivity predicates at
-    * 10⁹+ vectors, swap [[bruteForceTopK]] for the bucketed
-    * [[lshTopK]]/[[ivfTopKWith]] over the same kept frame.
-    */
-  def filteredTopK(queries: DataFrame, corpus: DataFrame, keep: DataFrame,
-      k: Int, includeSelf: Boolean = false): DataFrame = {
-    val kept = corpus.join(keep.select(col("vec_id")), Seq("vec_id"), "left_semi")
-    bruteForceTopK(queries, kept, k, includeSelf)
-  }
-
-  /** Int8-quantized exact-scan top-k: both sides are compressed to ±127
-    * integer codes by the codegen'd [[org.apache.spark.sql.graft.QuantizeInt8]]
-    * (L2-normalize, round — one global scale, no calibration stats), and
-    * candidates are ranked by the exact integer dot product of codes
-    * ([[org.apache.spark.sql.graft.DotInt]]), which orders pairs by
-    * quantized cosine. Returns (query_id, neighbor_id, rank, dot).
-    *
-    * Scale rationale: at 10⁹+ vectors the scan is memory-bandwidth-bound,
-    * and int8 codes are 4× smaller than float32 (store them packed as
-    * binary for the full 4×; `array<int>` here keeps the oracle exact) —
-    * quantize once on write, then every subsequent scan, shuffle, and cache
-    * of the corpus moves a quarter of the bytes. Scoring is pure integer
-    * math (no FP divergence across engines) behind a broadcast-probe join
-    * with bounded partial top-k — the same no-window shape as
-    * [[bruteForceTopK]].
-    */
-  def quantizedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      includeSelf: Boolean = false): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      VectorFunctions.quantizeInt8(col("embedding")).as("qc")))
-    val c = corpus.select(col("vec_id").as("neighbor_id"),
-      VectorFunctions.quantizeInt8(col("embedding")).as("cc"))
-    val scored = c.join(q,
-        if (includeSelf) lit(true) else col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.dotInt(col("qc"), col("cc")).cast("double").as("cos"))
-    topKPerQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cos").cast("long").as("dot"))
   }
 
   /** Johnson–Lindenstrauss projection of an embedding column to `outDims`
@@ -253,14 +356,14 @@ object Similarity {
     * the smaller label value so the result is engine-independent).
     * Output: (query_id, label, votes).
     *
-    * Scale shape: inherits [[bruteForceTopK]]'s broadcast-probe scan (swap
+    * Scale shape: inherits [[Index.Exact]]'s broadcast-probe scan (swap
     * in the LSH/IVF variants upstream for 10⁹+ corpora); the vote is a
     * groupBy over queries×k rows and a max_by — partial-aggregated, no
     * window over anything corpus-sized.
     */
   def knnLabel(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    val neighbors = bruteForceTopK(queries,
-      corpus.select(col("vec_id"), col("embedding")), k)
+    val neighbors = search(queries,
+      corpus.select(col("vec_id"), col("embedding")), k, Index.Exact)
     val labeled = neighbors.join(
       corpus.select(col("vec_id").as("neighbor_id"), col("label")),
       Seq("neighbor_id"))
@@ -313,7 +416,7 @@ object Similarity {
   /** The 1-bit multiprobe key set of an SRP bucket: the bucket itself
     * plus every bucket at Hamming distance 1 (each of the `bits` sign
     * bits flipped) — `bits + 1` distinct keys. ONE copy of the expansion
-    * (shared by [[lshTopK]] and
+    * (shared by [[Index.Lsh]] and
     * [[graft.operators.Dedup.semanticDecontaminateLsh]]) so the engine
     * side can never drift from the oracles' `bit_count(xor) <= 1`
     * candidate replay.
@@ -324,7 +427,7 @@ object Similarity {
 
   /** Trained coarse quantizer for IVF: seeded k-means|| over the corpus
     * embeddings, returned as a `(cid, cv)` centroid frame for
-    * [[ivfTopKWith]]. The registry's oracle-reproducible quantizer is the
+    * [[Index.Ivf]]. The registry's oracle-reproducible quantizer is the
     * pinned output of this trainer (`PinnedArtifacts.IvfCentroids16`);
     * tighter cells mean fewer probes for the same recall. Training
     * cost is MLlib's k-means|| (a handful of passes over the corpus); the
@@ -345,54 +448,6 @@ object Similarity {
       .toSeq.toDF("cid", "cv")
   }
 
-  /** IVF-Flat approximate top-k over an explicit centroid set (`cid`,
-    * `cv: array<float>`) — from [[trainCentroids]], a pinned literal table
-    * or any external quantizer: corpus vectors are assigned to their
-    * nearest centroid's cell, queries probe the `nprobe` nearest cells and
-    * rescore exactly inside them.
-    *
-    * Scale shape: centroids broadcast (tiny, FIXED count — a quantizer is
-    * a model and must not grow with the corpus, or assignment turns n×C
-    * quadratic), assignment is map-side, the only shuffle is the
-    * cell-keyed candidate join — each query touches nprobe/C of the
-    * corpus.
-    */
-  def ivfTopKWith(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
-      k: Int, nprobe: Int = 2): DataFrame = {
-    val cents = broadcast(centroids.select(col("cid"), col("cv")))
-
-    // Corpus→cell assignment is an argmax over the broadcast centroids:
-    // score n×C rows map-side (no exchange — cents is broadcast), then
-    // max_by partial-aggregates to one (cell, vector) per corpus row before
-    // the shuffle, so the exchange carries n rows, not n×C. Tie on cosine
-    // breaks toward the smaller cid (max over (cos, -cid)), matching the
-    // `ORDER BY cos DESC, cid` window this replaces.
-    val assigned = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
-      .join(cents, lit(true))
-      .withColumn("__ccos", VectorFunctions.cosineSim(col("nv"), col("cv")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(struct(col("cid"), col("nv")),
-        struct(col("__ccos"), (-col("cid")).as("nc"))).as("m"))
-      .select(col("neighbor_id"), col("m.cid").as("cid"), col("m.nv").as("nv"))
-
-    // Query→probe-cells keeps the window form: the probe side is the small
-    // one (queries, not corpus), and nprobe > 1 needs top-n, not argmax.
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("__ccos").desc, col("cid"))
-    val probes = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .join(cents, lit(true))
-      .withColumn("__ccos", VectorFunctions.cosineSim(col("qv"), col("cv")))
-      .withColumn("__crn", row_number().over(probeW))
-      .filter(col("__crn") <= nprobe)
-      .drop("cv", "__ccos", "__crn")
-
-    val scored = probes.join(assigned, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosineSim(col("qv"), col("nv")).as("cos"))
-    topKPerQuery(scored, k)
-  }
-
   // ------------------------------------------------ product quantization
 
   /** Deterministic product-quantization codebook over int8-quantized
@@ -407,7 +462,7 @@ object Similarity {
     * Quantizing BEFORE splitting means every downstream PQ computation
     * (assignment distances, ADC partial dots) is exact long arithmetic:
     * bit-stable across engines and across any aggregation order — the same
-    * design throughline as [[quantizedTopK]].
+    * design throughline as [[Index.Int8]].
     *
     * `maxEntries` caps the codebook at a FIXED size (default 128, so
     * entry ids pack one byte per subspace): a codebook is a model, and
@@ -512,8 +567,8 @@ object Similarity {
     * Scale shape: the codebook is broadcast, assignment is map-side
     * (n×m×J scored rows never leave their partition), and the min_by
     * partial-aggregates to one entry per (vector, subspace) before the
-    * exchange — n×m rows shuffled, the PQ analogue of [[ivfTopKWith]]'s
-    * assignment.
+    * exchange — n×m rows shuffled, the PQ analogue of
+    * [[assignToCentroids]].
     */
   def pqEncode(corpus: DataFrame, codebook: DataFrame, m: Int): DataFrame = {
     val subs = subSplit(
@@ -534,7 +589,8 @@ object Similarity {
     * m bytes vs 4·dims for `array<int>` int8 codes vs 4·dims for float32:
     * at dims=64, m=8 that is a 32× compression of the corpus — the reason
     * PQ is the standard 10⁹⁺-vector ANN representation. Persist once;
-    * [[ivfPqTopKWith]] scans it without ever reconstructing vectors.
+    * [[Index.Ivf]] over [[Index.Pq]] scans it without ever reconstructing
+    * vectors.
     */
   def pqPack(codes: DataFrame): DataFrame =
     codes.groupBy(col("vec_id"))
@@ -549,147 +605,24 @@ object Similarity {
     * [[org.apache.spark.sql.graft.PqAdcPacked]] consumes). Query side is
     * small — the LUT set broadcasts.
     */
-  def pqLut(queries: DataFrame, codebook: DataFrame, m: Int): DataFrame = {
-    val qsubs = subSplit(
-      queries.select(col("vec_id").as("query_id"),
-        VectorFunctions.quantizeInt8(col("embedding")).as("code")), m)
-      .select(col("query_id"), col("sub"), col("scode").as("qs"))
-    qsubs.join(broadcast(codebook), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("entry"),
-        VectorFunctions.dotInt(col("qs"), col("scode")).as("pdot"))
+  def pqLut(queries: DataFrame, codebook: DataFrame, m: Int): DataFrame =
+    pqLutRows(queries, codebook, m)
       .groupBy(col("query_id"))
       .agg(array_sort(collect_list(struct(col("sub"), col("entry"), col("pdot")))).as("t"))
       .select(col("query_id"), expr("transform(t, x -> x.pdot)").as("lut"))
-  }
 
-  /** PQ/ADC approximate top-k (asymmetric distance computation, Jégou et
-    * al.): corpus vectors are PQ-encoded once; each query scores a corpus
-    * code as Σ_sub lut[sub][code[sub]] — the dot product of the query with
-    * the RECONSTRUCTED (codebook-rounded) corpus vector, exact long
-    * arithmetic end to end. Returns (query_id, neighbor_id, rank, adc).
-    *
-    * This relational form (exploded codes ⋈ exploded LUT rows, long-sum
-    * per pair) exists to be DuckDB-replayable; [[ivfPqTopKWith]] with every
-    * cell probed is the byte-identical scale form (binary codes, native
-    * scoring expression, no per-subspace rows at all — specs assert the
-    * equality).
+  /** The exploded LUT: (query_id, sub, entry, pdot) — one row per query,
+    * subspace and codebook entry.
     */
-  def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, m: Int = 8,
-      entryEvery: Long = 25, includeSelf: Boolean = false): DataFrame =
-    pqTopKWith(queries, corpus, pqCodebook(corpus, m, entryEvery), k, m,
-      includeSelf)
-
-  /** [[pqTopK]] with an explicit codebook (`sub`, `entry`, `scode`) — from
-    * [[pqCodebook]], [[pqCodebookTrained]], or any external quantizer.
-    */
-  def pqTopKWith(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
-      k: Int, m: Int, includeSelf: Boolean = false): DataFrame = {
-    val codes = pqEncode(corpus, codebook, m)
-      .withColumnRenamed("vec_id", "neighbor_id")
-    val lutRows = subSplit(
+  private def pqLutRows(queries: DataFrame, codebook: DataFrame,
+      m: Int): DataFrame =
+    subSplit(
       queries.select(col("vec_id").as("query_id"),
         VectorFunctions.quantizeInt8(col("embedding")).as("code")), m)
       .select(col("query_id"), col("sub"), col("scode").as("qs"))
       .join(broadcast(codebook), Seq("sub"))
       .select(col("query_id"), col("sub"), col("entry"),
         VectorFunctions.dotInt(col("qs"), col("scode")).as("pdot"))
-    val scored = codes.join(broadcast(lutRows), Seq("sub", "entry"))
-      .filter(if (includeSelf) lit(true) else col("query_id") =!= col("neighbor_id"))
-      .groupBy(col("query_id"), col("neighbor_id"))
-      .agg(sum(col("pdot")).as("adc"))
-    // adc ≤ m · subd · 127² ≪ 2⁵³ — exact in the aggregator's double
-    topKPerQuery(scored.select(col("query_id"), col("neighbor_id"),
-        col("adc").cast("double").as("cos")), k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cos").cast("long").as("adc"))
-  }
-
-  /** IVF-PQ with explicit centroids (`cid`, `cv`) and PQ codebook (`sub`,
-    * `entry`, `scode`) — from [[pqCodebook]], the trained quantizers
-    * ([[trainCentroids]], [[pqCodebookTrained]]) or pinned literal tables.
-    * The coarse quantizer prunes the scan to `nprobe` cells per query and
-    * PQ-ADC scores the survivors from their m-byte codes — the standard
-    * composition for 10⁹⁺-vector corpora (public FAISS design; this is
-    * the `by_residual=false` variant: codes encode the vectors themselves,
-    * not cell residuals, which keeps every score in the exact
-    * long-arithmetic ADC contract — residual encoding would need a
-    * magnitude-preserving re-quantization that breaks it). Probing every
-    * cell reproduces [[pqTopKWith]] exactly.
-    *
-    * Scale shape: centroids and codebook broadcast; cell assignment and PQ
-    * encoding are one-time map-side passes over the corpus (persist the
-    * `(neighbor_id, cid, pqcode)` frame — m bytes + 12 per vector); at
-    * query time the probe set and LUTs broadcast, each query touches
-    * ~nprobe/C of the corpus, and scoring is the native
-    * [[org.apache.spark.sql.graft.PqAdcPacked]] lookup loop. The only
-    * corpus-sized exchange anywhere is the encode's n×m-row min_by partial
-    * agg, paid once at build time.
-    */
-  def ivfPqTopKWith(queries: DataFrame, corpus: DataFrame,
-      centroids: DataFrame, codebook: DataFrame, k: Int, m: Int,
-      nprobe: Int = 2, includeSelf: Boolean = false): DataFrame = {
-    val cents = broadcast(centroids.select(col("cid"), col("cv")))
-    // build side (one-time, persistable): cell id + packed PQ code per vector
-    val assigned = corpus
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
-      .join(cents, lit(true))
-      .withColumn("__ccos", VectorFunctions.cosineSim(col("nv"), col("cv")))
-      .groupBy(col("neighbor_id"))
-      .agg(max_by(col("cid"), struct(col("__ccos"), (-col("cid")).as("nc"))).as("cid"))
-    val packed = pqPack(pqEncode(corpus, codebook, m))
-      .select(col("vec_id").as("neighbor_id"), col("pqcode"))
-      .join(assigned, Seq("neighbor_id"))
-
-    // query side: nprobe nearest cells (probe set is small — window is fine)
-    val probeW = Window.partitionBy(col("query_id"))
-      .orderBy(col("__ccos").desc, col("cid"))
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      .join(cents, lit(true))
-      .withColumn("__ccos", VectorFunctions.cosineSim(col("qv"), col("cv")))
-      .withColumn("__crn", row_number().over(probeW))
-      .filter(col("__crn") <= nprobe)
-      .select(col("query_id"), col("cid"))
-    val luts = pqLut(queries.select(col("vec_id"), col("embedding")), codebook, m)
-
-    val scored = packed
-      .join(broadcast(probes.join(luts, Seq("query_id"))), Seq("cid"))
-      .filter(if (includeSelf) lit(true) else col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.pqAdcPacked(col("pqcode"), col("lut")).cast("double").as("cos"))
-    topKPerQuery(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("cos").cast("long").as("adc"))
-  }
-
-  /** Approximate top-k: candidates share the query's SRP bucket, exact
-    * cosine rescoring inside the bucket. Output as `bruteForceTopK` (ranks
-    * may hold fewer than k rows when a bucket is small).
-    *
-    * `multiProbe` additionally probes every bucket at hamming distance 1
-    * from the query's (flip each of the `bits` sign bits): recall rises
-    * steeply — a near neighbor differs in few signs — for bits× more probe
-    * keys per QUERY, while the corpus side stays one bucket per row (the
-    * query side is the small one, so the explode is cheap; this is the
-    * standard multi-probe LSH trade replacing more hash tables with more
-    * probes).
-    */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-      bits: Int = 8, multiProbe: Boolean = false): DataFrame = {
-    val q0 = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-      srpBucket(col("embedding"), bits).as("bucket"))
-    val q =
-      if (!multiProbe) q0
-      else q0.select(col("query_id"), col("qv"),
-        explode(multiProbeKeys(col("bucket"), bits)).as("bucket"))
-    val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"),
-      srpBucket(col("embedding"), bits).as("bucket"))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        VectorFunctions.cosineSim(col("qv"), col("cv")).as("cos"))
-    topKPerQuery(scored, k)
-  }
 
   /** ANN index quality report: per-query recall of an approximate top-k
     * result against the exact one — the acceptance gate run before an IVF /
@@ -727,7 +660,7 @@ object Similarity {
     * stance as the engine-wide `ln` ban.
     *
     * Input: `topk` = (query_id, neighbor_id, rank, …) from any searcher
-    * ([[bruteForceTopK]] or an ANN path — comparing the two quantifies
+    * ([[Index.Exact]] or an ANN index — comparing the two quantifies
     * what approximation costs in END-METRIC terms, not just overlap as
     * [[recallReport]] does); `labels` = (vec_id, label) for both id
     * spaces. Output per query: (query_id, label, first_rel_rank —
@@ -829,7 +762,7 @@ object Similarity {
     * Prefixes are plain `slice(embedding, 1, m)` — meaningful when the
     * model was MRL-trained (information front-loaded); for a non-MRL
     * model the audit quantifies exactly how much is lost, which is the
-    * point. Every side reuses [[bruteForceTopK]]'s fold and tie rule
+    * point. Every side reuses the [[Index.Exact]] fold and tie rule
     * (cos desc, id asc), so the report oracle-checks bit-for-bit. A
     * vector whose prefix is all-zero scores NaN cosines at that m and
     * wins nothing — same stance as the LSH/PQ paths.
@@ -861,7 +794,7 @@ object Similarity {
       col("embedding").as("qv")))
     val scored = corpus.select(col("vec_id").as("neighbor_id"),
         col("embedding").as("cv"))
-      .join(q, col("query_id") =!= col("neighbor_id"))
+      .join(q, notSelf)
       .select(col("query_id"), col("neighbor_id"),
         posexplode(VectorFunctions.prefixCosines(col("qv"), col("cv"),
           dims)).as(Seq("j", "cos")))
@@ -915,13 +848,18 @@ object Similarity {
     * its length; the margin is the fixed two-division chain above — an
     * ANSI oracle replays every bit.
     *
-    * Scale shape: `queries` is bounded by contract (an alignment batch)
-    * and broadcasts into one corpus scan; the scored frame is pinned for
-    * its three consumers (forward avg, backward avg, margin). Both avgs
-    * are bounded TopKAggregator aggregations (no window over the scored
-    * frame); the backward join is match-keyed. For 10⁹-candidate
-    * corpora, shortlist with [[lshTopK]]/[[ivfTopKWith]] and feed the
-    * shortlisted pairs through the same margin chain.
+    * Candidate pairs come from `source`, the generator [[search]] uses:
+    * `Exact` scores every pair (`queries` is bounded by contract — an
+    * alignment batch — and broadcasts into one corpus scan); `Lsh` keeps
+    * only bucket collisions (~|corpus|·(bits+1)/2^bits per query on
+    * balanced buckets with `multiProbe`), for corpora where the full scan
+    * is unaffordable. Both k-NN averages then read the shortlisted
+    * neighborhoods, so an `Lsh` margin differs from the `Exact` one where
+    * the shortlist misses true neighbors, and a query whose buckets
+    * collide with nothing mines nothing. The scored frame is pinned for
+    * its three consumers (forward avg, backward avg, margin); both avgs
+    * are bounded TopKAggregator aggregations and the backward join is
+    * match-keyed.
     *
     * Bitext joins two INDEPENDENT id spaces (English sentence 7 and its
     * French translation can both carry vec_id 7), so equal ids score by
@@ -930,30 +868,25 @@ object Similarity {
     * match (cos = 1 dominates any margin) — set `excludeSelfIds = true`
     * for that same-space shape.
     */
-  def marginMine(queries: DataFrame, corpus: DataFrame, k: Int = 4,
-      threshold: Double = 1.0,
+  def marginMine(queries: DataFrame, corpus: DataFrame,
+      source: Index.Shortlist, k: Int = 4, threshold: Double = 1.0,
       excludeSelfIds: Boolean = false): DataFrame = {
-    val q = broadcast(queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv")))
-    val c = corpus.select(col("vec_id").as("match_id"),
-      col("embedding").as("cv"))
-    val scored = c.join(q,
-        if (excludeSelfIds) col("query_id") =!= col("match_id")
-        else lit(true))
-      .select(col("query_id"), col("match_id"),
-        VectorFunctions.cosineSim(col("qv"), col("cv")).as("cos"))
-      // zero-norm vectors cosine to NULL — drop those pairs here: they
-      // carry no alignment signal, and a NULL score would break the
-      // non-nullable TopK aggregation buffer below
-      .filter(col("cos").isNotNull)
-    marginOverPairs(scored, k, threshold)
+    // zero-norm vectors cosine to NULL — drop those pairs here: they
+    // carry no alignment signal, and a NULL score would break the
+    // non-nullable TopK aggregation buffer below
+    val scored = pairs(queries, corpus, source).filter(col("cos").isNotNull)
+    marginOverPairs(
+      (if (excludeSelfIds) scored.filter(notSelf) else scored)
+        .select(col("query_id"), col("neighbor_id").as("match_id"),
+          col("cos")),
+      k, threshold)
   }
 
   /** The LASER margin chain over an ARBITRARY shortlist of scored pairs
     * `(query_id, match_id, cos)` — the tail [[marginMine]] shares and the
     * 10⁹-candidate composition path runs directly: shortlist with any of
-    * this module's searchers ([[lshTopK]]'s bucket join,
-    * [[ivfTopKWith]]'s cells), then margin-rank the shortlist. Both k-NN
+    * this module's indexes (an [[Index.Lsh]] bucket join, [[Index.Ivf]]
+    * cells), then margin-rank the shortlist. Both k-NN
     * averages read the SHORTLISTED neighborhoods (the standard
     * shortlisted-margin approximation — at 10⁹ candidates the exact
     * neighborhood is exactly what you cannot afford), so scores differ
@@ -1003,40 +936,5 @@ object Similarity {
       .select(col("query_id"), col("b.match_id").as("match_id"),
         col("b.cos").as("cos"), col("b.margin").as("margin"))
       .filter(col("margin") >= lit(threshold))
-  }
-
-  /** Bitext mining at corpus scales where [[marginMine]]'s broadcast scan
-    * is unaffordable: SRP-bucket LSH shortlists the candidate pairs (the
-    * [[lshTopK]] bucket join — each query meets only its bucket
-    * collisions, `multiProbe` adds the `bits` Hamming-1 buckets on the
-    * query side for recall), then [[marginOverPairs]] margin-ranks the
-    * shortlist. Work drops from |queries|·|corpus| cosines to the bucket
-    * collision volume (~|corpus|·(bits+1)/2^bits per query on balanced
-    * buckets); queries whose buckets collide with nothing mine nothing —
-    * by construction they have no near neighbor on the other side.
-    *
-    * `excludeSelfIds` as in [[marginMine]] (two independent id spaces by
-    * default).
-    */
-  def marginMineLsh(queries: DataFrame, corpus: DataFrame, k: Int = 4,
-      threshold: Double = 1.0, bits: Int = 8, multiProbe: Boolean = true,
-      excludeSelfIds: Boolean = false): DataFrame = {
-    val q0 = queries.select(col("vec_id").as("query_id"),
-      col("embedding").as("qv"),
-      srpBucket(col("embedding"), bits).as("bucket"))
-    val q =
-      if (!multiProbe) q0
-      else q0.select(col("query_id"), col("qv"),
-        explode(multiProbeKeys(col("bucket"), bits)).as("bucket"))
-    val c = corpus.select(col("vec_id").as("match_id"),
-      col("embedding").as("cv"),
-      srpBucket(col("embedding"), bits).as("bucket"))
-    val scored = q.join(c, Seq("bucket"))
-      .filter(if (excludeSelfIds) col("query_id") =!= col("match_id")
-        else lit(true))
-      .select(col("query_id"), col("match_id"),
-        VectorFunctions.cosineSim(col("qv"), col("cv")).as("cos"))
-      .filter(col("cos").isNotNull)
-    marginOverPairs(scored, k, threshold)
   }
 }

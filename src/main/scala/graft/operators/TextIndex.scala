@@ -13,6 +13,10 @@ import graft.functions.TextFunctions
   */
 object TextIndex {
 
+  // per-row gram hashing widens its input first: a single small parquet
+  // file arrives as ONE partition and would serialize the work on one core
+  import Dedup.widen
+
   /** (doc, term, tf) posting table: one narrow explode + count — the
     * inverted index both similarity joins and retrieval build on. Terms are
     * whitespace tokens (with multiplicity).
@@ -412,16 +416,6 @@ object TextIndex {
         col("c.start_tok").as("start_tok"), col("c.n_tok").as("n_tok"),
         col("c.chunk_text").as("chunk_text"),
         TextFunctions.fingerprint64(col("c.chunk_text")).as("chunk_fp"))
-
-  /** Ensure at least default parallelism before per-row gram hashing —
-    * same rationale and probe as [[Dedup.widen]]: a single small parquet
-    * file arrives as ONE partition and would serialize the shingle +
-    * md5 work onto one core (measured 7-14 s vs sub-second at sf0.1).
-    */
-  private def widen(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
 
   /** Positional word n-grams hashed to 60-bit fingerprints: (id, pos, gfp)
     * with `pos` the 0-based start token. Shares [[TextFunctions.wordShingles]]

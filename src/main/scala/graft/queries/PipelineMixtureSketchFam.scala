@@ -932,9 +932,9 @@ trait PipelineMixtureSketchFam extends PipelineSimilarityFam {
       .withColumn("rank", row_number().over(lexW))
       .filter(col("rank") <= 20)
       .select(col("qid"), col("doc_id"), col("rank"))
-    val dense = graft.operators.Similarity.bruteForceTopK(
+    val dense = graft.operators.Similarity.search(
         emb.filter(col("vec_id") % 149 === 0 && col("vec_id") < stride),
-        emb, k = 20)
+        emb, k = 20, graft.operators.Similarity.Index.Exact)
       .select(col("query_id").as("qid"), col("neighbor_id").as("doc_id"),
         col("rank"))
     graft.operators.TextIndex.rrfFuse(Seq(lex, dense), k = 10)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
+import graft.operators.Similarity.{Index, pqCodebook, search}
 
 /** Similarity-search entries (brute force, LSH, IVF, PQ, bitext) — one slice of the [[Pipeline]] registry (the
   * monolithic Pipeline.scala split per-family in round 16, zero
@@ -347,13 +348,16 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * assignment table (id, cid, kept), so the oracle checks BOTH the
     * nearest-centroid assignment of every vector and the prune decisions.
     */
-  def dedupSemantic(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val cents = PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
+  def dedupSemantic(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.semanticDedup(
-        T(s, dir, "embeddings"), col("vec_id"), col("embedding"), cents,
-        threshold = 0.45)
+        T(s, dir, "embeddings"), col("vec_id"), col("embedding"),
+        pinnedCentroids(s), threshold = 0.45)
       .orderBy(col("id"))
+
+  /** The pinned k-means quantizer as a `(cid, cv)` centroid frame. */
+  private def pinnedCentroids(s: SparkSession): DataFrame = {
+    import s.implicits._
+    PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
   }
 
   def dedupSemanticOracle: String =
@@ -482,14 +486,11 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * pinned quantizer, then exactly 10 vectors per cluster by md5 rank —
     * the diversity-preserving selection companion to [[dedupSemantic]].
     */
-  def samplePerCluster(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val cents = PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
+  def samplePerCluster(s: SparkSession, dir: String): DataFrame =
     graft.operators.Sampling.clusterBalancedSample(
-        T(s, dir, "embeddings"), col("vec_id"), col("embedding"), cents,
-        nPerCluster = 10)
+        T(s, dir, "embeddings"), col("vec_id"), col("embedding"),
+        pinnedCentroids(s), nPerCluster = 10)
       .orderBy(col("cid"), col("id"))
-  }
 
   def samplePerClusterOracle: String =
     s"""WITH $normsCte,
@@ -510,6 +511,17 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
        |FROM ranked WHERE rk <= 10
        |ORDER BY cid, id""".stripMargin
 
+  /** The shared shape of the `sim_*` search entries: top-5 of the first 20
+    * embeddings against the whole table under `index`, which is built over
+    * that table.
+    */
+  private def searchTop5(s: SparkSession, dir: String)(
+      index: DataFrame => Index): DataFrame = {
+    val emb = T(s, dir, "embeddings")
+    search(emb.filter(col("vec_id") < 20), emb, k = 5, index(emb))
+      .orderBy(col("query_id"), col("rank"))
+  }
+
   /** IVF-Flat top-5 over the PINNED trained quantizer at nprobe = 3 —
     * wider probing than `sim_ivf_trained`'s nprobe = 2, so the two
     * entries gate different probe fan-outs of the same fixed-K plan.
@@ -522,14 +534,9 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * a scale risk; [[graft.operators.Similarity.pqCodebookTrained]] is
     * the production training path).
     */
-  def simIvf(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = T(s, dir, "embeddings")
-    val cents = PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
-    graft.operators.Similarity.ivfTopKWith(
-        emb.filter(col("vec_id") < 20), emb, cents, k = 5, nprobe = 3)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simIvf(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(_ =>
+      Index.Ivf(pinnedCentroids(s), nprobe = 3, Index.Exact))
 
   /** IVF with a TRAINED fixed-size quantizer — the production/scale path:
     * centroid count stays K as the corpus grows, so map-side assignment is
@@ -542,14 +549,9 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * assignment + probing over the same literal centroid table. Training
     * itself stays spec-gated (SimilaritySpec on `trainCentroids`).
     */
-  def simIvfTrained(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = T(s, dir, "embeddings")
-    val cents = PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
-    graft.operators.Similarity.ivfTopKWith(
-        emb.filter(col("vec_id") < 20), emb, cents, k = 5, nprobe = 2)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simIvfTrained(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(_ =>
+      Index.Ivf(pinnedCentroids(s), nprobe = 2, Index.Exact))
 
   /** ONE pinned-quantizer IVF oracle, parametrized by probe fan-out —
     * `sim_ivf_trained` (nprobe = 2) and `sim_ivf_topk` (nprobe = 3) replay
@@ -593,14 +595,12 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * the same pinned literals) and intersects them.
     */
   def annRecallQ(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val emb = T(s, dir, "embeddings")
     val probes = emb.filter(col("vec_id") < 20)
-    val cents = PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
     graft.operators.Similarity.recallReport(
-        graft.operators.Similarity.bruteForceTopK(probes, emb, k = 5),
-        graft.operators.Similarity.ivfTopKWith(probes, emb, cents, k = 5,
-          nprobe = 2))
+        search(probes, emb, k = 5, Index.Exact),
+        search(probes, emb, k = 5,
+          Index.Ivf(pinnedCentroids(s), nprobe = 2, Index.Exact)))
       .orderBy(col("query_id"))
   }
 
@@ -717,8 +717,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     val vecs = graft.operators.TextIndex.hashedTfidfVectors(
         docs, col("doc_id"), col("text"), dims = 64)
       .select(col("doc_id").as("vec_id"), col("vec").as("embedding"))
-    graft.operators.Similarity.bruteForceTopK(
-        vecs.filter(col("vec_id") % 97 === 0), vecs, k = 3)
+    search(
+        vecs.filter(col("vec_id") % 97 === 0), vecs, k = 3, Index.Exact)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -786,7 +786,7 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
   /** The 10⁹-document shape of [[simHashedTfidf]]: the SAME hashed
     * TF-IDF vectors served through the LSH searcher instead of
     * brute-force — [[graft.operators.TextIndex.hashedTfidfVectors]] →
-    * [[graft.operators.Similarity.lshTopK]] (8-bit sign-random-projection
+    * [[graft.operators.Similarity.Index.Lsh]] (8-bit sign-random-projection
     * buckets, exact cosine rescoring inside the bucket). Same probe set
     * (doc_id % 97) and k as the brute entry, so the two results are
     * directly comparable and [[graft.operators.Similarity.recallReport]]
@@ -813,10 +813,10 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     val vecs = graft.operators.TextIndex.hashedTfidfVectors(
         docs, col("doc_id"), col("text"), dims = 64)
       .select(col("doc_id").as("vec_id"), col("vec").as("embedding"))
-    graft.operators.Similarity.lshTopK(
+    search(
         vecs.filter(col("vec_id") % 97 === 0 &&
           col("vec_id") < graft.Stress.IdStride),
-        vecs, k = 3, bits = 8)
+        vecs, k = 3, Index.Lsh(bits = 8, multiProbe = false))
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -869,12 +869,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
   /** Exact brute-force cosine top-5 for the first 20 vectors against the full
     * corpus: broadcast the probe set, one scan of the corpus, per-query top-k.
     */
-  def simBruteForce(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.bruteForceTopK(
-        emb.filter(col("vec_id") < 20), emb, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simBruteForce(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(_ => Index.Exact)
 
   val simBruteForceOracle: String =
     s"""WITH scored AS (
@@ -953,7 +949,7 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
           col("vec_id") < lit(graft.Stress.IdStride) &&
           col("vec_id") < 40),
         emb.filter(col("vec_id") % 2 === 1),
-        k = 4, threshold = 1.3)
+        Index.Exact, k = 4, threshold = 1.3)
       .orderBy(col("query_id"))
   }
 
@@ -998,7 +994,7 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
        |$marginChainSql""".stripMargin
 
   /** Bitext mining THROUGH THE LSH SHORTLIST
-    * ([[graft.operators.Similarity.marginMineLsh]]) — the 10⁹-candidate
+    * ([[graft.operators.Similarity.marginMine]] over `Index.Lsh`) — the 10⁹-candidate
     * composition path [[bitextMineQ]]'s scaladoc names: SRP buckets
     * (8 bits, 1-bit multiprobe on the query side) shortlist the pairs,
     * then the SAME margin chain ranks the shortlist. Margins differ from
@@ -1009,12 +1005,12 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     */
   def bitextMineLshQ(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.marginMineLsh(
+    graft.operators.Similarity.marginMine(
         emb.filter(col("vec_id") % 2 === 0 &&
           col("vec_id") < lit(graft.Stress.IdStride) &&
           col("vec_id") < 40),
         emb.filter(col("vec_id") % 2 === 1),
-        k = 4, threshold = 1.3, bits = 8, multiProbe = true)
+        Index.Lsh(bits = 8, multiProbe = true), k = 4, threshold = 1.3)
       .orderBy(col("query_id"))
   }
 
@@ -1040,15 +1036,14 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
 
   /** Metadata-filtered search: top-5 among ENGLISH documents only — the
     * corpus is pre-filtered by a predicate on the documents table
-    * (semi-join on id), then scored. See
-    * [[graft.operators.Similarity.filteredTopK]].
+    * (semi-join on id), then scored by the exact scan.
     */
   def simFilteredTopk(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     val en = T(s, dir, "documents").filter(col("lang") === "en")
       .select(col("doc_id").as("vec_id"))
-    graft.operators.Similarity.filteredTopK(
-        emb.filter(col("vec_id") < 20), emb, en, k = 5)
+    search(emb.filter(col("vec_id") < 20),
+        emb.join(en, Seq("vec_id"), "left_semi"), k = 5, Index.Exact)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1073,12 +1068,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * normalize-then-round contract (left-to-right double norm fold,
     * half-away-from-zero rounding) matches DuckDB's `round` semantics.
     */
-  def simQuantized(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.quantizedTopK(
-        emb.filter(col("vec_id") < 20), emb, k = 5)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simQuantized(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(_ => Index.Int8)
 
   val simQuantizedOracle: String =
     """WITH n AS (
@@ -1112,16 +1103,13 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * L2, then score queries against the reconstructed codes via per-query
     * lookup tables — long arithmetic end to end, so the oracle replays
     * assignment ties, ADC sums, and ranking bit-for-bit. The packed-binary
-    * scan (`ivfPqTopKWith` probing every cell, m bytes per corpus vector =
-    * 32× compression at dims 64) is spec-gated equal to this relational
-    * form.
+    * scan (`Index.Ivf` over `Index.Pq` probing every cell, m bytes per
+    * corpus vector = 32× compression at dims 64) is spec-gated equal to
+    * this relational form.
     */
-  def simPq(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.pqTopK(
-        emb.filter(col("vec_id") < 20), emb, k = 5, m = 8, entryEvery = 25)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simPq(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(emb =>
+      Index.Pq(pqCodebook(emb, m = 8, entryEvery = 25), m = 8))
 
   val simPqOracle: String = {
     // exact integer dot of two 8-element BIGINT sub-code lists
@@ -1181,16 +1169,9 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * sub-code assignment, exact long ADC sums, candidate pruning, and
     * ranking — bit-for-bit.
     */
-  def simIvfPq(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val emb = T(s, dir, "embeddings")
-    val cents = PinnedArtifacts.IvfCentroids16.toDF("cid", "cv")
-    graft.operators.Similarity.ivfPqTopKWith(
-        emb.filter(col("vec_id") < 20), emb, cents,
-        graft.operators.Similarity.pqCodebook(emb, m = 8, entryEvery = 25),
-        k = 5, m = 8, nprobe = 2)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simIvfPq(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(emb => Index.Ivf(pinnedCentroids(s), nprobe = 2,
+      Index.Pq(pqCodebook(emb, m = 8, entryEvery = 25), m = 8)))
 
   val simIvfPqOracle: String = {
     def idot(a: String, b: String): String =
@@ -1258,8 +1239,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     val emb = T(s, dir, "embeddings")
     val proj = emb.select(col("vec_id"),
       graft.operators.Similarity.jlProject(col("embedding"), 8).as("embedding"))
-    graft.operators.Similarity.bruteForceTopK(
-        proj.filter(col("vec_id") < 20), proj, k = 5)
+    search(
+        proj.filter(col("vec_id") < 20), proj, k = 5, Index.Exact)
       .orderBy(col("query_id"), col("rank"))
   }
 
@@ -1327,12 +1308,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * rescoring inside the bucket. Deterministic md5-derived hyperplanes mean
     * the oracle can recompute the identical buckets in SQL.
     */
-  def simLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.lshTopK(
-        emb.filter(col("vec_id") < 20), emb, k = 5, bits = 8)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simLsh(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(_ => Index.Lsh(bits = 8, multiProbe = false))
 
   val simLshOracle: String =
     s"""WITH buckets AS (
@@ -1364,12 +1341,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
     * on the (small) query side for recall. Oracle: candidates are pairs
     * whose buckets differ in <= 1 bit.
     */
-  def simLshMultiprobe(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.lshTopK(
-        emb.filter(col("vec_id") < 20), emb, k = 5, bits = 8, multiProbe = true)
-      .orderBy(col("query_id"), col("rank"))
-  }
+  def simLshMultiprobe(s: SparkSession, dir: String): DataFrame =
+    searchTop5(s, dir)(_ => Index.Lsh(bits = 8, multiProbe = true))
 
   val simLshMultiprobeOracle: String =
     s"""WITH buckets AS (
@@ -1485,8 +1458,8 @@ trait PipelineSimilarityFam extends PipelineDedupFam {
   def retrievalMrrQ(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     graft.operators.Similarity.retrievalLabelMetrics(
-        graft.operators.Similarity.bruteForceTopK(
-          emb.filter(col("vec_id") < 20), emb, k = 10),
+        search(
+          emb.filter(col("vec_id") < 20), emb, k = 10, Index.Exact),
         emb.select(col("vec_id"), col("label")), k = 10)
       .orderBy(col("query_id"))
   }

@@ -274,7 +274,8 @@ object Streams {
 
   /** The shared scaffold of every fold-shaped ingest (index, LM counts,
     * novelty admission, preference counts): per micro-batch, derive a
-    * pinned DELTA from (state, batch), FOLD it into the next state, free
+    * pinned DELTA from (state, batch), emit it to `onDelta`, then FOLD it
+    * into the next state (a throwing `onDelta` leaves no fold behind), free
     * the superseded state and delta pins (replays only ever target the
     * latest batch — holding older pins grows executor storage
     * O(batches × state)), and re-emit the pinned delta WITHOUT
@@ -318,12 +319,16 @@ object Streams {
             onDelta(lastDelta, batchId)
         } else {
           val delta = mkDelta(state, batch).localCheckpoint(true)
+          // emit BEFORE folding, as the survivor ingests do: a throwing
+          // consumer leaves state, lastApplied and the pins as they were,
+          // so the retry of this batchId folds it exactly once
+          try onDelta(delta, batchId)
+          catch { case e: Throwable => Bridge.unpin(delta); throw e }
           val next = fold(state, batch, delta).localCheckpoint(true)
           if (ownsState) Bridge.unpin(state)
           if (lastDelta != null) Bridge.unpin(lastDelta)
           state = next
           ownsState = true
-          onDelta(delta, batchId)
           lastApplied = batchId
           lastDelta = delta
         }

@@ -62,6 +62,42 @@ class KvSpec extends SparkSpec {
     assert(out === Array((1, "one"), (2, "two"), (3, null)))
   }
 
+  test("withMSet stores map and array<struct<k,v>> pairs; withMGet reads " +
+      "them back (reference jd_mset/jd_mget)") {
+    val f = freshFactory("kv-mset")
+    val maps = Seq((1, Option(Map("m:a" -> "1", "m:b" -> "2"))), (2, None))
+      .toDF("id", "kvs")
+    assert(Kv.withMSet(maps, col("kvs"), f).orderBy("id")
+      .select("ret").as[Option[String]].collect() === Array(Some("OK"), None))
+    val structs = spark.sql("SELECT 1 AS id, array(named_struct('k', 's:a', " +
+      "'v', 'x'), named_struct('k', 's:b', 'v', 'y')) AS kvs")
+    assert(Kv.withMSet(structs, col("kvs"), f).select("ret").as[String]
+      .collect() === Array("OK"))
+    val got = Kv.withMGet(Seq(1).toDF("id"),
+        array(Seq("m:a", "m:b", "s:a", "s:b", "nope").map(lit): _*), f)
+      .select("ret").as[Seq[String]].head()
+    assert(got === Seq("1", "2", "x", "y", null))
+  }
+
+  test("withMSet refuses a null value or array element with a named error") {
+    val f = freshFactory("kv-mset-null")
+    def refusal(df: org.apache.spark.sql.DataFrame): String = {
+      val e = intercept[Exception](Kv.withMSet(df, col("kvs"), f).collect())
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalArgumentException => i.getMessage }
+        .getOrElse(fail(s"no IllegalArgumentException in the cause chain: $e"))
+    }
+    assert(refusal(Seq(Map("k" -> (null: String))).toDF("kvs")) ===
+      "withMSet: null value for key k")
+    assert(refusal(spark.sql("SELECT array(named_struct('k', 'k2', " +
+      "'v', CAST(NULL AS STRING))) AS kvs")) === "withMSet: null value for key k2")
+    assert(refusal(spark.sql("SELECT array(named_struct('k', 'k3', 'v', 'v'), " +
+      "CAST(NULL AS STRUCT<k: STRING, v: STRING>)) AS kvs")) ===
+      "withMSet: null array element")
+    // nothing half-written: the "null" string never lands in the store
+    assert(f.open().mget(Seq("k", "k2", "k3")) === Seq(null, null, null))
+  }
+
   test("keys generator returns a sorted dataset of matches") {
     val f = freshFactory("kv-gen")
     Kv.seed(f, Seq("a:1" -> "x", "a:2" -> "y", "b:1" -> "z"))

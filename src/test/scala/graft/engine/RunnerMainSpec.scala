@@ -69,14 +69,42 @@ class RunnerMainSpec extends SparkSpec {
     assert(r3.values.toSet === Set("SUCCEED"))
     assert(journal.lastExecution(scalaPath).get.result === "9")
 
+    // a successful sql script journals one OK per statement
+    val sqlPath = r1.keys.find(_.endsWith("script.sql")).get
+    assert(journal.lastExecution(sqlPath).get.result === "OK,OK")
+
     // a failing script journals FAILED but doesn't kill the tick
     Files.writeString(Paths.get(s"$dir/boom.sql"), "SELECT definitely_broken FROM nowhere;")
     now += 60001
     val r4 = RunnerMain.tick(spark, dir, journal, scalaJobs, () => now).toMap
-    assert(r4.keys.exists(_.endsWith("boom.sql")))
-    // sql scripts report per-statement status strings; the runner call
-    // itself SUCCEEDs while recording the ERROR statement status
     val boomPath = r4.keys.find(_.endsWith("boom.sql")).get
-    assert(journal.lastExecution(boomPath).get.result.contains("ERROR"))
+    assert(r4(boomPath) === "FAILED")
+    assert(r4.filter(_._1 != boomPath).values.toSet === Set("SUCCEED"))
+    // the record names the failed statement and carries its cause
+    val boom = journal.lastExecution(boomPath).get
+    assert(boom.status === "FAILED")
+    assert(boom.result.startsWith("graft.etl.ScriptStatementException: " +
+      "statement 0 failed"), boom.result)
+    assert(boom.result.contains(
+      " <- caused by: org.apache.spark.sql.AnalysisException"), boom.result)
+  }
+
+  test("a failed sql statement stops its script: later statements never run") {
+    val dir = Files.createTempDirectory("graft-runner-stop").toString
+    val out = s"$dir/never_written"
+    Files.writeString(Paths.get(s"$dir/stop.sql"),
+      s"""SELECT 1;
+         |SELECT broken FROM range(1);
+         |INSERT OVERWRITE DIRECTORY '$out' USING parquet SELECT 2 AS x;
+         |""".stripMargin)
+    val journal = new Journal(spark, s"$dir/.journal")
+    val scalaJobs = new ScriptJobs[SparkSession => Any](
+      compile = ScriptCompiler.compileTask, mtimeOf = _ => 1L, read = _ => "")
+    val r = RunnerMain.tick(spark, dir, journal, scalaJobs, () => 1000000L)
+    assert(r.map(_._2) === Seq("FAILED"))
+    val rec = journal.lastExecution(r.head._1).get
+    assert(rec.result.contains("statement 1 failed"), rec.result)
+    assert(!Files.exists(Paths.get(out)),
+      "the INSERT after the failed statement must not run")
   }
 }

@@ -56,21 +56,25 @@ class SqlRunnerSpec extends SparkSpec {
     assert(df.get.as[Double].head() === 5.0)
   }
 
-  test("per-statement status: errors recorded, later statements still run") {
+  test("statements after a failed one do not run") {
     val r = new SqlRunner(spark)
     val (results, df) = r.runScript(
       """SELECT 1 AS a;
         |SELECT definitely_not_a_column FROM range(1);
-        |SELECT 2 AS b;""".stripMargin)
-    assert(results.map(_.status) === Seq("OK", "ERROR", "OK"))
-    assert(results(1).error.isDefined)
-    assert(df.get.as[Int].head() === 2)
+        |CREATE OR REPLACE TEMPORARY VIEW sr_after_failure AS SELECT 2 AS b;""".stripMargin)
+    assert(results.map(_.status) === Seq("OK", "ERROR"))
+    assert(results(1).error.exists(_.contains("definitely_not_a_column")))
+    assert(df.isEmpty)
+    assert(!spark.catalog.tableExists("sr_after_failure"))
   }
 
   test("runScriptStrict throws on first failure") {
     val r = new SqlRunner(spark)
-    intercept[IllegalStateException] {
-      r.runScriptStrict("SELECT nope FROM range(1);")
+    val e = intercept[ScriptStatementException] {
+      r.runScriptStrict("SELECT 1;\nSELECT nope FROM range(1);\nSELECT 2;")
     }
+    assert(e.isInstanceOf[IllegalStateException])
+    assert(e.index === 1 && e.sql === "SELECT nope FROM range(1)")
+    assert(e.getCause.isInstanceOf[org.apache.spark.sql.AnalysisException])
   }
 }

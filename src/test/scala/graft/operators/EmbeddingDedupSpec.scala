@@ -50,13 +50,13 @@ class EmbeddingDedupSpec extends SparkSpec {
     assert(lsh.nonEmpty)
   }
 
-  test("ivfTopKWith ranks exactly within probed cells") {
+  test("search(Ivf) ranks exactly within probed cells") {
     val df = clustered(100, 16, seed = 3).cache()
     // every 10th vector is a centroid
     val cents = df.filter(col("vec_id") % 10 === 0)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-    val got = Similarity.ivfTopKWith(df.filter(col("vec_id") < 5), df, cents,
-        k = 3, nprobe = 2)
+    val got = Similarity.search(df.filter(col("vec_id") < 5), df, k = 3,
+        Similarity.Index.Ivf(cents, nprobe = 2, Similarity.Index.Exact))
       .as[(Long, Long, Int, Double)].collect()
     got.groupBy(_._1).foreach { case (_, rows) =>
       assert(rows.map(_._3).sorted.toSeq === (1 to rows.length))

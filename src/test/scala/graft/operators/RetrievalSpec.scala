@@ -269,9 +269,9 @@ class RetrievalSpec extends SparkSpec {
         docs, col("doc_id"), col("text"), dims = 64)
       .select(col("doc_id").as("vec_id"), col("vec").as("embedding"))
     val probes = vecs.filter(col("vec_id") % 10 === 0)
-    val exact = Similarity.bruteForceTopK(probes, vecs, k = 3)
-    val approx = Similarity.lshTopK(probes, vecs, k = 3, bits = 8,
-      multiProbe = true)
+    val exact = Similarity.search(probes, vecs, k = 3, Similarity.Index.Exact)
+    val approx = Similarity.search(probes, vecs, k = 3,
+      Similarity.Index.Lsh(bits = 8, multiProbe = true))
     val report = Similarity.recallReport(exact, approx)
       .as[(Long, Long, Long, Double)].collect().sortBy(_._1).toSeq
     assert(report.map(_._1) === Seq(0L, 10L, 20L), "one row per probe")

@@ -3,6 +3,7 @@ package graft.operators
 import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.operators.Similarity.Index
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -22,9 +23,10 @@ class SimilaritySpec extends SparkSpec {
       .orderBy(col("vec_id")).limit(max)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
 
-  test("bruteForceTopK matches a driver-side exact computation") {
+  test("search(Exact) matches a driver-side exact computation") {
     val df = vectors(30, 8, seed = 1).cache()
-    val got = Similarity.bruteForceTopK(df.filter(col("vec_id") < 3), df, k = 4)
+    val got = Similarity.search(df.filter(col("vec_id") < 3), df, k = 4,
+        Index.Exact)
       .orderBy("query_id", "rank")
       .as[(Long, Long, Int, Double)].collect()
 
@@ -92,12 +94,14 @@ class SimilaritySpec extends SparkSpec {
     assert(mism.head.isNullAt(0))
   }
 
-  test("quantizedTopK ranks close to exact cosine top-k (high recall)") {
+  test("search(Int8) ranks close to exact cosine top-k (high recall)") {
     val df = vectors(60, 16, seed = 11).cache()
-    val exact = Similarity.bruteForceTopK(df.filter(col("vec_id") < 5), df, k = 5)
+    val exact = Similarity.search(df.filter(col("vec_id") < 5), df, k = 5,
+        Index.Exact)
       .select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet
-    val quant = Similarity.quantizedTopK(df.filter(col("vec_id") < 5), df, k = 5)
+    val quant = Similarity.search(df.filter(col("vec_id") < 5), df, k = 5,
+        Index.Int8)
       .select("query_id", "neighbor_id")
       .as[(Long, Long)].collect().toSet
     // int8 quantization of 16-dim unit vectors perturbs cosine by ~1/127 —
@@ -105,12 +109,17 @@ class SimilaritySpec extends SparkSpec {
     val recall = (exact & quant).size.toDouble / exact.size
     assert(recall >= 0.8, s"recall $recall")
     // scores are exact integers and symmetric quantization keeps self-rank:
-    // dot of a code vector with itself is the max for that direction
-    val self = Similarity.quantizedTopK(df.filter(col("vec_id") < 2), df,
-        k = 1, includeSelf = true)
+    // dot of a code vector with itself is the max for that direction. The
+    // query ids are shifted out of the corpus id range, so the vector's own
+    // corpus row is not excluded as a self-pair.
+    val shift = 1000L
+    val self = Similarity.search(df.filter(col("vec_id") < 2)
+          .select((col("vec_id") + shift).as("vec_id"), col("embedding")),
+        df, k = 1, Index.Int8)
       .filter(col("rank") === 1).select("query_id", "neighbor_id")
       .as[(Long, Long)].collect()
-    assert(self.forall(p => p._1 == p._2))
+    assert(self.length === 2)
+    assert(self.forall(p => p._1 - shift == p._2))
   }
 
   test("knnLabel takes the majority label of the k nearest; ties → smaller label") {
@@ -143,9 +152,10 @@ class SimilaritySpec extends SparkSpec {
     assert(b1.distinct.length > 1) // planes actually split the space
   }
 
-  test("lshTopK returns exact cosine ranks within each shared bucket") {
+  test("search(Lsh) returns exact cosine ranks within each shared bucket") {
     val df = vectors(60, 8, seed = 3).cache()
-    val got = Similarity.lshTopK(df.filter(col("vec_id") < 5), df, k = 3, bits = 4)
+    val got = Similarity.search(df.filter(col("vec_id") < 5), df, k = 3,
+        Index.Lsh(bits = 4, multiProbe = false))
       .as[(Long, Long, Int, Double)].collect()
     // every returned neighbor must share the query's bucket; ranks contiguous from 1
     val buckets = df.select(col("vec_id"), Similarity.srpBucket(col("embedding"), 4))
@@ -173,12 +183,12 @@ class SimilaritySpec extends SparkSpec {
     assert(p.contains("ObjectHashAggregate"), p)
   }
 
-  test("trained k-means centroids drive ivfTopKWith with exact in-cell ranking") {
+  test("trained k-means centroids drive search(Ivf) with exact in-cell ranking") {
     val df = vectors(100, 8, seed = 11).cache()
     val cents = Similarity.trainCentroids(df, k = 4, seed = 1)
     assert(cents.count() === 4)
-    val got = Similarity.ivfTopKWith(df.filter(col("vec_id") < 5), df, cents,
-        k = 3, nprobe = 2)
+    val got = Similarity.search(df.filter(col("vec_id") < 5), df, k = 3,
+        Index.Ivf(cents, nprobe = 2, Index.Exact))
       .as[(Long, Long, Int, Double)].collect()
     assert(got.nonEmpty)
     got.groupBy(_._1).foreach { case (_, rows) =>
@@ -193,9 +203,11 @@ class SimilaritySpec extends SparkSpec {
     val qs = df.filter(col("vec_id") < 8)
     val buckets = df.select(col("vec_id"), Similarity.srpBucket(col("embedding"), 4))
       .as[(Long, Long)].collect().toMap
-    val single = Similarity.lshTopK(qs, df, k = 3, bits = 4)
+    val single = Similarity.search(qs, df, k = 3,
+        Index.Lsh(bits = 4, multiProbe = false))
       .as[(Long, Long, Int, Double)].collect()
-    val multi = Similarity.lshTopK(qs, df, k = 3, bits = 4, multiProbe = true)
+    val multi = Similarity.search(qs, df, k = 3,
+        Index.Lsh(bits = 4, multiProbe = true))
       .as[(Long, Long, Int, Double)].collect()
     // every multi-probe neighbor is within hamming 1 of the query's bucket
     multi.foreach { case (q, n, _, _) =>
@@ -208,7 +220,7 @@ class SimilaritySpec extends SparkSpec {
       assert(rows.map(_._3).sorted.toSeq === (1 to rows.length))
     }
     // and against brute force, multi-probe recall >= single-probe recall
-    val exact = Similarity.bruteForceTopK(qs, df, k = 3)
+    val exact = Similarity.search(qs, df, k = 3, Index.Exact)
       .as[(Long, Long, Int, Double)].collect()
       .map(r => (r._1, r._2)).toSet
     def recall(rows: Array[(Long, Long, Int, Double)]): Double =
@@ -217,16 +229,17 @@ class SimilaritySpec extends SparkSpec {
     assert(recall(multi) >= recall(single))
   }
 
-  test("pqTopK with entryEvery=1 degenerates to the exact quantized scan") {
+  test("search(Pq) with entryEvery=1 degenerates to the exact quantized scan") {
     // Every corpus vector is a codebook entry → each sub-code assigns to
     // itself (distance 0, tie → its own smallest entry among equal codes)
     // → ADC score = exact integer dot of the int8 codes. PQ with the
-    // finest codebook must therefore reproduce quantizedTopK bit-for-bit.
+    // finest codebook must therefore reproduce the Int8 scan bit-for-bit.
     val df = vectors(30, 16, seed = 13).cache()
     val qs = df.filter(col("vec_id") < 4)
-    val exact = Similarity.quantizedTopK(qs, df, k = 5)
+    val exact = Similarity.search(qs, df, k = 5, Index.Int8)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val pq = Similarity.pqTopK(qs, df, k = 5, m = 4, entryEvery = 1)
+    val pq = Similarity.search(qs, df, k = 5,
+        Index.Pq(Similarity.pqCodebook(df, m = 4, entryEvery = 1), m = 4))
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     assert(pq.toSeq === exact.toSeq)
   }
@@ -245,10 +258,10 @@ class SimilaritySpec extends SparkSpec {
     // capped quantizers still return full, well-formed top-k
     val cents = everyNth(corpus, 4, 16)
     val probes = corpus.filter(col("vec_id") < 2)
-    assert(Similarity.ivfTopKWith(probes, corpus, cents, k = 3, nprobe = 2)
-      .count() === 6)
-    assert(Similarity.ivfPqTopKWith(probes, corpus, cents, codebook, k = 3,
-      m = 4, nprobe = 16).count() === 6)
+    assert(Similarity.search(probes, corpus, k = 3,
+      Index.Ivf(cents, nprobe = 2, Index.Exact)).count() === 6)
+    assert(Similarity.search(probes, corpus, k = 3,
+      Index.Ivf(cents, nprobe = 16, Index.Pq(codebook, m = 4))).count() === 6)
     corpus.unpersist()
   }
 
@@ -260,23 +273,24 @@ class SimilaritySpec extends SparkSpec {
     // entries stay one-byte packable and sub-codes keep subspace width
     val rows = cb.as[(Long, Long, Seq[Int])].collect()
     assert(rows.forall { case (s, e, sc) => s < 4 && e < 128 && sc.length == 4 })
-    val relational = Similarity.pqTopKWith(qs, df, cb, k = 5, m = 4)
+    val relational = Similarity.search(qs, df, k = 5, Index.Pq(cb, m = 4))
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     // one coarse cell holds the whole corpus: the packed native-ADC scan
-    val packed = Similarity.ivfPqTopKWith(qs, df, everyNth(df, 60, 1), cb,
-        k = 5, m = 4, nprobe = 1)
+    val packed = Similarity.search(qs, df, k = 5,
+        Index.Ivf(everyNth(df, 60, 1), nprobe = 1, Index.Pq(cb, m = 4)))
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     assert(packed.toSeq === relational.toSeq)
     // k-means sub-codebooks should beat random chance by a wide margin:
     // most exact quantized top-5 neighbors survive the 8-entry compression
-    val exact = Similarity.quantizedTopK(qs, df, k = 5)
+    val exact = Similarity.search(qs, df, k = 5, Index.Int8)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val got = relational.map(r => (r._1, r._2)).toSet
     val recall = (exact & got).size.toDouble / exact.size
     assert(recall >= 0.4, s"recall $recall")
   }
 
-  test("ivfPqTopKWith: probing every cell degenerates to the full PQ scan; " +
+  test("search(Ivf over Pq): probing every cell degenerates to the full " +
+      "PQ scan; " +
       "nprobe=1 only returns neighbors from the query's nearest cell") {
     val df = vectors(40, 16, seed = 23).cache()
     val qs = df.filter(col("vec_id") < 4)
@@ -284,10 +298,10 @@ class SimilaritySpec extends SparkSpec {
     // every 10th id → 4 cells; probing all 4 = unpruned PQ scan, identical
     // to the relational form
     val cents = everyNth(df, 10, 4)
-    val full = Similarity.pqTopKWith(qs, df, cb, k = 5, m = 4)
+    val full = Similarity.search(qs, df, k = 5, Index.Pq(cb, m = 4))
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val allCells = Similarity.ivfPqTopKWith(qs, df, cents, cb, k = 5, m = 4,
-        nprobe = 4)
+    val allCells = Similarity.search(qs, df, k = 5,
+        Index.Ivf(cents, nprobe = 4, Index.Pq(cb, m = 4)))
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     assert(full.nonEmpty)
     assert(allCells.toSeq === full.toSeq)
@@ -299,8 +313,8 @@ class SimilaritySpec extends SparkSpec {
     assert(codes.forall(_.length === 4))
 
     // nprobe=1: every neighbor must sit in its query's single probed cell
-    val one = Similarity.ivfPqTopKWith(qs, df, cents, cb, k = 5, m = 4,
-        nprobe = 1)
+    val one = Similarity.search(qs, df, k = 5,
+        Index.Ivf(cents, nprobe = 1, Index.Pq(cb, m = 4)))
       .select("query_id", "neighbor_id").as[(Long, Long)].collect()
     assert(one.nonEmpty)
     import org.apache.spark.sql.graft.VectorFunctions
@@ -315,15 +329,15 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("fully-trained IVF-PQ: k-means centroids + per-subspace codebooks " +
-      "compose through ivfPqTopKWith") {
+      "compose through search(Ivf over Pq)") {
     val df = vectors(60, 16, seed = 29).cache()
     val qs = df.filter(col("vec_id") < 4)
     val cents = Similarity.trainCentroids(df, k = 3, seed = 5)
     val cb = Similarity.pqCodebookTrained(df, m = 4, j = 8, seed = 7).cache()
-    val got = Similarity.ivfPqTopKWith(qs, df, cents, cb, k = 5, m = 4,
-        nprobe = 3) // all 3 cells probed → full trained-PQ scan
+    val got = Similarity.search(qs, df, k = 5, // all 3 cells probed →
+        Index.Ivf(cents, nprobe = 3, Index.Pq(cb, m = 4))) // full PQ scan
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
-    val full = Similarity.pqTopKWith(qs, df, cb, k = 5, m = 4)
+    val full = Similarity.search(qs, df, k = 5, Index.Pq(cb, m = 4))
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
     assert(got.toSeq === full.toSeq)
     assert(got.nonEmpty)
@@ -370,10 +384,10 @@ class SimilaritySpec extends SparkSpec {
     // twins {off, off+50, …} — cell ids carry the offset too
     val centsDense = everyNth(dense, 50, 4)
     val centsShift = everyNth(shifted, 50, 4)
-    val ivfDense = collect3(Similarity.ivfTopKWith(qDense, dense, centsDense,
-      k = 3, nprobe = 2))
-    val ivfShift = collect3(Similarity.ivfTopKWith(qShift, shifted, centsShift,
-      k = 3, nprobe = 2))
+    val ivfDense = collect3(Similarity.search(qDense, dense, k = 3,
+      Index.Ivf(centsDense, nprobe = 2, Index.Exact)))
+    val ivfShift = collect3(Similarity.search(qShift, shifted, k = 3,
+      Index.Ivf(centsShift, nprobe = 2, Index.Exact)))
     assert(ivfDense.nonEmpty)
     assert(ivfShift === ivfDense.map { case (q, n, r) => (q + off, n + off, r) })
 
@@ -389,36 +403,39 @@ class SimilaritySpec extends SparkSpec {
         m = 4, entryEvery = 25)
     }
     assert(noneDivisible.getMessage.contains("no vec_id divisible by 25"))
-    val pqDense = collect3(Similarity.pqTopK(qDense, dense, k = 3, m = 4,
-      entryEvery = 25))
-    val pqShift = collect3(Similarity.pqTopK(qShift, shifted, k = 3, m = 4,
-      entryEvery = 25))
+    val pqDense = collect3(Similarity.search(qDense, dense, k = 3,
+      Index.Pq(Similarity.pqCodebook(dense, m = 4, entryEvery = 25), m = 4)))
+    val pqShift = collect3(Similarity.search(qShift, shifted, k = 3,
+      Index.Pq(Similarity.pqCodebook(shifted, m = 4, entryEvery = 25), m = 4)))
     assert(pqDense.nonEmpty)
     assert(pqShift === pqDense.map { case (q, n, r) => (q + off, n + off, r) })
 
     // IVF-PQ composed
-    val ipDense = collect3(Similarity.ivfPqTopKWith(qDense, dense, centsDense,
-      Similarity.pqCodebook(dense, m = 4, entryEvery = 25), k = 3, m = 4))
-    val ipShift = collect3(Similarity.ivfPqTopKWith(qShift, shifted, centsShift,
-      Similarity.pqCodebook(shifted, m = 4, entryEvery = 25), k = 3, m = 4))
+    val ipDense = collect3(Similarity.search(qDense, dense, k = 3,
+      Index.Ivf(centsDense, nprobe = 2, Index.Pq(
+        Similarity.pqCodebook(dense, m = 4, entryEvery = 25), m = 4))))
+    val ipShift = collect3(Similarity.search(qShift, shifted, k = 3,
+      Index.Ivf(centsShift, nprobe = 2, Index.Pq(
+        Similarity.pqCodebook(shifted, m = 4, entryEvery = 25), m = 4))))
     assert(ipDense.nonEmpty)
     assert(ipShift === ipDense.map { case (q, n, r) => (q + off, n + off, r) })
   }
 
-  test("filteredTopK scores only kept ids and equals brute-force over the " +
-      "kept corpus") {
+  test("a semi-join pre-filter scores only kept ids and equals " +
+      "search(Exact) over the kept corpus") {
     val corpus = vectors(40, 8, seed = 7).cache()
     val queries = corpus.filter(col("vec_id") < 3)
     val keepIds = (0L until 40L).filter(_ % 3 == 0)
     val keep = keepIds.toDF("vec_id")
-    val got = Similarity.filteredTopK(queries, corpus, keep, k = 4)
+    val got = Similarity.search(queries,
+      corpus.join(keep, Seq("vec_id"), "left_semi"), k = 4, Index.Exact)
     val gotRows = got.select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     // neighbors come only from the keep set
     assert(gotRows.forall { case (_, n, _) => keepIds.contains(n) })
     // identical to brute force over the pre-filtered corpus
-    val want = Similarity.bruteForceTopK(queries,
-        corpus.filter(pmod(col("vec_id"), lit(3L)) === 0), k = 4)
+    val want = Similarity.search(queries,
+        corpus.filter(pmod(col("vec_id"), lit(3L)) === 0), k = 4, Index.Exact)
       .select("query_id", "neighbor_id", "rank")
       .as[(Long, Long, Int)].collect().toSet
     assert(gotRows === want)
@@ -486,7 +503,8 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(got.toSeq === expect.toSeq)
     // diversity actually kicks in: greedy order differs from pure relevance
-    val pureRel = Similarity.bruteForceTopK(df.filter(col("vec_id") < 3), df, k)
+    val pureRel = Similarity.search(df.filter(col("vec_id") < 3), df, k,
+        Index.Exact)
       .orderBy("query_id", "rank").as[(Long, Long, Int, Double)].collect()
     assert(got.map(r => (r._1, r._2)).toSeq !== pureRel.map(r => (r._1, r._2)).toSeq)
   }
@@ -562,7 +580,7 @@ class SimilaritySpec extends SparkSpec {
     val expBest = Map(
       0L -> cv.keys.maxBy(c => (margin(0L, c), -c)),
       2L -> cv.keys.maxBy(c => (margin(2L, c), -c)))
-    val out = Similarity.marginMine(qs, cs, k = 2, threshold = 0.0)
+    val out = Similarity.marginMine(qs, cs, Index.Exact, k = 2, threshold = 0.0)
       .as[(Long, Long, Double, Double)].collect()
       .map(t => t._1 -> ((t._2, t._4))).toMap
     assert(out.keySet === Set(0L, 2L))
@@ -573,7 +591,7 @@ class SimilaritySpec extends SparkSpec {
     val (lo, hi) = (out.values.map(_._2).min, out.values.map(_._2).max)
     assert(lo < hi, "fixture must separate the two margins")
     val cut = (lo + hi) / 2.0
-    val kept = Similarity.marginMine(qs, cs, k = 2, threshold = cut)
+    val kept = Similarity.marginMine(qs, cs, Index.Exact, k = 2, threshold = cut)
       .as[(Long, Long, Double, Double)].collect()
     assert(kept.length === 1 && kept.head._4 === hi)
     // bitext joins two INDEPENDENT id spaces: a candidate sharing the
@@ -581,12 +599,12 @@ class SimilaritySpec extends SparkSpec {
     // same-space mode must exclude it
     val csOverlap = Seq((0L, Array(1f, 0f)), (15L, Array(0f, 1f)))
       .toDF("vec_id", "embedding")
-    val mined = Similarity.marginMine(qs, csOverlap, k = 2,
+    val mined = Similarity.marginMine(qs, csOverlap, Index.Exact, k = 2,
         threshold = 0.0)
       .as[(Long, Long, Double, Double)].collect()
       .map(t => t._1 -> t._2).toMap
     assert(mined(0L) === 0L, "the id-coincident twin must be minable")
-    val minedEx = Similarity.marginMine(qs, csOverlap, k = 2,
+    val minedEx = Similarity.marginMine(qs, csOverlap, Index.Exact, k = 2,
         threshold = 0.0, excludeSelfIds = true)
       .as[(Long, Long, Double, Double)].collect()
       .map(t => t._1 -> t._2).toMap
@@ -601,49 +619,52 @@ class SimilaritySpec extends SparkSpec {
     val qs = Seq((0L, Array(1f, 0f, 0f))).toDF("vec_id", "embedding")
     val cs = Seq((11L, Array(0f, 1f, 0f)), (13L, Array(0f, 0f, 1f)))
       .toDF("vec_id", "embedding")
-    assert(Similarity.marginMine(qs, cs, k = 2, threshold = 1.0).count()
+    assert(Similarity.marginMine(qs, cs, Index.Exact,
+        k = 2, threshold = 1.0).count()
       === 0L, "orthogonal query must mine nothing, not a NaN match")
     // zero-norm vectors cosine to NULL: dropped from scoring (no crash in
     // the non-nullable top-k buffer), and a whole-corpus-zero case mines
     // nothing at all
     val qsZ = Seq((0L, Array(0f, 0f, 0f)), (2L, Array(0f, 1f, 0f)))
       .toDF("vec_id", "embedding")
-    val mined = Similarity.marginMine(qsZ, cs, k = 2, threshold = 0.0)
+    val mined = Similarity.marginMine(qsZ, cs, Index.Exact, k = 2, threshold = 0.0)
       .as[(Long, Long, Double, Double)].collect().map(_._1).toSet
     assert(!mined.contains(0L), "zero-norm query must mine nothing")
     assert(mined.contains(2L), "healthy queries still mine")
     val csZ = Seq((11L, Array(0f, 0f, 0f))).toDF("vec_id", "embedding")
-    assert(Similarity.marginMine(qsZ, csZ, k = 2, threshold = 0.0).count()
+    assert(Similarity.marginMine(qsZ, csZ, Index.Exact,
+        k = 2, threshold = 0.0).count()
       === 0L)
     // all-NEGATIVE neighborhood (anti-similar corpus): fa + ba < 0 would
     // flip the margin positive — must mine nothing, not an anti-match
     val qsN = Seq((0L, Array(1f, 0f, 0f))).toDF("vec_id", "embedding")
     val csN = Seq((11L, Array(-1f, 0f, 0f)), (13L, Array(-1f, -0.1f, 0f)))
       .toDF("vec_id", "embedding")
-    assert(Similarity.marginMine(qsN, csN, k = 2, threshold = 0.0).count()
+    assert(Similarity.marginMine(qsN, csN, Index.Exact,
+        k = 2, threshold = 0.0).count()
       === 0L, "negative-denominator neighborhoods must mine nothing")
   }
 
-  test("marginMineLsh: a fully-covering probe set (bits=1, multiprobe) " +
-      "reproduces the exact marginMine; narrow buckets only shrink the " +
-      "candidate set") {
+  test("marginMine over Lsh: a fully-covering probe set (bits=1, " +
+      "multiprobe) reproduces the Exact source; narrow buckets only shrink " +
+      "the candidate set") {
     val qs = vectors(8, 16, seed = 7).withColumnRenamed("vec_id", "vid")
       .select((col("vid") * 2).as("vec_id"), col("embedding"))
     val cs = vectors(40, 16, seed = 8).withColumnRenamed("vec_id", "vid")
       .select((col("vid") * 2 + 1).as("vec_id"), col("embedding"))
     // bits = 1 with 1-bit multiprobe probes BOTH buckets -> the shortlist
     // is every pair, so the shortlisted margin chain must equal the scan
-    val full = Similarity.marginMine(qs, cs, k = 3, threshold = 0.0)
+    val full = Similarity.marginMine(qs, cs, Index.Exact, k = 3, threshold = 0.0)
       .as[(Long, Long, Double, Double)].collect().sortBy(_._1).toSeq
-    val lsh = Similarity.marginMineLsh(qs, cs, k = 3, threshold = 0.0,
-        bits = 1, multiProbe = true)
+    val lsh = Similarity.marginMine(qs, cs,
+        Index.Lsh(bits = 1, multiProbe = true), k = 3, threshold = 0.0)
       .as[(Long, Long, Double, Double)].collect().sortBy(_._1).toSeq
     assert(lsh === full)
     // narrow (8-bit) buckets: every mined pair's candidates came from the
     // bucket join, so each query mines at most one row and margins are
     // finite doubles
-    val narrow = Similarity.marginMineLsh(qs, cs, k = 3, threshold = 0.0,
-        bits = 8, multiProbe = true)
+    val narrow = Similarity.marginMine(qs, cs,
+        Index.Lsh(bits = 8, multiProbe = true), k = 3, threshold = 0.0)
       .as[(Long, Long, Double, Double)].collect()
     assert(narrow.map(_._1).distinct.length === narrow.length)
     assert(narrow.forall(r => !r._4.isNaN && !r._4.isInfinite))

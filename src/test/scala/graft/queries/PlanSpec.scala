@@ -176,11 +176,13 @@ class PlanSpec extends SparkSpec {
     import spark.implicits._
     val emb = T(spark, dir, "embeddings")
     // every one of the 16 pinned cells probed: the full packed PQ scan
-    val p = plan(graft.operators.Similarity.ivfPqTopKWith(
+    val p = plan(graft.operators.Similarity.search(
       emb.filter(org.apache.spark.sql.functions.col("vec_id") < 20), emb,
-      PinnedArtifacts.IvfCentroids16.toDF("cid", "cv"),
-      graft.operators.Similarity.pqCodebook(emb, m = 8, entryEvery = 25),
-      k = 5, m = 8, nprobe = 16))
+      k = 5, graft.operators.Similarity.Index.Ivf(
+        PinnedArtifacts.IvfCentroids16.toDF("cid", "cv"), nprobe = 16,
+        graft.operators.Similarity.Index.Pq(
+          graft.operators.Similarity.pqCodebook(emb, m = 8, entryEvery = 25),
+          m = 8))))
     assert(p.contains("BroadcastHashJoin"), p) // corpus codes ⋈ broadcast LUTs
     assert(p.contains("pq_adc_packed"), p)     // native scoring expression
     // Window nodes: pqCodebook's entry-rankers, one per consumer of the

@@ -556,6 +556,32 @@ class StreamsSpec extends SparkSpec {
     state0.unpersist()
   }
 
+  test("LmIngest: an onDelta that throws leaves no fold behind; the retry " +
+      "of the same batchId folds the batch exactly once") {
+    import graft.operators.TextIndex
+    val state0 = TextIndex.bigramLmCounts(
+      Seq("a b a b", "c d").toDF("text"), col("text"))
+    val ing = new Streams.LmIngest(state0, col("text"))
+    val deltas =
+      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
+    ing.onDelta = (d, _) => {
+      deltas += d
+      if (deltas.size == 1) throw new RuntimeException("sink down")
+    }
+    val b0 = Seq("a b c", "d").toDF("text")
+    assert(intercept[RuntimeException](ing.handler(b0, 0L)).getMessage ===
+      "sink down")
+    assert(ing.current eq state0, "a failed emit must not fold the batch")
+    assertFreed(deltas.head, "the failed attempt's delta")
+    ing.handler(b0, 0L) // the stream retries the same batchId
+    assert(deltas.size === 2)
+    val expect = TextIndex.bigramLmCounts(
+        Seq("a b a b", "c d", "a b c", "d").toDF("text"), col("text"))
+      .as[(String, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
+    assert(ing.current.as[(String, Long, Long)].collect()
+      .map(t => (t._1, t._2) -> t._3).toMap === expect)
+  }
+
   test("LmIngest: additive count fold across batches equals the clean " +
       "rebuild; replay re-emits WITHOUT re-folding (a re-fold would " +
       "double-count); superseded pins freed") {
