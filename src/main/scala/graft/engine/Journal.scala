@@ -3,18 +3,15 @@ package graft.engine
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Script-source + execution-journal records
-  * (reference: data-process/spark-process/src/main/scala/records/ScriptSrc.scala:11-25,
-  * records/ExecutionRecord.scala:10-21 — JDO entities persisted to MySQL).
-  * Here they are plain case classes persisted as a parquet table: the
+/** Execution-journal record
+  * (reference: data-process/spark-process/src/main/scala/records/ExecutionRecord.scala:10-21
+  * — a JDO entity persisted to MySQL; scripts themselves are the `.scala`/
+  * `.sql` files the Runner reads from its script directory).
+  * Here it is a plain case class persisted as a parquet table: the
   * journal is itself queryable data (the reference's own framing, SURVEY
   * §1.1 "scripts as data"), and any JDBC sink can be swapped in via
   * `df.write.jdbc`.
   */
-final case class ScriptSrc(
-    createdAt: Long, name: String, modifiedAt: Long, path: String,
-    scriptType: String, description: String, content: String)
-
 final case class ExecutionRecord(
     path: String, startedAt: Long, finishedAt: Long, result: String, status: String)
 

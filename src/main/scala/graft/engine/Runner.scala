@@ -2,6 +2,7 @@ package graft.engine
 
 import java.time.Duration
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 
@@ -56,7 +57,10 @@ class Runner(spark: SparkSession, journal: Journal,
       val started = clock()
       val (status, result) =
         try { val r = job.fn(spark); ("SUCCEED", String.valueOf(r)) }
-        catch { case e: Exception => ("FAILED", Runner.describe(e)) }
+        // NonFatal, not Exception: a script's `???`/assert and a ToolBox
+        // compile failure throw Errors/Throwables, and letting one escape
+        // would skip the journal record and the tick's remaining jobs
+        catch { case NonFatal(e) => ("FAILED", Runner.describe(e)) }
         // a job's terminal action is inside fn by contract, so this IS the
         // materialization boundary: release engine-owned operator pins
         // (graft.Pins) or a ticking scheduler stacks MEMORY_AND_DISK

@@ -19,11 +19,6 @@ import graft.connectors.{Http, HttpResult}
   */
 object GraftFunctions {
 
-  /** 2^32-adjacent prime for the MinHash universal hash family
-    * ((a*h + b) mod P with h < 2^32, a,b < 2^31 stays inside signed 64-bit).
-    */
-  val MinHashPrime: Long = 4294967311L
-
   /** Reference defaults for Kafka clients, as plain config maps.
     * (reference: hive-udfs/.../kafka/KafkaHelper.java:81-115 — consumer:
     * auto-commit off, earliest reset, 1000-record polls; producer: gzip.)

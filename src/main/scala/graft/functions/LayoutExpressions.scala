@@ -64,7 +64,7 @@ object InterleaveBits {
   * NO long jumps — consecutive keys are always adjacent cells, so
   * range-partitioned files cover tighter bounding boxes than Z-order's
   * corner-to-corner seams and min/max pruning skips more of them (why
-  * modern table formats offer hilbert alongside zorder).
+  * modern table formats offer Hilbert alongside Z-order clustering).
   *
   * Inputs are taken modulo 2³¹, same contract as [[InterleaveBits]]. The
   * 31-level loop is a fixed 31 iterations of integer ops per row —

@@ -7,63 +7,6 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions.udaf
 
-/** Element-wise running sum + count over embedding vectors. */
-case class VecSumBuf(sum: Array[Double], n: Long)
-
-/** Mean-pooling aggregation over `array<float>` embeddings (pool chunk
-  * embeddings back to one document vector after chunk→embed): element-wise
-  * double sums with map-side partial aggregation — the shuffle carries one
-  * (dims-doubles, count) buffer per group per partition, never the member
-  * vectors.
-  *
-  * Note on determinism: double addition is associative only approximately,
-  * and merge order across partitions is not fixed — results are stable to
-  * ~1 ULP, not bit-exact across cluster layouts (same as every built-in
-  * float aggregate, e.g. `avg`). Spec-gated for that reason; the engine's
-  * bit-exact oracle contract applies to its fold-ordered expressions
-  * (CosineSimilarity), not to commutative aggregates.
-  */
-case class MeanVectorAggregator()
-    extends Aggregator[Seq[Float], VecSumBuf, Seq[Float]] {
-
-  override def zero: VecSumBuf = VecSumBuf(Array.emptyDoubleArray, 0L)
-
-  override def reduce(b: VecSumBuf, v: Seq[Float]): VecSumBuf = {
-    if (v == null) return b
-    if (b.n == 0L) {
-      val s = new Array[Double](v.length)
-      var i = 0
-      while (i < v.length) { s(i) = v(i).toDouble; i += 1 }
-      VecSumBuf(s, 1L)
-    } else {
-      require(v.length == b.sum.length,
-        s"embedding length mismatch: ${v.length} vs ${b.sum.length}")
-      var i = 0
-      while (i < v.length) { b.sum(i) += v(i).toDouble; i += 1 }
-      VecSumBuf(b.sum, b.n + 1)
-    }
-  }
-
-  override def merge(a: VecSumBuf, b: VecSumBuf): VecSumBuf =
-    if (a.n == 0L) b
-    else if (b.n == 0L) a
-    else {
-      require(a.sum.length == b.sum.length,
-        s"embedding length mismatch: ${a.sum.length} vs ${b.sum.length}")
-      var i = 0
-      while (i < a.sum.length) { a.sum(i) += b.sum(i); i += 1 }
-      VecSumBuf(a.sum, a.n + b.n)
-    }
-
-  override def finish(r: VecSumBuf): Seq[Float] =
-    if (r.n == 0L) null
-    else r.sum.map(s => (s / r.n).toFloat).toSeq
-
-  private def enc[T: TypeTag]: Encoder[T] = ExpressionEncoder[T]()
-  override def bufferEncoder: Encoder[VecSumBuf] = enc
-  override def outputEncoder: Encoder[Seq[Float]] = enc
-}
-
 /** One-pass covariance moments: row count, per-dimension quantized sums,
   * and the flattened d×d outer-product sums — ALL exact longs, so the
   * aggregation is order-free however Spark partitions it. (n = moments(0),
@@ -147,12 +90,6 @@ case class CovMomentsAggregator(bits: Int)
 }
 
 object VectorAgg {
-  /** `meanVec(embeddingCol)` → `array<float>` mean vector per group. */
-  lazy val meanVec: Column => Column = {
-    val f = udaf(MeanVectorAggregator())
-    (v: Column) => f(v)
-  }
-
   /** `covMoments(bits)(embeddingCol)` → struct(moments: array<long>) of
     * exact covariance moments (see [[CovMomentsAggregator]]).
     */

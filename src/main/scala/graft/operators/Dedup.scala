@@ -31,10 +31,12 @@ object Dedup {
     * its start offset — a single-row-group file still lands every row in
     * one partition (measured: 2-5x on the signature-heavy benchmarks).
     * Hence the physical-plan probe + conditional repartition. The probe
-    * costs planning only: widen() is applied to scan-shaped inputs (no
-    * exchanges below), where `df.rdd` builds but does not execute stages.
-    * At real scale inputs arrive with >= cores non-empty partitions and
-    * this no-ops — no shuffle added.
+    * costs planning only when the input has no exchange below it: under
+    * AQE, `df.rdd` on an input with an exchange runs that shuffle stage
+    * eagerly to report the post-coalesce partition count, and the real run
+    * then executes it again. Apply it to scan-shaped inputs. At real scale
+    * inputs arrive with >= cores non-empty partitions and this no-ops — no
+    * shuffle added.
     */
   private[graft] def widen(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
@@ -81,31 +83,6 @@ object Dedup {
     perScope.join(scopesPerFp, Seq("__fp"))
       .select(col("scope"), col("keep_id"), col("group_size"),
         (col("__n_scopes") - 1L).as("cross_scope_copies"))
-  }
-
-  /** Incremental exact dedup for batch/stream ingestion: collapse duplicate
-    * content WITHIN the fresh batch (min id wins), then drop rows whose
-    * fingerprint already exists in `seenFps` — the compact `(fp: long)`
-    * state table carried between ingestion runs (store it partitioned or
-    * bucketed by fp so this anti-join co-locates). Returns the surviving
-    * rows and the updated fingerprint table (old ∪ survivors).
-    *
-    * Scale shape: the only shuffles key on 8-byte fingerprints; fresh-batch
-    * bodies never join against corpus bodies, and the corpus itself is
-    * never re-read — only its fingerprint set, which is what makes
-    * continuous ingestion O(batch) instead of O(corpus).
-    */
-  def exactIncremental(fresh: DataFrame, id: Column, content: Column,
-      seenFps: DataFrame): (DataFrame, DataFrame) = {
-    val fp = fresh.select(id.as("__id"),
-      TextFunctions.fingerprint64(content).as("__fp"))
-    val keepIds = fp.groupBy(col("__fp")).agg(min(col("__id")).as("__id"))
-      .join(seenFps.select(col("fp").as("__fp")), Seq("__fp"), "left_anti")
-    val survivors = fresh.join(keepIds.select(col("__id")),
-      id === col("__id"), "left_semi")
-    val updatedFps = seenFps.select(col("fp"))
-      .unionAll(keepIds.select(col("__fp").as("fp")))
-    (survivors, updatedFps)
   }
 
   // ---------------------------------------------------------------- MinHash
@@ -286,9 +263,10 @@ object Dedup {
         versionedStateTable(spark, s"${prefix}_postings"))
   }
 
-  /** Persist the [[exactIncremental]] fingerprint state as one bucketed
-    * table (bucketed+sorted by `fp`) — same compaction/clustering contract
-    * as [[NearDupState.save]]: collapses the per-batch unionAll lineage and
+  /** Persist an exact-dedup fingerprint state (the `(fp: long)` table of
+    * every admitted `fingerprint64`) as one bucketed table, bucketed and
+    * sorted by `fp` — same compaction/clustering contract as
+    * [[NearDupState.save]]: collapses the per-batch unionAll lineage and
     * pre-shuffles on the anti-join key.
     */
   def saveFingerprints(fps: DataFrame, table: String, buckets: Int = 64): Unit =
@@ -408,14 +386,14 @@ object Dedup {
       s"('$StateVersionProp' = '$StateFormatVersion')")
   }
 
-  /** Incremental near-duplicate dedup for continuous ingestion — the
-    * MinHash analogue of [[exactIncremental]]. The fresh batch first
-    * collapses internally (LSH candidate pairs verified by exact Jaccard →
-    * connected components → min-id representative); surviving
-    * representatives are then checked against the admitted corpus via a
-    * band-collision join against `state.bands`, with candidates verified by
-    * exact Jaccard computed from the posting intersection (state postings,
-    * never state text). Returns (survivor rows, updated state).
+  /** Incremental near-duplicate dedup for continuous ingestion. The fresh
+    * batch first collapses internally (LSH candidate pairs verified by
+    * exact Jaccard → connected components → min-id representative);
+    * surviving representatives are then checked against the admitted
+    * corpus via a band-collision join against `state.bands`, with
+    * candidates verified by exact Jaccard computed from the posting
+    * intersection (state postings, never state text). Returns (survivor
+    * rows, updated state).
     *
     * Scale shape: every join keys on ~8–20-byte hashes; the fresh batch's
     * text is read once for signatures/postings; the admitted corpus is
@@ -678,44 +656,15 @@ object Dedup {
         col("component").cast(idType).as("component"))
   }
 
-  /** Corpus minus near-duplicates: drops every id that appears as the larger
-    * element of a verified pair (greedy cluster collapse — for chains this
-    * may drop a doc whose only link was itself dropped; acceptable for
-    * training-data dedup where over-dropping a near-dup is harmless).
-    * [[minHashDedupClustered]] is the chain-correct variant.
-    */
-  def minHashDedup(df: DataFrame, id: Column, text: Column,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    val dupIds = minHashPairs(df, id, text, shingleK, numHashes, bands, threshold)
-      .select(col("id_b").as("__dup_id")).distinct()
-    df.join(dupIds, id === col("__dup_id"), "left_anti")
-  }
-
-  /** Chain-correct near-dup collapse: connected components over the
-    * verified pairs, keep exactly one representative (the minimum id) per
-    * component — a doc chained a~b~c keeps only a, never drops the whole
-    * chain.
-    */
-  def minHashDedupClustered(df: DataFrame, id: Column, text: Column,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    val comp = components(
-      minHashPairs(df, id, text, shingleK, numHashes, bands, threshold))
-    val drop = comp.filter(col("id") =!= col("component"))
-      .select(col("id").as("__dup_id"))
-    df.join(drop, id === col("__dup_id"), "left_anti")
-  }
-
   /** Cluster collapse keeping the HIGHEST-PRIORITY member per near-dup
     * component (training-data curation keeps the best copy — longest,
     * highest quality score — not the smallest id): connected components over
     * the verified pairs, then a per-component argmax on (priority, smaller
     * id wins ties). Documents untouched by any pair survive unchanged.
     *
-    * Same scale shape as [[minHashDedupClustered]]: the component frame is
-    * (id, label) longs, the argmax is a partial-aggregating max_by, and the
-    * final anti-join keys on ids only.
+    * Scale shape: the component frame is (id, label) longs, the argmax is
+    * a partial-aggregating max_by, and the final anti-join keys on ids
+    * only.
     */
   def collapseByPriority(df: DataFrame, id: Column, pairs: DataFrame,
       priority: Column): DataFrame = {
@@ -1588,7 +1537,8 @@ object Dedup {
   /** Embedding-cosine near-duplicate pairs, exact: all-pairs self-join
     * scored by the native CosineSimilarity expression. Quadratic — correct
     * at any threshold, intended for moderate corpora or post-blocking
-    * verification; [[embeddingPairsLsh]] is the scale path.
+    * verification; at scale, [[semanticDedup]] prunes within quantizer
+    * cells instead.
     */
   def embeddingPairsExact(df: DataFrame, id: Column, vec: Column,
       threshold: Double): DataFrame = {
@@ -1596,33 +1546,6 @@ object Dedup {
     val l = v.select(col("id").as("id_a"), col("v").as("va"))
     val r = v.select(col("id").as("id_b"), col("v").as("vb"))
     l.join(r, col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        org.apache.spark.sql.graft.VectorFunctions.cosineSim(col("va"), col("vb")).as("cos"))
-      .filter(col("cos") >= threshold)
-  }
-
-  /** Embedding-cosine near-duplicate pairs at scale: `tables` independent
-    * sign-random-projection bucket tables (distinct deterministic plane
-    * seeds), candidates = pairs sharing any bucket, verified by exact
-    * cosine. Recall is probabilistic — for angle θ a pair collides in one
-    * table with p = (1-θ/π)^bits, overall 1-(1-p)^tables; precision is
-    * exact. Shuffles carry (id, bucket) longs, never the vectors.
-    */
-  def embeddingPairsLsh(df: DataFrame, id: Column, vec: Column,
-      threshold: Double, bits: Int = 12, tables: Int = 4): DataFrame = {
-    val v = widen(df.select(id.as("id"), vec.as("v")))
-    val buckets = (0 until tables).map { t =>
-      v.select(col("id"),
-        HashFunctions.srpBucket(col("v"), bits, seed = s"plane$t").as("b"),
-        lit(t).as("tbl"))
-    }.reduce(_ unionAll _)
-    val cand = buckets.select(col("tbl"), col("b"), col("id").as("id_a"))
-      .join(buckets.select(col("tbl"), col("b"), col("id").as("id_b")), Seq("tbl", "b"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    cand
-      .join(v.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
-      .join(v.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         org.apache.spark.sql.graft.VectorFunctions.cosineSim(col("va"), col("vb")).as("cos"))
       .filter(col("cos") >= threshold)
@@ -1664,38 +1587,6 @@ object Dedup {
     assigned.select(col("id"), col("cid"))
       .join(dropped.withColumn("__dup", lit(true)), Seq("id"), "left")
       .select(col("id"), col("cid"), col("__dup").isNull.as("kept"))
-  }
-
-  /** Incremental SemDeDup for continuous ingestion: the admitted corpus
-    * lives as an assignment-table state (id, cid, v); a new batch is
-    * cluster-assigned, pruned within itself (keep-lowest-id, as
-    * [[semanticDedup]]), then members with a same-cluster state neighbor
-    * at cosine >= `threshold` are dropped; survivors join the state.
-    * Returns (admitted (id, cid), next state). O(batch × cluster-slice of
-    * state) per run — the batch meets only its own clusters' state rows
-    * via the cid equality join, never the whole corpus; bucket the
-    * persisted state by cid to make that join shuffle-free.
-    */
-  def semanticDedupIncremental(batch: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame, state: DataFrame, threshold: Double)
-      : (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.graft.VectorFunctions
-    val asg = Similarity.assignToCentroids(
-      widen(batch.select(id.as("id"), vec.as("v"))), col("id"), col("v"),
-      centroids)
-    val l = asg.select(col("cid"), col("id").as("id_a"), col("v").as("va"))
-    val r = asg.select(col("cid"), col("id").as("id_b"), col("v").as("vb"))
-    val dropIntra = l.join(r, Seq("cid"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(VectorFunctions.cosineSim(col("va"), col("vb")) >= threshold)
-      .select(col("id_b").as("id")).distinct()
-    val intra = asg.join(dropIntra, Seq("id"), "left_anti")
-    val dropVsState = intra
-      .join(state.select(col("cid"), col("v").as("sv")), Seq("cid"))
-      .filter(VectorFunctions.cosineSim(col("v"), col("sv")) >= threshold)
-      .select(col("id")).distinct()
-    val admitted = intra.join(dropVsState, Seq("id"), "left_anti")
-    (admitted.select(col("id"), col("cid")), state.unionAll(admitted))
   }
 
   /** Semantic decontamination: screen the training corpus against an
@@ -1894,30 +1785,6 @@ object Dedup {
     Option(bytes)
   }
 
-  /** Exact semi-join of a huge corpus against a small needle set, with a
-    * bloom prefilter: a codegen'd, map-only `might_contain` probe drops the
-    * (1 - fpp) fraction of corpus rows that cannot match BEFORE the join,
-    * so the join input is |matches| + |corpus|·fpp rows instead of
-    * |corpus|. The trailing equality join makes the result EXACT (a bloom
-    * has no false negatives — only false positives, which the join then
-    * rejects).
-    *
-    * This is the contamination-CHECK shape: "which corpus rows collide with
-    * the eval/benchmark set". Keys can be raw content or any fingerprint
-    * column; pass a fingerprint to keep the join shuffle narrow at scale.
-    */
-  def bloomSemiJoin(corpus: DataFrame, cKey: Column, needles: DataFrame,
-      nKey: Column, fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.graft.BloomFunctions
-    buildBloom(needles, nKey, fpp) match {
-      case None => corpus.limit(0)
-      case Some(bytes) =>
-        corpus.filter(BloomFunctions.mightContain(bytes, BloomFunctions.keyHash(cKey)))
-          .join(needles.select(nKey.as("__needle_key")).distinct(),
-            cKey === col("__needle_key"), "left_semi")
-    }
-  }
-
   /** Exact decontamination (anti-join) of a huge corpus against a small
     * needle set. Corpus rows whose bloom probe says "definitely not
     * present" pass through with NO join at all (map-only); only the
@@ -1944,7 +1811,7 @@ object Dedup {
     }
   }
 
-  // -------------------------------------------- repeated-substring removal
+  // ------------------------------------------ repeated-substring detection
 
   /** Character-level cross-document repeated-span detection (the
     * "deduplicate training data at the substring level" move): every
@@ -2022,37 +1889,5 @@ object Dedup {
       .select(col("id"), coalesce(col("__n"), lit(0L)).as("n_spans"),
         coalesce(col("__rm"), lit(0L)).as("removed_chars"),
         (col("__len") - coalesce(col("__rm"), lit(0L))).as("kept_chars"))
-  }
-
-  /** Removes the duplicated spans in place, returning (id, clean_text) for
-    * every document. The splice folds each document's (few, merged) spans
-    * left-to-right; spans are collected per doc so the fold input is small
-    * regardless of corpus size.
-    */
-  def removeRepeatedSpans(df: DataFrame, id: Column, text: Column,
-      window: Int = 64, stride: Int = 32, minDocs: Long = 2): DataFrame = {
-    val spans = repeatedSpanIntervals(df, id, text, window, stride, minDocs)
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(struct(col("span_start").as("s"),
-        col("span_end").as("e")))).as("__spans"))
-    df.select(id.as("id"), text.as("__t"))
-      .join(spans, Seq("id"), "left")
-      .select(col("id"),
-        when(col("__spans").isNull, col("__t")).otherwise(
-          concat(
-            aggregate(col("__spans"),
-              struct(lit("").as("acc"), lit(0L).as("from")),
-              (st, sp) => struct(
-                concat(st.getField("acc"),
-                  col("__t").substr((st.getField("from") + 1).cast("int"),
-                    (sp.getField("s") - st.getField("from")).cast("int")))
-                  .as("acc"),
-                sp.getField("e").as("from")),
-              st => st.getField("acc")),
-            col("__t").substr(
-              (coalesce(element_at(col("__spans"), -1).getField("e"), lit(0L)) + 1)
-                .cast("int"),
-              length(col("__t"))))
-        ).as("clean_text"))
   }
 }

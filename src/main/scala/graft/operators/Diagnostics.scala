@@ -172,29 +172,6 @@ object Diagnostics {
         // and is as order/partitioning-invariant as the XOR
         sum(col("__fp").cast("decimal(38,0)")).as("fp_sum"))
 
-  /** Diff two [[corpusManifest]] snapshots by file path: classify every
-    * file as added / removed / changed / unchanged — the decision input
-    * for manifest-driven incremental processing (re-run downstream work
-    * only for non-`unchanged` files). "Changed" means ANY of row count,
-    * XOR digest, or sum digest moved — the dual digests exist precisely
-    * so this comparison has no structural blind spot. A file-count-sized
-    * full-outer join; never touches content.
-    */
-  def manifestDiff(oldM: DataFrame, newM: DataFrame): DataFrame = {
-    val o = oldM.select(col("path"), col("n_rows").as("__on"),
-      col("fp_xor").as("__ox"), col("fp_sum").as("__os"))
-    val n = newM.select(col("path"), col("n_rows").as("__nn"),
-      col("fp_xor").as("__nx"), col("fp_sum").as("__ns"))
-    o.join(n, Seq("path"), "full_outer")
-      .select(col("path"),
-        when(col("__on").isNull, lit("added"))
-          .when(col("__nn").isNull, lit("removed"))
-          .when(col("__on") =!= col("__nn") ||
-            col("__ox") =!= col("__nx") ||
-            col("__os") =!= col("__ns"), lit("changed"))
-          .otherwise(lit("unchanged")).as("status"))
-  }
-
   /** Pre-flight join-size estimate from counted KMV sketches
     * ([[graft.functions.KmvCountedAggregator]]): one k-bounded aggregation
     * per side reduces each table to its k smallest distinct key-hashes

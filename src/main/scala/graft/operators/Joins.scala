@@ -1,42 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Join helpers for the two scale pathologies AQE can't always fix alone:
-  * heavy skew on a join key, and repeated shuffles of a large fact table.
+/** Join shapes Spark has no native operator for: the as-of join and the
+  * range (interval) join, each restated as one equi-keyed shuffle.
   */
 object Joins {
-
-  /** Skew-safe equi-join of a skewed large side against a smaller side:
-    * the large side's rows get a deterministic salt in [0, saltFactor), the
-    * small side is replicated saltFactor times, and the join key becomes
-    * (key, salt) — a hot key's rows now spread over saltFactor reducers.
-    *
-    * The salt is `xxhash64` of the large side's whole row (content-derived,
-    * no rand(), so retries/resamples don't reshuffle rows). Result equals
-    * the plain equi-join on `keys` exactly; `smallDf` grows ×saltFactor,
-    * so keep saltFactor modest (8–32) and the small side genuinely smaller.
-    *
-    * Join types that preserve every LEFT (large-side) row are supported;
-    * right/full outer are rejected — an unmatched small-side row exists
-    * once per salt replica and would be emitted saltFactor times.
-    */
-  def saltedJoin(largeDf: DataFrame, smallDf: DataFrame, keys: Seq[String],
-      saltFactor: Int, joinType: String = "inner"): DataFrame = {
-    require(saltFactor > 0, "saltFactor must be positive")
-    require(Set("inner", "cross", "left", "left_outer", "leftouter",
-        "left_semi", "leftsemi", "left_anti", "leftanti")
-        .contains(joinType.toLowerCase.replace(" ", "_")),
-      s"saltedJoin supports inner/left/left_semi/left_anti, got $joinType " +
-        "(right/full would emit unmatched small-side rows once per salt replica)")
-    val salted = largeDf.withColumn("__salt",
-      pmod(xxhash64(largeDf.columns.map(col).toIndexedSeq: _*), lit(saltFactor)).cast("int"))
-    val replicated = smallDf.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    salted.join(replicated, keys :+ "__salt", joinType).drop("__salt")
-  }
 
   /** As-of join — for every left row, the single right row with the
     * greatest `rightTime` <= `leftTime` (or < when `strict`) per key; nulls
@@ -108,18 +79,4 @@ object Joins {
     l.join(r, cond, joinType)
       .drop("__bucket" +: "__rbucket" +: renamed.map(_._2): _*)
   }
-
-  /** Write `df` bucketed+sorted on the join key so later joins between
-    * co-bucketed tables skip the shuffle entirely (sort-merge join reads
-    * bucket files pairwise). The table lands in the session catalog's
-    * warehouse as parquet.
-    */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-      numBuckets: Int): Unit =
-    df.write
-      .format("parquet")
-      .mode("overwrite")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
 }

@@ -13,31 +13,14 @@ import org.apache.spark.sql.graft.LayoutFunctions
   * interleave of (a, b) keeps rows that are close in both columns physically
   * adjacent, so each file covers a small rectangle of (a, b) space and
   * predicates on EITHER column skip most files — where a lexicographic sort
-  * (a, b) prunes only on `a`.
+  * (a, b) prunes only on `a`. A clustered write range-partitions on the key
+  * and sorts within partitions: the same one range exchange a plain
+  * sort-on-write pays.
   */
 object Layout {
 
   /** Z-order clustering key for two integral columns. */
   def zOrderKey(a: Column, b: Column): Column = LayoutFunctions.zOrderKey(a, b)
-
-  /** Returns `df` redistributed and ordered for a Z-clustered write:
-    * range-partitioned into `numFiles` slices of the z-curve, each slice
-    * sorted by z. Write the result with any file sink; each output file then
-    * covers a compact rectangle in (a, b). The z column is internal and
-    * dropped.
-    *
-    * The single range exchange samples z-keys to build balanced bounds (no
-    * skew pile-up on hot key prefixes); this is the same shuffle a plain
-    * global sort would pay, so Z-clustering costs nothing extra over
-    * sort-on-write.
-    */
-  def zorder(df: DataFrame, a: Column, b: Column, numFiles: Int): DataFrame = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    df.withColumn("__z", zOrderKey(a, b))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-  }
 
   /** Curriculum sharding: assign every row to one of `numShards` buckets by
     * the quantile band of a difficulty/quality `score` — the
@@ -73,15 +56,4 @@ object Layout {
     * them (see [[org.apache.spark.sql.graft.HilbertIndex]]).
     */
   def hilbertKey(a: Column, b: Column): Column = LayoutFunctions.hilbertKey(a, b)
-
-  /** [[zorder]] with the Hilbert key — identical shuffle cost (one range
-    * exchange, the same a sort-on-write pays), better pruning locality.
-    */
-  def hilbertOrder(df: DataFrame, a: Column, b: Column, numFiles: Int): DataFrame = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    df.withColumn("__h", hilbertKey(a, b))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions(col("__h"))
-      .drop("__h")
-  }
 }

@@ -10,17 +10,12 @@ import org.apache.spark.sql.types._
   * with typed metadata, decoded/feature-extracted through a batched
   * partition-level codec interface.
   *
-  * All three modalities have REAL header codecs, pure JVM, no new
-  * dependency: [[ImageIoCodec]] (JDK javax.imageio — format/pixel
-  * dimensions), [[WavCodec]] (RIFF/WAVE chunk parse — rate/channels/
-  * frames), [[Mp4Codec]] (ISO BMFF box parse — video track width/height
-  * via tkhd/stsd + duration, and real sample DEMUX via the stbl tables:
-  * [[demuxFrames]] slices the track's actual encoded access units out of
-  * mdat; only pixel DECODE of those units stays out of scope — it needs a
-  * codec library the JDK lacks). [[FakeCodec]] remains only as the
-  * clearly-marked deterministic FIXTURE (md5-derived pseudo-metadata)
-  * backing the SQL-oracle-checkable query — an oracle can recompute its
-  * fields, which no real decoder allows. The
+  * [[FakeCodec]] is the one shipped codec: a clearly-marked deterministic
+  * FIXTURE (md5-derived pseudo-metadata) backing the SQL-oracle-checkable
+  * query — an oracle can recompute its fields, which no real decoder
+  * allows. A real decoder plugs in as another [[Codec]]. Images also get a
+  * real perceptual hash ([[perceptualHash]], JDK javax.imageio decode)
+  * for near-dup pairs ([[imageDedupPairs]]). The
   * Spark-side plumbing is shared and is the part that matters at 100 TB:
   *  - payloads stay `BinaryType` end to end (no string round-trips);
   *  - the codec is opened once per partition and fed fixed-size batches
@@ -76,396 +71,8 @@ object Multimodal {
     }
   }
 
-  /** REAL image codec backed by `javax.imageio` (ships with the JDK — no
-    * new dependency): format from the registered reader's name, true pixel
-    * width/height from the image header. ImageIO readers parse dimensions
-    * from the header without decoding pixel data for the common formats, so
-    * the per-image cost is a few hundred bytes of parsing, not a full
-    * decode. Images are single-frame; audio/video payloads stay on
-    * [[FakeCodec]] (no demuxer in the JDK). Unreadable/corrupt payloads
-    * yield a null format and zero dimensions rather than failing the task —
-    * at corpus scale a crawl always contains broken files.
-    */
-  object ImageIoCodec extends Codec {
-    def decode(batch: Seq[Array[Byte]]): Seq[MediaMeta] = batch.map { b =>
-      if (b == null) MediaMeta(null, 0, 0, 0, 0)
-      else {
-        var meta = MediaMeta(null, 0, 0, 0, b.length)
-        val in = javax.imageio.ImageIO.createImageInputStream(
-          new java.io.ByteArrayInputStream(b))
-        try {
-          val readers = javax.imageio.ImageIO.getImageReaders(in)
-          if (readers.hasNext) {
-            val r = readers.next()
-            try {
-              r.setInput(in)
-              meta = MediaMeta(r.getFormatName.toLowerCase(java.util.Locale.ROOT),
-                r.getWidth(0), r.getHeight(0), 1, b.length)
-            } catch { case _: Exception => () } finally r.dispose()
-          }
-        } finally in.close()
-        meta
-      }
-    }
-  }
-
-  /** REAL audio header codec: RIFF/WAVE container parsing in pure JVM code
-    * (the format is a public spec — chunked little-endian header; no
-    * decoder library needed because metadata lives in the `fmt `/`data`
-    * chunk headers, not the samples). Field mapping onto [[MediaMeta]],
-    * documented here as the audio contract:
-    * `format` = "wav", `width` = sample rate (Hz), `height` = channel
-    * count, `n_frames` = sample frames (data bytes / block align — the
-    * literal WAV meaning of "frame"), `n_bytes` = payload size. Malformed
-    * or truncated payloads yield a null format rather than failing the
-    * task.
-    */
-  object WavCodec extends Codec {
-    private def le16(b: Array[Byte], i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    private def le32(b: Array[Byte], i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-        ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    private def tag(b: Array[Byte], i: Int): String =
-      new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-    private[operators] def parse(b: Array[Byte]): MediaMeta = {
-      if (b == null) return MediaMeta(null, 0, 0, 0, 0)
-      val none = MediaMeta(null, 0, 0, 0, b.length)
-      // never-fail contract (same as ImageIoCodec): a crafted/corrupt chunk
-      // layout must degrade to the null-format meta, not throw
-      try {
-        if (b.length < 12 || tag(b, 0) != "RIFF" || tag(b, 8) != "WAVE") return none
-        // Long cursor: chunk sizes are unsigned 32-bit, so an Int cursor can
-        // wrap negative on a crafted size and index out of bounds
-        var i = 12L
-        var rate = 0L; var channels = 0; var blockAlign = 0; var dataBytes = -1L
-        while (i + 8 <= b.length && (rate == 0L || dataBytes < 0L)) {
-          val at = i.toInt
-          val id = tag(b, at)
-          val sz = le32(b, at + 4)
-          if (id == "fmt " && sz >= 16 && i + 8 + 16 <= b.length) {
-            channels = le16(b, at + 10)
-            rate = le32(b, at + 12)
-            blockAlign = le16(b, at + 20)
-          } else if (id == "data") {
-            // size may exceed the (possibly truncated) payload — clamp
-            dataBytes = math.min(sz, b.length - i - 8)
-          }
-          i += 8L + sz + (sz & 1L) // chunks are word-aligned
-        }
-        if (rate <= 0L || channels <= 0 || dataBytes < 0L) none
-        else MediaMeta("wav", rate.toInt, channels,
-          (if (blockAlign > 0) dataBytes / blockAlign else 0L).toInt, b.length)
-      } catch { case _: Exception => none }
-    }
-
-    def decode(batch: Seq[Array[Byte]]): Seq[MediaMeta] = batch.map(parse)
-  }
-
-  /** REAL video header codec: ISO BMFF / MP4 box parsing in pure JVM code
-    * (the container layout is a public spec — ISO/IEC 14496-12: big-endian
-    * `[size][type][payload]` boxes, nestable). Walks the box tree to
-    * `moov`, reads `mvhd` (movie header: timescale + duration), then
-    * descends into each `trak` for the video track's pixel dimensions:
-    * `tkhd`'s 16.16 fixed-point width/height, falling back to the 16-bit
-    * width/height of the first `stsd` visual sample entry when the track
-    * header carries zeros (both are spec locations for the same fact; a
-    * track is "video" when its `hdlr` handler is `vide`, or — absent an
-    * `hdlr` — when either location carries nonzero dimensions). Field
-    * mapping onto [[MediaMeta]], documented here as the video contract:
-    * `format` = "mp4", `width`/`height` = the FIRST video track's pixel
-    * dimensions (0 when the file has no video track — audio-only MP4s
-    * exist), `n_frames` = presentation duration in MILLISECONDS
-    * (duration/timescale·1000), `n_bytes` = payload size.
-    * Malformed/truncated payloads yield a null format rather than failing
-    * the task — same never-fail contract as the other codecs.
-    */
-  object Mp4Codec extends Codec {
-    private def be16(b: Array[Byte], i: Int): Int =
-      ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    private def be32(b: Array[Byte], i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    private def be64(b: Array[Byte], i: Int): Long =
-      (be32(b, i) << 32) | be32(b, i + 4)
-    private def tag(b: Array[Byte], i: Int): String =
-      new String(b, i, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-    /** All sibling boxes in [from, to) in file order, as (boxType,
-      * payloadStart, payloadEnd). Long cursor + explicit bounds: 64-bit
-      * `size == 1` boxes and crafted sizes must not wrap or index out of
-      * range; a malformed box terminates the walk (prefix stays usable).
-      */
-    private def boxes(b: Array[Byte], from: Long, to: Long)
-        : Seq[(String, Long, Long)] = {
-      var i = from
-      val out = Seq.newBuilder[(String, Long, Long)]
-      var halt = false
-      while (!halt && i + 8 <= to) {
-        val size32 = be32(b, i.toInt)
-        val tp = tag(b, i.toInt + 4)
-        val (payload, boxEnd) =
-          if (size32 == 1L && i + 16 <= to) (i + 16, i + be64(b, i.toInt + 8))
-          else if (size32 == 0L) (i + 8, to) // box extends to end
-          else (i + 8, i + size32)
-        if (boxEnd < payload || boxEnd > to) halt = true // malformed
-        else {
-          out += ((tp, payload, boxEnd))
-          i = boxEnd
-        }
-      }
-      out.result()
-    }
-
-    private def first(kids: Seq[(String, Long, Long)],
-        tp: String): Option[(Long, Long)] =
-      kids.collectFirst { case (`tp`, s, e) => (s, e) }
-
-    /** The `stbl` (sample table) payload span of a trak, via the fixed
-      * mdia → minf → stbl spec nesting.
-      */
-    private def stblOf(b: Array[Byte], trakKids: Seq[(String, Long, Long)])
-        : Option[(Long, Long)] =
-      for {
-        (ms, me) <- first(trakKids, "mdia")
-        (is, ie) <- first(boxes(b, ms, me), "minf")
-        (ss, se) <- first(boxes(b, is, ie), "stbl")
-      } yield (ss, se)
-
-    /** Pixel dimensions of a trak if it is a video track: `tkhd`'s 16.16
-      * fixed-point width/height (v0 payload offset 76, v1 offset 88),
-      * falling back to the first `stsd` sample entry's 16-bit
-      * width/height at entry offset 32 (the VisualSampleEntry layout).
-      */
-    private def videoDims(b: Array[Byte], trakStart: Long,
-        trakEnd: Long): Option[(Int, Int)] = {
-      val kids = boxes(b, trakStart, trakEnd)
-      val mdiaKids = first(kids, "mdia")
-        .map { case (s, e) => boxes(b, s, e) }.getOrElse(Seq.empty)
-      val handler = first(mdiaKids, "hdlr").collect {
-        // hdlr payload: version+flags(4) pre_defined(4) handler_type(4)
-        case (s, e) if s + 12 <= e => tag(b, s.toInt + 8)
-      }
-      if (handler.exists(_ != "vide")) return None // declared non-video
-      val fromTkhd = first(kids, "tkhd").flatMap { case (s, e) =>
-        if (e <= s) None
-        else {
-          // tkhd v0: ver+flags(4) ctime(4) mtime(4) id(4) rsvd(4) dur(4)
-          //   rsvd(8) layer(2) alt(2) vol(2) rsvd(2) matrix(36) → w at 76
-          // tkhd v1: 64-bit ctime/mtime/duration → w at 88
-          val off = if (b(s.toInt) == 1) 88 else 76
-          if (s + off + 8 <= e) {
-            val w = (be32(b, s.toInt + off) >> 16).toInt
-            val h = (be32(b, s.toInt + off + 4) >> 16).toInt
-            if (w > 0 && h > 0) Some((w, h)) else None
-          } else None
-        }
-      }
-      lazy val fromStsd = for {
-        (ss, se) <- stblOf(b, kids)
-        (ds, de) <- first(boxes(b, ss, se), "stsd")
-        // stsd payload: version+flags(4) entry_count(4), then sample
-        // entries; VisualSampleEntry: size(4) type(4) reserved(6)
-        // data_ref_idx(2) pre_defined(2) reserved(2) pre_defined(12)
-        // width(2) height(2)
-        dims <- {
-          val entry = ds + 8
-          if (entry + 36 <= de) {
-            val w = be16(b, entry.toInt + 32)
-            val h = be16(b, entry.toInt + 34)
-            if (w > 0 && h > 0) Some((w, h)) else None
-          } else None
-        }
-      } yield dims
-      fromTkhd.orElse(fromStsd)
-    }
-
-    private[operators] def parse(b: Array[Byte]): MediaMeta = {
-      if (b == null) return MediaMeta(null, 0, 0, 0, 0)
-      val none = MediaMeta(null, 0, 0, 0, b.length)
-      try {
-        // an MP4 starts with an ftyp box (spec-recommended first box)
-        if (b.length < 12 || tag(b, 4) != "ftyp") return none
-        val top = boxes(b, 0L, b.length.toLong)
-        val (moovStart, moovEnd) = first(top, "moov").getOrElse(return none)
-        val inMoov = boxes(b, moovStart, moovEnd)
-        val (mv, mvEnd) = first(inMoov, "mvhd").getOrElse(return none)
-        // mvhd: version(1) flags(3), then v0: ctime(4) mtime(4)
-        // timescale(4) duration(4); v1: ctime(8) mtime(8) timescale(4)
-        // duration(8)
-        val version = b(mv.toInt)
-        val (timescale, duration) =
-          // guards cover the LAST byte each branch reads: v1's be64 at
-          // mv+24 needs mv+32, v0's be32 at mv+16 needs mv+20
-          if (version == 1 && mv + 32 <= mvEnd)
-            (be32(b, mv.toInt + 20), be64(b, mv.toInt + 24))
-          else if (version == 0 && mv + 20 <= mvEnd)
-            (be32(b, mv.toInt + 12), be32(b, mv.toInt + 16))
-          else return none
-        // degrade to null-format on values the Int meta cannot carry
-        // (crafted timescale > 2^31, 64-bit duration whose *1000 would
-        // overflow, duration in ms beyond Int range) — fabricating wrapped
-        // numbers would violate the never-fail-never-lie contract
-        if (timescale <= 0L || timescale > Int.MaxValue ||
-          duration < 0L || duration > Long.MaxValue / 1000L) return none
-        val durMs = duration * 1000L / timescale
-        if (durMs > Int.MaxValue) return none
-        val (w, h) = inMoov.collect { case ("trak", s, e) => (s, e) }
-          .iterator.map { case (s, e) => videoDims(b, s, e) }
-          .collectFirst { case Some(d) => d }
-          .getOrElse((0, 0))
-        MediaMeta("mp4", w, h, durMs.toInt, b.length)
-      } catch { case _: Exception => none }
-    }
-
-    /** REAL video sample (frame) extraction — an ISO BMFF DEMUXER in pure
-      * JVM code, no decoder: the sample table (`stbl`) of the first video
-      * track locates every encoded sample in the file — `stsz` (per-sample
-      * sizes), `stsc` (sample→chunk runs), `stco`/`co64` (chunk offsets) —
-      * and `k` evenly-spaced samples are sliced straight out of `mdat`
-      * byte-exactly, the same spacing rule as [[sampleFrames]]. These are
-      * the track's actual encoded access units (e.g. H.264 NAL units);
-      * DECODING them to pixels would need a codec library the JDK lacks —
-      * that boundary is honest: container demux is spec-level byte
-      * arithmetic, pixel decode is not. Malformed tables yield an empty
-      * result, never a throw.
-      */
-    private[operators] def videoSamples(b: Array[Byte], k: Int): Seq[Array[Byte]] = {
-      if (b == null || k <= 0) return Seq.empty
-      try {
-        if (b.length < 12 || tag(b, 4) != "ftyp") return Seq.empty
-        val top = boxes(b, 0L, b.length.toLong)
-        val (moovStart, moovEnd) = first(top, "moov").getOrElse(return Seq.empty)
-        val inMoov = boxes(b, moovStart, moovEnd)
-        val stbl = inMoov.collect { case ("trak", s, e) => (s, e) }
-          .iterator.flatMap { case (s, e) =>
-            val kids = boxes(b, s, e)
-            if (videoDims(b, s, e).isDefined) stblOf(b, kids) else None
-          }.nextOption().getOrElse(return Seq.empty)
-        val stblKids = boxes(b, stbl._1, stbl._2)
-
-        // stsz: version+flags(4) sample_size(4) sample_count(4) [sizes]
-        val (zs, ze) = first(stblKids, "stsz").getOrElse(return Seq.empty)
-        if (zs + 12 > ze) return Seq.empty
-        val fixedSize = be32(b, zs.toInt + 4)
-        val nSamples = be32(b, zs.toInt + 8)
-        if (nSamples <= 0L || nSamples > Int.MaxValue) return Seq.empty
-        val n = nSamples.toInt
-        val sizes: Int => Long =
-          if (fixedSize != 0L) _ => fixedSize
-          else if (zs + 12 + 4L * n <= ze) i => be32(b, (zs + 12 + 4L * i).toInt)
-          else return Seq.empty
-
-        // stco/co64: version+flags(4) entry_count(4) [offsets]
-        val (chunkOff, nChunks): (Int => Long, Int) = {
-          first(stblKids, "stco").map { case (cs, ce) =>
-            val c = if (cs + 8 <= ce) be32(b, cs.toInt + 4).toInt else 0
-            if (c <= 0 || cs + 8 + 4L * c > ce) return Seq.empty
-            ((i: Int) => be32(b, (cs + 8 + 4L * i).toInt), c)
-          }.orElse(first(stblKids, "co64").map { case (cs, ce) =>
-            val c = if (cs + 8 <= ce) be32(b, cs.toInt + 4).toInt else 0
-            if (c <= 0 || cs + 8 + 8L * c > ce) return Seq.empty
-            ((i: Int) => be64(b, (cs + 8 + 8L * i).toInt), c)
-          }).getOrElse(return Seq.empty)
-        }
-
-        // stsc: version+flags(4) entry_count(4) [(first_chunk,
-        // samples_per_chunk, desc_idx)] — runs apply until the next entry's
-        // first_chunk
-        val (ts, te) = first(stblKids, "stsc").getOrElse(return Seq.empty)
-        val nRuns = if (ts + 8 <= te) be32(b, ts.toInt + 4).toInt else 0
-        if (nRuns <= 0 || ts + 8 + 12L * nRuns > te) return Seq.empty
-        def runFirstChunk(r: Int) = be32(b, (ts + 8 + 12L * r).toInt)
-        def runPerChunk(r: Int) = be32(b, (ts + 8 + 12L * r + 4).toInt)
-
-        // absolute file offset of every sample, chunk by chunk
-        val offsets = new Array[Long](n)
-        var run = 0
-        var sample = 0
-        var chunk = 0
-        while (chunk < nChunks && sample < n) {
-          while (run + 1 < nRuns && runFirstChunk(run + 1) <= chunk + 1) run += 1
-          var within = 0L
-          var pos = chunkOff(chunk)
-          val perChunk = runPerChunk(run)
-          while (within < perChunk && sample < n) {
-            offsets(sample) = pos
-            pos += sizes(sample)
-            sample += 1
-            within += 1
-          }
-          chunk += 1
-        }
-        if (sample < n) return Seq.empty // tables disagree — malformed
-
-        // k evenly-spaced distinct sample indices, sampleFrames' rule
-        val step = math.max(n / k, 1)
-        val picked = (0 until k).map(i => math.min(i * step, n - 1)).distinct
-        picked.flatMap { i =>
-          val off = offsets(i)
-          val len = sizes(i)
-          if (off >= 0 && len > 0 && len <= Int.MaxValue &&
-              off + len <= b.length)
-            Some(java.util.Arrays.copyOfRange(b, off.toInt, (off + len).toInt))
-          else None
-        }
-      } catch { case _: Exception => Seq.empty }
-    }
-
-    def decode(batch: Seq[Array[Byte]]): Seq[MediaMeta] = batch.map(parse)
-  }
-
-  /** Magic-byte auto-dispatch codec — the honest production default: image
-    * signatures route to [[ImageIoCodec]] (real header decode), RIFF/WAVE
-    * to [[WavCodec]] (real header parse), `ftyp` to [[Mp4Codec]] (real ISO
-    * BMFF box parse), and anything unrecognized yields
-    * a null-format meta carrying only `n_bytes` (NOT [[FakeCodec]]'s
-    * pseudo-metadata — an unknown payload should look unknown downstream,
-    * so quality filters can quarantine it instead of trusting fabricated
-    * dimensions).
-    */
-  object AutoCodec extends Codec {
-    private def isImage(b: Array[Byte]): Boolean =
-      b.length >= 4 && (
-        (b(0) == 0x89.toByte && b(1) == 'P' && b(2) == 'N' && b(3) == 'G') ||
-        (b(0) == 0xff.toByte && b(1) == 0xd8.toByte) ||                // jpeg
-        (b(0) == 'G' && b(1) == 'I' && b(2) == 'F') ||
-        (b(0) == 'B' && b(1) == 'M') ||
-        (b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-          b(3) == 'F' && b(8) == 'W' && b(9) == 'E' && b(10) == 'B' &&
-          b(11) == 'P'))                                              // webp
-    private def isWav(b: Array[Byte]): Boolean =
-      b.length >= 12 && b(0) == 'R' && b(1) == 'I' && b(2) == 'F' &&
-        b(3) == 'F' && b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'
-    private def isMp4(b: Array[Byte]): Boolean =
-      b.length >= 12 && b(4) == 'f' && b(5) == 't' && b(6) == 'y' && b(7) == 'p'
-
-    def decode(batch: Seq[Array[Byte]]): Seq[MediaMeta] = batch.map { b =>
-      if (b == null) MediaMeta(null, 0, 0, 0, 0)
-      else if (isWav(b)) WavCodec.parse(b)
-      else if (isMp4(b)) Mp4Codec.parse(b)
-      else if (isImage(b)) ImageIoCodec.decode(Seq(b)).head
-      else MediaMeta(null, 0, 0, 0, b.length)
-    }
-  }
-
   /** Fixed stand-in frame size for the "video" framing stub. */
   val FrameBytes = 256
-
-  /** Ingest a directory of media files as the engine's multimodal contract:
-    * Spark's `binaryFile` source yields (path, modificationTime, length,
-    * content binary) — the opaque-binary column feeds [[decodeMeta]] /
-    * [[sampleFrames]] directly. `glob` (e.g. `*.jpg`) is pushed into the
-    * file listing via pathGlobFilter, so non-matching files are never
-    * opened; partition sizing follows spark.sql.files.maxPartitionBytes
-    * like any file scan.
-    */
-  def readBinaryDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-      glob: Option[String] = None): DataFrame = {
-    val r = spark.read.format("binaryFile")
-    glob.fold(r)(g => r.option("pathGlobFilter", g)).load(dir)
-  }
 
   /** Appends `meta: struct<format,width,height,n_frames,n_bytes>` by running
     * `codec` over `batchSize`-row batches per partition.
@@ -493,8 +100,7 @@ object Multimodal {
   /** Deterministic frame sampling for OPAQUE payloads: `k` evenly-spaced
     * [[FrameBytes]]-sized slices as `array<binary>` — the SQL-replayable
     * fixture shape of frame extraction (the oracle recomputes the slices).
-    * For real ISO BMFF video, [[demuxFrames]] replaces this slicer with the
-    * actual container demux. Codegen'd built-ins only; no UDF.
+    * Codegen'd built-ins only; no UDF.
     */
   def sampleFrames(payload: Column, k: Int): Column = {
     val nFrames = ceil(length(payload).cast("double") / FrameBytes).cast("int")
@@ -502,32 +108,6 @@ object Multimodal {
       least(i * greatest(floor(nFrames / lit(k)).cast("int"), lit(1)), nFrames - 1))
     transform(array_distinct(idx), i =>
       substring(payload, (i * FrameBytes + 1).cast("int"), lit(FrameBytes)))
-  }
-
-  /** REAL video frame extraction: appends `out: array<binary>` holding `k`
-    * evenly-spaced ENCODED samples (access units) of each payload's first
-    * video track, demuxed from the container by
-    * [[Mp4Codec.videoSamples]]'s stsz/stsc/stco walk — byte slices of the
-    * file's own mdat, not [[FrameBytes]] fakes. Non-MP4 or malformed
-    * payloads get an empty array (quarantine signal, consistent with the
-    * codecs' null-format contract). Same batched mapPartitions shape as
-    * [[decodeMeta]]: per-row imperative binary parsing is the one place
-    * [[Codec]]-style partition code beats an expression, and the payload
-    * column can be dropped immediately after so wide binaries don't cross
-    * shuffles.
-    */
-  def demuxFrames(df: DataFrame, payload: Column, k: Int,
-      out: String = "frames"): DataFrame = {
-    val in = df.withColumn("__graft_payload", payload)
-    val n = in.schema.size
-    val outSchema = StructType(df.schema.fields :+
-      StructField(out, ArrayType(BinaryType)))
-    in.mapPartitions { rows =>
-      rows.map { r =>
-        val frames = Mp4Codec.videoSamples(r.getAs[Array[Byte]](n - 1), k)
-        Row.fromSeq(r.toSeq.dropRight(1) :+ frames)
-      }
-    }(Encoders.row(outSchema))
   }
 
   /** 64-bit difference hash (dHash) over REAL decoded pixels: the image is
@@ -588,29 +168,13 @@ object Multimodal {
   /** Appends `out: bigint` — the [[dHash64]] perceptual hash of each
     * binary payload, null when the payload doesn't decode as an image
     * (the quarantine signal, consistent with the codecs' null-format
-    * contract). One per-row partition pass via the shared [[appendKernel]]
-    * plumbing (these kernels hold no cross-row codec state, so
-    * [[decodeMeta]]'s batch amortization buys nothing); drop the payload
-    * column right after so wide binaries don't cross the shuffles
-    * downstream dedup adds.
+    * contract). One per-row partition pass (the kernel holds no cross-row
+    * codec state, so [[decodeMeta]]'s batch amortization buys nothing);
+    * drop the payload column right after so wide binaries don't cross the
+    * shuffles downstream dedup adds.
     */
   def perceptualHash(df: DataFrame, payload: Column,
-      out: String = "phash"): DataFrame =
-    appendHash(df, payload, out) { b =>
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
-      if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-      else Some(dHash64(img))
-    }
-
-  /** Shared binary-kernel wrapper: appends one `out` column of `dt`
-    * computed per payload row, null for null payloads, kernel misses
-    * (None), or kernel throws — undecodable media is a QUARANTINE signal,
-    * never a task failure. THE one copy of the withColumn/schema-append/
-    * row-rebuild plumbing for every per-payload transform (hashers,
-    * resize, resample).
-    */
-  private def appendKernel(df: DataFrame, payload: Column, out: String,
-      dt: DataType)(kernel: Array[Byte] => Option[Any]): DataFrame = {
+      out: String = "phash"): DataFrame = {
     // a colliding output name would produce an ambiguous duplicate column;
     // a colliding staging name would REPLACE the caller's column in place
     // and make the kernel read the wrong bytes — guard both
@@ -620,22 +184,24 @@ object Multimodal {
       .find(c => !df.columns.contains(c)).get
     val in = df.withColumn(stage, payload)
     val n = in.schema.size
-    val outSchema = StructType(df.schema.fields :+ StructField(out, dt))
+    val outSchema = StructType(df.schema.fields :+ StructField(out, LongType))
     in.mapPartitions { rows =>
       rows.map { r =>
         val b = r.getAs[Array[Byte]](n - 1)
+        // null payloads, undecodable images and decoder throws all yield
+        // null: undecodable media is a quarantine signal, never a task
+        // failure
         val v: Any =
           if (b == null) null
-          else (try kernel(b) catch { case _: Exception => None }).orNull
+          else (try {
+            val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
+            if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
+            else Some(java.lang.Long.valueOf(dHash64(img)))
+          } catch { case _: Exception => None }).orNull
         Row.fromSeq(r.toSeq.dropRight(1) :+ v)
       }
     }(Encoders.row(outSchema))
   }
-
-  private def appendHash(df: DataFrame, payload: Column, out: String)(
-      kernel: Array[Byte] => Option[Long]): DataFrame =
-    appendKernel(df, payload, out, LongType)(
-      kernel(_).map(java.lang.Long.valueOf))
 
   /** Image near-dup pairs by perceptual hash: [[perceptualHash]] each
     * payload, then find id pairs whose dHashes differ in at most
@@ -649,50 +215,20 @@ object Multimodal {
     * (id_a, id_b, hamming), id_a < id_b, distinct.
     */
   def imageDedupPairs(df: DataFrame, id: Column, payload: Column,
-      maxHamming: Int = 3): DataFrame =
-    hammingPairs64(
-      perceptualHash(df.select(id.as("id"), payload.as("__p")), col("__p"))
-        .select(col("id"), col("phash").as("hash")),
-      maxHamming)
-
-  /** Audio near-dup pairs by energy-envelope hash: the audio sibling of
-    * [[imageDedupPairs]] over [[energyHash64]], same block-key machinery.
-    */
-  def audioDedupPairs(df: DataFrame, id: Column, payload: Column,
-      maxHamming: Int = 3): DataFrame =
-    hammingPairs64(
-      audioHash(df.select(id.as("id"), payload.as("__p")), col("__p"))
-        .select(col("id"), col("ahash").as("hash")),
-      maxHamming)
-
-  /** Shared hamming-radius self-join over 64-bit perceptual hashes —
-    * the [[Dedup.simHashPairs]] block-key shape: the 64 bits split into
-    * `maxHamming + 1` nearly-equal blocks, so any pair within the radius
-    * agrees on at least one whole block (pigeonhole — recall is EXACT,
-    * not probabilistic); candidates come from block-key equality joins on
-    * 8-byte keys and only they pay the `bit_count(xor)` verification.
-    * `hashed`: (id, hash), nulls already filtered. Output:
-    * (id_a, id_b, hamming), id_a < id_b, distinct.
-    */
-  private def hammingPairs64(hashed: DataFrame, maxHamming: Int): DataFrame =
-    hammingJoin64(hashed, hashed, maxHamming)
-      .filter(col("id_a") < col("id_b"))
-
-  /** Cross-table radius join: pairs (id_a ∈ a, id_b ∈ b) within
-    * `maxHamming` bits — also the batch-vs-admitted-state probe of the
-    * incremental dedup. Exact-recall block keys ([[blockKeyed]]).
-    */
-  private def hammingJoin64(a: DataFrame, b: DataFrame,
-      maxHamming: Int): DataFrame = {
-    val ka = blockKeyed(a, maxHamming).select(col("block"), col("key"),
+      maxHamming: Int = 3): DataFrame = {
+    val hashed = perceptualHash(
+        df.select(id.as("id"), payload.as("__p")), col("__p"))
+      .select(col("id"), col("phash").as("hash"))
+    val ka = blockKeyed(hashed, maxHamming).select(col("block"), col("key"),
       col("id").as("id_a"), col("hash").as("ha"))
-    val kb = blockKeyed(b, maxHamming).select(col("block"), col("key"),
+    val kb = blockKeyed(hashed, maxHamming).select(col("block"), col("key"),
       col("id").as("id_b"), col("hash").as("hb"))
     ka.join(kb, Seq("block", "key"))
       .select(col("id_a"), col("id_b"),
         bit_count(col("ha").bitwiseXOR(col("hb"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
+      .filter(col("id_a") < col("id_b"))
   }
 
   /** block b = bits [b*64/bands, (b+1)*64/bands) of the hash, tagged by
@@ -710,294 +246,5 @@ object Multimodal {
           val mask = if (hi - lo == 64) -1L else (1L << (hi - lo)) - 1
           shiftright(col("hash"), lo).bitwiseAND(lit(mask))
         }: _*)).as(Seq("block", "key")))
-  }
-
-  /** Empty admitted-hash state for [[imageDedupIncremental]]. */
-  def emptyPhashState(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType(Seq(StructField("id", LongType),
-        StructField("phash", LongType))))
-
-  /** Incremental image near-dup dedup for continuous ingestion — the
-    * multimodal sibling of [[Dedup.minHashIncremental]]: hash the batch
-    * ONCE (pinned — every later stage derives from the (id, phash) frame,
-    * never re-decoding pixels), collapse within-batch near-dup clusters
-    * to their minimum id via the adaptive components machinery, then drop
-    * any winner within `maxHamming` bits of an already-admitted hash.
-    * State is just (id, phash) — 16 bytes per admitted image, no pixels;
-    * per batch the work is O(batch) hashing plus block-key joins against
-    * a state that only ever ships 8-byte keys.
-    *
-    * Returns (survivors (id, phash), newState). At-least-once replay
-    * semantics follow the text version's contract: persist the returned
-    * state only after the sink commit.
-    */
-  def imageDedupIncremental(batch: DataFrame, state: DataFrame, id: Column,
-      payload: Column, maxHamming: Int = 3): (DataFrame, DataFrame) = {
-    val hb = perceptualHash(
-        batch.select(id.as("id"), payload.as("__p")), col("__p"))
-      .select(col("id"), col("phash"))
-      .filter(col("phash").isNotNull)
-      .localCheckpoint()
-    val pairs = hammingPairs64(
-      hb.select(col("id"), col("phash").as("hash")), maxHamming)
-    val losers = Dedup.components(pairs.select(col("id_a"), col("id_b")))
-      .filter(col("id") =!= col("component")).select(col("id"))
-    val winners = hb.join(losers, Seq("id"), "left_anti")
-    val dupOfState = hammingJoin64(
-        winners.select(col("id"), col("phash").as("hash")),
-        state.select(col("id"), col("phash").as("hash")), maxHamming)
-      .select(col("id_a").as("id")).distinct()
-    // pin the survivors: the state union references this subtree, and an
-    // unpinned plan would re-run the batch-vs-state probe join (the
-    // dominant per-batch cost after hashing) a second time when the new
-    // state first evaluates
-    val survivors = winners.join(dupOfState, Seq("id"), "left_anti")
-      .localCheckpoint()
-    (survivors, state.unionByName(survivors))
-  }
-
-  /** The ONE guarded RIFF walk behind [[energyHash64]] and
-    * [[resampleWav]]: locate the canonical 16-bit PCM payload. A Long
-    * cursor because a crafted/corrupt 32-bit chunk size would wrap an
-    * Int cursor negative (index crash) or stall it (infinite loop) —
-    * same hazard WavCodec.parse guards against; both consumers
-    * quarantine on None instead of hanging the task. Returns
-    * (channels, sampleRate, dataAt, dataLen).
-    */
-  private def parsePcm16(wav: Array[Byte]): Option[(Int, Int, Int, Long)] = {
-    def le16(i: Int): Int = (wav(i) & 0xff) | ((wav(i + 1) & 0xff) << 8)
-    def le32(i: Int): Long = (wav(i) & 0xffL) | ((wav(i + 1) & 0xffL) << 8) |
-      ((wav(i + 2) & 0xffL) << 16) | ((wav(i + 3) & 0xffL) << 24)
-    def tag(i: Int): String =
-      new String(wav.slice(i, i + 4), java.nio.charset.StandardCharsets.US_ASCII)
-    if (wav.length < 44 || tag(0) != "RIFF" || tag(8) != "WAVE") return None
-    var pos = 12L
-    var channels = 0
-    var bits = 0
-    var fmt = 0
-    var rate = 0L
-    var dataAt = -1
-    var dataLen = 0L
-    while (pos + 8 <= wav.length) {
-      val p = pos.toInt
-      val t = tag(p)
-      val sz = le32(p + 4)
-      if (t == "fmt " && pos + 24 <= wav.length) {
-        fmt = le16(p + 8)
-        channels = le16(p + 10)
-        rate = le32(p + 12)
-        bits = le16(p + 22)
-      } else if (t == "data") {
-        dataAt = p + 8
-        dataLen = math.min(sz, (wav.length - dataAt).toLong)
-      }
-      pos += 8L + sz + (sz & 1L) // chunks are word-aligned
-    }
-    if (fmt != 1 || bits != 16 || channels < 1 || rate <= 0L ||
-      rate > Int.MaxValue || dataAt < 0) None
-    else Some((channels, rate.toInt, dataAt, dataLen))
-  }
-
-  /** 64-bit energy-envelope hash (eHash) over REAL PCM samples: walk the
-    * RIFF chunks to the 16-bit PCM `data` payload, mono-mix, split the
-    * sample stream into 65 equal-duration windows, and set bit i when
-    * window i's mean square energy exceeds window i+1's — the temporal
-    * analogue of [[dHash64]]'s gradient signs. Windows are RELATIVE
-    * fractions of the duration, so the hash is sample-rate-invariant
-    * (a resampled copy partitions the same waveform the same way), and
-    * energy COMPARISONS are invariant under constant gain (both sides
-    * scale by the gain squared) — the two transformations innocent
-    * re-encodes actually apply. Non-PCM16 / malformed payloads yield
-    * None (quarantine). Mean comparisons cross-multiply in double
-    * (deterministic IEEE rounding), no division loss.
-    */
-  private[operators] def energyHash64(wav: Array[Byte]): Option[Long] = {
-    def le16(i: Int): Int = (wav(i) & 0xff) | ((wav(i + 1) & 0xff) << 8)
-    val (channels, _, dataAt, dataLen) = parsePcm16(wav) match {
-      case Some(p) => p
-      case None => return None
-    }
-    val frames = (dataLen / 2 / channels).toInt
-    if (frames < 130) return None // need >= 2 samples per window
-    // per-window sum of squared mono samples + window sample counts
-    val sums = new Array[Long](65)
-    val counts = new Array[Long](65)
-    var f = 0
-    while (f < frames) {
-      var acc = 0L
-      var c = 0
-      while (c < channels) {
-        val raw = le16(dataAt + (f * channels + c) * 2).toShort.toLong
-        acc += raw
-        c += 1
-      }
-      val mono = acc / channels
-      val w = (f.toLong * 65 / frames).toInt
-      sums(w) += mono * mono
-      counts(w) += 1
-      f += 1
-    }
-    var hash = 0L
-    var i = 0
-    while (i < 64) {
-      // mean(i) > mean(i+1) without division: cross-multiply in double
-      if (sums(i).toDouble * counts(i + 1) >
-          sums(i + 1).toDouble * counts(i)) hash |= 1L << i
-      i += 1
-    }
-    Some(hash)
-  }
-
-  /** 64-bit container-invariant video fingerprint: md5 over `k`
-    * evenly-spaced DEMUXED access units ([[Mp4Codec.videoSamples]] —
-    * byte slices of the track's own encoded samples), folded to a long.
-    * Re-muxing a video (new chunk layout, edited mvhd/tkhd metadata,
-    * different box order) rewrites the container but not the codec
-    * payload, so a remuxed re-upload fingerprints identically while a
-    * whole-file fingerprint sees a different blob — the video-modality
-    * exact-dup key, one rung below the image/audio perceptual hashes
-    * (re-ENCODED video would need codec-level decode the JVM lacks).
-    * None for non-MP4 / track-less payloads (quarantine).
-    */
-  private[operators] def videoFingerprint64(b: Array[Byte],
-      k: Int = 8): Option[Long] = {
-    val samples = try Mp4Codec.videoSamples(b, k) catch {
-      case _: Exception => Seq.empty
-    }
-    if (samples.isEmpty) None
-    else {
-      val md = MessageDigest.getInstance("MD5")
-      samples.foreach(md.update)
-      val d = md.digest()
-      var v = 0L
-      var i = 0
-      while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
-      Some(v)
-    }
-  }
-
-  /** Appends `out: bigint` — [[videoFingerprint64]] per payload, null for
-    * non-video (quarantine). Same partition shape as [[perceptualHash]];
-    * feed the result to [[Dedup.exact]]-style grouping for
-    * container-invariant video dedup.
-    */
-  def videoFingerprint(df: DataFrame, payload: Column, k: Int = 8,
-      out: String = "vfp"): DataFrame =
-    appendHash(df, payload, out)(videoFingerprint64(_, k))
-
-  /** Appends `out: bigint` — the [[energyHash64]] of each binary payload,
-    * null when it isn't decodable 16-bit PCM WAV. Same partition shape as
-    * [[perceptualHash]].
-    */
-  def audioHash(df: DataFrame, payload: Column,
-      out: String = "ahash"): DataFrame =
-    appendHash(df, payload, out)(energyHash64)
-
-  /** Deterministic nearest-sample PCM resample of one 16-bit WAV to
-    * `targetRate`, mono-mixed, re-encoded as a canonical mono WAV —
-    * the audio sibling of [[resizeImage]] and the fixed-input-shape step
-    * before audio embedding models: out[i] = in[i·srcRate/targetRate] in
-    * integer arithmetic, no filtering, bit-identical on every JVM.
-    * Locates the payload through the shared [[parsePcm16]] guarded RIFF
-    * walk; non-PCM16 payloads yield None.
-    */
-  private[operators] def resampleWav(b: Array[Byte],
-      targetRate: Int): Option[Array[Byte]] = {
-    def le16(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    val (channels, rate, dataAt, dataLen) = parsePcm16(b) match {
-      case Some(p) => p
-      case None => return None
-    }
-    val srcFrames = (dataLen / 2 / channels).toInt
-    if (srcFrames == 0) return None
-    def monoAt(f: Int): Int = {
-      var acc = 0L
-      var c = 0
-      while (c < channels) {
-        acc += le16(dataAt + (f * channels + c) * 2).toShort.toLong
-        c += 1
-      }
-      (acc / channels).toInt
-    }
-    // guard the Long→Int narrowing: a large upsample would wrap negative
-    // and silently emit a 1-frame "success" — quarantine instead (the cap
-    // bounds the output at ~200 MB of PCM, far past any sane normalization)
-    val outFramesL = srcFrames.toLong * targetRate / rate
-    if (outFramesL < 1 || outFramesL > 100000000L) return None
-    val outFrames = outFramesL.toInt
-    val out = new java.io.ByteArrayOutputStream()
-    val o = new java.io.DataOutputStream(out)
-    def w32(v: Int): Unit = {
-      o.write(v); o.write(v >> 8); o.write(v >> 16); o.write(v >> 24)
-    }
-    def w16(v: Int): Unit = { o.write(v); o.write(v >> 8) }
-    o.writeBytes("RIFF"); w32(36 + outFrames * 2); o.writeBytes("WAVE")
-    o.writeBytes("fmt "); w32(16); w16(1); w16(1); w32(targetRate)
-    w32(targetRate * 2); w16(2); w16(16)
-    o.writeBytes("data"); w32(outFrames * 2)
-    var i = 0
-    while (i < outFrames) {
-      val src = (i.toLong * rate / targetRate).toInt.min(srcFrames - 1)
-      w16(monoAt(src) & 0xffff)
-      i += 1
-    }
-    Some(out.toByteArray)
-  }
-
-  /** Appends `out: binary` — each WAV payload resampled to `targetRate`
-    * mono PCM16; null for non-PCM16 payloads (quarantine). Same per-row
-    * partition pass as [[resizeImages]].
-    */
-  def resampleAudio(df: DataFrame, payload: Column, targetRate: Int,
-      out: String = "resampled"): DataFrame = {
-    require(targetRate > 0, s"targetRate must be positive, got $targetRate")
-    appendKernel(df, payload, out, BinaryType)(resampleWav(_, targetRate))
-  }
-
-  /** Deterministic nearest-neighbor resize of one decoded image,
-    * re-encoded as PNG (lossless, JDK-only): target pixel (x, y) copies
-    * source pixel (x·sw/tw, y·sh/th) in integer arithmetic — no AWT
-    * rendering pipeline, no interpolation, so the result is bit-identical
-    * on every JVM (and for integer downscale factors each kept pixel is
-    * EXACTLY a source pixel, which the spec pins). None when the payload
-    * doesn't decode (quarantine).
-    */
-  private[operators] def resizeImage(b: Array[Byte], tw: Int,
-      th: Int): Option[Array[Byte]] = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
-    if (img == null || img.getWidth <= 0 || img.getHeight <= 0) None
-    else {
-      val sw = img.getWidth
-      val sh = img.getHeight
-      val outImg = new java.awt.image.BufferedImage(
-        tw, th, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      var y = 0
-      while (y < th) {
-        var x = 0
-        while (x < tw) {
-          outImg.setRGB(x, y, img.getRGB(x * sw / tw, y * sh / th) | 0xff000000)
-          x += 1
-        }
-        y += 1
-      }
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(outImg, "png", bos)
-      Some(bos.toByteArray)
-    }
-  }
-
-  /** Appends `out: binary` — each image payload resized to (tw, th) and
-    * re-encoded as PNG; null for undecodable payloads. The standard
-    * pre-embedding normalization step (models want fixed input shapes);
-    * same per-row partition pass as the hashers — drop the
-    * original payload right after so only the (usually much smaller)
-    * normalized bytes cross any downstream shuffle.
-    */
-  def resizeImages(df: DataFrame, payload: Column, tw: Int, th: Int,
-      out: String = "resized"): DataFrame = {
-    require(tw > 0 && th > 0, s"target dims must be positive, got ($tw, $th)")
-    appendKernel(df, payload, out, BinaryType)(resizeImage(_, tw, th))
   }
 }

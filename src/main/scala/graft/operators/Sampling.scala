@@ -35,41 +35,6 @@ object Sampling {
     df.filter(TextFunctions.hash32(key.cast("string")) < cut)
   }
 
-  /** Temperature-scaled mixture fractions for multi-source training data:
-    * stratum i is sampled with probability mass ∝ n_i^alpha, normalized so
-    * the expected total is `targetRows`. alpha = 1 keeps natural
-    * proportions, alpha → 0 flattens toward uniform — the standard
-    * multilingual/source rebalancing move. Fractions are capped at 1.0 (a
-    * stratum can't yield more rows than it has), which under-delivers the
-    * target when a small stratum is upweighted past its size.
-    */
-  def mixtureFractions(counts: Map[String, Long], alpha: Double,
-      targetRows: Long): Map[String, Double] = {
-    require(alpha >= 0, s"alpha must be >= 0, got $alpha")
-    require(targetRows >= 0, s"targetRows must be >= 0, got $targetRows")
-    val weights = counts.map { case (k, n) =>
-      k -> (if (n <= 0) 0.0 else math.pow(n.toDouble, alpha))
-    }
-    val z = weights.values.sum
-    counts.map { case (k, n) =>
-      k -> (if (n <= 0 || z == 0) 0.0
-            else math.min(1.0, targetRows * weights(k) / z / n))
-    }
-  }
-
-  /** One-call temperature sampling: count strata (one aggregate; stratum
-    * cardinality is small by definition), derive [[mixtureFractions]], apply
-    * [[stratifiedHashSample]] — deterministic membership, map-only pass over
-    * the data.
-    */
-  def temperatureSample(df: DataFrame, stratum: Column, key: Column,
-      alpha: Double, targetRows: Long): DataFrame = {
-    val counts = df.groupBy(stratum.cast("string").as("__s")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    stratifiedHashSample(df, stratum.cast("string"), key,
-      mixtureFractions(counts, alpha, targetRows))
-  }
-
   /** Deterministic FIXED-SIZE sample per stratum (class balancing: exactly
     * `n` rows per class, or all of a class smaller than `n`): the n rows
     * with the smallest md5-derived rank of `id` per stratum, ties toward the
@@ -360,7 +325,7 @@ object Sampling {
     * standard single-epoch mixture behavior.
     *
     * Scale shape: one small aggregate (rows = #domains — collected to the
-    * driver like [[temperatureSample]]'s counts) to learn per-domain token
+    * driver) to learn per-domain token
     * totals, then a map-only filter with the thresholds folded in as
     * literals. No join, no second shuffle.
     */

@@ -3,28 +3,20 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Trainable text classifier — the classifier-based curation stage of a
+/** Linear text classifier — the classifier-based curation stage of a
   * training-data pipeline (language ID backing the n-gram heuristic in
   * [[graft.functions.TextFunctions.langId]], quality scoring against
   * labeled exemplars, topic/domain routing): hashed character-n-gram
-  * features into multinomial logistic regression (public fastText-style
-  * recipe: bag of hashed n-grams + linear model).
+  * counts scored by a PINNED integer-quantized linear model (public
+  * fastText-style recipe: bag of hashed n-grams + linear model).
   *
-  * Scale shape: featurization is MAP-ONLY (the n-gram expression is a
-  * codegen'd substring transform; hashing TF needs no vocabulary pass, so
-  * there is no fit/transform round trip over the corpus — the feature
-  * space is fixed by `dims`). Training is MLlib's distributed L-BFGS over
-  * the hashed vectors; the learned model is (numClasses × dims) doubles —
-  * driver-sized, broadcast for scoring. Scoring is again map-only. The
-  * label index is label-space-sized (a handful of rows), collected like a
-  * centroid table.
-  *
-  * Determinism: MLlib's L-BFGS logistic regression is deterministic
-  * without a seed (no sampling anywhere in the objective), feature hashing
-  * is fixed, and labels are indexed in sorted order — same model on any
-  * cluster layout. Not SQL-replayable
-  * (iterative optimization), so gates are spec-level, like the other
-  * trained operators ([[Similarity.trainCentroids]], [[Bpe.trainBpe]]).
+  * Training runs offline ([[graft.tools.TrainArtifacts]], MLlib logistic
+  * regression over the same featurization) and ships the weights as
+  * literals, so the apply path is exact integer arithmetic a SQL oracle
+  * replays. Scale shape: featurization is MAP-ONLY (a codegen'd gram
+  * kernel; hashing needs no vocabulary pass, the feature space is fixed
+  * by `dims`), the weight table is (classes × dims) rows and broadcasts,
+  * and scoring is partial-first aggregation on 8-byte keys.
   */
 object TextClassifier {
 
@@ -40,50 +32,11 @@ object TextClassifier {
     when(length(c) < n, array(c))
       .otherwise(org.apache.spark.sql.graft.TextStats.charNgrams(c, n))
 
-  /** A trained classifier: the MLlib model plus the sorted label
-    * vocabulary its numeric classes map back to, and the featurization
-    * parameters scoring must reuse.
-    */
-  final case class Model(
-      lr: org.apache.spark.ml.classification.LogisticRegressionModel,
-      labels: Seq[String], n: Int, dims: Int)
-
-  private def featurize(df: DataFrame, text: Column, n: Int, dims: Int)
-      : DataFrame = {
-    val tf = new org.apache.spark.ml.feature.HashingTF()
-      .setInputCol("__terms").setOutputCol("features").setNumFeatures(dims)
-    tf.transform(df.withColumn("__terms", charNgrams(text, n)))
-      .drop("__terms")
-  }
-
-  /** Trains on `(text, label)` rows. `dims` is the hashed feature space
-    * (2¹⁵ default — collisions are the accepted trade of vocabulary-free
-    * featurization); `n` the character-gram width (3 suits language ID).
-    */
-  def train(df: DataFrame, text: Column, label: Column, n: Int = 3,
-      dims: Int = 1 << 15, maxIter: Int = 50): Model = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val labels = df.select(label.cast("string").as("l")).distinct()
-      .as[String].collect().sorted.toSeq // label-space-sized, like centroids
-    val idx = labels.zipWithIndex.map { case (l, i) => (l, i.toDouble) }
-      .toDF("__label", "label")
-    val prepared = featurize(
-      df.select(text.as("__text"), label.cast("string").as("__label")),
-      col("__text"), n, dims)
-      .join(broadcast(idx), Seq("__label"))
-    val lr = new org.apache.spark.ml.classification.LogisticRegression()
-      .setFamily("multinomial").setMaxIter(maxIter).setRegParam(1e-4)
-      .setLabelCol("label").setFeaturesCol("features")
-    Model(lr.fit(prepared.select(col("label"), col("features"))), labels, n, dims)
-  }
-
   /** md5 bucket of a character n-gram — `hash32(gram) mod dims`: the
     * vocabulary-free featurization BOTH the pinned-weight apply path and
     * a SQL oracle can replay bit-for-bit (MLlib HashingTF's murmur3
-    * cannot be reproduced in DuckDB, which is why [[classifyLinearPinned]]
-    * does not share [[train]]'s featurizer — [[graft.tools.TrainArtifacts]]
-    * trains on THIS hashing so the pinned weights match the apply path).
+    * cannot be reproduced in DuckDB, so [[graft.tools.TrainArtifacts]]
+    * trains on THIS hashing and the pinned weights match the apply path).
     */
   def hashedGramDim(gram: Column, dims: Int): Column =
     graft.functions.TextFunctions.hash32(gram) % dims
@@ -214,19 +167,5 @@ object TextClassifier {
       .join(biases, Seq("label", "tie"))
       .select(col("id"), col("label"), col("tie"),
         (col("__s0") + col("biasq")).as("scoreq"))
-  }
-
-  /** Scores `text`, appending `out` (predicted label string). Map-only:
-    * model coefficients broadcast inside MLlib's transform.
-    */
-  def classify(df: DataFrame, model: Model, text: Column,
-      out: String = "pred"): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val back = broadcast(model.labels.zipWithIndex
-      .map { case (l, i) => (i.toDouble, l) }.toDF("prediction", out))
-    model.lr.transform(featurize(df, text, model.n, model.dims))
-      .join(back, Seq("prediction"))
-      .drop("features", "rawPrediction", "probability", "prediction")
   }
 }

@@ -48,24 +48,13 @@ object TextIndex {
     */
   def postingsIncremental(statePostings: DataFrame, batch: DataFrame,
       id: Column, text: Column): DataFrame =
-    postingsIncrementalFrom(statePostings,
-      batch.select(id.as("doc_id")),
-      postings(batch, id, text))
-
-  /** [[postingsIncremental]] with the batch's pieces precomputed — the
-    * form streaming ingestion uses so the batch is tokenized exactly once
-    * (the delta is already pinned there). `batchIds` MUST come from the
-    * raw batch frame, not from `batchPostings`: a re-ingested document
-    * whose new text is EMPTY has no posting rows, but its stale state
-    * postings still have to go — deriving the replace-key set from the
-    * postings would silently keep them.
-    */
-  def postingsIncrementalFrom(statePostings: DataFrame, batchIds: DataFrame,
-      batchPostings: DataFrame): DataFrame =
     statePostings
-      .join(broadcast(batchIds.select(col("doc_id")).distinct()),
+      // the replace-key set comes from the raw batch, not its postings: a
+      // re-ingested document whose new text is EMPTY has no posting rows,
+      // but its stale state postings still have to go
+      .join(broadcast(batch.select(id.as("doc_id")).distinct()),
         Seq("doc_id"), "left_anti")
-      .unionByName(batchPostings)
+      .unionByName(postings(batch, id, text))
 
   /** Manifest of a persisted posting index: row/doc counts, the BM25
     * corpus size N the serve path needs (ALL docs, including blank ones
@@ -1003,8 +992,7 @@ object TextIndex {
     * the index's distinct doc ids — zero-token docs have no posting rows
     * but still belong in N, so an index-derived count would shift every
     * idf when blank docs exist; maintain the doc count alongside the
-    * index (the [[graft.streaming.Streams.IndexIngest]] batch sizes sum
-    * to exactly it).
+    * index (the folded batches' row counts sum to exactly it).
     */
   def bm25TopKFromPostings(p: DataFrame, corpusSize: DataFrame,
       queryTerms: DataFrame, k: Int,
@@ -1644,8 +1632,8 @@ object TextIndex {
     import org.apache.spark.sql.expressions.Window
     // the NTILE sorts an IDS-ONLY projection — ranking (id, text) rows
     // directly would funnel the corpus text through the window's single
-    // reducer (the Layout.zorder anti-pattern); buckets ride back to the
-    // text via an 8-byte equi-join
+    // reducer (the shape Layout.curriculumShards avoids); buckets ride
+    // back to the text via an 8-byte equi-join
     val idBuckets = df.select(id.as("id"))
       .withColumn("bucket", ntile(buckets).over(Window.orderBy(col("id"))))
     growthCurve(df.select(id.as("id"), text.as("__text"))

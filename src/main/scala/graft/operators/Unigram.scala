@@ -237,52 +237,6 @@ object Unigram {
     (cnt(n), best(n))
   }
 
-  /** The Viterbi segmentation itself (pieces, for consumers that emit
-    * tokens): same DP as [[segmentCost]] with backpointers; UNK code
-    * points surface as themselves.
-    */
-  def segment(word: String, costs: Map[String, Long],
-      maxPieceLen: Int): Seq[String] = {
-    val cps = codePoints(word)
-    val n = cps.length
-    val INF = Long.MaxValue
-    val best = Array.fill(n + 1)(INF)
-    val cnt = Array.fill(n + 1)(Int.MaxValue)
-    val from = Array.fill(n + 1)(-1)
-    best(0) = 0
-    cnt(0) = 0
-    def relax(i: Int, j: Int, c: Long, k: Int): Unit =
-      if (c < best(j) || (c == best(j) && k < cnt(j))) {
-        best(j) = c; cnt(j) = k; from(j) = i
-      }
-    var i = 0
-    while (i < n) {
-      if (best(i) < INF) {
-        var matched1 = false
-        var l = 1
-        while (l <= maxPieceLen && i + l <= n) {
-          costs.get(cps.slice(i, i + l).mkString).foreach { c =>
-            if (l == 1) matched1 = true
-            relax(i, i + l, best(i) + c, cnt(i) + 1)
-          }
-          l += 1
-        }
-        if (!matched1) relax(i, i + 1, best(i) + UnkCost, cnt(i) + 1)
-      }
-      i += 1
-    }
-    val out = List.newBuilder[String]
-    var j = n
-    val rev = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (j > 0) {
-      val f = from(j)
-      rev += cps.slice(f, j).mkString
-      j = f
-    }
-    out ++= rev.reverse
-    out.result()
-  }
-
   private def maxLenOf(costs: Seq[(String, Long)]): Int = {
     require(costs.nonEmpty,
       "empty piece table — train one first (trainUnigram over a non-empty dictionary)")

@@ -264,7 +264,7 @@ trait PipelineTokenizerFam extends PipelineTextStatsFam {
   // ----------------------------------------------------------- z-order layout
 
   /** Z-order (Morton) clustering key over (o_custkey, o_orderkey): the
-    * write-layout primitive behind [[graft.operators.Layout.zorder]] —
+    * write-layout key [[graft.operators.Layout.zOrderKey]] —
     * sorting by this key packs each output file into a compact rectangle of
     * the two-column space so min/max stats prune scans on either column.
     * The oracle recomputes the 31-bit interleave with per-bit shifts.

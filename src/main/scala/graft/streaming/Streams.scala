@@ -22,259 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object Streams {
 
-  /** Stream → message-log sink: each micro-batch pushes through the same
-    * transactional t_kf_push operator the batch path uses (per-partition
-    * atomic append, abort on failure), so the streaming write inherits the
-    * connector's delivery contract — at-least-once across batch retries,
-    * no partial partitions within a batch. This is the reference's
-    * "stream to Kafka" leg (process pulls a window, pushes results) as a
-    * foreachBatch sink; against a real broker swap the store for the Kafka
-    * writer with the same columns.
-    */
-  def logSink(df: DataFrame, store: graft.connectors.TopicStore.Factory,
-      topic: Column, ct: Column, key: Column, value: Column)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      graft.connectors.KafkaWindow
-        .pushTransactional(batch, store, topic, ct, key, value).count()
-      ()
-    }
-
-  /** Continuous near-duplicate ingestion: every micro-batch runs through
-    * [[graft.operators.Dedup.minHashIncremental]] against state carried
-    * across batches, and only survivors reach `onSurvivors`. The state
-    * (band + posting tables — no text) is pinned per batch with a
-    * localCheckpoint so its lineage doesn't grow with stream length; a
-    * production deployment would instead write both tables to storage each
-    * batch (they are plain DataFrames) and reload on restart, which also
-    * makes the state transactional with the sink.
-    *
-    * Retry safety (foreachBatch is at-least-once, state update is NOT
-    * transactional with the sink): the handler records the last APPLIED
-    * batchId and the pinned survivor set, so a replayed batch
-    * (`batchId <= lastApplied`) re-emits the recorded survivors WITHOUT
-    * touching state — without this, replayed docs already sitting in
-    * state.bands/postings would self-match at Jaccard 1.0 and be silently
-    * dropped. This covers within-run sink retries; across a RESTART,
-    * persist the state with [[graft.operators.Dedup.NearDupState.save]]
-    * from `onSurvivors` AFTER the sink commit (state then never runs ahead
-    * of the sink, and a post-restart replay re-admits the batch against
-    * pre-batch state — duplicate-emitting, never survivor-dropping).
-    *
-    * Returns the writer; caller starts it with its own checkpoint/output
-    * options.
-    */
-  def nearDupIngest(stream: DataFrame, id: Column, text: Column,
-      state0: graft.operators.Dedup.NearDupState,
-      onSurvivors: (DataFrame, Long) => Unit,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
-      threshold: Double = 0.8)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch(
-      nearDupBatchHandler(state0, onSurvivors, id, text, shingleK, numHashes,
-        bands, threshold))
-
-  /** The idempotent per-batch handler behind [[nearDupIngest]], exposed so
-    * batch-mode tests (and custom sinks) can drive it directly. Survivors
-    * are pinned with a localCheckpoint before emission — a replay must
-    * re-emit the EXACT rows of the original run, and an unpinned plan would
-    * recompute against the already-mutated state.
-    *
-    * LIFETIME: the emitted survivors frame is valid only until the NEXT
-    * batch is applied — superseded pins are freed then (storage must not
-    * grow O(batches)), and a localCheckpoint has no lineage to recompute
-    * from. `onSurvivors` must fully consume (collect/write) the frame
-    * before returning control to the stream; the same holds for
-    * [[semanticIngest]]/[[imageIngest]] survivors and
-    * [[IndexIngest.onDelta]] deltas.
-    */
-  def nearDupBatchHandler(state0: graft.operators.Dedup.NearDupState,
-      onSurvivors: (DataFrame, Long) => Unit,
-      id: Column, text: Column,
-      shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
-      threshold: Double = 0.8): (DataFrame, Long) => Unit =
-    new NearDupIngest(state0, onSurvivors, id, text, shingleK, numHashes,
-      bands, threshold).handler
-
-  /** Class form of [[nearDupBatchHandler]] (the [[IndexIngest]] shape):
-    * exposes the maintained state so callers can checkpoint it at
-    * shutdown and tests can assert superseded pins are freed. `current`
-    * has the same lifetime contract as [[IndexIngest.current]] — a
-    * snapshot is invalidated by the next applied batch.
-    */
-  final class NearDupIngest(state0: graft.operators.Dedup.NearDupState,
-      onSurvivors: (DataFrame, Long) => Unit,
-      id: Column, text: Column,
-      shingleK: Int, numHashes: Int, bands: Int, threshold: Double) {
-    // mutable cells, touched only by the single-threaded batch callback
-    private var state = state0
-    private var lastApplied = -1L
-    private var lastSurvivors: DataFrame = null
-    private var ownsState = false // state0 belongs to the caller — never unpin it
-
-    /** The admitted-corpus state after every applied batch. */
-    def current: graft.operators.Dedup.NearDupState = state
-
-    val handler: (DataFrame, Long) => Unit =
-      (batch: DataFrame, batchId: Long) => {
-        if (batchId <= lastApplied) {
-          // at-least-once replay after the state union already ran: re-emit
-          // the recorded survivors, do NOT re-apply the batch to state.
-          // Structured Streaming only ever retries the LATEST batch; anything
-          // older would re-emit the wrong set, so it is a guarded no-op.
-          if (batchId == lastApplied && lastSurvivors != null)
-            onSurvivors(lastSurvivors, batchId)
-        } else {
-          val (survivors, next) = graft.operators.Dedup.minHashIncremental(
-            batch, id, text, state, shingleK, numHashes, bands, threshold)
-          val pinned = survivors.localCheckpoint(true)
-          onSurvivors(pinned, batchId)
-          val nextState = graft.operators.Dedup.NearDupState(
-            next.bands.localCheckpoint(true),
-            next.postings.localCheckpoint(true))
-          // the new pins are eager — the superseded state and the previous
-          // batch's survivors can never be read again (replays only target
-          // the LATEST batch), so free their blocks or executor storage
-          // grows O(batches × state size) on a long-running stream
-          if (ownsState) { Bridge.unpin(state.bands); Bridge.unpin(state.postings) }
-          if (lastSurvivors != null) Bridge.unpin(lastSurvivors)
-          state = nextState
-          ownsState = true
-          lastApplied = batchId
-          lastSurvivors = pinned
-        }
-        ()
-      }
-  }
-
-  /** Streaming SemDeDup ingestion: foreachBatch over
-    * [[graft.operators.Dedup.semanticDedupIncremental]] — each micro-batch
-    * is cluster-assigned against the (broadcast) quantizer, pruned within
-    * itself and against the admitted state, survivors emitted and unioned
-    * into state. Same at-least-once idempotency contract as
-    * [[nearDupIngest]]: a replay of the last applied batch re-emits the
-    * pinned survivors without touching state (an unguarded replay would
-    * self-match at cosine 1.0 and silently drop everything).
-    */
-  def semanticIngest(stream: DataFrame, id: Column, vec: Column,
-      centroids: DataFrame, state0: DataFrame,
-      onSurvivors: (DataFrame, Long) => Unit, threshold: Double)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch(
-      semanticBatchHandler(state0, onSurvivors, id, vec, centroids, threshold))
-
-  /** The idempotent per-batch handler behind [[semanticIngest]], exposed
-    * for batch-mode tests and custom sinks (mirror of
-    * [[nearDupBatchHandler]]). State and survivors are localCheckpoint-
-    * pinned: state is replay-proof and survivor re-emission is exact.
-    */
-  def semanticBatchHandler(state0: DataFrame,
-      onSurvivors: (DataFrame, Long) => Unit,
-      id: Column, vec: Column, centroids: DataFrame,
-      threshold: Double): (DataFrame, Long) => Unit =
-    new SemanticIngest(state0, onSurvivors, id, vec, centroids, threshold)
-      .handler
-
-  /** Class form of [[semanticBatchHandler]] — same `current` lifetime
-    * contract as [[NearDupIngest]]. */
-  final class SemanticIngest(state0: DataFrame,
-      onSurvivors: (DataFrame, Long) => Unit,
-      id: Column, vec: Column, centroids: DataFrame, threshold: Double) {
-    private var state = state0
-    private var lastApplied = -1L
-    private var lastSurvivors: DataFrame = null
-    private var ownsState = false // state0 belongs to the caller — never unpin it
-
-    /** The admitted (id, cid, v) state after every applied batch. */
-    def current: DataFrame = state
-
-    val handler: (DataFrame, Long) => Unit =
-      (batch: DataFrame, batchId: Long) => {
-        if (batchId <= lastApplied) {
-          if (batchId == lastApplied && lastSurvivors != null)
-            onSurvivors(lastSurvivors, batchId)
-        } else {
-          val (admitted, next) = graft.operators.Dedup.semanticDedupIncremental(
-            batch, id, vec, centroids, state, threshold)
-          val pinned = admitted.localCheckpoint(true)
-          onSurvivors(pinned, batchId)
-          val nextState = next.localCheckpoint(true)
-          // free superseded pins (see NearDupIngest) — replays only
-          // ever target the latest batch
-          if (ownsState) Bridge.unpin(state)
-          if (lastSurvivors != null) Bridge.unpin(lastSurvivors)
-          state = nextState
-          ownsState = true
-          lastApplied = batchId
-          lastSurvivors = pinned
-        }
-        ()
-      }
-  }
-
-  /** Streaming image-near-dup ingestion: foreachBatch over
-    * [[graft.operators.Multimodal.imageDedupIncremental]] — each
-    * micro-batch of binary payloads is perceptually hashed once, collapsed
-    * within itself, probed against the admitted-hash state, survivors
-    * emitted and unioned into state (16 B per admitted image, no pixels).
-    * Same at-least-once idempotency contract as [[nearDupIngest]].
-    */
-  def imageIngest(stream: DataFrame, id: Column, payload: Column,
-      state0: DataFrame, onSurvivors: (DataFrame, Long) => Unit,
-      maxHamming: Int = 3)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    stream.writeStream.foreachBatch(
-      imageBatchHandler(state0, onSurvivors, id, payload, maxHamming))
-
-  /** The idempotent per-batch handler behind [[imageIngest]], exposed for
-    * batch-mode tests and custom sinks (mirror of [[nearDupBatchHandler]]).
-    */
-  def imageBatchHandler(state0: DataFrame,
-      onSurvivors: (DataFrame, Long) => Unit,
-      id: Column, payload: Column,
-      maxHamming: Int = 3): (DataFrame, Long) => Unit =
-    new ImageIngest(state0, onSurvivors, id, payload, maxHamming).handler
-
-  /** Class form of [[imageBatchHandler]] — same `current` lifetime
-    * contract as [[NearDupIngest]]. */
-  final class ImageIngest(state0: DataFrame,
-      onSurvivors: (DataFrame, Long) => Unit,
-      id: Column, payload: Column, maxHamming: Int) {
-    private var state = state0
-    private var lastApplied = -1L
-    private var lastSurvivors: DataFrame = null
-    private var ownsState = false // state0 belongs to the caller — never unpin it
-
-    /** The admitted (id, phash) state after every applied batch. */
-    def current: DataFrame = state
-
-    val handler: (DataFrame, Long) => Unit =
-      (batch: DataFrame, batchId: Long) => {
-        if (batchId <= lastApplied) {
-          if (batchId == lastApplied && lastSurvivors != null)
-            onSurvivors(lastSurvivors, batchId)
-        } else {
-          val (admitted, next) = graft.operators.Multimodal
-            .imageDedupIncremental(batch, state, id, payload, maxHamming)
-          val pinned = admitted.localCheckpoint(true)
-          onSurvivors(pinned, batchId)
-          val nextState = next.localCheckpoint(true)
-          // free superseded pins (see NearDupIngest) — replays only
-          // ever target the latest batch
-          if (ownsState) Bridge.unpin(state)
-          if (lastSurvivors != null) Bridge.unpin(lastSurvivors)
-          state = nextState
-          ownsState = true
-          lastApplied = batchId
-          lastSurvivors = pinned
-        }
-        ()
-      }
-  }
-
-  /** The shared scaffold of every fold-shaped ingest (index, LM counts,
-    * novelty admission, preference counts): per micro-batch, derive a
-    * pinned DELTA from (state, batch), emit it to `onDelta`, then FOLD it
+  /** The one ingest scaffold (token counts, novelty admission, preference
+    * and DPO counts): per micro-batch, derive a pinned DELTA from
+    * (state, batch), emit it to `onDelta`, then FOLD it
     * into the next state (a throwing `onDelta` leaves no fold behind), free
     * the superseded state and delta pins (replays only ever target the
     * latest batch — holding older pins grows executor storage
@@ -283,8 +33,7 @@ object Streams {
     * replay guard is LOAD-BEARING for additive folds (a re-fold
     * double-counts) and a free tokenization saver for idempotent
     * replace folds. One definition so a fix to the guard or the pin
-    * ordering lands everywhere at once — this scaffold had been copied
-    * per ingest and the copies were already drifting.
+    * ordering lands everywhere at once.
     *
     * `current` snapshots are INVALIDATED by the next applied batch (pins
     * freed; a localCheckpoint has no lineage fallback) — collect under
@@ -319,9 +68,9 @@ object Streams {
             onDelta(lastDelta, batchId)
         } else {
           val delta = mkDelta(state, batch).localCheckpoint(true)
-          // emit BEFORE folding, as the survivor ingests do: a throwing
-          // consumer leaves state, lastApplied and the pins as they were,
-          // so the retry of this batchId folds it exactly once
+          // emit BEFORE folding: a throwing consumer leaves state,
+          // lastApplied and the pins as they were, so the retry of this
+          // batchId folds it exactly once
           try onDelta(delta, batchId)
           catch { case e: Throwable => Bridge.unpin(delta); throw e }
           val next = fold(state, batch, delta).localCheckpoint(true)
@@ -340,50 +89,6 @@ object Streams {
       stream.writeStream.foreachBatch(handler)
   }
 
-  /** Streaming inverted-index maintenance: each micro-batch folds into the
-    * posting table via [[graft.operators.TextIndex.postingsIncremental]]
-    * (batch docs REPLACE their state postings — a re-ingested document
-    * changed; everything else carries over), the batch's own postings are
-    * emitted as the delta, and `current` always exposes the up-to-date
-    * index. The fold keys the replacement on the raw batch ids — a doc
-    * re-ingested with empty text has no delta rows, yet its stale state
-    * postings must still be dropped — and reuses the already-pinned delta
-    * so each batch tokenizes once.
-    */
-  final class IndexIngest(state0: DataFrame, id: Column, text: Column)
-      extends FoldIngest(state0) {
-    override protected def mkDelta(state: DataFrame,
-        batch: DataFrame): DataFrame =
-      graft.operators.TextIndex.postings(batch, id, text)
-    override protected def fold(state: DataFrame, batch: DataFrame,
-        delta: DataFrame): DataFrame =
-      graft.operators.TextIndex.postingsIncrementalFrom(
-        state, batch.select(id.as("doc_id")), delta)
-  }
-
-  /** Streaming bigram-LM maintenance: each micro-batch's counts
-    * ([[graft.operators.TextIndex.bigramLmCounts]]) fold ADDITIVELY into
-    * the model via [[graft.operators.TextIndex.foldLmCounts]];
-    * `current` always exposes the up-to-date count table, ready for
-    * [[graft.operators.TextIndex.lmScoreAgainst]] — the
-    * screen-while-you-ingest composition. One structural difference from
-    * [[IndexIngest]]: the fold is additive, NOT replace-keyed, so the
-    * batchId replay guard is LOAD-BEARING — an unguarded re-fold of a
-    * retried batch would double-count it (replace semantics merely waste
-    * work). Same pin lifecycle: superseded state and delta pins freed
-    * every batch, keeping executor storage at O(model), not
-    * O(batches × model).
-    */
-  final class LmIngest(state0: DataFrame, text: Column)
-      extends FoldIngest(state0) {
-    override protected def mkDelta(state: DataFrame,
-        batch: DataFrame): DataFrame =
-      graft.operators.TextIndex.bigramLmCounts(batch, text)
-    override protected def fold(state: DataFrame, batch: DataFrame,
-        delta: DataFrame): DataFrame =
-      graft.operators.TextIndex.foldLmCounts(state, delta)
-  }
-
   /** Streaming token-unigram-count maintenance: each micro-batch's
     * [[graft.operators.TextIndex.tokenFpCounts]] fold ADDITIVELY into the
     * (fp, c) count table via
@@ -391,9 +96,9 @@ object Streams {
     * ready for
     * [[graft.operators.TextIndex.corpusDivergenceFromCounts]] — the
     * drift-monitor-while-you-ingest composition (watch a live corpus's
-    * token distribution walk away from a frozen reference). Additive like
-    * [[LmIngest]], so the batchId replay guard is LOAD-BEARING: an
-    * unguarded re-fold double-counts the batch. Same pin lifecycle.
+    * token distribution walk away from a frozen reference). The fold is
+    * additive, so the batchId replay guard is LOAD-BEARING: an unguarded
+    * re-fold double-counts the batch. Same pin lifecycle.
     */
   final class TokenCountIngest(state0: DataFrame, text: Column)
       extends FoldIngest(state0) {
@@ -449,7 +154,7 @@ object Streams {
     * [[graft.operators.Dedup.noveltyScoresAgainstFps]] against the
     * DISTINCT shingle fingerprints of everything admitted so far, docs
     * with novelty ≥ `minNovelty` are admitted (delivered via
-    * `onSurvivors`), and the admitted docs' fingerprints fold into the
+    * `onDelta`), and the admitted docs' fingerprints fold into the
     * state — the content-overlap crawl gate ("only keep pages that add
     * ≥ 30% new n-grams"), one rung coarser than near-dup admission
     * (which pairs documents; this thresholds aggregate overlap with the
@@ -461,11 +166,10 @@ object Streams {
     * operator inside the handler first if intra-batch screening
     * matters). Replay-idempotent: a redelivered batch re-emits its
     * recorded survivors without re-folding. State is the admitted
-    * corpus's distinct (sfp) longs — O(corpus shingles), the
-    * [[IndexIngest]] state class — and superseded pins are freed per
-    * batch so executor storage stays O(state), not O(batches × state).
-    * Survivors must be fully consumed before the next batch is applied
-    * (the localCheckpoint truncation contract of the other handlers).
+    * corpus's distinct (sfp) longs — O(corpus shingles) — and superseded
+    * pins are freed per batch so executor storage stays O(state), not
+    * O(batches × state). Survivors must be fully consumed before the next
+    * batch is applied (the scaffold's localCheckpoint truncation contract).
     */
   final class NoveltyIngest(state0: DataFrame, id: Column, text: Column,
       minNovelty: Double, shingleK: Int = 3) extends FoldIngest(state0) {
@@ -492,10 +196,6 @@ object Streams {
         .unionByName(graft.operators.Dedup.corpusShingleFps(
           delta, text, shingleK))
         .distinct()
-
-    /** Domain alias for [[onDelta]]: admitted-docs consumers. */
-    def onSurvivors: (DataFrame, Long) => Unit = onDelta
-    def onSurvivors_=(f: (DataFrame, Long) => Unit): Unit = { onDelta = f }
   }
 
   /** Streaming companion of
@@ -694,36 +394,12 @@ object Streams {
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_turns"), col("transcript"))
 
-  /** Cross-batch exact dedup on a key column: keyed boolean state remembers
-    * seen keys, first arrival wins, later duplicates (same or later
-    * micro-batch) are dropped. State grows with distinct keys — bound it
-    * with content-hash keys (16 bytes/doc) and state-store TTL in
-    * production. Update output mode.
-    */
-  def dedupByKey(df: DataFrame, key: Column): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = df.schema
-    implicit val rowEnc = Encoders.row(schema)
-    implicit val tupEnc = Encoders.tuple(Encoders.STRING, rowEnc)
-    val keyed = df.withColumn("__graft_key", key.cast("string"))
-      .map(r => (r.getString(schema.size), Row.fromSeq(r.toSeq.dropRight(1))))(tupEnc)
-      .groupByKey(_._1)(Encoders.STRING)
-    keyed.flatMapGroupsWithState[Boolean, Row](
-      OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-      (_: String, rows: Iterator[(String, Row)], state: GroupState[Boolean]) =>
-        if (state.exists) Iterator.empty
-        else { state.update(true); rows.take(1).map(_._2) }
-    }(Encoders.scalaBoolean, rowEnc)
-  }
-
   /** Watermark-bounded streaming dedup: the built-in
     * `dropDuplicatesWithinWatermark` — duplicates arriving within the
     * watermark horizon of the first occurrence are dropped, and the keyed
     * state EXPIRES with the watermark, so memory is bounded by horizon ×
-    * arrival rate instead of growing with distinct keys forever
-    * ([[dedupByKey]] is the exact-forever variant; this is the production
-    * default at 100 TB/day ingest).
+    * arrival rate instead of growing with distinct keys forever (the
+    * production default at 100 TB/day ingest).
     */
   def dedupWithinWatermark(df: DataFrame, keys: Seq[String],
       eventTime: String, delay: String): DataFrame =
@@ -773,7 +449,7 @@ object Streams {
     * batch operator run over the same ballots (StreamsSpec asserts the
     * fold ≡ batch multiset).
     *
-    * Same contracts as the other ingest handlers: replay-idempotent (a
+    * Same contracts as every [[FoldIngest]]: replay-idempotent (a
     * redelivered last batch does not double-count), state pinned via
     * localCheckpoint with superseded pins freed per batch (storage stays
     * O(items), not O(batches × items)), and `current` snapshots are
@@ -804,7 +480,7 @@ object Streams {
     * counts; after any prefix of batches it equals the batch operator
     * over the same ballots. Additive fold ⇒ the scaffold's batchId
     * replay guard is LOAD-BEARING (a re-fold double-counts), same as
-    * [[LmIngest]].
+    * [[TokenCountIngest]].
     */
   final class DpoIngest(state0: DataFrame, prompt: Column, winner: Column,
       loser: Column) extends FoldIngest(state0) {

@@ -107,4 +107,24 @@ class RunnerMainSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(out)),
       "the INSERT after the failed statement must not run")
   }
+
+  test("a .scala script that does not compile journals FAILED with the " +
+      "ToolBoxError, and the tick's .sql script still succeeds") {
+    val dir = Files.createTempDirectory("graft-runner-nocompile").toString
+    Files.writeString(Paths.get(s"$dir/bad.scala"),
+      "(spark: SparkSession) => spark.range(3).noSuchMethod()")
+    Files.writeString(Paths.get(s"$dir/ok.sql"), "SELECT 1;")
+    val journal = new Journal(spark, s"$dir/.journal")
+    val fs = new FsUtils(spark)
+    val scalaJobs = new ScriptJobs[SparkSession => Any](
+      compile = ScriptCompiler.compileTask, mtimeOf = fs.mtime, read = fs.cat)
+    val r = RunnerMain.tick(spark, dir, journal, scalaJobs, () => 1000000L)
+    val badPath = r.map(_._1).find(_.endsWith("bad.scala")).get
+    val okPath = r.map(_._1).find(_.endsWith("ok.sql")).get
+    assert(r.toMap === Map(badPath -> "FAILED", okPath -> "SUCCEED"))
+    val bad = journal.lastExecution(badPath).get
+    assert(bad.status === "FAILED")
+    assert(bad.result.startsWith("scala.tools.reflect.ToolBoxError"), bad.result)
+    assert(journal.lastExecution(okPath).get.result === "OK")
+  }
 }

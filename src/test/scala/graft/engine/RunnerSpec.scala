@@ -53,6 +53,20 @@ class RunnerSpec extends SparkSpec {
     assert(j.lastExecution("fine").get.result === "42")
   }
 
+  test("a job throwing an Error (`???`) journals FAILED and the tick's " +
+      "next job still runs") {
+    val j = new Journal(spark, tmpDir())
+    val runner = new Runner(spark, j, clock = () => 6000000L)
+    var nextRan = false
+    runner.register(Job("a_todo", Duration.ZERO, _ => ???))
+    runner.register(Job("b_next", Duration.ZERO, _ => { nextRan = true; "ok" }))
+    assert(runner.runOnce() === Seq("a_todo" -> "FAILED", "b_next" -> "SUCCEED"))
+    assert(nextRan)
+    val rec = j.lastExecution("a_todo").get
+    assert(rec.status === "FAILED")
+    assert(rec.result.startsWith("scala.NotImplementedError"), rec.result)
+  }
+
   test("failure records carry the exception class and the cause chain") {
     val j = new Journal(spark, tmpDir())
     val runner = new Runner(spark, j, clock = () => 7000000L)

@@ -14,15 +14,6 @@ class BloomJoinSpec extends SparkSpec {
     ++ (0 until 5).map(i => s"missing needle $i"))
     .toDF("ntext")
 
-  test("bloomSemiJoin equals plain left_semi") {
-    val got = Dedup.bloomSemiJoin(corpus, col("text"), needles, col("ntext"))
-      .select("id").as[Long].collect().sorted
-    val want = corpus.join(needles, col("text") === col("ntext"), "left_semi")
-      .select("id").as[Long].collect().sorted
-    assert(got.toSeq === want.toSeq)
-    assert(got.length === 20)
-  }
-
   test("bloomAntiJoin equals plain left_anti, preserves all columns") {
     val got = Dedup.bloomAntiJoin(corpus, col("text"), needles, col("ntext"))
     assert(got.columns.toSeq === Seq("id", "text"))
@@ -47,15 +38,14 @@ class BloomJoinSpec extends SparkSpec {
     assert(pass >= 20 && pass < 100, s"bloom passed $pass of 2000 rows")
   }
 
-  test("empty needle set: semi is empty, anti is identity") {
+  test("empty needle set: anti is identity") {
     val none = needles.limit(0)
-    assert(Dedup.bloomSemiJoin(corpus, col("text"), none, col("ntext")).count() === 0)
     assert(Dedup.bloomAntiJoin(corpus, col("text"), none, col("ntext")).count() === 2000)
   }
 
   test("fpp is validated") {
     intercept[IllegalArgumentException] {
-      Dedup.bloomSemiJoin(corpus, col("text"), needles, col("ntext"), fpp = 0.0)
+      Dedup.bloomAntiJoin(corpus, col("text"), needles, col("ntext"), fpp = 0.0)
     }
   }
 }

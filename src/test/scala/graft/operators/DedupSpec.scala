@@ -57,26 +57,6 @@ class DedupSpec extends SparkSpec {
     assert(exact._3 === 1.0)
   }
 
-  test("minHashDedup drops the larger id of each verified pair") {
-    val kept = Dedup.minHashDedup(docs, col("doc_id"), col("text"),
-        shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
-      .select("doc_id").as[Long].collect().sorted
-    assert(kept === Array(1L, 4L, 5L))
-  }
-
-  test("minHashDedupClustered keeps one representative per chain component") {
-    val chain = Seq(
-      (1L, "aa bb cc dd ee ff gg hh"),
-      (2L, "aa bb cc dd ee ff gg xx"), // ~ 1
-      (3L, "bb cc dd ee ff gg xx yy"), // ~ 2 (chained to 1 via 2)
-      (4L, "completely different text entirely here now")
-    ).toDF("doc_id", "text")
-    val kept = Dedup.minHashDedupClustered(chain, col("doc_id"), col("text"),
-        shingleK = 2, numHashes = 64, bands = 16, threshold = 0.4)
-      .select("doc_id").as[Long].collect().sorted
-    assert(kept === Array(1L, 4L)) // whole chain collapses to its min id
-  }
-
   test("jaccardPairs exact inverted-index join matches brute force (both strategies)") {
     val countRes = Dedup.jaccardPairs(docs, col("doc_id"), col("text"),
         shingleK = 2, threshold = 0.3, strategy = "count")
@@ -217,25 +197,6 @@ class DedupSpec extends SparkSpec {
     val single = docs.filter(col("doc_id") === 1)
     assert(Dedup.exact(single, col("doc_id"), col("text")).count() === 1)
     assert(Dedup.minHashPairs(single, col("doc_id"), col("text")).count() === 0)
-  }
-
-  test("exactIncremental dedups within the batch and against prior state") {
-    import spark.implicits._
-    val empty = Seq.empty[Long].toDF("fp")
-    // batch 1: internal dup (1,2 identical) collapses to min id
-    val b1 = Seq((1L, "same text"), (2L, "same text"), (3L, "other")).toDF("id", "t")
-    val (s1, fps1) = Dedup.exactIncremental(b1, col("id"), col("t"), empty)
-    assert(s1.select("id").as[Long].collect().sorted === Array(1L, 3L))
-    assert(fps1.count() === 2L)
-    // batch 2: one cross-batch dup, one new doc; state grows by 1
-    val b2 = Seq((10L, "other"), (11L, "brand new")).toDF("id", "t")
-    val (s2, fps2) = Dedup.exactIncremental(b2, col("id"), col("t"), fps1)
-    assert(s2.select("id").as[Long].collect().sorted === Array(11L))
-    assert(fps2.count() === 3L)
-    // batch 3: everything already seen → empty survivors, state unchanged
-    val (s3, fps3) = Dedup.exactIncremental(b1, col("id"), col("t"), fps2)
-    assert(s3.count() === 0L)
-    assert(fps3.count() === 3L)
   }
 
   test("operators are total on null-text rows and empty inputs") {
@@ -468,15 +429,18 @@ class DedupSpec extends SparkSpec {
     assert(replay.count() === 0L)
   }
 
-  test("exactIncremental fingerprint state save/load round-trip") {
-    val empty = Seq.empty[Long].toDF("fp")
+  test("fingerprint state save/load round-trip") {
+    def fps(batch: org.apache.spark.sql.DataFrame) =
+      batch.select(TextFunctions.fingerprint64(col("t")).as("fp")).distinct()
     val b1 = Seq((1L, "aa"), (2L, "aa"), (3L, "bb")).toDF("id", "t")
-    val (_, fps1) = Dedup.exactIncremental(b1, col("id"), col("t"), empty)
-    Dedup.saveFingerprints(fps1, "fps_rt", buckets = 4)
+    Dedup.saveFingerprints(fps(b1), "fps_rt", buckets = 4)
     val loaded = Dedup.loadFingerprints(spark, "fps_rt")
+    assert(loaded.as[Long].collect().sorted === fps(b1).as[Long].collect().sorted)
+    // the reloaded state screens a later batch: only unseen content passes
     val b2 = Seq((4L, "aa"), (5L, "cc")).toDF("id", "t")
-    val (s2, _) = Dedup.exactIncremental(b2, col("id"), col("t"), loaded)
-    assert(s2.select(col("id")).as[Long].collect().sorted === Array(5L))
+    val unseen = b2.withColumn("fp", TextFunctions.fingerprint64(col("t")))
+      .join(loaded, Seq("fp"), "left_anti")
+    assert(unseen.select(col("id")).as[Long].collect().sorted === Array(5L))
   }
 
   test("minHashIncremental skips the components loop when the batch has no " +
@@ -662,19 +626,6 @@ class DedupSpec extends SparkSpec {
     assert(byId(2L) === ((2L, 1L, 24L, 20L)))
     assert(byId(3L) === ((3L, 0L, 0L, 44L)))
     assert(byId(4L) === ((4L, 0L, 0L, 4L)))
-  }
-
-  test("removeRepeatedSpans splices out the duplicated intervals") {
-    val clean = Dedup.removeRepeatedSpans(spanDocs, col("doc_id"), col("text"),
-        window = 8, stride = 4, minDocs = 2)
-      .orderBy("id").as[(Long, String)].collect().toMap
-    // doc1 keeps [0,12) ++ [32,44): ten x's + "AA" prefix survives (tiling
-    // can't see the 2 leading As of the run — they sit in no all-A tile),
-    // then "AA" tail? no: [32,34) are the last 2 As, [34,44) the y's.
-    assert(clean(1L) === "x" * 10 + "AA" + "AA" + "y" * 10)
-    assert(clean(2L) === "z" * 20)
-    assert(clean(3L) === "q" * 44)
-    assert(clean(4L) === "tiny")
   }
 
   test("repeated spans: multiple disjoint spans in one doc stay separate") {
@@ -937,9 +888,8 @@ class DedupSpec extends SparkSpec {
     }
     assert(e2.getMessage.contains("<missing>"))
     // fingerprint state shares the gate
-    val (_, fps) = Dedup.exactIncremental(
-      Seq((1L, "aa")).toDF("id", "t"), col("id"), col("t"),
-      Seq.empty[Long].toDF("fp"))
+    val fps = Seq("aa").toDF("t")
+      .select(TextFunctions.fingerprint64(col("t")).as("fp"))
     Dedup.saveFingerprints(fps, "fps_ver", buckets = 2)
     Dedup.loadFingerprints(spark, "fps_ver")
     spark.sql("ALTER TABLE `fps_ver` SET TBLPROPERTIES " +
@@ -958,9 +908,8 @@ class DedupSpec extends SparkSpec {
       "path for tables written before version stamping — audits " +
       "existence + expected columns, stamps version 1 exactly once, and " +
       "REFUSES already-stamped or foreign-layout tables") {
-    val (_, fps) = Dedup.exactIncremental(
-      Seq((1L, "aa")).toDF("id", "t"), col("id"), col("t"),
-      Seq.empty[Long].toDF("fp"))
+    val fps = Seq("aa").toDF("t")
+      .select(TextFunctions.fingerprint64(col("t")).as("fp"))
     Dedup.saveFingerprints(fps, "fps_mig", buckets = 2)
     // simulate the pre-versioning writer: strip the stamp
     spark.sql("ALTER TABLE `fps_mig` UNSET TBLPROPERTIES " +

@@ -130,25 +130,6 @@ class DiagnosticsSpec extends SparkSpec {
     assert(before._2 !== after._2, "sum fold must detect the edit")
   }
 
-  test("manifestDiff classifies added/removed/changed/unchanged, and a " +
-      "sum-only digest move still reads as changed") {
-    def m(rows: (String, Long, Long, java.math.BigDecimal)*) =
-      rows.toSeq.toDF("path", "n_rows", "fp_xor", "fp_sum")
-    def d(v: Long) = java.math.BigDecimal.valueOf(v)
-    val old = m(("a", 10L, 1L, d(100)), ("b", 5L, 2L, d(50)),
-      ("c", 7L, 3L, d(70)), ("x", 1L, 9L, d(9)))
-    val neu = m(("a", 10L, 1L, d(100)), ("b", 5L, 2L, d(51)),
-      ("c", 8L, 3L, d(70)), ("y", 2L, 4L, d(4)))
-    val got = Diagnostics.manifestDiff(old, neu)
-      .as[(String, String)].collect().toMap
-    assert(got === Map(
-      "a" -> "unchanged",
-      "b" -> "changed", // XOR and count identical; only the sum fold moved
-      "c" -> "changed",
-      "x" -> "removed",
-      "y" -> "added"))
-  }
-
   test("minhashErrorReport: identical docs estimate 1.0 exactly; near-dups " +
       "estimate within the ~1/sqrt(numHashes) concentration band") {
     import spark.implicits._

@@ -37,19 +37,6 @@ class EmbeddingDedupSpec extends SparkSpec {
     assert(got.nonEmpty) // the clustered near-dups exist
   }
 
-  test("embeddingPairsLsh: exact precision, candidates subset of all pairs") {
-    val df = clustered(60, 16, seed = 2).cache()
-    val exact = Dedup.embeddingPairsExact(df, col("vec_id"), col("embedding"), 0.95)
-      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSet
-    val lsh = Dedup.embeddingPairsLsh(df, col("vec_id"), col("embedding"), 0.95,
-        bits = 8, tables = 6)
-      .as[(Long, Long, Double)].collect()
-    // precision exact: every emitted pair really is >= threshold
-    assert(lsh.map(p => (p._1, p._2)).toSet.subsetOf(exact))
-    // tight near-dups (cos ~0.9998) collide with near-certainty at 8 bits × 6 tables
-    assert(lsh.nonEmpty)
-  }
-
   test("search(Ivf) ranks exactly within probed cells") {
     val df = clustered(100, 16, seed = 3).cache()
     // every 10th vector is a centroid

@@ -7,37 +7,6 @@ import graft.SparkSpec
 class JoinsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("saltedJoin equals the plain join on skewed data (inner + left)") {
-    val rnd = new Random(9)
-    // 90% of rows share one hot key
-    val big = (1 to 2000).map(i =>
-      (if (rnd.nextInt(10) < 9) 7L else rnd.nextInt(50).toLong, i))
-      .toDF("k", "payload")
-    val small = (0 to 49).map(k => (k.toLong, s"dim$k")).toDF("k", "name")
-
-    for (jt <- Seq("inner", "left")) {
-      val plain = big.join(small, Seq("k"), jt)
-        .select("k", "payload", "name").as[(Long, Int, String)]
-        .collect().sortBy(r => (r._1, r._2))
-      val salted = Joins.saltedJoin(big, small, Seq("k"), saltFactor = 8, joinType = jt)
-        .select("k", "payload", "name").as[(Long, Int, String)]
-        .collect().sortBy(r => (r._1, r._2))
-      assert(salted.toSeq === plain.toSeq, s"joinType=$jt")
-    }
-  }
-
-  test("salt spreads the hot key across multiple reducers") {
-    val big = (1 to 1000).map(i => (7L, i)).toDF("k", "payload")
-    val salts = big
-      .withColumn("__salt", org.apache.spark.sql.functions.pmod(
-        org.apache.spark.sql.functions.xxhash64(
-          org.apache.spark.sql.functions.col("k"),
-          org.apache.spark.sql.functions.col("payload")),
-        org.apache.spark.sql.functions.lit(8)))
-      .select("__salt").distinct().count()
-    assert(salts >= 6) // hot key fans out over most of the 8 salt slots
-  }
-
   test("rangeJoin left join keeps unmatched left rows (predicate inside the condition)") {
     val l = Seq((1L, 100L), (2L, 5000L)).toDF("id", "t") // id=2 matches no interval
     val r = Seq((10L, 90L, 110L)).toDF("win", "lo", "hi")
@@ -47,16 +16,11 @@ class JoinsSpec extends SparkSpec {
     assert(out === Array((1L, 100L, Some(10L)), (2L, 5000L, None)))
   }
 
-  test("rangeJoin/saltedJoin reject join types that would duplicate rows") {
+  test("rangeJoin rejects join types that would duplicate rows") {
     val l = Seq((1L, 100L)).toDF("id", "t")
     val r = Seq((10L, 90L, 110L)).toDF("win", "lo", "hi")
     intercept[IllegalArgumentException] {
       Joins.rangeJoin(l, r, "t", "lo", "hi", bucketWidth = 50, joinType = "right")
-    }
-    val big = Seq((1L, "x")).toDF("k", "p")
-    val small = Seq((1L, "d")).toDF("k", "name")
-    intercept[IllegalArgumentException] {
-      Joins.saltedJoin(big, small, Seq("k"), saltFactor = 4, joinType = "full")
     }
   }
 
@@ -105,23 +69,5 @@ class JoinsSpec extends SparkSpec {
     val plan = Joins.rangeJoin(left, right, "t", "lo", "hi", bucketWidth = 64)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
-  }
-
-  test("co-bucketed tables join without a shuffle") {
-    val a = (1 to 500).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-    val b = (1 to 500).map(i => (i.toLong, s"b$i")).toDF("k", "vb")
-    Joins.writeBucketed(a, "bucketed_a", Seq("k"), numBuckets = 4)
-    Joins.writeBucketed(b, "bucketed_b", Seq("k"), numBuckets = 4)
-    // force SMJ: tiny test tables would otherwise broadcast, which still
-    // plans a BroadcastExchange — the bucketing win is no *shuffle* Exchange
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val joined = spark.table("bucketed_a").join(spark.table("bucketed_b"), "k")
-      val plan = joined.queryExecution.explainString(ExplainMode.fromString("formatted"))
-      assert(!plan.contains("Exchange"), plan)
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(joined.count() === 500)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 }

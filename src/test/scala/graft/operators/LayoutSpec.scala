@@ -73,10 +73,16 @@ class LayoutSpec extends SparkSpec {
     assert(got === HilbertIndex.index(12345L, 67890L))
   }
 
-  test("hilbertOrder slices are compact rectangles, like zorder") {
+  /** A clustered write's layout: range-partitioned on the key into
+    * `numFiles` slices, each sorted by it. */
+  private def clustered(df: org.apache.spark.sql.DataFrame,
+      key: org.apache.spark.sql.Column, numFiles: Int) =
+    df.repartitionByRange(numFiles, key).sortWithinPartitions(key)
+
+  test("Hilbert-key clustering packs each output slice into a compact rectangle") {
     val grid = (for { x <- 0 until 32; y <- 0 until 32 } yield (x, y))
       .toDF("x", "y")
-    val sliced = Layout.hilbertOrder(grid, col("x"), col("y"), numFiles = 16)
+    val sliced = clustered(grid, Layout.hilbertKey(col("x"), col("y")), 16)
       .withColumn("pid", spark_partition_id())
       .groupBy("pid")
       .agg((max("x") - min("x")).as("dx"), (max("y") - min("y")).as("dy"),
@@ -94,7 +100,7 @@ class LayoutSpec extends SparkSpec {
     // predicate on either x or y can skip most files via min/max stats.
     val grid = (for { x <- 0 until 32; y <- 0 until 32 } yield (x, y))
       .toDF("x", "y")
-    val sliced = Layout.zorder(grid, col("x"), col("y"), numFiles = 16)
+    val sliced = clustered(grid, Layout.zOrderKey(col("x"), col("y")), 16)
       .withColumn("pid", spark_partition_id())
       .groupBy("pid")
       .agg((max("x") - min("x")).as("dx"), (max("y") - min("y")).as("dy"),

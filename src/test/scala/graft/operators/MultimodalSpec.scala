@@ -42,317 +42,6 @@ class MultimodalSpec extends SparkSpec {
     assert(MultimodalSpec.batchSizes.asScala.toList.sorted === List(4, 32, 32, 32))
   }
 
-  test("readBinaryDir ingests files as opaque binary; glob prunes the listing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bin")
-    java.nio.file.Files.write(dir.resolve("a.img"), Array.fill[Byte](300)(1))
-    java.nio.file.Files.write(dir.resolve("b.img"), Array.fill[Byte](700)(2))
-    java.nio.file.Files.write(dir.resolve("skip.txt"), "no".getBytes)
-    val df = Multimodal.readBinaryDir(spark, dir.toString, glob = Some("*.img"))
-    assert(df.count() === 2)
-    // the binary column feeds decodeMeta directly — end-to-end ingest→decode
-    val metas = Multimodal.decodeMeta(df.select(col("path"), col("content")),
-        col("content"))
-      .select(col("meta.n_bytes")).as[Int].collect().sorted
-    assert(metas === Array(300, 700))
-  }
-
-  test("ImageIoCodec decodes a real PNG's format and pixel dimensions") {
-    // plant a real 37x21 PNG rendered by the JDK itself
-    val img = new java.awt.image.BufferedImage(
-      37, 21, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    img.setRGB(5, 5, 0xff8800)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val png = bos.toByteArray
-
-    val df = Seq((1L, png), (2L, "not an image".getBytes("UTF-8")),
-        (3L, null.asInstanceOf[Array[Byte]]))
-      .toDF("id", "payload")
-    val out = Multimodal.decodeMeta(df, col("payload"),
-        codec = Multimodal.ImageIoCodec)
-      .select($"id", $"meta.format", $"meta.width", $"meta.height", $"meta.n_bytes")
-      .as[(Long, String, Int, Int, Int)].collect().sortBy(_._1)
-    assert(out(0) === ((1L, "png", 37, 21, png.length)))
-    // corrupt payload degrades to null format, never a task failure
-    assert(out(1)._2 === null && out(1)._3 === 0)
-    assert(out(2) === ((3L, null, 0, 0, 0)))
-  }
-
-  private def makeWav(rate: Int, channels: Int, bitsPerSample: Int,
-      frames: Int): Array[Byte] = {
-    // hand-assembled canonical 44-byte PCM WAV header + silent samples —
-    // built from the public RIFF/WAVE layout, independent of WavCodec
-    val blockAlign = channels * bitsPerSample / 8
-    val dataSize = frames * blockAlign
-    val bb = java.nio.ByteBuffer.allocate(44 + dataSize)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataSize)
-      .put("WAVE".getBytes("US-ASCII"))
-      .put("fmt ".getBytes("US-ASCII")).putInt(16)
-      .putShort(1.toShort).putShort(channels.toShort).putInt(rate)
-      .putInt(rate * blockAlign).putShort(blockAlign.toShort)
-      .putShort(bitsPerSample.toShort)
-      .put("data".getBytes("US-ASCII")).putInt(dataSize)
-    bb.array()
-  }
-
-  test("WavCodec parses rate/channels/frames from a real RIFF header") {
-    val wav = makeWav(rate = 44100, channels = 2, bitsPerSample = 16, frames = 480)
-    val Seq(m) = Multimodal.WavCodec.decode(Seq(wav))
-    assert(m === MediaMeta("wav", 44100, 2, 480, wav.length))
-    // truncated data chunk: frame count clamps to the bytes actually present
-    val cut = wav.take(44 + 100) // 100 bytes = 25 stereo-16 frames
-    val Seq(mc) = Multimodal.WavCodec.decode(Seq(cut))
-    assert(mc.nFrames === 25 && mc.format === "wav")
-    // non-WAV and truncated-header payloads degrade to null format
-    assert(Multimodal.WavCodec.decode(Seq("RIFFnope".getBytes)).head.format === null)
-    assert(Multimodal.WavCodec.decode(Seq(null)).head === MediaMeta(null, 0, 0, 0, 0))
-  }
-
-  /** ISO BMFF box: 32-bit size + 4-char type + payload. */
-  private def box(tp: String, payload: Array[Byte]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-    bb.putInt(8 + payload.length).put(tp.getBytes("US-ASCII")).put(payload)
-    bb.array()
-  }
-
-  /** Hand-assembled minimal ISO BMFF file — built from the public
-    * ISO/IEC 14496-12 box layout, independent of Mp4Codec: ftyp, then moov
-    * containing mvhd (v0: timescale + duration) and `traks` empty trak
-    * boxes (no video track).
-    */
-  private def makeMp4(timescale: Int, duration: Int, traks: Int,
-      mvhdVersion: Int = 0): Array[Byte] = {
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ Array[Byte](0, 0, 2, 0))
-    val mvhdBody =
-      if (mvhdVersion == 0) {
-        val bb = java.nio.ByteBuffer.allocate(4 + 4 + 4 + 4 + 4)
-        bb.putInt(0) // version 0 + flags
-          .putInt(0).putInt(0) // ctime, mtime
-          .putInt(timescale).putInt(duration)
-        bb.array()
-      } else {
-        val bb = java.nio.ByteBuffer.allocate(4 + 8 + 8 + 4 + 8)
-        bb.putInt(0x01000000) // version 1 + flags
-          .putLong(0L).putLong(0L)
-          .putInt(timescale).putLong(duration.toLong)
-        bb.array()
-      }
-    val trakBoxes = Array.fill(traks)(box("trak", Array.empty[Byte]))
-      .flatten
-    val moov = box("moov", box("mvhd", mvhdBody) ++ trakBoxes)
-    ftyp ++ moov
-  }
-
-  /** tkhd v0 payload: 84 bytes, 16.16 fixed-point width/height at 76/80. */
-  private def tkhdBody(w: Int, h: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(84)
-    bb.position(76)
-    bb.putInt(w << 16).putInt(h << 16)
-    bb.array()
-  }
-
-  /** hdlr payload: version+flags, pre_defined, handler_type, reserved. */
-  private def hdlrBody(handler: String): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(24)
-    bb.putInt(0).putInt(0).put(handler.getBytes("US-ASCII"))
-    bb.array()
-  }
-
-  /** stsd payload with ONE VisualSampleEntry (avc1): 16-bit width/height
-    * at entry offset 32/34 per the public layout.
-    */
-  private def stsdBody(w: Int, h: Int): Array[Byte] = {
-    val entry = java.nio.ByteBuffer.allocate(86)
-    entry.putInt(86).put("avc1".getBytes("US-ASCII"))
-    entry.position(32)
-    entry.putShort(w.toShort).putShort(h.toShort)
-    val bb = java.nio.ByteBuffer.allocate(8 + 86)
-    bb.putInt(0).putInt(1).put(entry.array())
-    bb.array()
-  }
-
-  /** Full playable-layout fixture: ftyp, mdat holding `samples` packed into
-    * `chunks` runs, then moov with a video trak whose stbl tables (stsz per
-    * -sample sizes, stsc runs, stco absolute offsets) locate every sample —
-    * the real demux surface. tkhd carries (w,h); stsd carries (sw,sh).
-    */
-  private def makeVideoMp4(timescale: Int, duration: Int, w: Int, h: Int,
-      samples: Seq[Array[Byte]], chunks: Seq[Int],
-      stsdW: Int = 0, stsdH: Int = 0,
-      handler: String = "vide"): Array[Byte] = {
-    require(chunks.sum == samples.length)
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ Array[Byte](0, 0, 2, 0))
-    val mdat = box("mdat", samples.toArray.flatten)
-    // absolute chunk offsets: ftyp + mdat header precede the sample bytes
-    val chunkOffsets = chunks.scanLeft(0)(_ + _).take(chunks.length)
-      .map(nBefore => ftyp.length + 8L +
-        samples.take(nBefore).map(_.length).sum)
-    val mvhd = {
-      val bb = java.nio.ByteBuffer.allocate(20)
-      bb.putInt(0).putInt(0).putInt(0).putInt(timescale).putInt(duration)
-      box("mvhd", bb.array())
-    }
-    val stsz = {
-      val bb = java.nio.ByteBuffer.allocate(12 + 4 * samples.length)
-      bb.putInt(0).putInt(0).putInt(samples.length)
-      samples.foreach(s => bb.putInt(s.length))
-      box("stsz", bb.array())
-    }
-    val stsc = {
-      val bb = java.nio.ByteBuffer.allocate(8 + 12 * chunks.length)
-      bb.putInt(0).putInt(chunks.length)
-      chunks.zipWithIndex.foreach { case (n, i) =>
-        bb.putInt(i + 1).putInt(n).putInt(1) }
-      box("stsc", bb.array())
-    }
-    val stco = {
-      val bb = java.nio.ByteBuffer.allocate(8 + 4 * chunkOffsets.length)
-      bb.putInt(0).putInt(chunkOffsets.length)
-      chunkOffsets.foreach(o => bb.putInt(o.toInt))
-      box("stco", bb.array())
-    }
-    val stbl = box("stbl",
-      box("stsd", stsdBody(stsdW, stsdH)) ++ stsz ++ stsc ++ stco)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", box("hdlr", hdlrBody(handler)) ++ minf)
-    val trak = box("trak", box("tkhd", tkhdBody(w, h)) ++ mdia)
-    ftyp ++ mdat ++ box("moov", mvhd ++ trak)
-  }
-
-  test("Mp4Codec parses duration and (video-less) zero dimensions from a " +
-      "real ISO BMFF box tree; malformed payloads degrade to null format") {
-    // 90 s at timescale 600: duration field 54000 ticks; empty traks carry
-    // no video dimensions
-    val mp4 = makeMp4(timescale = 600, duration = 54000, traks = 2)
-    val Seq(m) = Multimodal.Mp4Codec.decode(Seq(mp4))
-    assert(m === MediaMeta("mp4", 0, 0, 90000, mp4.length))
-    // version-1 mvhd (64-bit times) parses identically
-    val v1 = makeMp4(timescale = 1000, duration = 1500, traks = 1, mvhdVersion = 1)
-    assert(Multimodal.Mp4Codec.decode(Seq(v1)).head ===
-      MediaMeta("mp4", 0, 0, 1500, v1.length))
-    // no moov / truncated / crafted box sizes degrade, never throw
-    assert(Multimodal.Mp4Codec.decode(Seq(mp4.take(20))).head.format === null)
-    val crafted = mp4.clone()
-    crafted(16) = 0x7f // moov size now overruns the payload
-    assert(Multimodal.Mp4Codec.decode(Seq(crafted)).head.format === null)
-    assert(Multimodal.Mp4Codec.decode(Seq(null)).head === MediaMeta(null, 0, 0, 0, 0))
-    assert(Multimodal.Mp4Codec.decode(Seq("ftypnope".getBytes)).head.format === null)
-  }
-
-  test("Mp4Codec: truncated v1 mvhd (28-31 B payload) degrades to null " +
-      "format instead of reading the next sibling box as duration bytes") {
-    def box(tp: String, payload: Array[Byte]): Array[Byte] = {
-      val bb = java.nio.ByteBuffer.allocate(8 + payload.length)
-      bb.putInt(8 + payload.length).put(tp.getBytes("US-ASCII")).put(payload)
-      bb.array()
-    }
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII") ++ Array[Byte](0, 0, 2, 0))
-    // v1 mvhd cut 4 bytes into the 8-byte duration field: 4 (ver+flags)
-    // + 8 + 8 (ctime/mtime) + 4 (timescale) + 4 of 8 duration bytes
-    val cut = java.nio.ByteBuffer.allocate(28)
-      .putInt(0x01000000).putLong(0L).putLong(0L).putInt(1000).putInt(0)
-      .array()
-    // a trak sibling follows — its size/type bytes are exactly what an
-    // unguarded be64 at mvhd+24 would swallow as the duration's low half
-    val moov = box("moov", box("mvhd", cut) ++ box("trak", Array.empty[Byte]))
-    assert(Multimodal.Mp4Codec.decode(Seq(ftyp ++ moov)).head.format === null)
-  }
-
-  test("Mp4Codec: durations/timescales exceeding the Int meta degrade to " +
-      "null format rather than wrapping") {
-    // timescale 1, duration ticks > Int.MaxValue ms: durMs overflows Int
-    val big = makeMp4(timescale = 1, duration = Int.MaxValue, traks = 1,
-      mvhdVersion = 1)
-    assert(Multimodal.Mp4Codec.decode(Seq(big)).head.format === null)
-  }
-
-  test("AutoCodec routes by magic bytes: PNG→ImageIO, WAVE→WavCodec, " +
-      "unknown→null meta (no fabricated dimensions)") {
-    val img = new java.awt.image.BufferedImage(
-      10, 7, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    val png = bos.toByteArray
-    val wav = makeWav(rate = 8000, channels = 1, bitsPerSample = 8, frames = 64)
-    val mp4 = makeMp4(timescale = 1000, duration = 2500, traks = 1)
-    val junk = "neither image nor audio".getBytes("UTF-8")
-
-    val out = Multimodal.decodeMeta(
-        Seq((1L, png), (2L, wav), (3L, junk), (4L, mp4)).toDF("id", "payload"),
-        col("payload"), codec = Multimodal.AutoCodec)
-      .select($"id", $"meta.format", $"meta.width", $"meta.height",
-        $"meta.n_frames", $"meta.n_bytes")
-      .as[(Long, String, Int, Int, Int, Int)].collect().sortBy(_._1)
-    assert(out(0) === ((1L, "png", 10, 7, 1, png.length)))
-    assert(out(1) === ((2L, "wav", 8000, 1, 64, wav.length)))
-    assert(out(2) === ((3L, null, 0, 0, 0, junk.length)))
-    assert(out(3) === ((4L, "mp4", 0, 0, 2500, mp4.length)))
-  }
-
-  test("Mp4Codec reads the video track's pixel dimensions from tkhd, " +
-      "falls back to stsd, and skips non-video tracks") {
-    val samples = (0 until 10).map(i => Array.fill(i + 1)(i.toByte))
-    // tkhd carries 640x360 (stsd disagrees on purpose — tkhd wins)
-    val withTkhd = makeVideoMp4(timescale = 1000, duration = 7500,
-      w = 640, h = 360, samples = samples, chunks = Seq(4, 6),
-      stsdW = 320, stsdH = 240)
-    assert(Multimodal.Mp4Codec.decode(Seq(withTkhd)).head ===
-      MediaMeta("mp4", 640, 360, 7500, withTkhd.length))
-    // zeroed tkhd -> the stsd VisualSampleEntry's 16-bit dims
-    val viaStsd = makeVideoMp4(timescale = 1000, duration = 7500,
-      w = 0, h = 0, samples = samples, chunks = Seq(10),
-      stsdW = 320, stsdH = 240)
-    assert(Multimodal.Mp4Codec.decode(Seq(viaStsd)).head ===
-      MediaMeta("mp4", 320, 240, 7500, viaStsd.length))
-    // an audio track (hdlr "soun") contributes no dimensions even if its
-    // boxes carry plausible numbers
-    val audio = makeVideoMp4(timescale = 1000, duration = 7500,
-      w = 640, h = 360, samples = samples, chunks = Seq(10),
-      handler = "soun")
-    assert(Multimodal.Mp4Codec.decode(Seq(audio)).head ===
-      MediaMeta("mp4", 0, 0, 7500, audio.length))
-  }
-
-  test("Mp4Codec.videoSamples demuxes the track's real encoded samples " +
-      "from mdat via stsz/stsc/stco — byte-exact, never FrameBytes fakes") {
-    val samples = (0 until 10).map(i => Array.fill(i + 1)(i.toByte))
-    val mp4 = makeVideoMp4(timescale = 1000, duration = 7500,
-      w = 640, h = 360, samples = samples, chunks = Seq(4, 6))
-    // k=4 over 10 samples: step max(10/4,1)=2 -> indices 0,2,4,6
-    val got = Multimodal.Mp4Codec.videoSamples(mp4, 4)
-    assert(got.map(_.toSeq) ===
-      Seq(0, 2, 4, 6).map(i => samples(i).toSeq))
-    // k > n picks each sample at most once
-    assert(Multimodal.Mp4Codec.videoSamples(mp4, 100).map(_.toSeq) ===
-      samples.map(_.toSeq))
-    // non-MP4, truncated, and audio-only payloads yield empty, not throw
-    assert(Multimodal.Mp4Codec.videoSamples("junk".getBytes, 4) === Seq.empty)
-    assert(Multimodal.Mp4Codec.videoSamples(mp4.take(40), 4) === Seq.empty)
-    assert(Multimodal.Mp4Codec.videoSamples(null, 4) === Seq.empty)
-    val audio = makeVideoMp4(timescale = 1000, duration = 7500,
-      w = 640, h = 360, samples = samples, chunks = Seq(10),
-      handler = "soun")
-    assert(Multimodal.Mp4Codec.videoSamples(audio, 4) === Seq.empty)
-  }
-
-  test("demuxFrames appends real demuxed access units as array<binary>; " +
-      "non-video payloads quarantine as empty arrays") {
-    val samples = (0 until 6).map(i => Array.fill(3)(i.toByte))
-    val mp4 = makeVideoMp4(timescale = 1000, duration = 3000,
-      w = 320, h = 240, samples = samples, chunks = Seq(6))
-    val df = Seq((1L, mp4), (2L, "not a video".getBytes("UTF-8")))
-      .toDF("id", "payload")
-    val out = Multimodal.demuxFrames(df, col("payload"), k = 3)
-      .select($"id", size($"frames").as("n"), $"frames")
-      .as[(Long, Int, Array[Array[Byte]])].collect().sortBy(_._1)
-    // k=3 over 6 samples: step 2 -> indices 0,2,4
-    assert(out(0)._2 === 3)
-    assert(out(0)._3.map(_.toSeq).toSeq ===
-      Seq(0, 2, 4).map(i => samples(i).toSeq))
-    assert(out(1)._2 === 0)
-  }
-
   test("sampleFrames: evenly spaced fixed-size frames, deduped when short") {
     val payload = ("a" * 1000).getBytes("UTF-8") // 4 frames of 256 (last short)
     val df = Seq(Tuple1(payload)).toDF("p")
@@ -373,42 +62,11 @@ class MultimodalSpec extends SparkSpec {
     assert(out.contains("host=") && out.contains("args=[1,x]"))
   }
 
-  test("videoFingerprint64 is container-invariant: remuxed chunk layouts " +
-      "and edited metadata fingerprint identically, different samples " +
-      "differently") {
-    val samples = (0 until 6).map(i =>
-      Array.tabulate[Byte](50 + i * 7)(j => ((i * 31 + j) & 0xff).toByte))
-    val oneChunk = makeVideoMp4(600, 1200, 640, 360, samples, Seq(6))
-    // remux: same samples split into three chunks, different timescale/
-    // duration/display-size metadata
-    val remuxed = makeVideoMp4(1000, 99000, 1280, 720, samples, Seq(2, 2, 2))
-    val a = Multimodal.videoFingerprint64(oneChunk)
-    val b = Multimodal.videoFingerprint64(remuxed)
-    assert(a.isDefined && a === b, s"remux changed the fingerprint: $a vs $b")
-    // different codec payload -> different fingerprint
-    val other = makeVideoMp4(600, 1200, 640, 360,
-      samples.updated(3, Array[Byte](1, 2, 3)), Seq(6))
-    assert(Multimodal.videoFingerprint64(other) !== a)
-    // quarantine: junk and track-less mp4
-    assert(Multimodal.videoFingerprint64("junk".getBytes("UTF-8")).isEmpty)
-    assert(Multimodal.videoFingerprint64(
-      makeMp4(timescale = 600, duration = 600, traks = 0)).isEmpty)
-    // the DataFrame form carries the fingerprint and nulls junk
-    val out = Multimodal.videoFingerprint(
-        Seq((1L, oneChunk), (2L, remuxed), (3L, "x".getBytes("UTF-8")))
-          .toDF("id", "payload"), col("payload"))
-      .select(col("id"), col("vfp")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
-      .toMap
-    assert(out(1L) === out(2L) && out(1L).isDefined)
-    assert(out(3L).isEmpty)
-  }
-
   // ---- perceptual hashing over REAL decoded pixels -----------------------
 
   /** The ONE deterministic pattern renderer, shared with the registry
-    * query and StreamsSpec so the exercised picture can never drift
-    * between the spec gates and `mm_phash_pairs`.
+    * query so the exercised picture can never drift between the spec
+    * gates and `mm_phash_pairs`.
     */
   private def patternPng(w: Int, h: Int, seedShift: Int,
       noisePixels: Int = 0): Array[Byte] =
@@ -442,172 +100,6 @@ class MultimodalSpec extends SparkSpec {
       .toMap
     assert(out(1L).isDefined)
     assert(out(2L).isEmpty && out(3L).isEmpty)
-  }
-
-  // ---- audio energy-envelope hashing over real PCM -----------------------
-
-  /** Minimal 16-bit PCM WAV encoder (LE samples, interleaved channels). */
-  private def wavOf(samples: Array[Short], rate: Int,
-      channels: Int = 1): Array[Byte] = {
-    val dataLen = samples.length * 2
-    val bos = new java.io.ByteArrayOutputStream()
-    val o = new java.io.DataOutputStream(bos)
-    def le32(v: Int): Unit = { o.write(v); o.write(v >> 8); o.write(v >> 16); o.write(v >> 24) }
-    def le16(v: Int): Unit = { o.write(v); o.write(v >> 8) }
-    o.writeBytes("RIFF"); le32(36 + dataLen); o.writeBytes("WAVE")
-    o.writeBytes("fmt "); le32(16); le16(1); le16(channels); le32(rate)
-    le32(rate * channels * 2); le16(channels * 2); le16(16)
-    o.writeBytes("data"); le32(dataLen)
-    samples.foreach(s => le16(s & 0xffff))
-    bos.toByteArray
-  }
-
-  /** Deterministic test signal: 65 segments of 40 samples, each a sine
-    * burst whose AMPLITUDE follows a seed-dependent pattern — structure
-    * the energy envelope can see, defined per segment so any resampling
-    * of whole segments keeps the same envelope.
-    */
-  private def envelopeSignal(seed: Int, repeat: Int = 1): Array[Short] = {
-    (0 until 65).flatMap { seg =>
-      val amp = ((seg * 31 + seed) * 257 % 9000) + 500
-      (0 until 40 * repeat).map { i =>
-        (amp * math.sin(2 * math.Pi * i / (8.0 * repeat))).toShort
-      }
-    }.toArray
-  }
-
-  test("energyHash64 is sample-rate and exact-gain invariant, separates " +
-      "different envelopes, quarantines non-PCM") {
-    val base = envelopeSignal(0)
-    val h = Multimodal.energyHash64(wavOf(base, 8000)).get
-    // 2x resample (each segment rendered at twice the samples): windows
-    // partition the same waveform identically
-    val resampled = Multimodal.energyHash64(
-      wavOf(envelopeSignal(0, repeat = 2), 16000)).get
-    assert(java.lang.Long.bitCount(h ^ resampled) <= 2,
-      s"resample moved ${java.lang.Long.bitCount(h ^ resampled)} bits")
-    // exact 2x gain: every squared energy scales by 4, comparisons equal
-    val louder = Multimodal.energyHash64(
-      wavOf(base.map(s => (s * 2).toShort), 8000)).get
-    assert(louder === h)
-    // stereo copy (same signal in both channels) mono-mixes to the same
-    val stereo = Multimodal.energyHash64(
-      wavOf(base.flatMap(s => Array(s, s)), 8000, channels = 2)).get
-    assert(stereo === h)
-    // a different envelope lands far away
-    val other = Multimodal.energyHash64(wavOf(envelopeSignal(77), 8000)).get
-    assert(java.lang.Long.bitCount(h ^ other) >= 12,
-      s"different envelopes ${java.lang.Long.bitCount(h ^ other)} bits apart")
-    // quarantine: junk and too-short payloads
-    assert(Multimodal.energyHash64("junk".getBytes("UTF-8")).isEmpty)
-    assert(Multimodal.energyHash64(wavOf(new Array[Short](64), 8000)).isEmpty)
-    // crafted chunk sizes must quarantine, not spin or crash: 0xFFFFFFF8
-    // stalls an Int cursor (advance == 0) and 0x80000000 wraps it negative
-    for (bad <- Seq(0xFFFFFFF8, 0x80000000)) {
-      val crafted = wavOf(envelopeSignal(0), 8000)
-      crafted(16) = (bad & 0xff).toByte // fmt chunk size, little-endian
-      crafted(17) = ((bad >> 8) & 0xff).toByte
-      crafted(18) = ((bad >> 16) & 0xff).toByte
-      crafted(19) = ((bad >> 24) & 0xff).toByte
-      assert(Multimodal.energyHash64(crafted).isEmpty,
-        s"crafted size 0x${bad.toHexString} not quarantined")
-    }
-  }
-
-  test("resampleAudio: exact nearest-sample PCM on integer factors, " +
-      "energy envelope preserved, stereo mono-mixed, non-PCM null") {
-    val sig = envelopeSignal(0, repeat = 2) // 5200 frames
-    val wav16k = wavOf(sig, 16000)
-    val out = Multimodal.resampleAudio(
-        Seq((1L, wav16k), (2L, "junk".getBytes("UTF-8"))).toDF("id", "payload"),
-        col("payload"), targetRate = 8000)
-      .select(col("id"), col("resampled")).collect()
-      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Array[Byte]]))
-      .toMap
-    assert(out(2L).isEmpty)
-    val down = out(1L).get
-    // integer 2x downsample: every kept sample is EXACTLY source 2i —
-    // i.e. the repeat=1 rendering of the same envelope
-    val expect = wavOf(envelopeSignal(0), 8000)
-    assert(java.util.Arrays.equals(down, expect),
-      "2x nearest-sample downsample must equal the half-rate rendering")
-    // the energy-envelope hash survives the resample
-    assert(Multimodal.energyHash64(down).get ===
-      Multimodal.energyHash64(wav16k).get)
-    // stereo input mono-mixes during resample
-    val stereo = wavOf(sig.flatMap(s => Array(s, s)), 16000, channels = 2)
-    val downStereo = Multimodal.resampleAudio(
-        Seq((1L, stereo)).toDF("id", "payload"), col("payload"), 8000)
-      .select(col("resampled")).head().get(0).asInstanceOf[Array[Byte]]
-    assert(java.util.Arrays.equals(downStereo, expect))
-  }
-
-  test("audioDedupPairs finds resampled/regained copies, not different " +
-      "audio, and drops undecodable payloads") {
-    val rows = Seq(
-      (1L, wavOf(envelopeSignal(0), 8000)),
-      (2L, wavOf(envelopeSignal(0, repeat = 2), 16000)), // resample of 1
-      (3L, wavOf(envelopeSignal(0).map(s => (s * 2).toShort), 8000)), // gain
-      (4L, wavOf(envelopeSignal(77), 8000)),             // different audio
-      (5L, "junk".getBytes("UTF-8")))
-    val pairs = Multimodal.audioDedupPairs(
-        rows.toDF("id", "payload"), col("id"), col("payload"), maxHamming = 3)
-      .as[(Long, Long, Int)].collect().map(p => (p._1, p._2)).toSet
-    assert(pairs.contains((1L, 2L)), s"resampled copy missed: $pairs")
-    assert(pairs.contains((1L, 3L)), s"gained copy missed: $pairs")
-    assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L),
-      s"different audio matched: $pairs")
-    assert(!pairs.exists(p => p._1 == 5L || p._2 == 5L))
-  }
-
-  test("resizeImages: exact nearest-neighbor pixels on integer downscale, " +
-      "perceptual identity preserved, undecodable payloads null") {
-    val bigPng = patternPng(144, 128, 0)
-    val out = Multimodal.resizeImages(
-        Seq((1L, bigPng), (2L, "junk".getBytes("UTF-8"))).toDF("id", "payload"),
-        col("payload"), tw = 72, th = 64)
-      .select(col("id"), col("resized")).collect()
-      .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Array[Byte]]))
-      .toMap
-    assert(out(2L).isEmpty)
-    val resized = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out(1L).get))
-    assert(resized.getWidth === 72 && resized.getHeight === 64)
-    // integer 2x downscale: every kept pixel is EXACTLY source (2x, 2y)
-    val src = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bigPng))
-    for (y <- Seq(0, 13, 63); x <- Seq(0, 31, 71))
-      assert((resized.getRGB(x, y) & 0xffffff) ===
-        (src.getRGB(x * 2, y * 2) & 0xffffff), s"pixel ($x,$y)")
-    // the resized copy stays a perceptual near-dup of the original
-    val hOrig = Multimodal.dHash64(src)
-    val hRes = Multimodal.dHash64(resized)
-    assert(java.lang.Long.bitCount(hOrig ^ hRes) <= 4)
-  }
-
-  test("imageDedupIncremental: within-batch collapse, state-dup drop, " +
-      "state evolves by survivors only") {
-    // batch 1: picture P (id 1), its noised copy (id 2 — within-batch
-    // dup), and picture Q (id 3)
-    val b1 = Seq(
-      (1L, patternPng(72, 64, 0)),
-      (2L, patternPng(72, 64, 0, noisePixels = 6)),
-      (3L, patternPng(72, 64, 131))).toDF("id", "payload")
-    val (s1, st1) = Multimodal.imageDedupIncremental(
-      b1, Multimodal.emptyPhashState(spark), col("id"), col("payload"),
-      maxHamming = 4)
-    assert(s1.select(col("id")).as[Long].collect().sorted === Seq(1L, 3L))
-    assert(st1.count() === 2)
-    // batch 2: a 2x rescale of P (dup of STATE), a fresh picture R, junk
-    val b2 = Seq(
-      (10L, patternPng(144, 128, 0)),
-      (11L, patternPng(72, 64, 57)),
-      (12L, "junk".getBytes("UTF-8"))).toDF("id", "payload")
-    val (s2, st2) = Multimodal.imageDedupIncremental(
-      b2, st1, col("id"), col("payload"), maxHamming = 4)
-    assert(s2.select(col("id")).as[Long].collect().sorted === Seq(11L))
-    assert(st2.count() === 3)
-    assert(st2.select(col("id")).as[Long].collect().sorted ===
-      Seq(1L, 3L, 11L))
   }
 
   test("imageDedupPairs finds noised/rescaled near-dups, not different " +

@@ -52,36 +52,6 @@ class SamplingSpec extends SparkSpec {
     assert(again.toSeq === got.toSeq)
   }
 
-  test("mixtureFractions: alpha=1 is proportional, alpha=0 uniform, caps at 1.0") {
-    val counts = Map("big" -> 800L, "mid" -> 150L, "small" -> 50L)
-    val prop = Sampling.mixtureFractions(counts, alpha = 1.0, targetRows = 100)
-    // natural proportions: every stratum keeps the same fraction
-    assert(prop.values.map(v => math.abs(v - 0.1)).forall(_ < 1e-12))
-    val flat = Sampling.mixtureFractions(counts, alpha = 0.0, targetRows = 90)
-    // uniform mass: 30 expected rows per stratum regardless of size
-    assert(math.abs(flat("big") * 800 - 30.0) < 1e-9)
-    assert(math.abs(flat("mid") * 150 - 30.0) < 1e-9)
-    assert(math.abs(flat("small") * 50 - 30.0) < 1e-9)
-    // upweighting a stratum past its size caps at 1.0
-    val capped = Sampling.mixtureFractions(counts, alpha = 0.0, targetRows = 600)
-    assert(capped("small") === 1.0)
-    assert(Sampling.mixtureFractions(Map("z" -> 0L), 1.0, 10)("z") === 0.0)
-  }
-
-  test("temperatureSample flattens skewed strata deterministically") {
-    val skewed = ((1 to 900).map(i => (i.toLong, "big")) ++
-      (901 to 1000).map(i => (i.toLong, "small"))).toDF("id", "cls")
-    val out = Sampling.temperatureSample(skewed, col("cls"), col("id"),
-      alpha = 0.0, targetRows = 200)
-    val counts = out.groupBy("cls").count().as[(String, Long)].collect().toMap
-    // expected ~100 per stratum; md5 uniformity gives a generous tolerance
-    assert(counts("big") > 60 && counts("big") < 140, counts)
-    assert(counts("small") > 60 && counts("small") <= 100, counts)
-    val again = Sampling.temperatureSample(skewed, col("cls"), col("id"),
-      alpha = 0.0, targetRows = 200).select("id").as[Long].collect().sorted
-    assert(again.toSeq === out.select("id").as[Long].collect().sorted.toSeq)
-  }
-
   test("hashSample membership is a pure function of the key") {
     val a = Sampling.hashSample(df, col("id"), 0.3).select("id").as[Long].collect().sorted
     val b = Sampling.hashSample(df, col("id"), 0.3).select("id").as[Long].collect().sorted

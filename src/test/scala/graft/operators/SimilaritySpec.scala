@@ -166,23 +166,6 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("meanVec pools chunk embeddings element-wise with partial aggregation") {
-    import graft.functions.VectorAgg
-    val df = Seq(
-      (1L, Seq(1.0f, 2.0f, 3.0f)),
-      (1L, Seq(3.0f, 2.0f, 1.0f)),
-      (2L, Seq(5.0f, 5.0f, 5.0f))
-    ).toDF("doc", "emb").repartition(3)
-    val got = df.groupBy("doc").agg(VectorAgg.meanVec(col("emb")).as("m"))
-      .orderBy("doc").as[(Long, Seq[Float])].collect()
-    assert(got(0) === ((1L, Seq(2.0f, 2.0f, 2.0f))))
-    assert(got(1) === ((2L, Seq(5.0f, 5.0f, 5.0f))))
-    // plan: partial+final ObjectHashAggregate, no shuffle of member vectors
-    val p = df.groupBy("doc").agg(VectorAgg.meanVec(col("emb")))
-      .queryExecution.executedPlan.toString
-    assert(p.contains("ObjectHashAggregate"), p)
-  }
-
   test("trained k-means centroids drive search(Ivf) with exact in-cell ranking") {
     val df = vectors(100, 8, seed = 11).cache()
     val cents = Similarity.trainCentroids(df, k = 4, seed = 1)

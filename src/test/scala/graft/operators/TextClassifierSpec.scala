@@ -1,51 +1,10 @@
 package graft.operators
 
-import scala.util.Random
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class TextClassifierSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Two synthetic "languages" with genuinely different character
-    * distributions (the driver fixture's `lang` column is uncorrelated
-    * with its text, so an honest accuracy test needs its own corpus).
-    */
-  private def corpus(nPerLang: Int, seed: Long) = {
-    val rnd = new Random(seed)
-    def word(alpha: String) =
-      (0 until 3 + rnd.nextInt(5)).map(_ => alpha(rnd.nextInt(alpha.length))).mkString
-    def doc(alpha: String) = (0 until 10 + rnd.nextInt(10)).map(_ => word(alpha)).mkString(" ")
-    val a = (0 until nPerLang).map(i => (i.toLong, doc("aeiournlst"), "alpha"))
-    val b = (0 until nPerLang).map(i => ((i + nPerLang).toLong, doc("zkxwqvgfpy"), "beta"))
-    (a ++ b).toDF("id", "text", "lang")
-  }
-
-  test("char-ngram LR separates distinct character distributions on a holdout") {
-    val df = corpus(150, seed = 11).cache()
-    // deterministic content-hash split, same as the engine's split operator
-    val train = df.filter(pmod(xxhash64(col("id")), lit(5)) =!= 0)
-    val test = df.filter(pmod(xxhash64(col("id")), lit(5)) === 0)
-    val model = TextClassifier.train(train, col("text"), col("lang"), dims = 1 << 12)
-    assert(model.labels === Seq("alpha", "beta")) // sorted label vocabulary
-
-    val scored = TextClassifier.classify(test, model, col("text"))
-      .select(col("lang"), col("pred")).as[(String, String)].collect()
-    assert(scored.nonEmpty)
-    val acc = scored.count(p => p._1 == p._2).toDouble / scored.length
-    assert(acc >= 0.95, s"holdout accuracy $acc")
-  }
-
-  test("training is seeded-deterministic: same data, same predictions") {
-    val df = corpus(60, seed = 3)
-    val m1 = TextClassifier.train(df, col("text"), col("lang"), dims = 1 << 10)
-    val m2 = TextClassifier.train(df, col("text"), col("lang"), dims = 1 << 10)
-    val p1 = TextClassifier.classify(df, m1, col("text"))
-      .select(col("id"), col("pred")).as[(Long, String)].collect().sortBy(_._1)
-    val p2 = TextClassifier.classify(df, m2, col("text"))
-      .select(col("id"), col("pred")).as[(Long, String)].collect().sortBy(_._1)
-    assert(p1.toSeq === p2.toSeq)
-  }
 
   test("charNgrams: sliding substrings; short text survives as one term") {
     val got = Seq(("abcd", 1L), ("ab", 2L)).toDF("t", "id")

@@ -38,16 +38,14 @@ class UnigramSpec extends SparkSpec {
     assert(again === pieces)
   }
 
-  test("segmentCost/segment: exact-integer Viterbi with fewest-pieces " +
-      "tie-break and UNK fallback") {
+  test("segmentCost: exact-integer Viterbi with fewest-pieces tie-break " +
+      "and UNK fallback") {
     // equal-cost tie: "ab" (20) vs "a"+"b" (10+10) -> fewer pieces wins
     val costs = Map("a" -> 10L, "b" -> 10L, "ab" -> 20L)
     assert(Unigram.segmentCost("ab", costs, 2) === ((1, 20L)))
-    assert(Unigram.segment("ab", costs, 2) === Seq("ab"))
     // cheaper composite beats the pair outright
     val cheap = Map("a" -> 10L, "b" -> 10L, "ab" -> 5L)
     assert(Unigram.segmentCost("abab", cheap, 2) === ((2, 10L)))
-    assert(Unigram.segment("abab", cheap, 2) === Seq("ab", "ab"))
     // pricier composite loses to singles
     val dear = Map("a" -> 10L, "b" -> 10L, "ab" -> 50L)
     assert(Unigram.segmentCost("ab", dear, 2) === ((2, 20L)))
@@ -55,12 +53,15 @@ class UnigramSpec extends SparkSpec {
     // single-char piece is absent
     assert(Unigram.segmentCost("axb", costs, 2) ===
       ((3, 20L + Unigram.UnkCost)))
-    assert(Unigram.segment("axb", costs, 2) === Seq("a", "x", "b"))
-    // segmentation always reconstructs the word
+    // over a trained table every training word tiles at most one piece
+    // per code point, and never costs more than its all-single-character
+    // tiling (every character is a trained piece, so no UNK is needed)
     val trained = Unigram.toCosts(Unigram.trainUnigram(toyDict,
       vocabExtra = 8, maxPieceLen = 4, seedSize = 64, emIters = 3)).toMap
     toyDict.foreach { case (w, _) =>
-      assert(Unigram.segment(w, trained, 4).mkString === w)
+      val (pieces, cost) = Unigram.segmentCost(w, trained, 4)
+      assert(pieces >= 1 && pieces <= w.length, w)
+      assert(cost <= w.map(c => trained(c.toString)).sum, w)
     }
   }
 

@@ -99,23 +99,4 @@ class StatefulSpec extends SparkSpec {
       .toMap.toSeq.map { case ((f, t), (n, u)) => (f, t, n, u) }.sorted
     assert(streamedCounts === batch)
   }
-
-  test("cross-batch exact dedup with keyed seen-state (Streams.dedupByKey)") {
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, String)] // (doc_id, payload)
-
-    val deduped = Streams.dedupByKey(mem.toDF().toDF("id", "payload"),
-      org.apache.spark.sql.functions.col("id"))
-
-    val q = deduped.writeStream
-      .format("memory").queryName("dedup_state").outputMode("update").start()
-    mem.addData(("d1", "x"), ("d1", "x-dup"), ("d2", "y"))
-    q.processAllAvailable()
-    mem.addData(("d1", "x-again"), ("d3", "z"))
-    q.processAllAvailable()
-    q.stop()
-
-    val out = spark.table("dedup_state").as[(String, String)].collect().sortBy(_._1)
-    assert(out.map(_._1).toSeq === Seq("d1", "d2", "d3")) // each id exactly once
-  }
 }

@@ -170,55 +170,6 @@ class StreamsSpec extends SparkSpec {
     assert(got === Seq(("ad1", "c1")))
   }
 
-  test("logSink pushes each micro-batch to the message log transactionally") {
-    import graft.connectors.{KafkaWindow, TopicStore}
-    implicit val sqlCtx = spark.sqlContext
-    TopicStore.clear("stream-sink")
-    val store = TopicStore.Factory("stream-sink")
-    val mem = MemoryStream[(Long, String)]
-    val sdf = mem.toDF().toDF("id", "payload")
-    val q = Streams.logSink(sdf, store, lit("st"), lit(5000L) + col("id"),
-      col("id").cast("string"), col("payload")).start()
-    mem.addData((1L, "a"), (2L, "b"))
-    q.processAllAvailable()
-    mem.addData((3L, "c"))
-    q.processAllAvailable()
-    q.stop()
-    val back = KafkaWindow.fromStore(spark, store, "st")
-      .select("ct", "k", "v").as[(Long, String, String)].collect().sortBy(_._1)
-    assert(back === Array((5001L, "1", "a"), (5002L, "2", "b"), (5003L, "3", "c")))
-  }
-
-  test("nearDupIngest admits only near-dup survivors, batch after batch") {
-    import graft.operators.Dedup
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and keeps running onward"))
-      .toDF("doc_id", "text")
-    val state0 = Dedup.NearDupState.build(corpus, col("doc_id"), col("text"))
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    val mem = MemoryStream[(Long, String)]
-    val q = Streams.nearDupIngest(
-      mem.toDF().toDF("doc_id", "text"), col("doc_id"), col("text"), state0,
-      (survivors, batchId) => seen.synchronized {
-        seen += batchId -> survivors.select(col("doc_id"))
-          .collect().map(_.getLong(0)).toSeq.sorted
-      },
-      threshold = 0.7).start()
-    // batch 0: a state dup and a novel doc → only the novel one survives
-    mem.addData(
-      (10L, "the quick brown fox jumps over the lazy dog and keeps running onward"),
-      (11L, "a brand new document with fresh wording nobody has seen before now"))
-    q.processAllAvailable()
-    // batch 1: near-dup of batch-0 survivor + another novel doc
-    mem.addData(
-      (20L, "a brand new document with fresh wording nobody has seen before today"),
-      (21L, "yet another topic unrelated to every other document in this corpus"))
-    q.processAllAvailable()
-    q.stop()
-    assert(seen.toList === List(0L -> Seq(11L), 1L -> Seq(21L)))
-  }
-
   test("NoveltyIngest: admits by novelty vs the folded state, batch unit " +
       "semantics, replay idempotent, superseded pins freed") {
     import graft.operators.Dedup
@@ -232,7 +183,7 @@ class StreamsSpec extends SparkSpec {
       scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     val ing = new Streams.NoveltyIngest(state0, col("doc_id"), col("text"),
       minNovelty = 0.5, shingleK = 3)
-    ing.onSurvivors = (survivors, batchId) => {
+    ing.onDelta = (survivors, batchId) => {
       emitted += survivors
       seen += batchId -> survivors.select(col("doc_id"))
         .collect().map(_.getLong(0)).toSeq.sorted
@@ -269,201 +220,6 @@ class StreamsSpec extends SparkSpec {
     assert(pinnedRdds(ing.current).nonEmpty && pinnedRdds(ing.current)
       .forall(_.getStorageLevel !=
         org.apache.spark.storage.StorageLevel.NONE))
-  }
-
-  test("nearDupBatchHandler: replayed batchId re-emits survivors without " +
-      "re-applying state (at-least-once retry safety)") {
-    import graft.operators.Dedup
-    val corpus = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog and keeps running onward"))
-      .toDF("doc_id", "text")
-    val state0 = Dedup.NearDupState.build(corpus, col("doc_id"), col("text"))
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val ing = new Streams.NearDupIngest(state0,
-      (survivors, batchId) => {
-        emitted += survivors
-        seen += batchId -> survivors.select(col("doc_id"))
-          .collect().map(_.getLong(0)).toSeq.sorted
-      },
-      col("doc_id"), col("text"), shingleK = 3, numHashes = 128,
-      bands = 16, threshold = 0.7)
-    val handler = ing.handler
-
-    val b0 = Seq(
-      (10L, "a brand new document with fresh wording nobody has seen before now"))
-      .toDF("doc_id", "text")
-    handler(b0, 0L)
-    // sink failure → Structured Streaming replays batch 0. Without the
-    // idempotency guard, doc 10 now sits in state and self-matches at
-    // Jaccard 1.0 — the survivor would silently vanish on retry.
-    handler(b0, 0L)
-    // next batch advances normally against once-applied state
-    val b1 = Seq(
-      (20L, "a brand new document with fresh wording nobody has seen before today"),
-      (21L, "yet another topic unrelated to every other document in this corpus"))
-      .toDF("doc_id", "text")
-    handler(b1, 1L)
-    assert(seen.toList === List(0L -> Seq(10L), 0L -> Seq(10L), 1L -> Seq(21L)))
-    // an out-of-order older batchId is a guarded no-op, not a wrong re-emit
-    handler(b0, 0L)
-    assert(seen.size === 3)
-    // superseded SURVIVOR and STATE pins are FREED as batches advance
-    // (the IndexIngest non-growth contract) — asserted per-RDD (the
-    // global persistent-RDD count races with concurrent suites in the
-    // shared session); the LATEST survivors/state must stay pinned
-    val supersededStates = scala.collection.mutable.ArrayBuffer
-      .empty[graft.operators.Dedup.NearDupState]
-    (2 to 6).foreach { i =>
-      supersededStates += ing.current
-      handler(Seq((100L + i,
-        s"a uniquely worded fresh document number $i unlike anything else written"))
-        .toDF("doc_id", "text"), i.toLong)
-    }
-    emitted.dropRight(1).foreach(assertFreed(_, "nearDupBatchHandler survivors"))
-    supersededStates.foreach { s =>
-      assertFreed(s.bands, "nearDupBatchHandler state.bands")
-      assertFreed(s.postings, "nearDupBatchHandler state.postings")
-    }
-    assert(pinnedRdds(emitted.last).nonEmpty &&
-      pinnedRdds(emitted.last).forall(
-        _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the LATEST batch's survivors must stay pinned for replay")
-    assert(pinnedRdds(ing.current.bands).forall(
-      _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the CURRENT state must stay pinned")
-  }
-
-  test("imageBatchHandler: perceptual dedup vs state, idempotent on replay") {
-    import graft.operators.Multimodal
-    // the shared deterministic renderer (same picture as MultimodalSpec
-    // and the mm_phash_pairs registry query)
-    def png(seedShift: Int, w: Int = 72, h: Int = 64): Array[Byte] =
-      graft.queries.Pipeline.patternPng(w, h, seedShift)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val ing = new Streams.ImageIngest(
-      Multimodal.emptyPhashState(spark),
-      (survivors, batchId) => {
-        emitted += survivors
-        seen += batchId -> survivors.select(col("id"))
-          .collect().map(_.getLong(0)).toSeq.sorted
-      },
-      col("id"), col("payload"), maxHamming = 4)
-    val handler = ing.handler
-    // batch 0: picture A and a rescale of A (within-batch dup)
-    val b0 = Seq((1L, png(0)), (2L, png(0, 144, 128))).toDF("id", "payload")
-    handler(b0, 0L)
-    // replay of batch 0 re-emits, does not self-match against state
-    handler(b0, 0L)
-    // batch 1: another rescale of A (state dup) + a fresh picture
-    val b1 = Seq((10L, png(0, 108, 96)), (11L, png(131))).toDF("id", "payload")
-    handler(b1, 1L)
-    assert(seen.toList === List(0L -> Seq(1L), 0L -> Seq(1L), 1L -> Seq(11L)))
-    // superseded survivor AND state pins are freed as batches advance —
-    // per-RDD assertion (a global count races with other suites); the
-    // latest survivors/state must stay pinned
-    val supersededStates =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    (2 to 6).foreach { i =>
-      supersededStates += ing.current
-      handler(Seq((100L + i, png(17 * i + 3))).toDF("id", "payload"), i.toLong)
-    }
-    emitted.dropRight(1).foreach(assertFreed(_, "imageBatchHandler survivors"))
-    supersededStates.foreach(assertFreed(_, "imageBatchHandler state"))
-    assert(pinnedRdds(emitted.last).nonEmpty &&
-      pinnedRdds(emitted.last).forall(
-        _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the LATEST batch's survivors must stay pinned for replay")
-    assert(pinnedRdds(ing.current).forall(
-      _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the CURRENT state must stay pinned")
-  }
-
-  test("streaming index serves BM25: bm25TopKFromPostings over " +
-      "IndexIngest.current after several batches equals the clean batch " +
-      "build over the same corpus — the end-to-end retrieval composition " +
-      "(maintain while streaming, serve without tokenizing)") {
-    import graft.operators.TextIndex
-    val ing = new Streams.IndexIngest(
-      TextIndex.postings(spark.emptyDataset[(Long, String)]
-        .toDF("doc_id", "text"), col("doc_id"), col("text")),
-      col("doc_id"), col("text"))
-    val batches = Seq(
-      Seq((1L, "alpha beta beta gamma"), (2L, "alpha alpha delta")),
-      Seq((3L, "beta gamma gamma gamma"), (1L, "alpha beta epsilon")), // doc 1 CHANGED
-      Seq((4L, "delta epsilon alpha beta")))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      ing.handler(b.toDF("doc_id", "text"), i.toLong)
-    }
-    // the effective corpus after replace semantics: latest text per doc
-    val corpus = Seq((1L, "alpha beta epsilon"), (2L, "alpha alpha delta"),
-      (3L, "beta gamma gamma gamma"), (4L, "delta epsilon alpha beta"))
-      .toDF("doc_id", "text")
-    val qt = Seq((10L, "alpha"), (10L, "gamma"), (11L, "epsilon"))
-      .toDF("qid", "term")
-    // maintained doc count rides alongside the index (the corpusSize
-    // contract: ALL docs, not an index-derived distinct)
-    val n = Seq(Tuple1(4L)).toDF("__n")
-    val served = TextIndex.bm25TopKFromPostings(ing.current, n, qt, k = 3)
-      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    val clean = TextIndex.bm25TopK(corpus, col("doc_id"), col("text"), qt, k = 3)
-      .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2)).toSeq
-    assert(served === clean)
-    assert(served.nonEmpty)
-  }
-
-  test("IndexIngest: batches fold into the posting table with replace " +
-      "semantics; replay re-emits the pinned delta without re-folding") {
-    import graft.operators.TextIndex
-    val state0 = TextIndex.postings(
-      Seq((1L, "a a b"), (2L, "c d")).toDF("doc_id", "text"),
-      col("doc_id"), col("text"))
-    val ing = new Streams.IndexIngest(state0, col("doc_id"), col("text"))
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    ing.onDelta = (delta, batchId) => seen += batchId -> delta.count()
-    // batch 0 re-ingests doc 2 (changed) and adds doc 3
-    val b0 = Seq((2L, "x y y"), (3L, "z")).toDF("doc_id", "text")
-    ing.handler(b0, 0L)
-    val expect = TextIndex.postings(
-        Seq((1L, "a a b"), (2L, "x y y"), (3L, "z")).toDF("doc_id", "text"),
-        col("doc_id"), col("text"))
-      .as[(Long, String, Long)].collect().sortBy(t => (t._1, t._2)).toSeq
-    def cur = ing.current.as[(Long, String, Long)].collect()
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(cur === expect)
-    // replay: delta re-emitted, state untouched
-    ing.handler(b0, 0L)
-    assert(seen.toList === List(0L -> 3L, 0L -> 3L))
-    assert(cur === expect)
-    // next batch folds on top
-    ing.handler(Seq((1L, "q")).toDF("doc_id", "text"), 1L)
-    assert(cur.filter(_._1 == 1L) === Seq((1L, "q", 1L)))
-    assert(seen.last === (1L -> 1L))
-    // an out-of-order OLDER batchId is a guarded no-op: no re-emit, no
-    // state change (Structured Streaming only ever retries the latest)
-    val snapshot = cur
-    ing.handler(b0, 0L)
-    assert(cur === snapshot)
-    assert(seen.size === 3)
-    // superseded state pins are FREED as batches advance: the index is
-    // corpus-sized, so a long-running stream must hold O(index) blocks,
-    // not O(batches × index). Per-RDD assertion on each superseded state
-    // snapshot (a global persistent-RDD count races with other suites).
-    val supersededStates =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    (2 to 6).foreach { i =>
-      supersededStates += ing.current
-      ing.handler(Seq((100L + i, s"w$i")).toDF("doc_id", "text"), i.toLong)
-    }
-    supersededStates.foreach(assertFreed(_, "IndexIngest state"))
-    assert(pinnedRdds(ing.current).nonEmpty &&
-      pinnedRdds(ing.current).forall(
-        _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the CURRENT state must stay pinned")
-    assert(cur.filter(_._1 == 106L) === Seq((106L, "w6", 1L)))
   }
 
   test("FoldIngest scaffold contract: mkDelta sees the PRE-fold state and " +
@@ -556,12 +312,12 @@ class StreamsSpec extends SparkSpec {
     state0.unpersist()
   }
 
-  test("LmIngest: an onDelta that throws leaves no fold behind; the retry " +
-      "of the same batchId folds the batch exactly once") {
+  test("TokenCountIngest: an onDelta that throws leaves no fold behind; " +
+      "the retry of the same batchId folds the batch exactly once") {
     import graft.operators.TextIndex
-    val state0 = TextIndex.bigramLmCounts(
+    val state0 = TextIndex.tokenFpCounts(
       Seq("a b a b", "c d").toDF("text"), col("text"))
-    val ing = new Streams.LmIngest(state0, col("text"))
+    val ing = new Streams.TokenCountIngest(state0, col("text"))
     val deltas =
       scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
     ing.onDelta = (d, _) => {
@@ -575,58 +331,10 @@ class StreamsSpec extends SparkSpec {
     assertFreed(deltas.head, "the failed attempt's delta")
     ing.handler(b0, 0L) // the stream retries the same batchId
     assert(deltas.size === 2)
-    val expect = TextIndex.bigramLmCounts(
+    val expect = TextIndex.tokenFpCounts(
         Seq("a b a b", "c d", "a b c", "d").toDF("text"), col("text"))
-      .as[(String, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
-    assert(ing.current.as[(String, Long, Long)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap === expect)
-  }
-
-  test("LmIngest: additive count fold across batches equals the clean " +
-      "rebuild; replay re-emits WITHOUT re-folding (a re-fold would " +
-      "double-count); superseded pins freed") {
-    import graft.operators.TextIndex
-    val state0 = TextIndex.bigramLmCounts(
-      Seq("a b a b", "c d").toDF("text"), col("text"))
-    val ing = new Streams.LmIngest(state0, col("text"))
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
-    ing.onDelta = (_, batchId) => seen += batchId
-    val b0 = Seq("a b c", "d").toDF("text")
-    ing.handler(b0, 0L)
-    def cur = ing.current.as[(String, Long, Long)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    val expect = TextIndex.bigramLmCounts(
-        Seq("a b a b", "c d", "a b c", "d").toDF("text"), col("text"))
-      .as[(String, Long, Long)].collect().map(t => (t._1, t._2) -> t._3).toMap
-    assert(cur === expect)
-    // replay of the SAME batch: counts must not double
-    ing.handler(b0, 0L)
-    assert(cur === expect)
-    assert(seen.toList === List(0L, 0L))
-    // older batchId after progress: guarded no-op
-    ing.handler(Seq("e e").toDF("text"), 1L)
-    val after1 = cur
-    ing.handler(b0, 0L)
-    assert(cur === after1)
-    assert(seen.size === 3)
-    // pin lifecycle: superseded states freed, current stays pinned
-    val superseded =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    (2 to 5).foreach { i =>
-      superseded += ing.current
-      ing.handler(Seq(s"w$i x$i").toDF("text"), i.toLong)
-    }
-    superseded.foreach(assertFreed(_, "LmIngest state"))
-    assert(pinnedRdds(ing.current).nonEmpty &&
-      pinnedRdds(ing.current).forall(
-        _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the CURRENT model must stay pinned")
-    // and the maintained model actually serves the frozen-score path
-    val scored = TextIndex.lmScoreAgainst(
-        Seq((1L, "a b")).toDF("id", "text"), col("id"), col("text"),
-        ing.current, thresholdBits = 64.0)
-      .as[(Long, Long, Long, Double, Boolean)].collect()
-    assert(scored.length === 1 && scored.head._2 === 1L)
+      .as[(Long, Long)].collect().toMap
+    assert(ing.current.as[(Long, Long)].collect().toMap === expect)
   }
 
   test("TokenCountIngest: additive unigram-count fold equals the clean " +
@@ -664,63 +372,6 @@ class StreamsSpec extends SparkSpec {
       .select(col("hellinger"), col("tv_dist"))
       .as[(Double, Double)].collect().head
     assert(served === ((0.0, 0.0)))
-  }
-
-  test("semanticBatchHandler: cluster-assigned dedup vs state, " +
-      "idempotent on replay") {
-    import graft.operators.Dedup
-    val rnd = new scala.util.Random(9)
-    val bases = Array.fill(2)(Array.fill(8)(rnd.nextFloat() * 2 - 1))
-    def near(b: Int) = bases(b).map(x => x + (rnd.nextFloat() * 2 - 1) * 0.005f)
-    def far() = Array.fill(8)(rnd.nextFloat() * 2 - 1)
-    val cents = bases.zipWithIndex.map { case (c, i) => (i.toLong, c.toSeq) }
-      .toSeq.toDF("cid", "cv")
-    // admitted state: one doc tight on base 0
-    val state0 = graft.operators.Similarity.assignToCentroids(
-      Seq((1L, near(0))).toDF("vec_id", "embedding"),
-      col("vec_id"), col("embedding"), cents)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    val emitted =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    val ing = new Streams.SemanticIngest(state0,
-      (survivors, batchId) => {
-        emitted += survivors
-        seen += batchId -> survivors.select(col("id"))
-          .collect().map(_.getLong(0)).toSeq.sorted
-      },
-      col("vec_id"), col("embedding"), cents, threshold = 0.98)
-    val handler = ing.handler
-
-    // batch 0: a state dup (base 0), an intra-batch dup pair (base 1 twice,
-    // lowest id wins), and the far vector may land anywhere but is unique
-    val b0 = Seq((10L, near(0)), (11L, near(1)), (12L, near(1)))
-      .toDF("vec_id", "embedding")
-    handler(b0, 0L)
-    assert(seen.toList === List(0L -> Seq(11L)))
-    // sink retry replays batch 0: same survivors, state untouched
-    handler(b0, 0L)
-    assert(seen.toList === List(0L -> Seq(11L), 0L -> Seq(11L)))
-    // batch 1: dup of the batch-0 survivor is dropped against state
-    val b1 = Seq((20L, near(1))).toDF("vec_id", "embedding")
-    handler(b1, 1L)
-    assert(seen.last === (1L -> Seq()))
-    // an older batchId is a guarded no-op
-    handler(b0, 0L)
-    assert(seen.size === 3)
-    // superseded survivor AND state pins are freed as batches advance —
-    // per-RDD assertion (a global count races with other suites)
-    val supersededStates =
-      scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-    (2 to 6).foreach { i =>
-      supersededStates += ing.current
-      handler(Seq((100L + i.toLong, far().toSeq))
-        .toDF("vec_id", "embedding"), i.toLong)
-    }
-    emitted.dropRight(1).foreach(assertFreed(_, "semanticBatchHandler survivors"))
-    supersededStates.foreach(assertFreed(_, "semanticBatchHandler state"))
-    assert(pinnedRdds(ing.current).forall(
-      _.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE),
-      "the CURRENT state must stay pinned")
   }
 
   test("sessionCounts merges events within the gap, splits beyond it") {
