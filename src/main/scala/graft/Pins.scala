@@ -36,13 +36,12 @@ object Pins {
 
   private val pinned = new ConcurrentLinkedQueue[Dataset[_]]
 
-  /** Persist `ds` (MEMORY_AND_DISK — the multi-consumer default: spill
+  /** Persist `ds` (MEMORY_AND_DISK — the multi-consumer level: spill
     * beats recompute for corpus-derived frames) and register it for the
     * next [[unpinAll]]. Returns `ds` for call-site chaining.
     */
-  def pin[T](ds: Dataset[T],
-      level: StorageLevel = StorageLevel.MEMORY_AND_DISK): Dataset[T] = {
-    ds.persist(level)
+  def pin[T](ds: Dataset[T]): Dataset[T] = {
+    ds.persist(StorageLevel.MEMORY_AND_DISK)
     pinned.add(ds)
     ds
   }

@@ -209,30 +209,28 @@ object Http {
     Row(r.code, r.headers, r.content)
   }
 
-  /** Appends `resultCol: struct<code,headers,content>` with the GET response
+  /** Appends `resp: struct<code,headers,content>` with the GET response
     * for `url` evaluated per row. mapPartitions-based: rows stream through one
     * shared client, no collect, scales with the number of partitions.
     */
   def withGet(df: DataFrame, url: Column, timeoutMs: Int = DefaultTimeoutMs,
       headers: Map[String, String] = Map.empty,
-      resultCol: String = "resp",
       retry: HttpRetryPolicy = HttpRetryPolicy.None,
       maxRequestsPerSecond: Double = 0): DataFrame =
-    withFetch(df, url, lit(null).cast("string"), timeoutMs, headers, resultCol,
+    withFetch(df, url, lit(null).cast("string"), timeoutMs, headers,
       post = false, retry, maxRequestsPerSecond)
 
   /** POST variant: `body` is evaluated per row and sent as a string entity. */
   def withPost(df: DataFrame, url: Column, body: Column,
       timeoutMs: Int = DefaultTimeoutMs,
       headers: Map[String, String] = Map.empty,
-      resultCol: String = "resp",
       retry: HttpRetryPolicy = HttpRetryPolicy.None,
       maxRequestsPerSecond: Double = 0): DataFrame =
-    withFetch(df, url, body, timeoutMs, headers, resultCol, post = true, retry,
+    withFetch(df, url, body, timeoutMs, headers, post = true, retry,
       maxRequestsPerSecond)
 
   private def withFetch(df: DataFrame, url: Column, body: Column, timeoutMs: Int,
-      headers: Map[String, String], resultCol: String, post: Boolean,
+      headers: Map[String, String], post: Boolean,
       retry: HttpRetryPolicy = HttpRetryPolicy.None,
       maxRequestsPerSecond: Double = 0): DataFrame = {
     // HTTP is latency-bound: concurrency = partition count, and the rows
@@ -248,7 +246,7 @@ object Http {
     val widened = df.repartition(math.max(par, df.rdd.getNumPartitions))
     val in = widened.withColumn("__graft_url", url).withColumn("__graft_body", body)
     val n = in.schema.size
-    val outSchema = StructType(df.schema.fields :+ StructField(resultCol, resultType))
+    val outSchema = StructType(df.schema.fields :+ StructField("resp", resultType))
     in.mapPartitions { rows =>
       // per-PARTITION limiter: cluster-wide rate = rps x partitions
       val limiter =

@@ -127,9 +127,8 @@ object Kv {
   }
 
   /** jd_get: appends `ret: string` = GET(key). */
-  def withGet(df: DataFrame, key: Column, factory: KvClientFactory,
-      ret: String = "ret"): DataFrame =
-    append(df, factory, Seq(key), StructField(ret, StringType)) {
+  def withGet(df: DataFrame, key: Column, factory: KvClientFactory): DataFrame =
+    append(df, factory, Seq(key), StructField("ret", StringType)) {
       (c, a) => c.get(a.head.asInstanceOf[String])
     }
 
@@ -169,9 +168,8 @@ object Kv {
     * IllegalArgumentException naming it; none of that row's pairs is
     * written.
     */
-  def withMSet(df: DataFrame, pairs: Column, factory: KvClientFactory,
-      ret: String = "ret"): DataFrame =
-    append(df, factory, Seq(pairs), StructField(ret, StringType)) { (c, a) =>
+  def withMSet(df: DataFrame, pairs: Column, factory: KvClientFactory): DataFrame =
+    append(df, factory, Seq(pairs), StructField("ret", StringType)) { (c, a) =>
       def pair(k: Any, v: Any): (String, String) =
         if (k == null) throw new IllegalArgumentException("withMSet: null key")
         else if (v == null)

@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Execution-journal record
@@ -24,9 +24,18 @@ class Journal(spark: SparkSession, dir: String) {
   def save(rec: ExecutionRecord): Unit =
     Seq(rec).toDS().write.mode(SaveMode.Append).parquet(dir)
 
+  /** The journal's rows. Only a directory that is absent or holds no data
+    * file reads as empty (no job has run yet); any other read error — a
+    * corrupt file, an unreadable schema — propagates with its cause, since
+    * an empty answer there would run every job on every tick.
+    */
   private def table() =
     try spark.read.parquet(dir)
-    catch { case _: Exception => spark.emptyDataset[ExecutionRecord].toDF() }
+    catch {
+      case e: AnalysisException
+          if Journal.NoJournalYet.contains(e.getCondition) =>
+        spark.emptyDataset[ExecutionRecord].toDF()
+    }
 
   def lastExecution(path: String): Option[ExecutionRecord] =
     table().filter(col("path") === path)
@@ -39,4 +48,10 @@ class Journal(spark: SparkSession, dir: String) {
     table().filter(col("path") === path)
       .orderBy(col("startedAt"))
       .as[ExecutionRecord].collect().toSeq
+}
+
+object Journal {
+  /** Read errors that mean no record was ever saved: the directory is
+    * absent, or it holds no data file to infer a schema from. */
+  private val NoJournalYet = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 }

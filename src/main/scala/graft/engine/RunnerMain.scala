@@ -1,6 +1,7 @@
 package graft.engine
 
 import java.time.Duration
+import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
@@ -28,10 +29,14 @@ object RunnerMain {
 
   private val IntervalRe = """(?m)^(?:--|//)\s*interval:\s*(\S+)\s*$""".r
 
+  /** The run interval of a script without an interval header: the
+    * reference's PT1M. */
+  private val DefaultInterval = Duration.ofMinutes(1)
+
   def intervalOf(src: String): Duration =
     IntervalRe.findFirstMatchIn(src)
       .map(m => Duration.parse(m.group(1)))
-      .getOrElse(Duration.ofMinutes(1))
+      .getOrElse(DefaultInterval)
 
   /** One scheduler pass over the directory; returns (script, status). */
   def tick(spark: SparkSession, scriptsDir: String, journal: Journal,
@@ -43,16 +48,21 @@ object RunnerMain {
       .filter(p => p.endsWith(".scala") || p.endsWith(".sql"))
       .foreach { path =>
         val src = fs.cat(path)
-        val job =
-          if (path.endsWith(".scala"))
-            Job(path, intervalOf(src), s => scalaJobs.instance(path)(s))
-          else
-            Job(path, intervalOf(src), { s =>
+        val job = Try(intervalOf(src)) match {
+          // a malformed interval header fails this script alone: its job
+          // rethrows the parse error, so the runner journals it FAILED,
+          // gated at the default interval, and the other scripts still run
+          case Failure(e) => Job(path, DefaultInterval, _ => throw e)
+          case Success(interval) if path.endsWith(".scala") =>
+            Job(path, interval, s => scalaJobs.instance(path)(s))
+          case Success(interval) =>
+            Job(path, interval, { s =>
               // a failing statement throws, so the job journals FAILED
               // with the statement and its cause
               new SqlRunner(s).runScriptStrict(src)
               SqlScript.split(src).map(_ => "OK").mkString(",")
             })
+        }
         runner.register(job)
       }
     runner.runOnce()

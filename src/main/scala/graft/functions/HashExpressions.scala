@@ -211,12 +211,11 @@ case class SimHash128(child: Expression)
 
 /** Sign-random-projection bucket over an array<float> embedding: bit j is the
   * sign of dot(plane_j, vec) with deterministic md5-derived hyperplanes
-  * plane_j[d] = hash32("plane:j:d") / 2^31 - 1 — identical to the HOF
-  * formulation in graft.operators.Similarity.srpBucket (and its DuckDB
-  * oracle), but the plane components are computed once per (bits, dims) and
+  * plane_j[d] = hash32("plane:j:d") / 2^31 - 1 — the salt and planes the
+  * DuckDB oracles replay, but the plane components are computed once per (bits, dims) and
   * cached, not re-hashed per row.
   */
-case class SrpBucket(child: Expression, bits: Int, seed: String = "plane")
+case class SrpBucket(child: Expression, bits: Int)
     extends UnaryExpression with NativeUnaryCodegen {
 
   override def dataType: DataType = LongType
@@ -229,7 +228,7 @@ case class SrpBucket(child: Expression, bits: Int, seed: String = "plane")
   private def planes(dims: Int): Array[Array[Double]] =
     planeCache.computeIfAbsent(dims, d =>
       Array.tabulate(bits, d)((j, dim) =>
-        Md5Hash.hash32(s"$seed:$j:$dim").toDouble / 2147483648.0 - 1.0))
+        Md5Hash.hash32(s"plane:$j:$dim").toDouble / 2147483648.0 - 1.0))
 
   override protected def nullSafeEval(input: Any): Any = {
     val vec = input.asInstanceOf[ArrayData]
@@ -254,7 +253,7 @@ case class SrpBucket(child: Expression, bits: Int, seed: String = "plane")
 
 /** Johnson–Lindenstrauss random projection of an `array<float>` embedding to
   * `outDims` dimensions with a Rademacher (±1) matrix: out_j = Σ_d s_jd·x_d,
-  * s_jd = +1 when md5-hash32("seed:j:d") is even, −1 otherwise — the signs
+  * s_jd = +1 when md5-hash32("jl:j:d") is even, −1 otherwise — the signs
   * are content-addressed, so corpus and queries project identically on any
   * cluster with no matrix to distribute, and the DuckDB oracle can replay
   * them. Each accumulator is a strict left-to-right double fold (d order)
@@ -262,7 +261,7 @@ case class SrpBucket(child: Expression, bits: Int, seed: String = "plane")
   * in expectation (JL lemma); re-rank survivors in the original space when
   * exactness matters.
   */
-case class JlProject(child: Expression, outDims: Int, seed: String = "jl")
+case class JlProject(child: Expression, outDims: Int)
     extends UnaryExpression with NativeUnaryCodegen {
   require(outDims > 0, s"outDims must be positive, got $outDims")
 
@@ -276,7 +275,7 @@ case class JlProject(child: Expression, outDims: Int, seed: String = "jl")
   private def signs(dims: Int): Array[Array[Double]] =
     signCache.computeIfAbsent(dims, d =>
       Array.tabulate(outDims, d)((j, dim) =>
-        if (Md5Hash.hash32(s"$seed:$j:$dim") % 2 == 0) 1.0 else -1.0))
+        if (Md5Hash.hash32(s"jl:$j:$dim") % 2 == 0) 1.0 else -1.0))
 
   override protected def nullSafeEval(input: Any): Any = {
     val vec = input.asInstanceOf[ArrayData]
@@ -568,10 +567,10 @@ object HashFunctions {
     ExpressionUtilsShim.column(SimHash60(ExpressionUtilsShim.expr(tokens)))
   def simHash128(tokens: Column): Column =
     ExpressionUtilsShim.column(SimHash128(ExpressionUtilsShim.expr(tokens)))
-  def srpBucket(vec: Column, bits: Int, seed: String = "plane"): Column =
-    ExpressionUtilsShim.column(SrpBucket(ExpressionUtilsShim.expr(vec), bits, seed))
-  def jlProject(vec: Column, outDims: Int, seed: String = "jl"): Column =
-    ExpressionUtilsShim.column(JlProject(ExpressionUtilsShim.expr(vec), outDims, seed))
+  def srpBucket(vec: Column, bits: Int): Column =
+    ExpressionUtilsShim.column(SrpBucket(ExpressionUtilsShim.expr(vec), bits))
+  def jlProject(vec: Column, outDims: Int): Column =
+    ExpressionUtilsShim.column(JlProject(ExpressionUtilsShim.expr(vec), outDims))
   def wordShingleSet(tokens: Column, k: Int): Column =
     ExpressionUtilsShim.column(WordShingleSet(ExpressionUtilsShim.expr(tokens), k))
 }

@@ -15,9 +15,10 @@ import org.apache.spark.sql.functions._
 object Augment {
 
   /** Word dropout: token `i` (1-based) of document `id` drops iff
-    * hash32("seed:id:i:token") mod `rate` = 0 — an expected 1/rate of
-    * tokens, chosen independently per position, stable under any
-    * partitioning. Output: (id, n_tok, n_dropped, text_aug).
+    * hash32("aug:id:i:token") mod 10 = 0 ([[DropoutSeed]],
+    * [[DropoutRate]]) — an expected tenth of tokens, chosen independently
+    * per position, stable under any partitioning. Output: (id, n_tok,
+    * n_dropped, text_aug).
     *
     * Scale shape: MAP-ONLY — one tokenize, one compiled
     * [[org.apache.spark.sql.graft.WordDropoutKeep]] hash pass, one
@@ -25,15 +26,13 @@ object Augment {
     * formulation is retained below as the spec reference — it measured
     * ~3.9× slower at stress ×64.)
     */
-  def wordDropout(df: DataFrame, id: Column, text: Column, rate: Int = 10,
-      seed: String = "aug"): DataFrame = {
-    require(rate >= 2, s"rate must be >= 2 (drop 1/rate), got $rate")
+  def wordDropout(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.PatternFunctions
     val toks = graft.functions.TextFunctions.tokensWs(text)
     df.select(id.cast("long").as("id"), toks.as("__toks"))
       .select(col("id"), size(col("__toks")).as("n_tok"),
-        PatternFunctions.wordDropoutKeep(col("__toks"), col("id"), seed,
-          rate).as("__kept"))
+        PatternFunctions.wordDropoutKeep(col("__toks"), col("id"),
+          DropoutSeed, DropoutRate).as("__kept"))
       .select(col("id"), col("n_tok"),
         (col("n_tok") - size(col("__kept"))).as("n_dropped"),
         array_join(col("__kept"), " ").as("text_aug"))
@@ -46,8 +45,9 @@ object Augment {
     * sentinel — the denoising-objective pair, reproducible everywhere
     * (same [[wordDropout]] stance: a nondeterministic corruptor mints
     * unscreenable fresh text every epoch). A position starts a mask iff
-    * hash32("seed:id:pos") mod `rate` = 0; every position within
-    * `spanLen` after a start is masked; overlapping starts merge
+    * hash32("t5:id:pos") mod 10 = 0; every position within 3 after a
+    * start is masked ([[SpanSeed]], [[SpanRate]], [[SpanLen]]: about 27%
+    * of positions masked); overlapping starts merge
     * (stateless — which is what makes the rule SQL-replayable).
     * Start decisions hash the position only, so corruption pattern and
     * content are independent, as the objective intends.
@@ -57,20 +57,27 @@ object Augment {
     * Scale shape: MAP-ONLY — one tokenize + one compiled
     * [[org.apache.spark.sql.graft.SpanCorrupt]] pass; nothing shuffles.
     */
-  def spanCorruption(df: DataFrame, id: Column, text: Column,
-      rate: Int = 10, spanLen: Int = 3, seed: String = "t5"): DataFrame = {
+  def spanCorruption(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.PatternFunctions
     val toks = graft.functions.TextFunctions.tokensWs(text)
     df.select(id.cast("long").as("id"), toks.as("__toks"))
       .select(col("id"), size(col("__toks")).as("n_tok"),
-        PatternFunctions.spanCorrupt(col("__toks"), col("id"), seed, rate,
-          spanLen).as("__c"))
+        PatternFunctions.spanCorrupt(col("__toks"), col("id"), SpanSeed,
+          SpanRate, SpanLen).as("__c"))
       .select(col("id"), col("n_tok"),
         col("__c.n_masked").as("n_masked"),
         col("__c.n_spans").as("n_spans"),
         col("__c.input").as("input_text"),
         col("__c.target").as("target_text"))
   }
+
+  /** The hash salts, rates and span length of the two augmenters: the
+    * values the word_dropout and span_corruption oracles replay. */
+  private[operators] val DropoutSeed = "aug"
+  private[operators] val DropoutRate = 10
+  private val SpanSeed = "t5"
+  private val SpanRate = 10
+  private val SpanLen = 3
 
   /** The declarative formulation [[wordDropout]]'s native expression
     * replaced — retained as the SPEC REFERENCE (AugmentSpec asserts

@@ -164,6 +164,26 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
+  /** Word-shingle width of the near-dup state: the 3-word sets the
+    * `dedup_incremental` oracle replays. */
+  private val NearDupShingleK = 3
+  /** 128 MinHash rows in 16 bands of 8: the LSH S-curve midpoint
+    * (1/16)^(1/8) ≈ 0.71 sits below [[NearDupThreshold]], so a pair at
+    * the cut collides in some band with probability ≈ 0.95. */
+  private val NearDupHashes = 128
+  private val NearDupBands = 16
+  /** The exact-Jaccard verify cut, the oracle's `>= 0.8`. */
+  private val NearDupThreshold = 0.8
+
+  /** (id, sig, set): the near-dup state's one signature and shingle pass
+    * over a batch's or a bootstrap corpus's text. */
+  private def nearDupSigSets(df: DataFrame, id: Column, text: Column): DataFrame =
+    widen(df.select(id.as("id"), text.as("__t")))
+      .select(col("id"),
+        minHashSignature(col("__t"), NearDupShingleK, NearDupHashes).as("sig"),
+        HashFunctions.wordShingleSet(
+          TextFunctions.tokensWs(col("__t")), NearDupShingleK).as("set"))
+
   /** Carried state for [[minHashIncremental]]: the LSH band table and the
     * shingle-fingerprint postings of every document admitted so far. Both
     * are compact long-rows (band keys ~20 B, postings 8 B/shingle) — the
@@ -205,17 +225,11 @@ object Dedup {
       * bucketed writes consume the cached frame once each, after which the
       * state lives as tables and the cache can be dropped.
       */
-    def build(corpus: DataFrame, id: Column, text: Column,
-        shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16): NearDupState = {
-      require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
-      val combined = widen(corpus.select(id.as("id"), text.as("__t")))
-        .select(col("id"),
-          minHashSignature(col("__t"), shingleK, numHashes).as("sig"),
-          HashFunctions.wordShingleSet(
-            TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
+    def build(corpus: DataFrame, id: Column, text: Column): NearDupState = {
+      val combined = nearDupSigSets(corpus, id, text)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       NearDupState(
-        explodeBands(combined, bands, numHashes / bands),
+        explodeBands(combined, NearDupBands, NearDupHashes / NearDupBands),
         shinglePostings(combined.select(col("id"), col("set"))),
         cached = Some(combined))
     }
@@ -401,22 +415,15 @@ object Dedup {
     * cost is bounded by band collisions, not |batch|×|corpus|.
     */
   def minHashIncremental(fresh: DataFrame, id: Column, text: Column,
-      state: NearDupState, shingleK: Int = 3, numHashes: Int = 128,
-      bands: Int = 16, threshold: Double = 0.8): (DataFrame, NearDupState) = {
-    require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
+      state: NearDupState): (DataFrame, NearDupState) = {
     // 0. ONE signature/shingle pass over the batch text: (id, sig, set) is
     // computed in a single widened projection (WSCG shares the tokenization
     // subexpression) and pinned — every later stage (within-batch pairs,
     // band table, postings) derives from this frame by projection or
     // id-filter, never by re-reading batch text. This is the per-batch
     // job-count floor: the batch is tokenized/shingled exactly once.
-    val combined = widen(fresh.select(id.as("id"), text.as("__t")))
-      .select(col("id"),
-        minHashSignature(col("__t"), shingleK, numHashes).as("sig"),
-        HashFunctions.wordShingleSet(
-          TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
-      .localCheckpoint()
-    val batchBands = explodeBands(combined, bands, numHashes / bands)
+    val combined = nearDupSigSets(fresh, id, text).localCheckpoint()
+    val batchBands = explodeBands(combined, NearDupBands, NearDupHashes / NearDupBands)
 
     // 1. within-batch collapse: verified pairs → components → min-id reps.
     // Same verification as minHashPairs (exact Jaccard over the shingle
@@ -437,7 +444,7 @@ object Dedup {
       .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
       .withColumn("jaccard", col("inter").cast("double") /
         (size(col("set_a")) + size(col("set_b")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= NearDupThreshold)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint()
     val (reps, repIds) =
@@ -476,7 +483,7 @@ object Dedup {
       .groupBy(col("fresh_id"), col("state_id"), col("fsz"), col("ssz"))
       .agg(count(lit(1)).as("inter"))
       .filter(col("inter").cast("double") /
-        (col("fsz") + col("ssz") - col("inter")).cast("double") >= threshold)
+        (col("fsz") + col("ssz") - col("inter")).cast("double") >= NearDupThreshold)
       .select(col("fresh_id")).distinct()
 
     val survivors = reps.join(matched, id === col("fresh_id"), "left_anti")
@@ -501,8 +508,8 @@ object Dedup {
     * round count drops from O(graph diameter) to O(log² n) — a 1000-hop
     * chain finishes in a handful of rounds instead of 1000. Every round is
     * two groupBy+join passes over (long, long) edges; frames are
-    * localCheckpoint-ed per round so iterated plans never nest. `maxIter`
-    * bounds pathology.
+    * localCheckpoint-ed per round so iterated plans never nest.
+    * [[ComponentsMaxIter]] bounds pathology.
     *
     * Fixpoint probe: a state is a fixpoint of the alternation iff it is a
     * disjoint union of downhill STARS — every src has out-degree exactly 1
@@ -523,31 +530,49 @@ object Dedup {
     * TINY relative to the corpus (233 pairs from 4 750 sf0.1 batch docs),
     * and any distributed iteration pays multi-second scheduler overhead on
     * them — so when the deduplicated edge count is at most
-    * `localEdgeThreshold` (and ids are integral), the edges collect to the
-    * driver and a path-compressed min-root union-find labels them in one
-    * pass (the same measured-auto-strategy stance as the Jaccard join).
-    * Memory honesty: at the 1 M-edge default the transient driver cost is
-    * a few hundred MB (collected Rows plus boxed HashMap/node-set entries
-    * — NOT just the 16 MB of raw longs); raise the threshold only with
-    * driver heap to match. The ×16 stress corpus (~665 k pairs) stays
-    * local; the ×64 one (~11 M) takes the distributed star loop.
+    * [[LocalComponentsMaxEdges]] (and ids are integral), the edges collect
+    * to the driver and a path-compressed min-root union-find labels them
+    * in one pass (the same measured-auto-path stance as the Jaccard
+    * join). The ×16 stress corpus (~665 k pairs) stays local; the ×64 one
+    * (~11 M) takes the distributed star loop ([[starComponents]]).
     * Output: (id, component) — one row per node appearing in `pairs`.
     */
-  def components(pairs: DataFrame, maxIter: Int = 20,
-      localEdgeThreshold: Long = 1000000L): DataFrame = {
-    // evaluate the (often expensive — LSH band joins) pair plan EXACTLY
-    // once: canonicalize to downhill (larger → smaller) edges, self-loops
-    // still included, and checkpoint; everything below feeds off these
-    // blocks
-    val edges0 = pairs
-      .select(greatest(col("id_a"), col("id_b")).as("src"),
-        least(col("id_a"), col("id_b")).as("dst"))
-      .distinct().localCheckpoint()
+  def components(pairs: DataFrame): DataFrame = {
+    val edges0 = downhillEdges(pairs)
     val integral = edges0.schema.fields.forall(f =>
       f.dataType == org.apache.spark.sql.types.LongType ||
         f.dataType == org.apache.spark.sql.types.IntegerType)
-    if (integral && edges0.count() <= localEdgeThreshold)
-      return componentsLocal(edges0)
+    if (integral && edges0.count() <= LocalComponentsMaxEdges)
+      componentsLocal(edges0)
+    else starComponents(edges0, ComponentsMaxIter)
+  }
+
+  /** Edge count up to which [[components]] labels on the driver: at 1 M
+    * edges the transient driver cost stays at a few hundred MB (collected
+    * Rows plus boxed HashMap/node-set entries — NOT just the 16 MB of raw
+    * longs). */
+  private val LocalComponentsMaxEdges = 1000000L
+  /** Star-round budget of [[starComponents]]: rounds are O(log² n), so 20
+    * covers any chain the local path does not already take. */
+  private[operators] val ComponentsMaxIter = 20
+
+  /** Evaluate the (often expensive — LSH band joins) pair plan EXACTLY
+    * once: canonicalize to downhill (larger → smaller) edges, self-loops
+    * still included, and checkpoint; every labeling path feeds off these
+    * blocks.
+    */
+  private[operators] def downhillEdges(pairs: DataFrame): DataFrame =
+    pairs
+      .select(greatest(col("id_a"), col("id_b")).as("src"),
+        least(col("id_a"), col("id_b")).as("dst"))
+      .distinct().localCheckpoint()
+
+  /** The distributed labeling of [[components]] over [[downhillEdges]]:
+    * alternating large-star/small-star rounds until the edges are disjoint
+    * downhill stars, or `maxIter` rounds.
+    */
+  private[operators] def starComponents(edges0: DataFrame,
+      maxIter: Int): DataFrame = {
     // one row per node, kept aside so fixpoint roots (and self-pair-only
     // nodes, whose edges drop with the self-loop filter) label themselves
     val allNodes = edges0
@@ -681,39 +706,28 @@ object Dedup {
 
   // ------------------------------------------------------- n-gram Jaccard
 
-  /** All-pairs n-gram Jaccard >= threshold, exact under every strategy:
+  /** All-pairs n-gram Jaccard >= threshold, exact on both of its paths.
+    * One statistics pass measures the maximum shingle document frequency
+    * of the input and picks the path from it:
     *
-    *  - `"count"`: inverted-index self-join with intersections counted
-    *    directly — `|a ∩ b|` = the number of shingle fingerprints the pair
-    *    co-occurs under, so one groupBy replaces candidate generation AND
-    *    verification; set sizes join back as a small broadcast dim. Shuffle
-    *    cost is Σ_s df(s)·(df(s)-1)/2 over shingles — the fastest plan when
-    *    no shingle is near-universal (no shingle arrays ever shuffle), but
+    *  - at most [[CountMaxDf]] ([[jaccardCount]]): inverted-index
+    *    self-join with intersections counted directly — `|a ∩ b|` = the
+    *    number of shingle fingerprints the pair co-occurs under, so one
+    *    groupBy replaces candidate generation AND verification; set sizes
+    *    join back as a small broadcast dim. Shuffle cost is
+    *    Σ_s df(s)·(df(s)-1)/2 over shingles — the fastest plan when no
+    *    shingle is near-universal (no shingle arrays ever shuffle), but
     *    quadratic under stop-shingles.
-    *  - `"prefix"`: AllPairs/PPJoin prefix filtering — only each set's
-    *    `|s| - ceil(t·|s|) + 1` globally-rarest shingles are indexed
-    *    (recall-exact), then candidates verify against full shingle sets.
-    *    Candidate volume is bounded by the prefix postings, so a near-
-    *    universal shingle cannot blow up the self-join.
-    *  - `"auto"` (default): measures the maximum shingle document frequency
-    *    and picks `count` when `maxDf <= autoCountMaxDf`, `prefix`
-    *    otherwise: the Σ df² self-join blowup is capped at autoCountMaxDf²
-    *    per shingle before the plan switches to the bounded one. The same
-    *    runtime-statistics-then-replan move AQE makes for joins, applied to
-    *    the strategy choice.
+    *  - above it ([[jaccardPrefix]]): AllPairs/PPJoin prefix filtering —
+    *    only each set's `|s| - ceil(t·|s|) + 1` globally-rarest shingles
+    *    are indexed (recall-exact), then candidates verify against full
+    *    shingle sets. Candidate volume is bounded by the prefix postings,
+    *    so a near-universal shingle cannot blow up the self-join.
     *
-    * `autoSampleFraction` < 1 estimates maxDf from a deterministic hash
-    * sample of DOCUMENTS (the id filter pushes below the shingle explode,
-    * so only sampled docs are shingled — the statistics pass costs that
-    * fraction of one projection, not a full extra pass) and scales the
-    * sampled maximum back up by 1/fraction. A near-universal stop-shingle
-    * appears in ~every sampled doc, so detection is robust at any fraction
-    * that keeps a few thousand docs; at corpus scale use ~0.01.
-    *
-    * `maxDocFreq` drops shingles above that document frequency from the
-    * index entirely (any strategy): a documented approximation for stop-
-    * shingle-heavy corpora (under `"count"` dropped shingles also leave the
-    * intersection counts).
+    * The Σ df² self-join blowup is thus capped at CountMaxDf² per shingle
+    * before the plan switches to the bounded one: the same
+    * runtime-statistics-then-replan move AQE makes for joins, applied to
+    * the path choice.
     *
     * `pairBudget` (ON by default — [[PairBudget.Auto]], sized shuffle
     * partitions × `spark.graft.dedup.pairsPerTask`) is the
@@ -724,54 +738,46 @@ object Dedup {
     * candidate pairs than the budget, the whole index degrades to a
     * deterministic doc hash-sample sized so the expected pair count fits
     * (fraction = √(budget/estimate)) — the output is then the exact join
-    * over that reproducible subset, the calibration answer
-    * [[jaccardHistogram]]'s sampleFraction gives, instead of an unbounded
-    * run. Opt out EXPLICITLY with [[PairBudget.Unbounded]]. The oracle
-    * entries run under Auto, far below the default at every gated SF, so
-    * their answers are the unbounded joins'.
+    * over that reproducible subset instead of an unbounded run. Opt out
+    * EXPLICITLY with [[PairBudget.Unbounded]]. The oracle entries run
+    * under Auto, far below the default at every gated SF, so their
+    * answers are the unbounded joins'.
     */
   def jaccardPairs(df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, threshold: Double = 0.8,
-      maxDocFreq: Option[Long] = None,
-      strategy: String = "auto",
-      autoCountMaxDf: Long = 1000,
-      autoSampleFraction: Double = 1.0,
       pairBudget: PairBudget = PairBudget.Auto,
       onDegrade: PairDegrade => Unit = _ => ()): DataFrame = {
-    require(autoSampleFraction > 0 && autoSampleFraction <= 1,
-      s"autoSampleFraction out of (0,1]: $autoSampleFraction")
-    val idx0 = shingleIndex(df, id, text, shingleK, maxDocFreq)
-    // shared stats pass + budget degrade + post-degrade maxDf rescale
-    val (ShingleIndex(sets, indexed, sizes), effMaxDf) =
-      statsAndDegrade(idx0, strategy, autoSampleFraction, pairBudget,
-        onDegrade)
-
-    def countPairs: DataFrame =
-      interSizedPairs(indexed, sizes)
-        .withColumn("jaccard", col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-
-    def prefixPairs: DataFrame =
-      prefixCandidates(indexed, threshold)
-        .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), Seq("id_a"))
-        .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), Seq("id_b"))
-        .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
-        .withColumn("jaccard", col("inter").cast("double") /
-          (size(col("set_a")) + size(col("set_b")) - col("inter")).cast("double"))
-        .filter(col("jaccard") >= threshold)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-
-    strategy match {
-      case "count" => countPairs
-      case "prefix" => prefixPairs
-      case "auto" =>
-        if (effMaxDf.get <= autoCountMaxDf) countPairs else prefixPairs
-      case other => throw new IllegalArgumentException(
-        s"strategy must be 'auto', 'count' or 'prefix', got $other")
-    }
+    val (idx, maxDf) =
+      statsAndDegrade(shingleIndex(df, id, text, shingleK), pairBudget, onDegrade)
+    if (maxDf <= CountMaxDf) jaccardCount(idx, threshold)
+    else jaccardPrefix(idx, threshold)
   }
+
+  /** Maximum shingle document frequency up to which the pair joins take
+    * the count path: one shingle at df 1000 adds df·(df−1)/2 ≈ 500 k
+    * self-join rows; past that the prefix path's bounded candidates win. */
+  private[operators] val CountMaxDf = 1000L
+
+  /** [[jaccardPairs]]' count path over a built index. */
+  private[operators] def jaccardCount(idx: ShingleIndex,
+      threshold: Double): DataFrame =
+    interSizedPairs(idx.indexed, idx.sizes)
+      .withColumn("jaccard", col("inter").cast("double") /
+        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
+  /** [[jaccardPairs]]' prefix path over a built index. */
+  private[operators] def jaccardPrefix(idx: ShingleIndex,
+      threshold: Double): DataFrame =
+    prefixCandidates(idx.indexed, threshold)
+      .join(idx.sets.select(col("id").as("id_a"), col("set").as("set_a")), Seq("id_a"))
+      .join(idx.sets.select(col("id").as("id_b"), col("set").as("set_b")), Seq("id_b"))
+      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col("set_a")) + size(col("set_b")) - col("inter")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
 
   /** Within-corpus CONTAINMENT near-dup join: pairs whose smaller shingle
     * set is at least `threshold`-covered by the larger —
@@ -785,26 +791,24 @@ object Dedup {
     * needle-vs-corpus decontamination screen.
     *
     * Exact (no approximation): candidates and intersection counts come
-    * from the SHARED [[jaccardPairs]] count-strategy machinery —
+    * from the SHARED [[jaccardPairs]] count-path machinery —
     * inverted-index self-join on 8-byte shingle fingerprints, one groupBy
     * counting co-occurrences, broadcast size joins — so this can never
-    * diverge from the Jaccard join's candidate semantics. `strategy =
-    * "auto"` (default) measures the max shingle df (optionally from a
-    * deterministic doc sample) and picks count under `autoCountMaxDf`,
-    * prefix above — [[jaccardPairs]]' runtime-statistics-then-replan
-    * rule, shared so a near-dup-heavy corpus can't quadratic-blow the
-    * candidate join. `strategy = "prefix"` is recall-exact AllPairs-style
-    * prefix probing: each set indexes only its
+    * diverge from the Jaccard join's candidate semantics. The path is
+    * picked from the measured max shingle df — count up to
+    * [[CountMaxDf]] ([[containmentCount]]), prefix above
+    * ([[containmentPrefix]]) — [[jaccardPairs]]' runtime-statistics-
+    * then-replan rule, shared so a near-dup-heavy corpus can't
+    * quadratic-blow the candidate join. The prefix path is recall-exact
+    * AllPairs-style prefix probing: each set indexes only its
     * `|s| − ceil(t·|s|) + 1` globally-rarest shingles but PROBES the full
     * posting list — containment ≥ t forces the smaller set to share
     * ≥ ceil(t·|small|) shingles, so at least one of its prefix shingles
     * hits the other side's full postings (asymmetric prefix bound; the
     * symmetric prefix×prefix join Jaccard uses is NOT recall-exact here).
-    * `maxDocFreq` caps candidate blowup as in [[jaccardPairs]] (dropped
-    * shingles undercount `inter` — conservative); `pairBudget` is
-    * [[jaccardPairs]]' output-quadratic guard rail, shared mechanism and
-    * semantics (exact join over a √(budget/estimate) doc sample when the
-    * estimate exceeds the budget; ON by default via [[PairBudget.Auto]],
+    * `pairBudget` is [[jaccardPairs]]' output-quadratic guard rail, shared
+    * mechanism and semantics (exact join over a √(budget/estimate) doc
+    * sample when the estimate exceeds the budget; ON by default via [[PairBudget.Auto]],
     * which the oracle entries sit far below at every gated SF).
     *
     * Output: (id_a, id_b, inter, sz_a, sz_b, containment) with id_a <
@@ -813,55 +817,52 @@ object Dedup {
     */
   def selfContainmentPairs(df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, threshold: Double = 0.8,
-      maxDocFreq: Option[Long] = None,
-      strategy: String = "auto",
-      autoCountMaxDf: Long = 1000,
-      autoSampleFraction: Double = 1.0,
       pairBudget: PairBudget = PairBudget.Auto,
       onDegrade: PairDegrade => Unit = _ => ()): DataFrame = {
-    require(autoSampleFraction > 0 && autoSampleFraction <= 1,
-      s"autoSampleFraction out of (0,1]: $autoSampleFraction")
-    val idx0 = shingleIndex(df, id, text, shingleK, maxDocFreq)
-    // shared stats pass + budget degrade — ONE helper with jaccardPairs
-    val (idx, effMaxDf) =
-      statsAndDegrade(idx0, strategy, autoSampleFraction, pairBudget,
-        onDegrade)
-    val sized = (if (strategy == "auto")
-      (if (effMaxDf.get <= autoCountMaxDf) "count" else "prefix")
-    else strategy) match {
-      case "count" => interSizedPairs(idx.indexed, idx.sizes)
-      case "prefix" =>
-        // prefix(x) probes FULL postings of y (both directions via the
-        // unordered-pair dedupe) — the asymmetric containment bound
-        val prefix = rarestPrefix(idx.indexed, prefixKeepCount(threshold))
-        val cands = prefix.select(col("sfp"), col("id").as("id_p"))
-          .join(idx.indexed.select(col("sfp"), col("id").as("id_f")), Seq("sfp"))
-          .filter(col("id_p") =!= col("id_f"))
-          .select(least(col("id_p"), col("id_f")).as("id_a"),
-            greatest(col("id_p"), col("id_f")).as("id_b"))
-          .distinct()
-        // verify on the CAPPED fp sets, sizes from the TRUE pre-cap set
-        // sizes — exactly interSizedPairs' semantics, so the strategies
-        // agree under ANY maxDocFreq (array_intersect over the uncapped
-        // string sets would NOT undercount dropped shingles the way the
-        // count branch does)
-        val fpSets = idx.indexed.groupBy(col("id"))
-          .agg(collect_list(col("sfp")).as("__fps"))
-        cands
-          .join(fpSets.select(col("id").as("id_a"), col("__fps").as("__fa")),
-            Seq("id_a"))
-          .join(fpSets.select(col("id").as("id_b"), col("__fps").as("__fb")),
-            Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            size(array_intersect(col("__fa"), col("__fb"))).cast("long")
-              .as("inter"))
-          .join(broadcast(idx.sizes.select(col("id").as("id_a"),
-            col("sz").as("sz_a"))), Seq("id_a"))
-          .join(broadcast(idx.sizes.select(col("id").as("id_b"),
-            col("sz").as("sz_b"))), Seq("id_b"))
-      case other => throw new IllegalArgumentException(
-        s"strategy must be 'auto', 'count' or 'prefix', got $other")
-    }
+    val (idx, maxDf) =
+      statsAndDegrade(shingleIndex(df, id, text, shingleK), pairBudget, onDegrade)
+    if (maxDf <= CountMaxDf) containmentCount(idx, threshold)
+    else containmentPrefix(idx, threshold)
+  }
+
+  /** [[selfContainmentPairs]]' count path over a built index. */
+  private[operators] def containmentCount(idx: ShingleIndex,
+      threshold: Double): DataFrame =
+    containmentScored(interSizedPairs(idx.indexed, idx.sizes), threshold)
+
+  /** [[selfContainmentPairs]]' prefix path over a built index: prefix(x)
+    * probes FULL postings of y (both directions via the unordered-pair
+    * dedupe) — the asymmetric containment bound.
+    */
+  private[operators] def containmentPrefix(idx: ShingleIndex,
+      threshold: Double): DataFrame = {
+    val prefix = rarestPrefix(idx.indexed, prefixKeepCount(threshold))
+    val cands = prefix.select(col("sfp"), col("id").as("id_p"))
+      .join(idx.indexed.select(col("sfp"), col("id").as("id_f")), Seq("sfp"))
+      .filter(col("id_p") =!= col("id_f"))
+      .select(least(col("id_p"), col("id_f")).as("id_a"),
+        greatest(col("id_p"), col("id_f")).as("id_b"))
+      .distinct()
+    // verify on the fingerprint sets with the posting sizes — exactly
+    // interSizedPairs' semantics, so the two paths agree pair for pair
+    val fpSets = idx.indexed.groupBy(col("id"))
+      .agg(collect_list(col("sfp")).as("__fps"))
+    containmentScored(cands
+      .join(fpSets.select(col("id").as("id_a"), col("__fps").as("__fa")),
+        Seq("id_a"))
+      .join(fpSets.select(col("id").as("id_b"), col("__fps").as("__fb")),
+        Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("__fa"), col("__fb"))).cast("long")
+          .as("inter"))
+      .join(broadcast(idx.sizes.select(col("id").as("id_a"),
+        col("sz").as("sz_a"))), Seq("id_a"))
+      .join(broadcast(idx.sizes.select(col("id").as("id_b"),
+        col("sz").as("sz_b"))), Seq("id_b")), threshold)
+  }
+
+  private def containmentScored(sized: DataFrame,
+      threshold: Double): DataFrame =
     sized
       .withColumn("containment", col("inter").cast("double") /
         least(col("sz_a"), col("sz_b")).cast("double"))
@@ -869,7 +870,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("inter").cast("long").as("inter"),
         col("sz_a").cast("long").as("sz_a"), col("sz_b").cast("long").as("sz_b"),
         col("containment"))
-  }
 
   /** Pairwise-similarity histogram for dedup-THRESHOLD CALIBRATION: the
     * distribution of exact n-gram Jaccard over all candidate pairs
@@ -882,39 +882,17 @@ object Dedup {
     * Output: one row per bucket 0..bins-1 — (bucket, lo, hi, n_pairs) —
     * every bucket present even at zero.
     *
-    * Scale shape: the [[jaccardPairs]] count-strategy machinery — compact
+    * Scale shape: the [[jaccardPairs]] count-path machinery — compact
     * (id, sz, sfp) postings (shingled once via localCheckpoint), an
     * 8-byte-key posting self-join, and a (pair → bucket) projection into
     * a bins-bounded aggregation; nothing wider than longs shuffles and
-    * the result is `bins` rows. `maxDocFreq` caps stop-shingle candidate
-    * blowup on real corpora (dropped shingles then undercount `inter` —
-    * the histogram shifts conservatively left; at the oracle SFs the
-    * default None drops nothing).
+    * the result is `bins` rows. Every candidate pair counts: the
+    * histogram is exact over the whole input.
     */
   def jaccardHistogram(df: DataFrame, id: Column, text: Column,
-      bins: Int = 20, shingleK: Int = 3,
-      maxDocFreq: Option[Long] = None,
-      sampleFraction: Double = 1.0): DataFrame = {
+      bins: Int = 20, shingleK: Int = 3): DataFrame = {
     require(bins > 0, s"bins must be positive, got $bins")
-    require(sampleFraction > 0 && sampleFraction <= 1,
-      s"sampleFraction out of (0,1]: $sampleFraction")
-    // the production scale knob the pair-driven stress adjudication
-    // points at: a similarity DISTRIBUTION estimate does not need every
-    // pair, so hash-sample the DOCS deterministically (same id keeps the
-    // same fate on every run/engine — the jaccardPairs auto-stats
-    // pattern) and pay ~fraction² of the candidate pairs
-    val base =
-      if (sampleFraction >= 1.0) df
-      else df.filter(TextFunctions.hash32(id.cast("string")) <
-        lit((sampleFraction * 4294967296.0).toLong))
-    // the df cap was tuned on FULL-corpus frequencies; a sampled shingle
-    // sees ~fraction·df docs, so the cap must scale with the sample or a
-    // boilerplate shingle with full df ≫ cap sneaks under it and re-opens
-    // the quadratic-candidate blowup the cap exists to stop (the
-    // jaccardPairs auto-stats rescale, applied in the other direction)
-    val scaledCap = maxDocFreq.map(m =>
-      math.max(1L, math.ceil(m * sampleFraction).toLong))
-    val idx = shingleIndex(base, id, text, shingleK, scaledCap)
+    val idx = shingleIndex(df, id, text, shingleK)
     val bucketed = interSizedPairs(idx.indexed, idx.sizes)
       .select(least(expr(s"(inter * $bins) div (sz_a + sz_b - inter)"),
         lit(bins - 1).cast("long")).cast("int").as("bucket"))
@@ -928,13 +906,6 @@ object Dedup {
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
   }
 
-  /** The shared shingle-index prologue of [[jaccardPairs]] and
-    * [[jaccardHistogram]] — ONE copy of the candidate machinery, so the
-    * histogram that calibrates the join's threshold can never silently
-    * diverge from the join itself. `sets`: (id, set); `indexed`: the
-    * (id, sz, sfp) postings after the optional df cap; `sizes`: one
-    * (id, sz) row per doc.
-    */
   /** Pair-budget policy for the output-quadratic pair joins
     * ([[jaccardPairs]] / [[selfContainmentPairs]]). The budget is the
     * guard rail against a corpus whose ANSWER is quadratic (dominated by
@@ -1002,7 +973,7 @@ object Dedup {
     math.max(1L, scala.util.Try(raw.trim.toLong).getOrElse(fallback))
 
   /** The shared statistics + pair-budget block of [[jaccardPairs]] and
-    * [[selfContainmentPairs]] — ONE pass serves both the auto strategy
+    * [[selfContainmentPairs]] — ONE pass serves both the count-vs-prefix
     * pick and the budget guard. Returns the (possibly budget-degraded)
     * index plus the effective max shingle df OF THAT INDEX: when the
     * degrade fires, the per-shingle df of the thinned index shrinks
@@ -1011,17 +982,12 @@ object Dedup {
     * made against the join that will actually run, not the corpus that
     * was measured.
     */
-  private def statsAndDegrade(idx0: ShingleIndex, strategy: String,
-      autoSampleFraction: Double, pairBudget: PairBudget,
-      onDegrade: PairDegrade => Unit): (ShingleIndex, Option[Long]) = {
+  private def statsAndDegrade(idx0: ShingleIndex, pairBudget: PairBudget,
+      onDegrade: PairDegrade => Unit): (ShingleIndex, Long) = {
     val budget = resolvedPairBudget(idx0.indexed.sparkSession, pairBudget)
-    val stats =
-      if (strategy == "auto" || budget.isDefined)
-        Some(indexStats(idx0.indexed, autoSampleFraction))
-      else None
+    val (maxDf, est) = indexStats(idx0.indexed)
     budget match {
-      case Some(b) if stats.exists(_._2 > b) =>
-        val (maxDf, est) = stats.get
+      case Some(b) if est > b =>
         val fraction = math.sqrt(b.toDouble / est.toDouble)
         // a degraded answer must never be silently mistaken for the
         // complete join: always log, and hand callers the machine-readable
@@ -1033,16 +999,23 @@ object Dedup {
             "for the complete join)")
         onDegrade(PairDegrade(est, b, fraction))
         (budgetSampledIndex(idx0, est, b),
-          Some(math.max(1L, math.ceil(maxDf * fraction).toLong)))
-      case _ => (idx0, stats.map(_._1))
+          math.max(1L, math.ceil(maxDf * fraction).toLong))
+      case _ => (idx0, maxDf)
     }
   }
 
+  /** The shared shingle index of [[jaccardPairs]],
+    * [[selfContainmentPairs]] and [[jaccardHistogram]] — ONE copy of the
+    * candidate machinery, so the histogram that calibrates the join's
+    * threshold can never silently diverge from the join itself. `sets`:
+    * (id, set); `indexed`: the (id, sz, sfp) postings; `sizes`: one
+    * (id, sz) row per doc.
+    */
   private[operators] case class ShingleIndex(
       sets: DataFrame, indexed: DataFrame, sizes: DataFrame)
 
-  private def shingleIndex(df: DataFrame, id: Column, text: Column,
-      shingleK: Int, maxDocFreq: Option[Long]): ShingleIndex = {
+  private[operators] def shingleIndex(df: DataFrame, id: Column, text: Column,
+      shingleK: Int): ShingleIndex = {
     val sets = widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), HashFunctions.wordShingleSet(
         TextFunctions.tokensWs(col("__text")), shingleK).as("set"))
@@ -1054,17 +1027,12 @@ object Dedup {
     // materializes on first downstream job.
     val posting = shinglePostings(sets).localCheckpoint(false)
     val sizes = posting.select(col("id"), col("sz").as("sz")).distinct()
-    val indexed = maxDocFreq.fold(posting) { m =>
-      val keep = posting.groupBy(col("sfp")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= m).select(col("sfp"))
-      posting.join(keep, Seq("sfp"))
-    }
-    ShingleIndex(sets, indexed, sizes)
+    ShingleIndex(sets, posting, sizes)
   }
 
-  /** (id_a, id_b, inter, sz_a, sz_b) candidate pairs from the capped
+  /** (id_a, id_b, inter, sz_a, sz_b) candidate pairs from the
     * postings: the 8-byte-key self-join + per-pair intersection count +
-    * broadcast size joins — the count-strategy core shared verbatim by
+    * broadcast size joins — the count-path core shared verbatim by
     * the threshold join and the calibration histogram.
     */
   private def interSizedPairs(indexed: DataFrame, sizes: DataFrame): DataFrame =
@@ -1078,32 +1046,24 @@ object Dedup {
       .join(broadcast(sizes.select(col("id").as("id_b"), col("sz").as("sz_b"))),
         Seq("id_b"))
 
-  /** ONE statistics pass over the (optionally doc-hash-sampled) postings:
-    * (max shingle document frequency, estimated candidate-pair count
-    * Σ_s df(s)·(df(s)−1)/2), both scaled back up by the sample fraction —
-    * maxDf by 1/f, pairs by 1/f² (each pair survives a doc sample with
-    * probability f²). The maxDf drives the count-vs-prefix strategy pick;
+  /** ONE statistics pass over the postings: (max shingle document
+    * frequency, estimated candidate-pair count Σ_s df(s)·(df(s)−1)/2).
+    * The maxDf drives the count-vs-prefix pick;
     * the pair estimate drives the [[jaccardPairs]]/[[selfContainmentPairs]]
     * pair-budget guard. Shared so the two consumers can never disagree on
     * what was measured, and so auto + budget together still cost one pass.
     */
-  private[operators] def indexStats(indexed: DataFrame,
-      sampleFraction: Double): (Long, Long) = {
-    val stats =
-      if (sampleFraction >= 1.0) indexed
-      else indexed.filter(TextFunctions.hash32(col("id").cast("string")) <
-        lit((sampleFraction * 4294967296.0).toLong))
+  private[operators] def indexStats(indexed: DataFrame): (Long, Long) = {
     // the pair sum is an ESTIMATE for a guard — compute it in double
     // (df² on a stop-shingle over 10⁹ docs overflows a long, and ANSI
     // would throw inside the statistics pass meant to PREVENT blowups)
-    val r = stats.groupBy(col("sfp")).agg(count(lit(1)).as("df"))
+    val r = indexed.groupBy(col("sfp")).agg(count(lit(1)).as("df"))
       .agg(max(col("df")),
         sum(col("df").cast("double") * (col("df") - 1L).cast("double")
           / lit(2.0))).head()
     if (r.isNullAt(0)) (0L, 0L) // empty corpus
-    else (math.ceil(r.getLong(0) / sampleFraction).toLong,
-      math.ceil(math.min(r.getDouble(1) /
-        (sampleFraction * sampleFraction), Long.MaxValue.toDouble)).toLong)
+    else (r.getLong(0),
+      math.ceil(math.min(r.getDouble(1), Long.MaxValue.toDouble)).toLong)
   }
 
   /** The pair-budget degrade: when the estimated candidate-pair volume
@@ -1161,7 +1121,7 @@ object Dedup {
 
   /** Each set's `keep`-count globally-rarest postings (rarity = shingle
     * document frequency, ties by fingerprint) — the prefix frame both
-    * prefix strategies build on.
+    * prefix paths build on.
     */
   private def rarestPrefix(posting: DataFrame, keep: Column): DataFrame = {
     val freq = posting.groupBy(col("sfp")).agg(count(lit(1)).as("df"))
@@ -1286,15 +1246,11 @@ object Dedup {
   def editDistanceLinkage(left: DataFrame, lId: Column, lText: Column,
       right: DataFrame, rId: Column, rText: Column,
       shingleK: Int = 3, blockJaccard: Double = 0.5,
-      prefixLen: Int = 100, maxDist: Int = 25,
-      maxDocFreq: Option[Long] = None): DataFrame = {
+      prefixLen: Int = 100, maxDist: Int = 25): DataFrame = {
     require(prefixLen > 0, s"prefixLen must be positive, got $prefixLen")
     require(maxDist >= 0, s"maxDist must be >= 0, got $maxDist")
-    // maxDocFreq forwards to the blocking stage — set it at corpus scale
-    // (the jaccardJoin contract): a LOW blockJaccard is exactly where a
-    // stop-shingle's f_L·f_R posting blowup hurts most
     val cand = jaccardJoin(left, lId, lText, right, rId, rText,
-      shingleK, blockJaccard, maxDocFreq)
+      shingleK, blockJaccard)
       .select(col("left_id"), col("right_id"))
     val lp = left.select(lId.as("left_id"),
       substring(lText, 1, prefixLen).as("__lp"))
@@ -1316,18 +1272,15 @@ object Dedup {
     * document's extra content — the standard training-data decontamination
     * check.
     *
-    * Scale shape mirrors the count-strategy Jaccard join: inverted-index
+    * Scale shape mirrors the count-path Jaccard join: inverted-index
     * equality join on 8-byte shingle fingerprints (needle side is typically
     * the small benchmark set), intersections counted in one groupBy, no
-    * shingle arrays or bodies shuffled. `maxDocFreq` drops stop-shingles
-    * from the corpus index (a shingle in half the corpus carries no
-    * contamination signal and dominates the join cost).
+    * shingle arrays or bodies shuffled.
     * Output: (needle_id, doc_id, containment) — exact integer-ratio doubles.
     */
   def containmentPairs(needles: DataFrame, nId: Column, nText: Column,
       corpus: DataFrame, cId: Column, cText: Column,
-      shingleK: Int = 3, threshold: Double = 0.8,
-      maxDocFreq: Option[Long] = None): DataFrame = {
+      shingleK: Int = 3, threshold: Double = 0.8): DataFrame = {
     val nSets = widen(needles.select(nId.as("needle_id"), nText.as("__t")))
       .select(col("needle_id"), HashFunctions.wordShingleSet(
         TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
@@ -1337,13 +1290,8 @@ object Dedup {
     val nPost = nSets.select(col("needle_id"), size(col("set")).as("nsz"),
         explode(col("set")).as("s"))
       .select(col("needle_id"), col("nsz"), TextFunctions.fingerprint64(col("s")).as("sfp"))
-    val cPost0 = cSets.select(col("doc_id"), explode(col("set")).as("s"))
+    val cPost = cSets.select(col("doc_id"), explode(col("set")).as("s"))
       .select(col("doc_id"), TextFunctions.fingerprint64(col("s")).as("sfp"))
-    val cPost = maxDocFreq.fold(cPost0) { m =>
-      val keep = cPost0.groupBy(col("sfp")).agg(count(lit(1)).as("df"))
-        .filter(col("df") <= m).select(col("sfp"))
-      cPost0.join(keep, Seq("sfp"))
-    }
     nPost.join(cPost, Seq("sfp"))
       .groupBy(col("needle_id"), col("doc_id"), col("nsz"))
       .agg(count(lit(1)).as("inter"))
@@ -1448,14 +1396,12 @@ object Dedup {
     * fingerprint + broadcast probe (corpus text never shuffles); the
     * near pass is the [[jaccardJoin]] inverted-index machinery with the
     * deleted docs as the small side — candidates are bounded by the
-    * deleted shingles' corpus document frequency, and `maxDocFreq` caps
-    * the stop-shingle worst case. Reason arbitration is a min(struct)
+    * deleted shingles' corpus document frequency. Reason arbitration is a min(struct)
     * aggregation over the union — manifest-sized, not corpus-sized.
     */
   def purgeDeletes(df: DataFrame, id: Column, text: Column,
       deleteIds: DataFrame, deleteId: Column,
-      shingleK: Int = 3, threshold: Double = 0.5,
-      maxDocFreq: Option[Long] = None): DataFrame = {
+      shingleK: Int = 3, threshold: Double = 0.5): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold out of (0,1]: $threshold")
     val src = df.select(id.as("id"), text.as("__text"))
@@ -1481,7 +1427,7 @@ object Dedup {
     val near = jaccardJoin(
         src, col("id"), col("__text"),
         delDocs, col("id"), col("__text"),
-        shingleK, threshold, maxDocFreq)
+        shingleK, threshold)
       .groupBy(col("left_id").as("id"))
       .agg(min(col("right_id")).as("matched_id"))
       .select(col("id"), lit(3).as("pri"), col("matched_id"))
@@ -1686,23 +1632,23 @@ object Dedup {
 
   /** Near-duplicate pairs by SimHash hamming distance <= maxHamming.
     *
-    * Candidates via the block trick: the 60-bit signature in `blocks` equal
-    * blocks — any pair within hamming `blocks - 1` must agree exactly on at
-    * least one block (pigeonhole), so an equality join on (block_idx,
+    * Candidates via the block trick: the 60-bit signature in `blocks`
+    * equal blocks — [[SimHashBlocks]], or `maxHamming + 1` past hamming 3
+    * — so any pair within hamming `blocks - 1` agrees exactly on at least
+    * one block (pigeonhole) and an equality join on (block_idx,
     * block_value) has recall exactly 1. Output: (id_a, id_b, hamming).
     *
-    * Block-count/width trade-off at corpus scale: expected bucket size is
-    * n / 2^(60/blocks), and the self-join emits O(Σ bucket²) candidates —
-    * `blocks` must exceed `maxHamming` but should otherwise be as SMALL as
-    * the tolerance allows (wider block keys → smaller buckets). The default
-    * (4 × 15-bit) serves hamming <= 3 up to ~10^8 docs; beyond that, cut
-    * `maxHamming` (e.g. 2 with blocks = 3 → 20-bit keys), or pre-partition
-    * the corpus (e.g. by language/source) so each join runs within a slice.
+    * At corpus scale expected bucket size is n / 2^(60/blocks), and the
+    * self-join emits O(Σ bucket²) candidates: 4 × 15-bit serves
+    * hamming <= 3 up to ~10^8 docs; beyond that, pre-partition the corpus
+    * (e.g. by language/source) so each join runs within a slice, or use
+    * [[simHashPairs128]].
     */
   def simHashPairs(df: DataFrame, id: Column, text: Column,
-      maxHamming: Int = 3, blocks: Int = SimHashBlocks): DataFrame = {
-    require(maxHamming < blocks, s"maxHamming=$maxHamming needs > $maxHamming blocks for exact recall")
-    require(SimHashBits % blocks == 0, s"blocks=$blocks must divide $SimHashBits")
+      maxHamming: Int = 3): DataFrame = {
+    require(maxHamming >= 0 && maxHamming < SimHashBits,
+      s"maxHamming=$maxHamming out of [0, $SimHashBits)")
+    val blocks = math.max(SimHashBlocks, maxHamming + 1)
     val bits = SimHashBits / blocks
     val sh = widen(df.select(id.as("id"), text.as("__text")))
       .select(col("id"), simHash(col("__text")).as("sh"))
@@ -1765,17 +1711,20 @@ object Dedup {
 
   // ------------------------------------------------------- bloom prefilter
 
+  /** False-positive rate the decontamination bloom is sized for: 1% of
+    * the corpus takes the exact anti-join, for ~9.6 bits per needle. */
+  private[operators] val BloomFpp = 0.01
+
   /** Builds a serialized bloom filter over `needles`' key column, sized for
-    * `fpp` at the needle count. One aggregation job over the (small) needle
-    * side; partial blooms OR-merge map-side so the shuffle carries one
-    * bit-buffer per partition. Returns None for an empty needle set.
+    * [[BloomFpp]] at the needle count. One aggregation job over the (small)
+    * needle side; partial blooms OR-merge map-side so the shuffle carries
+    * one bit-buffer per partition. Returns None for an empty needle set.
     */
-  private def buildBloom(needles: DataFrame, nKey: Column, fpp: Double): Option[Array[Byte]] = {
+  private[operators] def buildBloom(needles: DataFrame, nKey: Column): Option[Array[Byte]] = {
     import org.apache.spark.sql.graft.BloomFunctions
-    require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
     val n = needles.count()
     if (n == 0) return None
-    val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, fpp)
+    val bits = org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, BloomFpp)
     // Spark caps the aggregate at spark.sql.optimizer.runtime.bloomFilter.
     // maxNumItems/maxNumBits (4M/67M default) — raise those confs for
     // needle sets beyond that; the probe side has no such limit.
@@ -1788,7 +1737,8 @@ object Dedup {
   /** Exact decontamination (anti-join) of a huge corpus against a small
     * needle set. Corpus rows whose bloom probe says "definitely not
     * present" pass through with NO join at all (map-only); only the
-    * |corpus|·fpp + |matches| maybe-rows go through the exact anti-join.
+    * |corpus|·[[BloomFpp]] + |matches| maybe-rows go through the exact
+    * anti-join.
     * At 100 TB this replaces a full-corpus shuffle (or a giant broadcast of
     * raw needles) with an MB-scale bloom literal plus a join over a sliver.
     *
@@ -1797,9 +1747,9 @@ object Dedup {
     * holding the corpus in memory can persist it first.
     */
   def bloomAntiJoin(corpus: DataFrame, cKey: Column, needles: DataFrame,
-      nKey: Column, fpp: Double = 0.01): DataFrame = {
+      nKey: Column): DataFrame = {
     import org.apache.spark.sql.graft.BloomFunctions
-    buildBloom(needles, nKey, fpp) match {
+    buildBloom(needles, nKey) match {
       case None => corpus
       case Some(bytes) =>
         val might = BloomFunctions.mightContain(bytes, BloomFunctions.keyHash(cKey))

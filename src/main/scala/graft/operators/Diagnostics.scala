@@ -505,10 +505,10 @@ object Diagnostics {
   /** Robust per-group statistics of an integral metric — the outlier-
     * resistant dashboard row for per-source monitoring (mean doc length
     * is ruined by one 100 MB page; the winsorized mean is not): exact
-    * discrete percentiles (percentile_disc at `pLo`/0.5/`pHi`) plus the
-    * winsorized mean (values clamped into [p_lo, p_hi] before
-    * averaging). Output: (grp, n, p_lo, p50, p_hi, wins_mean), one row
-    * per group.
+    * discrete percentiles (percentile_disc at [[RobustPLo]]/0.5/
+    * [[RobustPHi]]) plus the winsorized mean (values clamped into
+    * [p_lo, p_hi] before averaging). Output: (grp, n, p_lo, p50, p_hi,
+    * wins_mean), one row per group.
     *
     * Determinism: the discrete pick returns an actual data value (no
     * interpolation; == `percentile_disc` bit-for-bit — QuantilesSpec);
@@ -526,9 +526,7 @@ object Diagnostics {
     * partial-aggregated clamped-sum pass. Nothing wider than
     * (grp, value) ever shuffles.
     */
-  def robustStats(df: DataFrame, group: Column, value: Column,
-      pLo: Double = 0.05, pHi: Double = 0.95): DataFrame = {
-    require(pLo >= 0 && pLo <= pHi && pHi <= 1, s"bad bounds [$pLo,$pHi]")
+  def robustStats(df: DataFrame, group: Column, value: Column): DataFrame = {
     // drop NULL values up front: percentile_disc already excludes them,
     // and letting them reach the clamp would count each as p_hi in the
     // winsorized mean (Spark's least/greatest skip nulls)
@@ -538,7 +536,8 @@ object Diagnostics {
     // percentile_disc); the long cast is exact and keeps the clamp +
     // sum in order-free integer arithmetic
     val pcts = Quantiles.discPicks(base, Seq("grp"),
-        Seq(("__lo", "v", pLo), ("__50", "v", 0.5), ("__hi", "v", pHi)))
+        Seq(("__lo", "v", RobustPLo), ("__50", "v", 0.5),
+          ("__hi", "v", RobustPHi)))
       .select(col("grp"), col("__lo").cast("bigint").as("p_lo"),
         col("__50").cast("bigint").as("p50"),
         col("__hi").cast("bigint").as("p_hi"))
@@ -551,6 +550,11 @@ object Diagnostics {
         (col("__ws").cast("double") / col("n").cast("double"))
           .as("wins_mean"))
   }
+
+  /** The winsorizing percentiles of [[robustStats]]: the 5%/95% clamp,
+    * the oracle's `percentile_disc(0.05)`/`(0.95)`. */
+  private val RobustPLo = 0.05
+  private val RobustPHi = 0.95
 
   /** Cohen's kappa between two label columns — the inter-annotator
     * agreement gate for labeling pipelines (two human raters, or a new
@@ -842,8 +846,9 @@ object Diagnostics {
     * exchangeability assumption broke); above it, the scores are
     * conservative.
     *
-    * α is passed as the EXACT RATIONAL alphaNum/alphaDen and the order
-    * statistic index as pure integer ceil-division — a double α would
+    * α = 1/10 (90% coverage) is held as the EXACT RATIONAL
+    * [[ConformalAlphaNum]]/[[ConformalAlphaDen]] and the order statistic
+    * index computed as pure integer ceil-division — a double α would
     * make ⌈(n+1)(1−α)⌉ flip on the (n+1)·0.9-lands-on-an-integer cases
     * (0.9 is not a binary double; (n+1)=10 computes 9.000000000000002).
     * When the index exceeds n_cal (tiny groups), q̂ is +∞ by the
@@ -865,9 +870,7 @@ object Diagnostics {
     */
   def conformalCalibration(cal: DataFrame, calGroup: Column,
       calScore: Column, test: DataFrame, testGroup: Column,
-      testScore: Column, alphaNum: Int = 1, alphaDen: Int = 10): DataFrame = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum < alphaDen,
-      s"alpha must be a rational in (0,1): $alphaNum/$alphaDen")
+      testScore: Column): DataFrame = {
     val c = cal.select(calGroup.as("grp"),
       calScore.cast("double").as("__s"))
     val t = test.select(testGroup.as("grp"),
@@ -881,7 +884,7 @@ object Diagnostics {
     val qhat = graft.Pins.pin(c.groupBy(col("grp"))
       .agg(count(lit(1)).as("n_cal"),
         sort_array(collect_list(col("__s"))).as("__ms"))
-      .withColumn("__idx", conformalIdx(alphaNum, alphaDen))
+      .withColumn("__idx", conformalIdx)
       .select(col("grp"), col("n_cal"),
         try_element_at(col("__ms"), col("__idx")).as("q_hat")))
     // LEFT join from the test split, FULL OUTER finale: a group present
@@ -910,9 +913,14 @@ object Diagnostics {
     * and [[conformalPredictionSets]] so the two can never disagree on the
     * quantile rule.
     */
-  private def conformalIdx(alphaNum: Int, alphaDen: Int): Column =
-    expr(s"CAST((${alphaDen - alphaNum}L * (n_cal + 1) + ${alphaDen - 1}L) " +
-      s"div ${alphaDen}L AS INT)")
+  private def conformalIdx: Column =
+    expr(s"CAST((${ConformalAlphaDen - ConformalAlphaNum}L * (n_cal + 1) + " +
+      s"${ConformalAlphaDen - 1}L) div ${ConformalAlphaDen}L AS INT)")
+
+  /** The conformal miscoverage α = 1/10: the 90% coverage the oracles'
+    * `(9 * (n_cal + 1) + 9) // 10` index replays. */
+  private val ConformalAlphaNum = 1
+  private val ConformalAlphaDen = 10
 
   /** Mondrian (class-conditional) conformal PREDICTION SETS from a
     * per-class integer score table — the uncertainty-quantification
@@ -946,10 +954,7 @@ object Diagnostics {
     * — the score table's own cardinality), a per-document membership agg
     * and a |classes| finale. Nothing larger than the score table moves.
     */
-  def conformalPredictionSets(scores: DataFrame, truth: DataFrame,
-      alphaNum: Int = 1, alphaDen: Int = 10): DataFrame = {
-    require(alphaDen > 0 && alphaNum > 0 && alphaNum < alphaDen,
-      s"alpha must be a rational in (0,1): $alphaNum/$alphaDen")
+  def conformalPredictionSets(scores: DataFrame, truth: DataFrame): DataFrame = {
     val s = scores.select(col("id"), col("label"), col("scoreq"))
     val t = truth.select(col("id"), col("truth"), col("is_cal"))
     // shuffle-hash, not sort-merge: an id-keyed equi-join of the score
@@ -965,7 +970,7 @@ object Diagnostics {
         .groupBy(col("label"))
         .agg(count(lit(1)).as("n_cal"),
           sort_array(collect_list(-col("scoreq"))).as("__ms"))
-        .withColumn("__idx", conformalIdx(alphaNum, alphaDen))
+        .withColumn("__idx", conformalIdx)
         .select(col("label"), col("n_cal"),
           try_element_at(col("__ms"), col("__idx")).as("__qq")))
     val perDoc = j.filter(!col("is_cal"))
@@ -1039,7 +1044,8 @@ object Diagnostics {
     * `value` must be INTEGER-typed, so each replicate's Σwx / Σw is an
     * exact-integer ratio and every replicate mean is bit-reproducible.
     * The interval is the empirical [ceil(α/2·B), B+1−ceil(α/2·B)]
-    * order-statistic pair of the B replicate means (B = 64, α = 0.05 →
+    * order-statistic pair of the B replicate means, α =
+    * [[BootstrapAlpha]] (B = 64 →
     * the 2nd and 63rd of 64) — a replicate that draws no rows at all
     * (Σw = 0, possible only for near-empty groups) drops out and the
     * order statistics read NULL past the end, never a fabricated bound.
@@ -1055,10 +1061,9 @@ object Diagnostics {
     * |groups|-row aggregate over the unexpanded frame (broadcast).
     */
   def bootstrapCiMean(df: DataFrame, group: Column, value: Column,
-      key: Column, b: Int = 64, alpha: Double = 0.05): DataFrame = {
+      key: Column, b: Int = 64): DataFrame = {
     require(b >= 4, s"need at least 4 replicates, got $b")
-    require(alpha > 0 && alpha < 1, s"alpha out of (0,1): $alpha")
-    val kLo = math.max(1, math.ceil(b * alpha / 2).toInt)
+    val kLo = math.max(1, math.ceil(b * BootstrapAlpha / 2).toInt)
     val kHi = b + 1 - kLo
     val base = df.select(group.as("grp"), value.cast("long").as("__x"),
       key.cast("string").as("__k"))
@@ -1098,4 +1103,8 @@ object Diagnostics {
       .select(col("grp"), col("n_rows"), col("mean_v"), col("ci_lo"),
         col("ci_hi"), coalesce(col("n_reps"), lit(0L)).as("n_reps"))
   }
+
+  /** Two-sided miscoverage of [[bootstrapCiMean]]'s interval: the 95%
+    * percentile interval. */
+  private val BootstrapAlpha = 0.05
 }

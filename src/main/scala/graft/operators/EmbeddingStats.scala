@@ -22,12 +22,12 @@ object EmbeddingStats {
   /** Per-(label, dimension) centroid and variance over an
     * `array<float>` column, deterministically.
     *
-    * Output: (label, dim, n, mean, variance) — mean in 2^meanBits fixed
-    * point, variance via E[x²] − E[x]² with E[x²] in 2^sqBits fixed point
-    * (coarser, because x² of unit-scale embeddings needs headroom: the
-    * scaled x² stays ≤ 2^sqBits·max x², so a billion-row label sums to
-    * ≈ 2^50 at the defaults — inside long range, and every per-label sum
-    * stays exactly representable when n·2^meanBits < 2^53). Variance can
+    * Output: (label, dim, n, mean, variance) — mean in 2^[[MeanBits]]
+    * fixed point, variance via E[x²] − E[x]² with E[x²] in 2^[[SqBits]]
+    * fixed point (coarser, because x² of unit-scale embeddings needs
+    * headroom: the scaled x² stays ≤ 2^20·max x², so a billion-row label
+    * sums to ≈ 2^50 — inside long range, and every per-label sum stays
+    * exactly representable when n·2^24 < 2^53). Variance can
     * quantize epsilon-negative for a near-constant dimension; both engines
     * agree bit-for-bit, so the oracle is unaffected — clamp downstream if
     * sign matters.
@@ -37,12 +37,9 @@ object EmbeddingStats {
     * reduce every partition to |labels|·dims rows before the exchange;
     * vectors themselves never shuffle.
     */
-  def labelCentroids(df: DataFrame, label: Column, vec: Column,
-      meanBits: Int = 24, sqBits: Int = 20): DataFrame = {
-    require(meanBits > 0 && meanBits < 31, s"meanBits out of range: $meanBits")
-    require(sqBits > 0 && sqBits < 31, s"sqBits out of range: $sqBits")
-    val mScale = math.pow(2, meanBits)
-    val sScale = math.pow(2, sqBits)
+  def labelCentroids(df: DataFrame, label: Column, vec: Column): DataFrame = {
+    val mScale = math.pow(2, MeanBits)
+    val sScale = math.pow(2, SqBits)
     val xd = col("x").cast("double")
     val e = df.select(label.as("label"), posexplode(vec).as(Seq("dim", "x")))
       .select(col("label"), col("dim"),
@@ -57,12 +54,16 @@ object EmbeddingStats {
         mean.as("mean"), (ex2 - mean * mean).as("variance"))
   }
 
+  /** Fixed-point scales of [[labelCentroids]]: 2^24 for the means and
+    * 2^20 for the squares, the oracles' literal scales. */
+  private val MeanBits = 24
+  private val SqBits = 20
+
   /** The [[labelCentroids]] means reassembled to one `array<double>` per
     * label (dims in order) — the join-ready centroid table.
     */
-  def centroidVectors(df: DataFrame, label: Column, vec: Column,
-      meanBits: Int = 24): DataFrame =
-    labelCentroids(df, label, vec, meanBits)
+  def centroidVectors(df: DataFrame, label: Column, vec: Column): DataFrame =
+    labelCentroids(df, label, vec)
       .groupBy(col("label"))
       .agg(transform(array_sort(collect_list(struct(col("dim"), col("mean")))),
         x => x.getField("mean")).as("centroid"))
@@ -87,10 +88,10 @@ object EmbeddingStats {
     * aggregator (partition-local k buffers, one |k| merge).
     */
   def embeddingOutliers(df: DataFrame, id: Column, label: Column,
-      vec: Column, k: Int, meanBits: Int = 24): DataFrame = {
+      vec: Column, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     val base = df.select(id.as("vec_id"), label.as("label"), vec.as("__v"))
-    val cents = centroidVectors(df, label, vec, meanBits)
+    val cents = centroidVectors(df, label, vec)
     val dist2 = aggregate(
       zip_with(col("__v"), col("centroid"),
         (x, c) => (x.cast("double") - c) * (x.cast("double") - c)),
@@ -179,7 +180,7 @@ object EmbeddingStats {
     * balance it, merge it, or fix the encoder before training on it.
     *
     * Output: (label, n, mean_sil, min_sil, max_sil, n_negative), one row
-    * per label. `mean_sil` is a 2^bits fixed-point mean (the
+    * per label. `mean_sil` is a 2^24 fixed-point mean (the
     * [[labelCentroids]] pattern — order-free exact integer sum, so the
     * value is partition-independent and engine-reproducible); min/max are
     * order-free by nature; `n_negative` counts the mislabel-signal
@@ -200,10 +201,9 @@ object EmbeddingStats {
     * per centroid — K tight-loop evals per row, no N-row shuffle, no
     * window) — into a |labels|-sized partial-aggregated groupBy.
     */
-  def silhouetteReport(df: DataFrame, label: Column, vec: Column,
-      bits: Int = 24): DataFrame = {
+  def silhouetteReport(df: DataFrame, label: Column, vec: Column): DataFrame = {
     import org.apache.spark.sql.graft.VectorFunctions
-    val scale = math.pow(2, bits)
+    val scale = math.pow(2, MeanBits)
     val centsRow = broadcast(centroidVectors(df, label, vec)
       .agg(sort_array(collect_list(struct(col("label").as("clabel"),
         col("centroid").cast("array<float>").as("cv")))).as("__cents")))

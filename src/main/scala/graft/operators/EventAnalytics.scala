@@ -11,6 +11,19 @@ import org.apache.spark.sql.functions._
   */
 object EventAnalytics {
 
+  /** The session cut: consecutive events of one user more than 30 minutes
+    * apart start a new session — the q14Sessionize gap the oracles
+    * replay, in the engine's nanosecond timestamps. */
+  val SessionGapNanos: Long = 1800L * 1000000000L
+  /** Prior days [[eventAnomaly]] z-scores each day against: one week. */
+  private val AnomalyTrailingDays = 7
+  /** Decay periods after which [[timeDecayedPopularity]] weighs an event
+    * 0: below 2^-36 of the newest event's weight, noise by construction. */
+  private val DecayMaxShift = 36
+  /** Preceding same-session events [[nextEventExamples]] keeps as
+    * context: the oracle's three lags. */
+  private val NextEventHistory = 3
+
   /** The funnel family's skew guard: keep each user's EARLIEST `cap`
     * step-typed events ((ts, et) tie-broken, so the slice is
     * deterministic), via a spillable per-user window sort BEFORE any
@@ -307,7 +320,7 @@ object EventAnalytics {
   /** Session-aware event-transition counts — the Markov/Sankey source
     * table behind "where do users go after X" product analytics: for each
     * pair of CONSECUTIVE events by the same user within one session
-    * (gap ≤ `sessionGapNanos`, the [[graft.queries.Relational.q14Sessionize]]
+    * (gap ≤ [[SessionGapNanos]], the [[graft.queries.Relational.q14Sessionize]]
     * gap rule), count the (from_type → to_type) transition. Output: one
     * row per observed ordered pair — (from_type, to_type, n_transitions,
     * n_users) — with n_users the number of distinct users who made that
@@ -327,10 +340,7 @@ object EventAnalytics {
     * shuffle wider than (user, ts, type, tiebreak).
     */
   def eventTransitions(df: DataFrame, user: Column, tsNanos: Column,
-      eventType: Column, tieBreak: Column,
-      sessionGapNanos: Long = 1800L * 1000000000L): DataFrame = {
-    require(sessionGapNanos > 0,
-      s"sessionGapNanos must be positive, got $sessionGapNanos")
+      eventType: Column, tieBreak: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("tb"))
     val byUser = df.select(user.as("user_id"), tsNanos.cast("long").as("ts"),
@@ -339,7 +349,7 @@ object EventAnalytics {
         lag(col("et"), 1).over(w).as("prev_et"),
         lag(col("ts"), 1).over(w).as("prev_ts"))
       .filter(col("prev_et").isNotNull &&
-        col("ts") - col("prev_ts") <= sessionGapNanos)
+        col("ts") - col("prev_ts") <= SessionGapNanos)
     byUser
       .groupBy(col("prev_et").as("from_type"), col("et").as("to_type"),
         col("user_id"))
@@ -382,13 +392,13 @@ object EventAnalytics {
 
   /** Trailing-window anomaly screen over daily event volumes — the
     * model-free "did a feed break / spike today" monitor: per event type,
-    * each day's count is z-scored against the mean/std of the `trailing`
-    * OBSERVED days before it (days with zero events don't appear —
-    * calendar gaps are the upstream signal [[graft.operators.Diagnostics
-    * .sourceDrift]] catches content-wise; this screen reads volumes).
-    * Output: (event_type, day, n_events, mean_prior, std_prior, z), only
-    * rows with a full `trailing`-day prior (a partial prior makes z
-    * noise); z is NULL when the prior is constant (std 0 — a division
+    * each day's count is z-scored against the mean/std of the
+    * [[AnomalyTrailingDays]] OBSERVED days before it (days with zero
+    * events don't appear — calendar gaps are the upstream signal
+    * [[graft.operators.Diagnostics.sourceDrift]] catches content-wise;
+    * this screen reads volumes). Output: (event_type, day, n_events,
+    * mean_prior, std_prior, z), only rows with a full prior (a partial
+    * prior makes z noise); z is NULL when the prior is constant (std 0 — a division
     * there would manufacture ±Inf alerts from one-count jitter).
     *
     * Determinism: counts and the frame sums (Σx, Σx²) are exact longs;
@@ -400,9 +410,7 @@ object EventAnalytics {
     * one window per event type over its day series (|types| × |days|
     * rows — trivially small at any corpus scale).
     */
-  def eventAnomaly(df: DataFrame, eventType: Column, tsNanos: Column,
-      trailing: Int = 7): DataFrame = {
-    require(trailing >= 2, s"trailing must be >= 2, got $trailing")
+  def eventAnomaly(df: DataFrame, eventType: Column, tsNanos: Column): DataFrame = {
     val daily = df.select(eventType.as("event_type"),
         tsNanos.cast("long").as("__ts"))
       .select(col("event_type"), expr("__ts div 86400000000000").as("day"))
@@ -410,13 +418,13 @@ object EventAnalytics {
       .agg(count(lit(1)).as("n_events"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("day"))
-      .rowsBetween(-trailing, -1)
-    val nD = lit(trailing.toDouble)
+      .rowsBetween(-AnomalyTrailingDays, -1)
+    val nD = lit(AnomalyTrailingDays.toDouble)
     val withSums = daily
       .withColumn("__np", count(lit(1)).over(w))
       .withColumn("__s", sum(col("n_events")).over(w))
       .withColumn("__s2", sum(col("n_events") * col("n_events")).over(w))
-      .filter(col("__np") === trailing)
+      .filter(col("__np") === AnomalyTrailingDays)
     val mean = col("__s").cast("double") / nD
     val variance = greatest(lit(0.0),
       (col("__s2").cast("double") -
@@ -434,7 +442,7 @@ object EventAnalytics {
 
   /** Session-scoped conversion attribution — the first-touch/last-touch
     * report behind "which channel gets credit for this purchase":
-    * sessions are cut at `sessionGapNanos` (the [[eventTransitions]] gap
+    * sessions are cut at [[SessionGapNanos]] (the [[eventTransitions]] gap
     * rule), and every conversion event is attributed to the FIRST and the
     * LAST non-conversion event earlier in its own session. Output: one
     * row per touch type — (touch_type, n_first_touch, n_last_touch) —
@@ -453,14 +461,11 @@ object EventAnalytics {
     * spills, so a bot user is slow but not fatal.
     */
   def conversionAttribution(df: DataFrame, user: Column, tsNanos: Column,
-      eventType: Column, tieBreak: Column, conversion: Column,
-      sessionGapNanos: Long = 1800L * 1000000000L): DataFrame = {
-    require(sessionGapNanos > 0,
-      s"sessionGapNanos must be positive, got $sessionGapNanos")
+      eventType: Column, tieBreak: Column, conversion: Column): DataFrame = {
     val base = withSessionSeq(
       df.select(user.as("u"), tsNanos.cast("long").as("ts"),
         eventType.as("et"), tieBreak.as("tb"), conversion.as("conv")),
-      "u", Seq(col("ts"), col("tb")), sessionGapNanos, "sess")
+      "u", Seq(col("ts"), col("tb")), SessionGapNanos, "sess")
     val wSess = org.apache.spark.sql.expressions.Window
       .partitionBy(col("u"), col("sess")).orderBy(col("ts"), col("tb"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -486,7 +491,7 @@ object EventAnalytics {
   /** Three-step session path mining — the "what do users actually do"
     * readout one hop deeper than [[eventTransitions]]: every consecutive
     * (e1 → e2 → e3) triple whose BOTH gaps fall inside one session
-    * (each step-to-step gap ≤ `sessionGapNanos` — the same boundary rule
+    * (each step-to-step gap ≤ [[SessionGapNanos]] — the same boundary rule
     * as the transition operator, applied per hop), counted across the
     * corpus with the number of distinct users walking the path.
     * Output: (step1, step2, step3, n_paths, n_users), most-walked first
@@ -504,10 +509,7 @@ object EventAnalytics {
     * (user, ts, type, tiebreak).
     */
   def sessionPaths(df: DataFrame, user: Column, tsNanos: Column,
-      eventType: Column, tieBreak: Column,
-      sessionGapNanos: Long = 1800L * 1000000000L): DataFrame = {
-    require(sessionGapNanos > 0,
-      s"sessionGapNanos must be positive, got $sessionGapNanos")
+      eventType: Column, tieBreak: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("tb"))
     df.select(user.as("user_id"), tsNanos.cast("long").as("ts"),
@@ -518,8 +520,8 @@ object EventAnalytics {
         lag(col("et"), 2).over(w).as("e1"),
         lag(col("ts"), 2).over(w).as("ts1"))
       .filter(col("e1").isNotNull &&
-        col("ts") - col("ts2") <= sessionGapNanos &&
-        col("ts2") - col("ts1") <= sessionGapNanos)
+        col("ts") - col("ts2") <= SessionGapNanos &&
+        col("ts2") - col("ts1") <= SessionGapNanos)
       .groupBy(col("e1").as("step1"), col("e2").as("step2"),
         col("et").as("step3"), col("user_id"))
       .agg(count(lit(1)).as("__c"))
@@ -555,10 +557,7 @@ object EventAnalytics {
     */
   def sessionTranscripts(df: DataFrame, user: Column, tsNanos: Column,
       role: Column, content: Column,
-      sessionGapNanos: Long = 1800L * 1000000000L,
       maxTurnsPerSession: Int = 0): DataFrame = {
-    require(sessionGapNanos > 0,
-      s"sessionGapNanos must be positive, got $sessionGapNanos")
     require(maxTurnsPerSession >= 0,
       s"maxTurnsPerSession must be >= 0 (0 = uncapped), got $maxTurnsPerSession")
     val sessioned = withSessionSeq(
@@ -568,7 +567,7 @@ object EventAnalytics {
         coalesce(role, lit("")).as("role"),
         coalesce(content, lit("")).as("content")),
       "user_id", Seq(col("ts"), col("role"), col("content")),
-      sessionGapNanos, "session_seq")
+      SessionGapNanos, "session_seq")
     keepEarliest(sessioned,
         Seq(col("user_id"), col("session_seq")),
         Seq(col("ts"), col("role"), col("content")), maxTurnsPerSession)
@@ -591,7 +590,7 @@ object EventAnalytics {
   /** Next-event training examples — the session-based sequence-model
     * dataset (next-item recommendation, behavioral LM pretraining): for
     * every event with at least one same-session predecessor, emit
-    * (context = up to `historyLen` preceding event types in order,
+    * (context = up to [[NextEventHistory]] preceding event types in order,
     * label = this event's type). Sessionization is the [[sessionPaths]]
     * gap rule; `tieBreak` (a unique column — event id) makes equal-ts
     * ordering deterministic.
@@ -606,19 +605,15 @@ object EventAnalytics {
     * corpus-sized by design — it IS the training set.
     */
   def nextEventExamples(df: DataFrame, user: Column, tsNanos: Column,
-      eventType: Column, tieBreak: Column, historyLen: Int = 3,
-      sessionGapNanos: Long = 1800L * 1000000000L): DataFrame = {
-    require(historyLen >= 1, s"historyLen must be >= 1, got $historyLen")
-    require(sessionGapNanos > 0,
-      s"sessionGapNanos must be positive, got $sessionGapNanos")
+      eventType: Column, tieBreak: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val sessioned = withSessionSeq(
       df.select(user.as("user_id"), tsNanos.cast("long").as("ts"),
         eventType.as("et"), tieBreak.as("tb")),
-      "user_id", Seq(col("ts"), col("tb")), sessionGapNanos, "__sess")
+      "user_id", Seq(col("ts"), col("tb")), SessionGapNanos, "__sess")
     val ws = Window.partitionBy(col("user_id"), col("__sess"))
       .orderBy(col("ts"), col("tb"))
-    val lags = (historyLen to 1 by -1).map(k => lag(col("et"), k).over(ws))
+    val lags = (NextEventHistory to 1 by -1).map(k => lag(col("et"), k).over(ws))
     sessioned
       .withColumn("__ctx",
         filter(array(lags: _*), x => x.isNotNull))
@@ -685,11 +680,11 @@ object EventAnalytics {
     * decayed), hottest first with the type tiebreak.
     *
     * Determinism: the decay is EXACT binary arithmetic, not a float pow
-    * chain — each event's weight is the integer `2^(maxShift - age)`
-    * (0 beyond `maxShift` periods: a contribution below 2^-36 of the
+    * chain — each event's weight is the integer `2^(36 - age)` (0 beyond
+    * [[DecayMaxShift]] = 36 periods: a contribution below 2^-36 of the
     * newest event's is noise by construction, and the cutoff is part of
     * the contract), weights sum as DECIMAL(38,0), and the single IEEE
-    * division by `2^maxShift` happens once per output row. Any engine
+    * division by `2^36` happens once per output row. Any engine
     * replays it bit-for-bit — no cross-row float addition anywhere.
     *
     * Scale shape: one map-side projection (period index off the
@@ -699,25 +694,22 @@ object EventAnalytics {
     * nothing but partial sums. |types|-row output at any scale.
     */
   def timeDecayedPopularity(df: DataFrame, eventType: Column,
-      tsNanos: Column, halfLifeDays: Int = 7,
-      maxShift: Int = 36): DataFrame = {
+      tsNanos: Column, halfLifeDays: Int = 7): DataFrame = {
     require(halfLifeDays > 0, s"halfLifeDays must be positive, got $halfLifeDays")
-    require(maxShift > 0 && maxShift <= 62,
-      s"maxShift must be in [1, 62], got $maxShift")
     val period = 86400L * 1000000000L * halfLifeDays
     val base = df.select(eventType.as("et"), tsNanos.cast("long").as("ts"))
       .select(col("et"), expr(s"ts div $period").as("hl"))
     val asOf = broadcast(base.agg(max(col("hl")).as("__asof")))
     base.crossJoin(asOf)
       .select(col("et"),
-        when(col("__asof") - col("hl") <= maxShift,
-          expr(s"shiftleft(CAST(1 AS BIGINT), CAST($maxShift - (__asof - hl) AS INT))"))
+        when(col("__asof") - col("hl") <= DecayMaxShift,
+          expr(s"shiftleft(CAST(1 AS BIGINT), CAST($DecayMaxShift - (__asof - hl) AS INT))"))
           .otherwise(0L).as("wfp"))
       .groupBy(col("et").as("event_type"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("wfp").cast("decimal(38,0)")).as("__w"))
       .select(col("event_type"), col("n_events"),
-        (col("__w").cast("double") / lit(math.pow(2.0, maxShift)))
+        (col("__w").cast("double") / lit(math.pow(2.0, DecayMaxShift)))
           .as("decayed"))
       .orderBy(col("decayed").desc, col("event_type"))
   }

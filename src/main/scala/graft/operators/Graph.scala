@@ -23,8 +23,9 @@ object Graph {
     *   r'(v) = ((dampDen−dampNum)·scale) div dampDen
     *         + (dampNum · Σ_{u→v} (r(u)·w(u,v)) div out(u)) div dampDen
     *
-    * with `out(u)` = Σ of u's out-edge weights. The damping factor is the
-    * exact rational dampNum/dampDen (default 17/20 = 0.85), so every step
+    * with `out(u)` = Σ of u's out-edge weights and scale =
+    * [[LinkRankScale]]. The damping factor is the exact rational
+    * [[LinkRankDampNum]]/[[LinkRankDampDen]] = 17/20 = 0.85, so every step
     * is integer multiply / integer `div` / order-free long sums — no
     * floating point anywhere. Dangling nodes (no out-edges) simply leak
     * their mass, the standard simplification; sinks still accumulate rank
@@ -34,10 +35,9 @@ object Graph {
     * term — it must stay under 2^63, and r(u) can approach the total
     * rank mass ≈ N_nodes·scale on a star graph, so require
     * N_nodes · scale · w_max < 2^63 (and the looser
-    * dampNum · N_nodes · scale < 2^63 for the teleport sum). At the
-    * default scale 10^9 that is N·w_max < 9·10^9 — shrink `scale` for
-    * bigger graphs or pre-normalize heavy edge weights (rank resolution
-    * degrades gracefully: ties that split below 1/scale merge). Under
+    * dampNum · N_nodes · scale < 2^63 for the teleport sum). At scale
+    * 10^9 that is N·w_max < 9·10^9 — pre-normalize heavy edge weights
+    * for bigger graphs. Under
     * the engine's ANSI mode an overflow THROWS rather than wrapping, so
     * a violated bound is loud, not silently wrong.
     *
@@ -54,20 +54,17 @@ object Graph {
     * a float divide by `scale` themselves.
     */
   def linkRank(edges: DataFrame, src: Column, dst: Column, weight: Column,
-      iters: Int = 3, dampNum: Long = 17L, dampDen: Long = 20L,
-      scale: Long = 1000000000L): DataFrame = {
+      iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters must be in [1,16], got $iters")
-    require(dampNum > 0 && dampDen > dampNum,
-      s"need 0 < dampNum < dampDen, got $dampNum/$dampDen")
-    require(scale > 0, s"scale must be positive, got $scale")
     val e = edges.select(src.cast("string").as("src"),
       dst.cast("string").as("dst"), weight.cast("long").as("w"))
     val withOut = e.join(
       e.groupBy(col("src")).agg(sum(col("w")).as("out_w")), "src")
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
-    val teleport = (dampDen - dampNum) * scale / dampDen
-    var ranks = nodes.select(col("node"), lit(scale).as("r"))
+    val teleport =
+      (LinkRankDampDen - LinkRankDampNum) * LinkRankScale / LinkRankDampDen
+    var ranks = nodes.select(col("node"), lit(LinkRankScale).as("r"))
     for (_ <- 1 to iters) {
       val contribs = withOut
         .join(ranks.withColumnRenamed("node", "src"), "src")
@@ -75,9 +72,15 @@ object Graph {
         .groupBy(col("node")).agg(sum(col("c")).as("cs"))
       ranks = nodes.join(contribs, Seq("node"), "left")
         .select(col("node"),
-          (lit(teleport) +
-            expr(s"$dampNum * coalesce(cs, 0L) div $dampDen")).as("r"))
+          (lit(teleport) + expr(
+            s"$LinkRankDampNum * coalesce(cs, 0L) div $LinkRankDampDen")).as("r"))
     }
     ranks.select(col("node"), col("r").as("rank"))
   }
+
+  /** linkRank's damping 17/20 = 0.85 (Brin & Page's value) and its 10^9
+    * fixed-point rank scale, the oracle's literals. */
+  private val LinkRankDampNum = 17L
+  private val LinkRankDampDen = 20L
+  private val LinkRankScale = 1000000000L
 }

@@ -47,36 +47,25 @@ object Joins {
     * quadratic at scale. Bucketizing time into `bucketWidth`-wide chunks
     * turns it into an equi-join: each left row joins through its single
     * bucket, each right interval is exploded over the buckets it covers
-    * (≈ (hi-lo)/width + 1 rows), and the exact BETWEEN filter runs after
-    * the hash join. Every qualifying pair matches in exactly one bucket
-    * (the left row's), so no dedup pass is needed. Extra equality `keys`
-    * tighten the join when present.
+    * (≈ (hi-lo)/width + 1 rows), and the exact BETWEEN predicate runs
+    * inside the hash join's condition — a post-join filter would see null
+    * lo/hi on unmatched rows and degrade a left join to inner. Every
+    * qualifying pair matches in exactly one bucket (the left row's), so
+    * no dedup pass is needed. `joinType`: inner, left, left_semi or
+    * left_anti (right/full would duplicate the exploded intervals).
     */
   def rangeJoin(left: DataFrame, right: DataFrame, leftTime: String,
       lo: String, hi: String, bucketWidth: Long,
-      keys: Seq[String] = Seq.empty, joinType: String = "inner"): DataFrame = {
+      joinType: String = "inner"): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
     require(Set("inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi",
         "left_anti", "leftanti").contains(joinType.toLowerCase.replace(" ", "_")),
-      s"rangeJoin supports inner/left/left_semi/left_anti, got $joinType " +
-        "(the right side is exploded per bucket, so right/full would duplicate " +
-        "unmatched intervals)")
-    // The BETWEEN predicate lives INSIDE the join condition (not a post-join
-    // filter): under left joins a post-filter would see null lo/hi on
-    // unmatched rows, evaluate false, and silently drop them — degrading
-    // left to inner. Right-side key/bucket columns are renamed so the
-    // explicit condition is unambiguous, then dropped.
+      s"rangeJoin supports inner/left/left_semi/left_anti, got $joinType")
     val l = left.withColumn("__bucket", floor(col(leftTime) / bucketWidth))
-    val rExploded = right.withColumn("__rbucket",
+    val r = right.withColumn("__rbucket",
       explode(sequence(floor(col(lo) / bucketWidth), floor(col(hi) / bucketWidth))))
-    val renamed = keys.map(k => k -> s"__r_$k")
-    val r = renamed.foldLeft(rExploded) { case (d, (k, rk)) => d.withColumnRenamed(k, rk) }
-    val cond = renamed.foldLeft(
-        col("__bucket") === col("__rbucket") &&
-          col(leftTime) >= col(lo) && col(leftTime) <= col(hi)) {
-      case (c, (k, rk)) => c && col(k) === col(rk)
-    }
-    l.join(r, cond, joinType)
-      .drop("__bucket" +: "__rbucket" +: renamed.map(_._2): _*)
+    l.join(r, col("__bucket") === col("__rbucket") &&
+        col(leftTime) >= col(lo) && col(leftTime) <= col(hi), joinType)
+      .drop("__bucket", "__rbucket")
   }
 }

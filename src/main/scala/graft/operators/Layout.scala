@@ -27,8 +27,8 @@ object Layout {
     * short-to-long (or clean-to-noisy) ordering curriculum training
     * consumes, produced WITHOUT a global sort. Cut points come from one
     * mergeable KLL sketch aggregation ([[graft.functions.QuantileSketch]]:
-    * each map task ships an O(k) summary, exact while n ≤ the k buffer,
-    * rank-error-bounded beyond); the numShards−1 cuts then broadcast and
+    * each map task ships an O(k) summary, exact while n ≤ the
+    * [[CurriculumSketchK]] buffer, rank-error-bounded beyond); the numShards−1 cuts then broadcast and
     * assignment is a map-only membership count — `shard` = how many cuts
     * the score exceeds (boundary scores go to the lower shard, matching
     * the discrete-quantile convention). Output: (id, score, shard).
@@ -38,17 +38,21 @@ object Layout {
     * through one reducer and is exactly the shape this engine bans.
     */
   def curriculumShards(df: DataFrame, id: Column, score: Column,
-      numShards: Int, sketchK: Int = 4096): DataFrame = {
+      numShards: Int): DataFrame = {
     require(numShards >= 2, s"numShards must be >= 2, got $numShards")
     val probs = (1 until numShards).map(_.toDouble / numShards)
     val cuts = df.agg(graft.functions.QuantileSketch
-      .kllQuantiles(sketchK, probs)(score.cast("double")).as("__cuts"))
+      .kllQuantiles(CurriculumSketchK, probs)(score.cast("double")).as("__cuts"))
     df.select(id.as("id"), score.as("score"))
       .crossJoin(broadcast(cuts))
       .select(col("id"), col("score"),
         size(filter(col("__cuts"), c => col("score").cast("double") > c))
           .as("shard"))
   }
+
+  /** KLL buffer of [[curriculumShards]]: its cuts are exact, and so
+    * oracle-replayable, up to 4096 rows. */
+  private val CurriculumSketchK = 4096
 
   /** Hilbert-curve clustering key — same 62-bit contract as [[zOrderKey]]
     * but with no long jumps between consecutive cells, so clustered files

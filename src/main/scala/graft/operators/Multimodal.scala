@@ -7,22 +7,18 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
-  * with typed metadata, decoded/feature-extracted through a batched
-  * partition-level codec interface.
+  * with typed metadata, decoded through a batched partition-level [[Codec]]
+  * (opened once per partition, fed [[DecodeBatch]]-row batches to amortize
+  * codec init/native-call overhead).
   *
   * [[FakeCodec]] is the one shipped codec: a clearly-marked deterministic
   * FIXTURE (md5-derived pseudo-metadata) backing the SQL-oracle-checkable
   * query — an oracle can recompute its fields, which no real decoder
   * allows. A real decoder plugs in as another [[Codec]]. Images also get a
   * real perceptual hash ([[perceptualHash]], JDK javax.imageio decode)
-  * for near-dup pairs ([[imageDedupPairs]]). The
-  * Spark-side plumbing is shared and is the part that matters at 100 TB:
-  *  - payloads stay `BinaryType` end to end (no string round-trips);
-  *  - the codec is opened once per partition and fed fixed-size batches
-  *    (the JVM mirror of Arrow-batch UDF shape — batching amortizes codec
-  *    init/native-call overhead);
-  *  - output is a typed `meta` struct column; the payload column can be
-  *    dropped right after decode so wide binary data doesn't cross shuffles.
+  * for near-dup pairs ([[imageDedupPairs]]). Payloads stay `BinaryType`
+  * end to end (no string round-trips), and the payload column can be
+  * dropped right after decode so wide binary data doesn't cross shuffles.
   */
 object Multimodal {
 
@@ -45,7 +41,7 @@ object Multimodal {
   }
 
   /** STUB codec — deterministic md5-derived pseudo-metadata standing in for
-    * a real image/audio decoder (the container has no media libs). Every
+    * a real image/audio decoder (no media library is a dependency). Every
     * field is a pure function of the bytes, so a SQL oracle can recompute it.
     */
   object FakeCodec extends Codec {
@@ -74,19 +70,22 @@ object Multimodal {
   /** Fixed stand-in frame size for the "video" framing stub. */
   val FrameBytes = 256
 
+  /** Rows per [[Codec.decode]] call. */
+  private[operators] val DecodeBatch = 64
+
   /** Appends `meta: struct<format,width,height,n_frames,n_bytes>` by running
-    * `codec` over `batchSize`-row batches per partition.
+    * `codec` over [[DecodeBatch]]-row batches per partition.
     */
-  def decodeMeta(df: DataFrame, payload: Column, codec: Codec = FakeCodec,
-      batchSize: Int = 64, out: String = "meta"): DataFrame = {
+  def decodeMeta(df: DataFrame, payload: Column,
+      codec: Codec = FakeCodec): DataFrame = {
     val in = df.withColumn("__graft_payload", payload)
     val n = in.schema.size
-    val outSchema = StructType(df.schema.fields :+ StructField(out, metaType))
+    val outSchema = StructType(df.schema.fields :+ StructField("meta", metaType))
     in.mapPartitions { rows =>
       codec.open()
       Option(org.apache.spark.TaskContext.get())
         .foreach(_.addTaskCompletionListener[Unit](_ => codec.close()))
-      rows.grouped(batchSize).flatMap { batch =>
+      rows.grouped(DecodeBatch).flatMap { batch =>
         val metas = codec.decode(batch.map(r =>
           r.getAs[Array[Byte]](n - 1)))
         batch.lazyZip(metas).map { (r, m) =>
@@ -165,26 +164,23 @@ object Multimodal {
     hash
   }
 
-  /** Appends `out: bigint` — the [[dHash64]] perceptual hash of each
+  /** Appends `phash: bigint` — the [[dHash64]] perceptual hash of each
     * binary payload, null when the payload doesn't decode as an image
     * (the quarantine signal, consistent with the codecs' null-format
-    * contract). One per-row partition pass (the kernel holds no cross-row
-    * codec state, so [[decodeMeta]]'s batch amortization buys nothing);
-    * drop the payload column right after so wide binaries don't cross the
-    * shuffles downstream dedup adds.
+    * contract). One per-row partition pass; drop the payload column right
+    * after so wide binaries don't cross the shuffles downstream dedup adds.
     */
-  def perceptualHash(df: DataFrame, payload: Column,
-      out: String = "phash"): DataFrame = {
+  def perceptualHash(df: DataFrame, payload: Column): DataFrame = {
     // a colliding output name would produce an ambiguous duplicate column;
     // a colliding staging name would REPLACE the caller's column in place
     // and make the kernel read the wrong bytes — guard both
-    require(!df.columns.contains(out),
-      s"output column '$out' already exists; pass a different `out`")
+    require(!df.columns.contains("phash"),
+      "output column 'phash' already exists; rename it first")
     val stage = Iterator.from(0).map(i => s"__graft_payload$i")
       .find(c => !df.columns.contains(c)).get
     val in = df.withColumn(stage, payload)
     val n = in.schema.size
-    val outSchema = StructType(df.schema.fields :+ StructField(out, LongType))
+    val outSchema = StructType(df.schema.fields :+ StructField("phash", LongType))
     in.mapPartitions { rows =>
       rows.map { r =>
         val b = r.getAs[Array[Byte]](n - 1)

@@ -21,7 +21,7 @@ object Preference {
     * row says `winner` beat `loser` once. Output: one row per item that
     * appears in any comparison — (item, wins, losses, n, win_rate,
     * wilson_lb) — where `wilson_lb` is the lower bound of the Wilson
-    * score interval at confidence `z` (1.96 ≈ 95%):
+    * score interval at confidence z = [[WilsonZ]]:
     *
     *   lb = (p̂ + z²/2n − z·sqrt((p̂(1−p̂) + z²/4n)/n)) / (1 + z²/n)
     *
@@ -34,9 +34,12 @@ object Preference {
     * |items|-sized. No window, no driver collect. Ties must be resolved
     * upstream (emit no row, or one row each way for a split ballot).
     */
-  def winRates(pairs: DataFrame, winner: Column, loser: Column,
-      z: Double = 1.96): DataFrame =
-    ratesFromCounts(ballotCounts(pairs, winner, loser), z)
+  def winRates(pairs: DataFrame, winner: Column, loser: Column): DataFrame =
+    ratesFromCounts(ballotCounts(pairs, winner, loser))
+
+  /** The Wilson interval's normal quantile: 1.96 ≈ 95% confidence, the
+    * oracles' literal. */
+  private val WilsonZ = 1.96
 
   /** The count half of [[winRates]]: ballots → (item, wins, n). Exposed
     * so incremental consumers ([[graft.streaming.Streams.PreferenceIngest]])
@@ -59,19 +62,18 @@ object Preference {
     *
     *   s_i ← W_i / Σ_j n_ij / (s_i + s_j)
     *
-    * in FIXED-POINT integer arithmetic: strengths at `scale`, the inner
-    * reciprocal at `prec`, every step an integer multiply / `div` /
-    * order-free long sum — bit-deterministic on any partitioning and
+    * in FIXED-POINT integer arithmetic: strengths at [[BtScale]], the
+    * inner reciprocal at [[BtPrec]], every step an integer multiply /
+    * `div` / order-free long sum — bit-deterministic on any partitioning and
     * replayable by an ANSI-SQL oracle as `iters` unrolled CTEs (the
     * win-total numerator rides DECIMAL(38,0) so it cannot overflow).
     * A zero-win item floors at strength 1 (the MM update is degenerate
     * there; the floor keeps later divisions defined and ranks such items
     * last, which is the right answer). Strengths are unnormalized —
-    * ratios are meaningful, the absolute level is `scale`-relative.
+    * ratios are meaningful, the absolute level is BtScale-relative.
     *
-    * Overflow bound: n_ij · prec < 2^63 ⇒ at the default prec each
-    * opponent pair supports ≤ ~9 200 comparisons; shrink `prec` for
-    * heavier pairs (resolution degrades gracefully).
+    * Overflow bound: n_ij · BtPrec < 2^63 ⇒ each opponent pair supports
+    * ≤ ~9 200 comparisons.
     *
     * Output: (item, wins, losses, n, strength_fp) with `strength_fp` the
     * fixed-point Long. Fixed iteration count by design — rank order
@@ -84,10 +86,8 @@ object Preference {
     * |items| rows; ballots themselves are touched once, up front.
     */
   def btStrengths(pairs: DataFrame, winner: Column, loser: Column,
-      iters: Int = 2, scale: Long = 1000000000L,
-      prec: Long = 1000000000000000L): DataFrame = {
+      iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 8, s"iters must be in [1,8], got $iters")
-    require(scale > 0 && prec > 0, s"scale=$scale prec=$prec")
     val ord = pairs.select(winner.as("item"), loser.as("opp"), lit(1L).as("w"))
       .unionByName(pairs.select(loser.as("item"), winner.as("opp"),
         lit(0L).as("w")))
@@ -95,29 +95,34 @@ object Preference {
       .agg(count(lit(1)).as("n_io"), sum(col("w")).as("w_io"))
     val wins = ord.groupBy(col("item"))
       .agg(sum(col("w_io")).as("wins"), sum(col("n_io")).as("n"))
-    var s = wins.select(col("item"), lit(scale).as("s"))
+    var s = wins.select(col("item"), lit(BtScale).as("s"))
     for (_ <- 1 to iters) {
       val d = ord
         .join(s, "item")
         .join(s.select(col("item").as("opp"), col("s").as("s_opp")), "opp")
         .select(col("item"),
-          expr(s"n_io * ${prec}L div (s + s_opp)").as("t"))
+          expr(s"n_io * ${BtPrec}L div (s + s_opp)").as("t"))
         .groupBy(col("item")).agg(sum(col("t")).as("d"))
       s = wins.join(d, "item")
         .select(col("item"), greatest(lit(1L),
-          expr(s"CAST(wins AS DECIMAL(38,0)) * ${prec}L div d")).as("s"))
+          expr(s"CAST(wins AS DECIMAL(38,0)) * ${BtPrec}L div d")).as("s"))
     }
     wins.join(s, "item")
       .select(col("item"), col("wins"), (col("n") - col("wins")).as("losses"),
         col("n"), col("s").as("strength_fp"))
   }
 
+  /** Fixed-point scales of [[btStrengths]]: strengths start at 10^9 and
+    * the inner reciprocal carries 10^15, the oracle's unrolled CTE
+    * literals. */
+  private val BtScale = 1000000000L
+  private val BtPrec = 1000000000000000L
+
   /** The derivation half of [[winRates]] over a (item, wins, n) count
     * table — map-only, no shuffle.
     */
-  def ratesFromCounts(counts: DataFrame, z: Double = 1.96): DataFrame = {
-    require(z > 0, s"z must be positive, got $z")
-    val zz = lit(z * z)
+  def ratesFromCounts(counts: DataFrame): DataFrame = {
+    val zz = lit(WilsonZ * WilsonZ)
     val base = counts.select(col("item"), col("wins"),
       (col("n") - col("wins")).as("losses"), col("n"),
       (col("wins").cast("double") / col("n").cast("double")).as("win_rate"))
@@ -125,7 +130,7 @@ object Preference {
     val p = col("win_rate")
     // fixed-order chain: center, then margin, then the denominator
     val center = p + zz / (lit(2.0) * nD)
-    val margin = lit(z) * sqrt((p * (lit(1.0) - p) + zz / (lit(4.0) * nD)) / nD)
+    val margin = lit(WilsonZ) * sqrt((p * (lit(1.0) - p) + zz / (lit(4.0) * nD)) / nD)
     val denom = lit(1.0) + zz / nD
     base.withColumn("wilson_lb", (center - margin) / denom)
   }

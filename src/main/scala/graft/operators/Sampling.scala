@@ -210,8 +210,8 @@ object Sampling {
     * capture).
     *
     * Output: (rank, center_id, n_assigned, mean_dist, max_dist) —
-    * mean_dist a 2^bits fixed-point mean ([[EmbeddingStats
-    * .labelCentroids]] pattern), max order-free.
+    * mean_dist a 2^24 fixed-point mean ([[EmbeddingStats
+    * .labelCentroids]] pattern and scale), max order-free.
     *
     * Scale shape: the k greedy rounds ([[kCenterRounds]]), then ONE
     * map-only corpus pass — centers ride as ≤ k exact float literals,
@@ -219,7 +219,7 @@ object Sampling {
     * groupBy. No join, no window, no N-row exchange.
     */
   def kCenterCoverage(df: DataFrame, id: Column, vec: Column,
-      k: Int, bits: Int = 24): DataFrame = {
+      k: Int): DataFrame = {
     import org.apache.spark.sql.graft.VectorFunctions
     val spark = df.sparkSession
     import spark.implicits._
@@ -228,7 +228,7 @@ object Sampling {
       return Seq.empty[(Int, Long, Long, Double, Double)]
         .toDF("rank", "center_id", "n_assigned", "mean_dist", "max_dist")
     }
-    val scale = math.pow(2, bits)
+    val scale = math.pow(2, 24)
     val centsLit = array(rounds.map { case (_, cid, cv, _) =>
       struct(lit(cid).as("cid"), array(cv.map(lit(_)): _*).as("cv"))
     }: _*)
@@ -293,18 +293,18 @@ object Sampling {
     * epoch-shuffle cost: you cannot order data randomly without moving it
     * once.
     */
-  def epochShuffle(df: DataFrame, key: Column, numShards: Int, epoch: Int,
-      shardOut: String = "shard", posOut: String = "pos"): DataFrame = {
+  def epochShuffle(df: DataFrame, key: Column, numShards: Int,
+      epoch: Int): DataFrame = {
     require(numShards > 0, s"numShards must be positive, got $numShards")
     require(epoch >= 0, s"epoch must be >= 0, got $epoch")
     import org.apache.spark.sql.expressions.Window
     // hash32 is a non-negative 32-bit value in a long, so % == pmod here
     val h = TextFunctions.hash32(
       concat(key.cast("string"), lit(":"), lit(epoch.toString)))
-    val w = Window.partitionBy(col(shardOut)).orderBy(col("__h"), key)
+    val w = Window.partitionBy(col("shard")).orderBy(col("__h"), key)
     df.withColumn("__h", h)
-      .withColumn(shardOut, (col("__h") % numShards).cast("int"))
-      .withColumn(posOut, row_number().over(w))
+      .withColumn("shard", (col("__h") % numShards).cast("int"))
+      .withColumn("pos", row_number().over(w))
       .drop("__h")
   }
 
@@ -360,11 +360,11 @@ object Sampling {
     * 8-byte-key left join on top of the map-only split.
     */
   def splitByCluster(df: DataFrame, id: Column, components: DataFrame,
-      splits: Seq[(String, Double)], out: String = "split"): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     val keyed = df.select(id.as("id"))
       .join(components.select(col("id"), col("component")), Seq("id"), "left")
       .select(col("id"), coalesce(col("component"), col("id")).as("__ck"))
-    splitByHash(keyed, col("__ck"), splits, out).drop("__ck")
+    splitByHash(keyed, col("__ck"), splits).drop("__ck")
   }
 
   /** DSIR-style importance scores (Xie et al. 2023, "Data Selection for
@@ -515,11 +515,11 @@ object Sampling {
     * window).
     */
   def quantileNormalize(df: DataFrame, group: Column, score: Column,
-      tieBreak: Column, out: String = "q"): DataFrame = {
+      tieBreak: Column): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__qn_g")).orderBy(score, tieBreak)
     df.withColumn("__qn_g", group)
-      .withColumn(out, percent_rank().over(w))
+      .withColumn("q", percent_rank().over(w))
       .drop("__qn_g")
   }
 
@@ -532,7 +532,7 @@ object Sampling {
     * are cut in the given order.
     */
   def splitByHash(df: DataFrame, key: Column,
-      splits: Seq[(String, Double)], out: String = "split"): DataFrame = {
+      splits: Seq[(String, Double)]): DataFrame = {
     require(splits.nonEmpty, "need at least one split")
     require(splits.forall(_._2 >= 0), "weights must be >= 0")
     val total = splits.map(_._2).sum
@@ -545,7 +545,7 @@ object Sampling {
     val assigned = cuts.foldRight(lit(splits.last._1)) { case ((name, cut), els) =>
       when(h < lit(cut), lit(name)).otherwise(els)
     }
-    df.withColumn(out, assigned)
+    df.withColumn("split", assigned)
   }
 
   /** Water-filling token-budget allocation across sources — the standard

@@ -433,20 +433,26 @@ object Similarity {
     * cost is MLlib's k-means|| (a handful of passes over the corpus); the
     * result is tiny (k × dims) and broadcasts like any centroid set.
     */
-  def trainCentroids(corpus: DataFrame, k: Int, seed: Long = 42,
-      maxIter: Int = 20): DataFrame = {
+  def trainCentroids(corpus: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val toVec = udf((a: Seq[Float]) =>
       org.apache.spark.ml.linalg.Vectors.dense(a.map(_.toDouble).toArray))
     val data = corpus.select(toVec(col("embedding")).as("features"))
     val model = new org.apache.spark.ml.clustering.KMeans()
-      .setK(k).setSeed(seed).setMaxIter(maxIter).setFeaturesCol("features")
+      .setK(k).setSeed(KMeansSeed).setMaxIter(KMeansMaxIter)
+      .setFeaturesCol("features")
       .fit(data)
     model.clusterCenters.zipWithIndex
       .map { case (c, i) => (i.toLong, c.toArray.map(_.toFloat).toSeq) }
       .toSeq.toDF("cid", "cv")
   }
+
+  /** Seed and round budget of every k-means the quantizers train: the
+    * seed that produced the pinned registry centroids, and MLlib's
+    * default 20 rounds. */
+  private val KMeansSeed = 42L
+  private val KMeansMaxIter = 20
 
   // ------------------------------------------------ product quantization
 
@@ -464,11 +470,11 @@ object Similarity {
     * bit-stable across engines and across any aggregation order — the same
     * design throughline as [[Index.Int8]].
     *
-    * `maxEntries` caps the codebook at a FIXED size (default 128, so
-    * entry ids pack one byte per subspace): a codebook is a model, and
+    * [[PqMaxEntries]] caps the codebook at a FIXED size (128, so entry
+    * ids pack one byte per subspace): a codebook is a model, and
     * letting J track the corpus (J = n/entryEvery) made encode-side
     * assignment n×m×J = quadratic in n. The cap takes the FIRST
-    * `maxEntries` pmod-selected vectors in `vec_id` order — via
+    * PqMaxEntries pmod-selected vectors in `vec_id` order — via
     * [[selectionBound]]'s literal cutoff, so the parquet scan prunes on it
     * (PushedFilters) and every re-execution of the codebook subtree (one
     * per consumer: encode and LUT) stays a pruned scan rather than a
@@ -478,13 +484,12 @@ object Similarity {
     * one-byte-per-subspace layout requires it) rather than
     * `vec_id div entryEvery`, so corpora whose ids do not start at 0
     * still produce a full, dense codebook. The rank window runs over the
-    * bound-filtered ≤`maxEntries` rows — constant-size, not corpus-sized.
+    * bound-filtered ≤ PqMaxEntries rows — constant-size, not corpus-sized.
     * [[pqCodebookTrained]] remains the content-adaptive production
     * quantizer.
     */
-  def pqCodebook(corpus: DataFrame, m: Int, entryEvery: Long,
-      maxEntries: Int = 128): DataFrame = {
-    val bound = selectionBound(corpus, entryEvery, maxEntries)
+  def pqCodebook(corpus: DataFrame, m: Int, entryEvery: Long): DataFrame = {
+    val bound = selectionBound(corpus, entryEvery, PqMaxEntries)
     val sel = corpus.filter(pmod(col("vec_id"), lit(entryEvery)) === 0 &&
         col("vec_id") <= bound)
       .select(col("vec_id"), col("embedding"))
@@ -494,6 +499,10 @@ object Similarity {
         VectorFunctions.quantizeInt8(col("embedding")).as("code"))
     subSplit(sel, m).select(col("sub"), col("entry"), col("scode"))
   }
+
+  /** Codebook entries per subspace: 128 keeps entry ids one byte each,
+    * the packed ADC layout. */
+  private val PqMaxEntries = 128
 
   /** The `max`-th smallest corpus id divisible by `every` (or the largest
     * such id when fewer exist), computed once as a driver-side scalar from
@@ -520,8 +529,7 @@ object Similarity {
     * ADC contract is preserved. Not SQL-replayable (k-means) — spec-gated,
     * production path.
     */
-  def pqCodebookTrained(corpus: DataFrame, m: Int, j: Int,
-      seed: Long = 42): DataFrame = {
+  def pqCodebookTrained(corpus: DataFrame, m: Int, j: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val subs = subSplit(
@@ -533,7 +541,8 @@ object Similarity {
       val data = subs.filter(col("sub") === s)
         .select(toVec(col("scode")).as("features"))
       val model = new org.apache.spark.ml.clustering.KMeans()
-        .setK(j).setSeed(seed + s).setMaxIter(20).setFeaturesCol("features")
+        .setK(j).setSeed(KMeansSeed + s).setMaxIter(KMeansMaxIter)
+        .setFeaturesCol("features")
         .fit(data)
       // KMeans can return < j centers on degenerate data (fewer distinct
       // sub-codes than j). The flattened sub*J+entry LUT layout consumed by
@@ -862,21 +871,19 @@ object Similarity {
     * match-keyed.
     *
     * Bitext joins two INDEPENDENT id spaces (English sentence 7 and its
-    * French translation can both carry vec_id 7), so equal ids score by
-    * default. When both frames slice ONE id space and overlap, the
-    * default silently mines every overlapping vector as its own best
-    * match (cos = 1 dominates any margin) — set `excludeSelfIds = true`
-    * for that same-space shape.
+    * French translation can both carry vec_id 7), so equal ids score.
+    * Frames that slice ONE id space must not overlap: an overlapping
+    * vector mines itself as its own best match (cos = 1 dominates any
+    * margin).
     */
   def marginMine(queries: DataFrame, corpus: DataFrame,
-      source: Index.Shortlist, k: Int = 4, threshold: Double = 1.0,
-      excludeSelfIds: Boolean = false): DataFrame = {
+      source: Index.Shortlist, k: Int = 4,
+      threshold: Double = 1.0): DataFrame = {
     // zero-norm vectors cosine to NULL — drop those pairs here: they
     // carry no alignment signal, and a NULL score would break the
     // non-nullable TopK aggregation buffer below
-    val scored = pairs(queries, corpus, source).filter(col("cos").isNotNull)
     marginOverPairs(
-      (if (excludeSelfIds) scored.filter(notSelf) else scored)
+      pairs(queries, corpus, source).filter(col("cos").isNotNull)
         .select(col("query_id"), col("neighbor_id").as("match_id"),
           col("cos")),
       k, threshold)

@@ -256,15 +256,15 @@ object TextIndex {
         posexplode(chunkTokens(text, window, stride)).as(Seq("chunk_id", "chunk")))
 
   /** Repetition-based quality stats (the Gopher/C4-style duplicate-content
-    * signals): per document, the number of `sep`-separated segments, the
+    * signals): per document, the number of sentence segments (split at
+    * ". ", the oracle's separator), the
     * distinct count, the duplicate-segment fraction, and the fraction of
     * segments taken by the single most repeated one. Exact integer-ratio
     * doubles. Two groupBys over (doc, segment-hash)-sized rows — no segment
     * text needs to survive the first aggregation at scale, and no window.
     */
-  def repetitionStats(df: DataFrame, id: Column, text: Column,
-      sep: String = "\\. "): DataFrame =
-    df.select(id.as("id"), explode(split(text, sep)).as("seg"))
+  def repetitionStats(df: DataFrame, id: Column, text: Column): DataFrame =
+    df.select(id.as("id"), explode(split(text, "\\. ")).as("seg"))
       .groupBy(col("id"), col("seg")).agg(count(lit(1)).as("n"))
       .groupBy(col("id"))
       .agg(sum(col("n")).as("n_seg"), count(lit(1)).as("n_uniq"),
@@ -900,6 +900,11 @@ object TextIndex {
     */
   val Bm25Scale: Double = 1048576.0
 
+  /** Okapi BM25's term-saturation k1 and length-normalization b: the
+    * standard 1.2 and 0.75, which the bm25 oracles' SQL hard-codes. */
+  private val Bm25K1 = 1.2
+  private val Bm25B = 0.75
+
   /** BM25 ranked retrieval (Robertson & Walker 1994, Okapi BM25): score
     * each query's terms against the corpus inverted index and return the
     * top-`k` documents per query. `queryTerms` is a (qid, term) frame — an
@@ -907,7 +912,8 @@ object TextIndex {
     * CONSTRUCTION relative to the corpus and broadcasts.
     *
     * Scoring follows the standard shape
-    * `idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))` with one
+    * `idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))`
+    * ([[Bm25K1]], [[Bm25B]]) with one
     * deliberate deviation: `idf` is the raw Robertson–Spärck-Jones ratio
     * `(N − df + 0.5)/(df + 0.5)` WITHOUT the `ln` — the same stance as
     * [[relevantTerms]] (libm's last ulp differs across engines, so `ln`
@@ -946,8 +952,7 @@ object TextIndex {
     * is a persisted inverted index anyway — see [[postingsIncremental]]).
     */
   def bm25TopK(df: DataFrame, id: Column, text: Column,
-      queryTerms: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      queryTerms: DataFrame, k: Int): DataFrame = {
     val src = df.select(id.as("__id"), text.as("__text"))
     val nDim = src.agg(count(lit(1)).as("__n"))
     // Two inline-build optimizations over the naive postings() feed, both
@@ -980,7 +985,7 @@ object TextIndex {
       .select(col("__id").as("doc_id"),
         size(TextFunctions.tokensWs(col("__text"))).cast("long").as("__dl0"))
       .groupBy(col("doc_id")).agg(sum(col("__dl0")).as("dl"))
-    bm25Serve(prunedP, dl, nDim, queryTerms, k, k1, b, prePruned = true)
+    bm25Serve(prunedP, dl, nDim, queryTerms, k, prePruned = true)
   }
 
   /** [[bm25TopK]] served from a MAINTAINED posting table — the production
@@ -995,11 +1000,10 @@ object TextIndex {
     * index (the folded batches' row counts sum to exactly it).
     */
   def bm25TopKFromPostings(p: DataFrame, corpusSize: DataFrame,
-      queryTerms: DataFrame, k: Int,
-      k1: Double = 1.2, b: Double = 0.75): DataFrame =
+      queryTerms: DataFrame, k: Int): DataFrame =
     bm25Serve(p,
       p.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")),
-      corpusSize, queryTerms, k, k1, b)
+      corpusSize, queryTerms, k)
 
   /** Shared BM25 serve core: scoring over a posting table with the
     * doc-length dim supplied by the caller — posting-derived
@@ -1012,7 +1016,7 @@ object TextIndex {
     */
   private def bm25Serve(p: DataFrame, dlDim: DataFrame,
       corpusSize: DataFrame, queryTerms: DataFrame, k: Int,
-      k1: Double, b: Double, prePruned: Boolean = false): DataFrame = {
+      prePruned: Boolean = false): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     // Pin the two SMALL derived dims (r20 guide §2.4 — remove repeated
     // passes): each is referenced twice downstream (dl by totDim + the
@@ -1045,8 +1049,8 @@ object TextIndex {
     val dld = col("dl").cast("double")
     val avgdl = col("__tot").cast("double") / nd
     val idf = (nd - dfd + lit(0.5)) / (dfd + lit(0.5))
-    val norm = lit(k1) * (lit(1.0) - lit(b) + lit(b) * (dld / avgdl))
-    val contrib = idf * ((tfd * lit(k1 + 1.0)) / (tfd + norm))
+    val norm = lit(Bm25K1) * (lit(1.0) - lit(Bm25B) + lit(Bm25B) * (dld / avgdl))
+    val contrib = idf * ((tfd * lit(Bm25K1 + 1.0)) / (tfd + norm))
 
     val cand = qp.join(broadcast(qt), Seq("term"))
       .join(broadcast(dfq), Seq("term"))
@@ -1124,7 +1128,8 @@ object TextIndex {
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher 2009) of `lists`
     * ranked retrieval results — the standard HYBRID-RETRIEVAL combiner
     * (BM25 ∪ dense ANN in RAG stacks): each list contributes
-    * `1/(c + rank)` per (query, doc), absent docs contribute 0, and the
+    * `1/(c + rank)` per (query, doc) with c = [[RrfC]], absent docs
+    * contribute 0, and the
     * fused top-`k` per query wins. Rank-based fusion needs NO score
     * calibration between retrievers — the reason it beats score
     * averaging across heterogeneous scorers (a BM25 score and a cosine
@@ -1143,10 +1148,9 @@ object TextIndex {
     * [[graft.functions.TopKAggregator]] per query; the corpus is never
     * touched. Output: (qid, rank, doc_id, rrf).
     */
-  def rrfFuse(lists: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
+  def rrfFuse(lists: Seq[DataFrame], k: Int): DataFrame = {
     require(lists.nonEmpty, "need at least one ranked list")
     require(k > 0, s"k must be positive, got $k")
-    require(c >= 0, s"c must be non-negative, got $c")
     val renamed = lists.zipWithIndex.map { case (df, i) =>
       df.select(col("qid"), col("doc_id"),
         col("rank").cast("int").as(s"__r$i"))
@@ -1156,7 +1160,7 @@ object TextIndex {
     val score = lists.indices.map { i =>
       // a doc absent from list i has a null rank: 1/(c+null) is null,
       // coalesced to the 0 contribution RRF defines
-      coalesce(lit(1.0) / (lit(c.toDouble) + col(s"__r$i").cast("double")),
+      coalesce(lit(1.0) / (lit(RrfC.toDouble) + col(s"__r$i").cast("double")),
         lit(0.0))
     }.reduceLeft(_ + _)
     val topk = graft.functions.TopKAggregator.topK(k)
@@ -1168,6 +1172,10 @@ object TextIndex {
         col("s.id").as("doc_id"), col("s.score").as("rrf"))
   }
 
+  /** RRF's rank offset: the paper's c = 60, which the oracle's SQL
+    * hard-codes. */
+  private val RrfC = 60
+
   /** Hashed TF-IDF document vectors (the "hashing trick", Weinberger et
     * al. 2009): every term lands in `hash32(term) mod dims` and
     * contributes `tf · (N/df)` weight (the same ln-free raw idf as
@@ -1177,8 +1185,8 @@ object TextIndex {
     * clustering, and near-dup screening.
     *
     * Determinism: several terms share a bucket, and a float sum's order
-    * is engine-chosen — so bucket values accumulate in 2^scaleBits FIXED
-    * POINT (exact long addition, the [[bm25TopK]] pattern), convert once
+    * is engine-chosen — so bucket values accumulate in 2^20 FIXED POINT
+    * (exact long addition, the [[bm25TopK]] pattern and scale), convert once
     * (exponent shift), then round to float (correctly rounded, identical
     * everywhere). Documents with no tokens get the zero vector —
     * exclude them before cosine (zero norm ⇒ NaN).
@@ -1189,10 +1197,9 @@ object TextIndex {
     * only new exchange carries (doc, bucket, long) rows, ≤ dims per doc.
     */
   def hashedTfidfVectors(df: DataFrame, id: Column, text: Column,
-      dims: Int = 64, scaleBits: Int = 20): DataFrame = {
+      dims: Int = 64): DataFrame = {
     require(dims > 0, s"dims must be positive, got $dims")
-    require(scaleBits > 0 && scaleBits < 31, s"scaleBits out of range: $scaleBits")
-    val s = math.pow(2, scaleBits)
+    val s = math.pow(2, 20)
     val p = postings(df, id, text)
     val nDim = df.agg(count(lit(1)).as("__n"))
     val dfDim = p.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -1446,9 +1453,9 @@ object TextIndex {
   }
 
   /** Self-BLEU corpus diversity (Zhu et al. 2018, Texygen): each doc's
-    * modified n-gram precision against the REST of the corpus as
-    * references — the standard "is the generator collapsing onto itself"
-    * readout, and equally the training-corpus templated-boilerplate
+    * modified word-bigram precision (the oracle's n = 2) against the REST
+    * of the corpus as references — the standard "is the generator
+    * collapsing onto itself" readout, and equally the training-corpus templated-boilerplate
     * screen. BLEU's clipped count for gram g in doc d is
     * min(tf_d(g), max over d'≠d of tf_d'(g)); the leave-one-out max is
     * exact via the (m1, c1, m2) trick — the gram's global max tf, how
@@ -1467,10 +1474,9 @@ object TextIndex {
     * doc-pair-quadratic — the naive Self-BLEU is O(docs²) text
     * comparisons, this is O(corpus grams).
     */
-  def selfBleu(df: DataFrame, id: Column, text: Column,
-      n: Int = 2): DataFrame = {
+  def selfBleu(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    require(n >= 1, s"n must be >= 1, got $n")
+    val n = 2
     val base = widen(df.select(id.as("id"), text.as("__text")))
     val tf = base
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("__t"))
@@ -1608,7 +1614,8 @@ object TextIndex {
   }
 
   /** Vocabulary-growth curve (the empirical Heaps law V(n) ∝ n^β): the
-    * corpus is cut into `buckets` equal document slices in doc-id order,
+    * corpus is cut into [[VocabBuckets]] equal document slices in doc-id
+    * order,
     * and each slice reports its token mass, the terms FIRST seen there,
     * and the running vocabulary — the "how fast does vocabulary grow as
     * the corpus grows" readout that sizes tokenizer vocabularies and
@@ -1623,19 +1630,17 @@ object TextIndex {
     * Scale shape: the NTILE over doc ids is the one single-reducer sort
     * (ids only — the rfm_segments stance; swap for KLL range cuts at
     * 10⁹ docs); the first-seen reduction is a vocabulary-sized
-    * min-aggregation on raw terms; everything after runs on `buckets`
-    * rows.
+    * min-aggregation on raw terms; everything after runs on
+    * VocabBuckets rows.
     */
-  def vocabGrowth(df: DataFrame, id: Column, text: Column,
-      buckets: Int = 10): DataFrame = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
+  def vocabGrowth(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // the NTILE sorts an IDS-ONLY projection — ranking (id, text) rows
     // directly would funnel the corpus text through the window's single
     // reducer (the shape Layout.curriculumShards avoids); buckets ride
     // back to the text via an 8-byte equi-join
     val idBuckets = df.select(id.as("id"))
-      .withColumn("bucket", ntile(buckets).over(Window.orderBy(col("id"))))
+      .withColumn("bucket", ntile(VocabBuckets).over(Window.orderBy(col("id"))))
     growthCurve(df.select(id.as("id"), text.as("__text"))
       .join(idBuckets, Seq("id")))
   }
@@ -1647,7 +1652,8 @@ object TextIndex {
     * single-reducer sort anywhere (even over ids). The trade: slice
     * sizes are rank-error-bounded approximations of NTILE's exact
     * equal split once n exceeds the sketch buffer; WITHIN the buffer
-    * (n ≤ sketchK) the cuts are the exact discrete quantiles, which is
+    * (n ≤ [[VocabSketchK]]) the cuts are the exact discrete quantiles,
+    * which is
     * what lets the driver oracle replay this variant with
     * quantile_disc. Ids quantize through DOUBLE (exact to 2^53 — no
     * corpus carries that many docs).
@@ -1655,17 +1661,12 @@ object TextIndex {
     * Output and every downstream aggregate match [[vocabGrowth]]'s
     * contract: (bucket 1-based, n_docs, tokens, new_terms, cum_vocab).
     */
-  def vocabGrowthSketchCuts(df: DataFrame, id: Column, text: Column,
-      buckets: Int = 10, sketchK: Int = 4096): DataFrame = {
-    require(buckets > 0, s"buckets must be positive, got $buckets")
-    val probs = (1 until buckets).map(_.toDouble / buckets)
+  def vocabGrowthSketchCuts(df: DataFrame, id: Column, text: Column): DataFrame = {
+    val probs = (1 until VocabBuckets).map(_.toDouble / VocabBuckets)
     val base = df.select(id.as("id"), text.as("__text"))
-    val cuts =
-      if (buckets == 1) base.sparkSession.range(1)
-        .select(array().cast("array<double>").as("__cuts"))
-      else base.agg(graft.functions.QuantileSketch
-        .kllQuantiles(sketchK, probs)(col("id").cast("double"))
-        .as("__cuts"))
+    val cuts = base.agg(graft.functions.QuantileSketch
+      .kllQuantiles(VocabSketchK, probs)(col("id").cast("double"))
+      .as("__cuts"))
     growthCurve(base
       .crossJoin(broadcast(cuts))
       .select(col("id"), col("__text"),
@@ -1673,11 +1674,18 @@ object TextIndex {
           + 1).as("bucket")))
   }
 
+  /** Slices of the vocabulary-growth curve: deciles, the oracles'
+    * NTILE(10) and quantile_disc cut points. */
+  private val VocabBuckets = 10
+  /** KLL buffer of [[vocabGrowthSketchCuts]]: its cuts are exact, and so
+    * oracle-replayable, up to 4096 docs. */
+  private val VocabSketchK = 4096
+
   /** Shared tail of the vocabulary-growth family: per-bucket doc/token
     * mass, first-seen vocabulary, running total. Expects (id, __text,
     * bucket); the first-seen reduction is a vocabulary-sized
     * min-aggregation on raw terms, and the cum window runs over
-    * `buckets` rows only.
+    * VocabBuckets rows only.
     */
   private def growthCurve(b: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1717,10 +1725,9 @@ object TextIndex {
     * Determinism: p and q are exact-integer ratios (one correctly-rounded
     * division each), every per-term contribution is a fixed two-operand
     * IEEE chain, and the cross-row sums quantize each contribution to
-    * 2^bits fixed point first ([[EmbeddingStats.labelCentroids]] pattern)
-    * — contributions sum to ≤ 2, so the scaled sum stays ≤ 2^(bits+1) +
-    * |vocab|/2 (rounding slack): exact in a long at any vocabulary size
-    * for bits = 40.
+    * 2^40 fixed point first ([[EmbeddingStats.labelCentroids]] pattern)
+    * — contributions sum to ≤ 2, so the scaled sum stays ≤ 2^41 +
+    * |vocab|/2 (rounding slack): exact in a long at any vocabulary size.
     *
     * Output: ONE row — (n_terms_a, n_terms_b, n_shared, n_tokens_a,
     * n_tokens_b, hellinger, tv_dist).
@@ -1733,9 +1740,9 @@ object TextIndex {
     * aggregation. Text never shuffles; nothing wider than longs does.
     */
   def corpusDivergence(a: DataFrame, aText: Column,
-      b: DataFrame, bText: Column, bits: Int = 40): DataFrame =
+      b: DataFrame, bText: Column): DataFrame =
     corpusDivergenceFromCounts(
-      tokenFpCounts(a, aText), tokenFpCounts(b, bText), bits)
+      tokenFpCounts(a, aText), tokenFpCounts(b, bText))
 
   /** (fp, c) token-unigram counts of a corpus — [[corpusDivergence]]'s
     * storable/streamable side input (term text collapses to 60-bit
@@ -1763,10 +1770,8 @@ object TextIndex {
     * Identical output to the text-level entry point (integer counts are
     * integer counts), so the two share one oracle.
     */
-  def corpusDivergenceFromCounts(a: DataFrame, b: DataFrame,
-      bits: Int = 40): DataFrame = {
-    require(bits > 0 && bits < 50, s"bits out of range: $bits")
-    val scale = math.pow(2, bits)
+  def corpusDivergenceFromCounts(a: DataFrame, b: DataFrame): DataFrame = {
+    val scale = math.pow(2, 40)
     // pinned: the merged count table feeds TWO consumers (the totals agg
     // and the per-term pass) — unpinned, both sides' token explodes run
     // twice; released at the materialization boundary (graft.Pins)

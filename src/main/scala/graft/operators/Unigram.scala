@@ -61,10 +61,18 @@ object Unigram {
 
   // ------------------------------------------------------------- training
 
+  /** Sizes of [[trainUnigram]]: 48 multi-character pieces kept, pieces up
+    * to 6 code points, 512 seed substrings, 4 EM rounds — the settings
+    * the pinned unigram table was trained with. */
+  private val UnigramVocabExtra = 48
+  private val UnigramMaxPieceLen = 6
+  private val UnigramSeedSize = 512
+  private val UnigramEmIters = 4
+
   /** Soft-EM unigram-LM training over a `(word, freq)` dictionary.
     * Returns `(piece, ln prob)` for the pruned vocabulary: every corpus
     * character (coverage is unconditional — Viterbi must always have a
-    * path) plus the `vocabExtra` best multi-character pieces.
+    * path) plus the [[UnigramVocabExtra]] best multi-character pieces.
     *
     * Deterministic: words iterate in sorted order, per-piece expected
     * counts accumulate in that order, and normalization sums fold over
@@ -78,11 +86,7 @@ object Unigram {
     * maximum-likelihood table, which is what a hash-gated pipeline can
     * carry.
     */
-  def trainUnigram(dict: Seq[(String, Long)], vocabExtra: Int = 48,
-      maxPieceLen: Int = 6, seedSize: Int = 512,
-      emIters: Int = 4): Seq[(String, Double)] = {
-    require(vocabExtra >= 0, s"vocabExtra must be >= 0, got $vocabExtra")
-    require(maxPieceLen >= 2, s"maxPieceLen must be >= 2, got $maxPieceLen")
+  def trainUnigram(dict: Seq[(String, Long)]): Seq[(String, Double)] = {
     val words = dict.sortBy(_._1).map { case (w, f) => (codePoints(w), f) }
 
     // character inventory (always kept) + substring seed candidates
@@ -93,7 +97,7 @@ object Unigram {
       while (i < cps.length) {
         charW(cps(i)) = charW.getOrElse(cps(i), 0.0) + f.toDouble
         var l = 2
-        while (l <= maxPieceLen && i + l <= cps.length) {
+        while (l <= UnigramMaxPieceLen && i + l <= cps.length) {
           val sub = cps.slice(i, i + l).mkString
           candW(sub) = candW.getOrElse(sub, 0.0) + f.toDouble
           l += 1
@@ -104,89 +108,93 @@ object Unigram {
     val chars = charW.keys.toSeq.sorted
     val seeds = candW.toSeq
       .sortBy { case (p, w) => (-w, p) }
-      .take(seedSize).map(_._1)
+      .take(UnigramSeedSize).map(_._1)
 
-    def normalized(weights: Seq[(String, Double)]): Map[String, Double] = {
-      val total = weights.sortBy(_._1).foldLeft(0.0)(_ + _._2)
-      weights.map { case (p, w) => p -> w / total }.toMap
-    }
     var probs = normalized(
       chars.map(c => c -> charW(c)) ++ seeds.map(p => p -> candW(p)))
 
-    def emStep(table: Map[String, Double]): Map[String, Double] = {
-      val counts = scala.collection.mutable.HashMap.empty[String, Double]
-      words.foreach { case (cps, f) =>
-        val n = cps.length
-        val alpha = new Array[Double](n + 1)
-        val beta = new Array[Double](n + 1)
-        alpha(0) = 1.0
-        var j = 1
-        while (j <= n) {
-          var i = math.max(0, j - maxPieceLen)
-          var a = 0.0
-          while (i < j) {
-            if (alpha(i) > 0) {
-              table.get(cps.slice(i, j).mkString)
-                .foreach(p => a += alpha(i) * p)
-            }
-            i += 1
-          }
-          alpha(j) = a
-          j += 1
-        }
-        if (alpha(n) > 0) {
-          beta(n) = 1.0
-          var i = n - 1
-          while (i >= 0) {
-            var b = 0.0
-            var jj = i + 1
-            while (jj <= math.min(n, i + maxPieceLen)) {
-              if (beta(jj) > 0) {
-                table.get(cps.slice(i, jj).mkString)
-                  .foreach(p => b += p * beta(jj))
-              }
-              jj += 1
-            }
-            beta(i) = b
-            i -= 1
-          }
-          var ii = 0
-          while (ii < n) {
-            var jj = ii + 1
-            while (jj <= math.min(n, ii + maxPieceLen)) {
-              val piece = cps.slice(ii, jj).mkString
-              table.get(piece).foreach { p =>
-                val post = alpha(ii) * p * beta(jj) / alpha(n)
-                if (post > 0)
-                  counts(piece) = counts.getOrElse(piece, 0.0) + f * post
-              }
-              jj += 1
-            }
-            ii += 1
-          }
-        }
-      }
-      // characters keep a floor so coverage never collapses to 0 even if
-      // every occurrence is explained by larger pieces this iteration
-      val floored = counts.toMap ++
-        chars.filter(c => counts.getOrElse(c, 0.0) <= 0.0)
-          .map(c => c -> 1e-9).toMap
-      normalized(floored.toSeq)
-    }
-
     var it = 0
-    while (it < emIters) { probs = emStep(probs); it += 1 }
-    // prune to chars + the vocabExtra best multi-char pieces, re-estimate
+    while (it < UnigramEmIters) { probs = emStep(words, chars, probs); it += 1 }
+    // prune to chars + the UnigramVocabExtra best multi-char pieces, re-estimate
     val keptMulti = probs.toSeq
       .filter { case (p, _) => codePoints(p).length >= 2 }
       .sortBy { case (p, w) => (-w, p) }
-      .take(vocabExtra).map(_._1).toSet
+      .take(UnigramVocabExtra).map(_._1).toSet
     probs = normalized(probs.toSeq.filter { case (p, _) =>
       keptMulti(p) || codePoints(p).length == 1 })
     it = 0
-    while (it < 2) { probs = emStep(probs); it += 1 }
+    while (it < 2) { probs = emStep(words, chars, probs); it += 1 }
     probs.toSeq.sortBy { case (p, w) => (-w, p) }
       .map { case (p, w) => (p, math.log(w)) }
+  }
+
+  /** Weights over their total, summed in sorted key order. */
+  private def normalized(weights: Seq[(String, Double)]): Map[String, Double] = {
+    val total = weights.sortBy(_._1).foldLeft(0.0)(_ + _._2)
+    weights.map { case (p, w) => p -> w / total }.toMap
+  }
+
+  /** One soft-EM round of [[trainUnigram]]: forward-backward expected
+    * piece counts of `words` under `table`, renormalized, with a floor
+    * on every `chars` entry so coverage never collapses to 0. */
+  private[operators] def emStep(words: Seq[(Array[String], Long)],
+      chars: Seq[String], table: Map[String, Double]): Map[String, Double] = {
+    val counts = scala.collection.mutable.HashMap.empty[String, Double]
+    words.foreach { case (cps, f) =>
+      val n = cps.length
+      val alpha = new Array[Double](n + 1)
+      val beta = new Array[Double](n + 1)
+      alpha(0) = 1.0
+      var j = 1
+      while (j <= n) {
+        var i = math.max(0, j - UnigramMaxPieceLen)
+        var a = 0.0
+        while (i < j) {
+          if (alpha(i) > 0) {
+            table.get(cps.slice(i, j).mkString)
+              .foreach(p => a += alpha(i) * p)
+          }
+          i += 1
+        }
+        alpha(j) = a
+        j += 1
+      }
+      if (alpha(n) > 0) {
+        beta(n) = 1.0
+        var i = n - 1
+        while (i >= 0) {
+          var b = 0.0
+          var jj = i + 1
+          while (jj <= math.min(n, i + UnigramMaxPieceLen)) {
+            if (beta(jj) > 0) {
+              table.get(cps.slice(i, jj).mkString)
+                .foreach(p => b += p * beta(jj))
+            }
+            jj += 1
+          }
+          beta(i) = b
+          i -= 1
+        }
+        var ii = 0
+        while (ii < n) {
+          var jj = ii + 1
+          while (jj <= math.min(n, ii + UnigramMaxPieceLen)) {
+            val piece = cps.slice(ii, jj).mkString
+            table.get(piece).foreach { p =>
+              val post = alpha(ii) * p * beta(jj) / alpha(n)
+              if (post > 0)
+                counts(piece) = counts.getOrElse(piece, 0.0) + f * post
+            }
+            jj += 1
+          }
+          ii += 1
+        }
+      }
+    }
+    val floored = counts.toMap ++
+      chars.filter(c => counts.getOrElse(c, 0.0) <= 0.0)
+        .map(c => c -> 1e-9).toMap
+    normalized(floored.toSeq)
   }
 
   /** Quantize trained `(piece, ln prob)` to the fixed-point integer costs

@@ -24,7 +24,6 @@ package object queries {
       name: String,
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String],
-      headline: Boolean = true,
       lifecycle: Boolean = false)
 
   /** Parquet table loader for the driver-provided test tables. */

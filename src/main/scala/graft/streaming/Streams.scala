@@ -222,11 +222,8 @@ object Streams {
     * user: 16 bytes (last ts + type).
     */
   def transitionsIngest(df: DataFrame, user: Column, tsNanos: Column,
-      eventType: Column, tieBreak: Column,
-      sessionGapNanos: Long = 1800L * 1000000000L)
+      eventType: Column, tieBreak: Column)
       : org.apache.spark.sql.Dataset[(Long, String, String)] = {
-    require(sessionGapNanos > 0,
-      s"sessionGapNanos must be positive, got $sessionGapNanos")
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     implicit val inEnc = Encoders.tuple(Encoders.scalaLong,
@@ -247,7 +244,8 @@ object Streams {
         val out = Seq.newBuilder[(Long, String, String)]
         rows.toSeq.sortBy(r => (r._2, r._4)).foreach { case (_, ts, et, _) =>
           last match {
-            case Some((pts, pet)) if ts - pts <= sessionGapNanos =>
+            case Some((pts, pet))
+                if ts - pts <= graft.operators.EventAnalytics.SessionGapNanos =>
               out += ((u, pet, et))
             case _ => ()
           }
@@ -258,7 +256,7 @@ object Streams {
     }
   }
 
-  /** events table → typed event-time column, normalizing whichever
+  /** events table → typed `event_time` column, normalizing whichever
     * physical type `ts` arrived as: BIGINT epoch nanoseconds (the
     * TIMESTAMP(NANOS) parquet encoding under `nanosAsLong` — truncated to
     * the microsecond Spark can represent) or a timestamp column directly
@@ -266,17 +264,16 @@ object Streams {
     * UTC session zone, so the cast is exact). See `queries.T.events` for
     * the same dual-encoding note on the batch side.
     */
-  def withEventTime(events: DataFrame, tsCol: String = "ts",
-      out: String = "event_time"): DataFrame =
-    events.schema(tsCol).dataType match {
+  def withEventTime(events: DataFrame): DataFrame =
+    events.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
-        events.withColumn(out, timestamp_micros(expr(s"$tsCol DIV 1000")))
+        events.withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
       case org.apache.spark.sql.types.TimestampNTZType |
            org.apache.spark.sql.types.TimestampType =>
-        events.withColumn(out,
-          col(tsCol).cast(org.apache.spark.sql.types.TimestampType))
+        events.withColumn("event_time",
+          col("ts").cast(org.apache.spark.sql.types.TimestampType))
       case other => throw new IllegalStateException(
-        s"$tsCol arrived as unsupported event-time type $other")
+        s"ts arrived as unsupported event-time type $other")
     }
 
   /** Tumbling-window counts per key with a watermark: the canonical
@@ -444,7 +441,7 @@ object Streams {
     * comparison ballots into a per-item (wins, n) count state — the
     * sufficient statistic of [[graft.operators.Preference.winRates]] —
     * so a reward-data pipeline keeps live item rankings while comparisons
-    * stream in. `rates(z)` derives win-rate + Wilson bound from the
+    * stream in. `rates()` derives win-rate + Wilson bound from the
     * current counts map-only; after any prefix of batches it equals the
     * batch operator run over the same ballots (StreamsSpec asserts the
     * fold ≡ batch multiset).
@@ -467,8 +464,8 @@ object Streams {
         .agg(sum(col("wins")).as("wins"), sum(col("n")).as("n"))
 
     /** Rankings derived from the current counts (map-only). */
-    def rates(z: Double = 1.96): DataFrame =
-      graft.operators.Preference.ratesFromCounts(current, z)
+    def rates(): DataFrame =
+      graft.operators.Preference.ratesFromCounts(current)
   }
 
   /** Streaming DPO-pair maintenance: fold each micro-batch of

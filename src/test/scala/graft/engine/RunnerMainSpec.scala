@@ -127,4 +127,28 @@ class RunnerMainSpec extends SparkSpec {
     assert(bad.result.startsWith("scala.tools.reflect.ToolBoxError"), bad.result)
     assert(journal.lastExecution(okPath).get.result === "OK")
   }
+
+  test("a script with a malformed interval header journals FAILED with the " +
+      "parse error, gated at PT1M, and the tick's other scripts still run") {
+    val dir = Files.createTempDirectory("graft-runner-badheader").toString
+    Files.writeString(Paths.get(s"$dir/bad.sql"), "-- interval: 5m\nSELECT 1;")
+    Files.writeString(Paths.get(s"$dir/ok.sql"), "SELECT 1;")
+    val journal = new Journal(spark, s"$dir/.journal")
+    val scalaJobs = new ScriptJobs[SparkSession => Any](
+      compile = ScriptCompiler.compileTask, mtimeOf = _ => 1L, read = _ => "")
+    var now = 1000000L
+    val r = RunnerMain.tick(spark, dir, journal, scalaJobs, () => now).toMap
+    val badPath = r.keys.find(_.endsWith("bad.sql")).get
+    val okPath = r.keys.find(_.endsWith("ok.sql")).get
+    assert(r === Map(badPath -> "FAILED", okPath -> "SUCCEED"))
+    val bad = journal.lastExecution(badPath).get
+    assert(bad.result.startsWith("java.time.format.DateTimeParseException"),
+      bad.result)
+    // gated at the default interval like any other failed script
+    now += 30000
+    assert(RunnerMain.tick(spark, dir, journal, scalaJobs, () => now).isEmpty)
+    now += 30000
+    assert(RunnerMain.tick(spark, dir, journal, scalaJobs, () => now).toMap ===
+      Map(badPath -> "FAILED", okPath -> "SUCCEED"))
+  }
 }

@@ -22,6 +22,29 @@ class RunnerSpec extends SparkSpec {
     assert(j.history("jobA").map(_.startedAt) === Seq(100L, 200L))
   }
 
+  test("a journal directory that is absent, or holds no data file, reads " +
+      "as empty") {
+    val dir = tmpDir()
+    assert(new Journal(spark, dir).lastExecution("jobA").isEmpty)
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    Files.writeString(java.nio.file.Paths.get(s"$dir/_SUCCESS"), "")
+    assert(new Journal(spark, dir).lastExecution("jobA").isEmpty)
+  }
+
+  test("an unreadable journal propagates its read error instead of " +
+      "reading as empty") {
+    val dir = tmpDir()
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    Files.write(java.nio.file.Paths.get(s"$dir/part-0.parquet"),
+      "not a parquet file".getBytes("UTF-8"))
+    val e = intercept[Exception] {
+      new Journal(spark, dir).lastExecution("jobA")
+    }
+    assert(e.getMessage.contains("part-0.parquet") ||
+      Option(e.getCause).exists(_.toString.contains("part-0.parquet")),
+      e.toString)
+  }
+
   test("runner gates jobs by interval against the journal") {
     var now = 1000000L
     val j = new Journal(spark, tmpDir())

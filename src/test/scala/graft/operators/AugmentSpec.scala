@@ -12,7 +12,7 @@ class AugmentSpec extends SparkSpec {
       .map(i => (i, (1 to 40).map(j => s"w${(i + j) % 17}").mkString(" ")))
       .toDF("id", "text")
     def run(d: org.apache.spark.sql.DataFrame) =
-      Augment.wordDropout(d, col("id"), col("text"), rate = 10)
+      Augment.wordDropout(d, col("id"), col("text"))
         .as[(Long, Int, Int, String)].collect().sortBy(_._1).toSeq
     val a = run(docs)
     assert(a === run(docs.repartition(7)), "must not depend on partitioning")
@@ -39,7 +39,7 @@ class AugmentSpec extends SparkSpec {
       "token — the same token at different positions can differ") {
     // identical tokens: fates vary by position only via the hash
     val docs = Seq((7L, ("x " * 200).trim)).toDF("id", "text")
-    val out = Augment.wordDropout(docs, col("id"), col("text"), rate = 10)
+    val out = Augment.wordDropout(docs, col("id"), col("text"))
       .as[(Long, Int, Int, String)].collect().head
     assert(out._2 === 200)
     assert(out._3 > 0 && out._3 < 200,
@@ -56,8 +56,9 @@ class AugmentSpec extends SparkSpec {
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.as[(Long, Int, Int, String)].collect().sortBy(_._1).toSeq
     assert(
-      rows(Augment.wordDropout(docs, col("id"), col("text"), 7, "sd")) ===
-      rows(Augment.wordDropoutHof(docs, col("id"), col("text"), 7, "sd")))
+      rows(Augment.wordDropout(docs, col("id"), col("text"))) ===
+      rows(Augment.wordDropoutHof(docs, col("id"), col("text"),
+        Augment.DropoutRate, Augment.DropoutSeed)))
   }
 
   test("spanCorruption: sentinels are numbered in order, the target " +

@@ -44,8 +44,18 @@ class BloomJoinSpec extends SparkSpec {
   }
 
   test("fpp is validated") {
-    intercept[IllegalArgumentException] {
-      Dedup.bloomAntiJoin(corpus, col("text"), needles, col("ntext"), fpp = 0.0)
-    }
+    // the operator's bloom, sized for BloomFpp at the needle count, passes
+    // about that share of non-members — and never drops a member
+    import org.apache.spark.sql.graft.BloomFunctions
+    val members = (0 until 1000).map(i => s"needle $i").toDF("k")
+    val bytes = Dedup.buildBloom(members, col("k")).get
+    def passed(df: org.apache.spark.sql.DataFrame) = df
+      .filter(BloomFunctions.mightContain(bytes, BloomFunctions.keyHash(col("k"))))
+      .count()
+    assert(passed(members) === 1000L)
+    val probes = (0 until 20000).map(i => s"probe $i").toDF("k")
+    val rate = passed(probes) / 20000.0
+    assert(rate >= Dedup.BloomFpp / 4 && rate <= 2 * Dedup.BloomFpp,
+      s"measured fpp $rate for a bloom sized at ${Dedup.BloomFpp}")
   }
 }

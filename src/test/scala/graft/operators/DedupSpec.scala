@@ -58,13 +58,16 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccardPairs exact inverted-index join matches brute force (both strategies)") {
-    val countRes = Dedup.jaccardPairs(docs, col("doc_id"), col("text"),
-        shingleK = 2, threshold = 0.3, strategy = "count")
+    val idx = Dedup.shingleIndex(docs, col("doc_id"), col("text"), 2)
+    val countRes = Dedup.jaccardCount(idx, 0.3)
       .orderBy("id_a", "id_b").as[(Long, Long, Double)].collect()
-    val prefixRes = Dedup.jaccardPairs(docs, col("doc_id"), col("text"),
-        shingleK = 2, threshold = 0.3, strategy = "prefix")
+    val prefixRes = Dedup.jaccardPrefix(idx, 0.3)
       .orderBy("id_a", "id_b").as[(Long, Long, Double)].collect()
     assert(countRes.toSeq === prefixRes.toSeq)
+    assert(Dedup.jaccardPairs(docs, col("doc_id"), col("text"),
+        shingleK = 2, threshold = 0.3)
+      .orderBy("id_a", "id_b").as[(Long, Long, Double)].collect().toSeq ===
+      countRes.toSeq)
     val got = countRes
     // brute force on driver
     def shingles(t: String) =
@@ -85,8 +88,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("jaccardHistogram: integer buckets match the driver calc, every " +
-      "bin reported, exact dups fold into the top bucket, df cap drops " +
-      "stop-shingle candidates") {
+      "bin reported, exact dups fold into the top bucket") {
     val got = Dedup.jaccardHistogram(docs, col("doc_id"), col("text"),
         bins = 10, shingleK = 2)
       .orderBy("bucket").as[(Int, Double, Double, Long)].collect().toSeq
@@ -114,24 +116,6 @@ class DedupSpec extends SparkSpec {
     assert(got.map(g => g._1 -> g._4).toMap.filter(_._2 > 0) === expect)
     // the identical pair (1, 2) must land in the top bucket
     assert(got(9)._4 >= 1L)
-    // a df cap of 1 drops every shared shingle -> no candidates at all
-    val capped = Dedup.jaccardHistogram(docs, col("doc_id"), col("text"),
-        bins = 10, shingleK = 2, maxDocFreq = Some(1L))
-      .as[(Int, Double, Double, Long)].collect()
-    assert(capped.map(_._4).sum === 0L)
-    // sampleFraction is a DETERMINISTIC doc hash-sample: the sampled
-    // histogram equals the full histogram of the hash-selected subset
-    val cut = (0.5 * 4294967296.0).toLong
-    val subset = docs.filter(
-      graft.functions.TextFunctions.hash32(col("doc_id").cast("string"))
-        < cut)
-    val sampled = Dedup.jaccardHistogram(docs, col("doc_id"), col("text"),
-        bins = 10, shingleK = 2, sampleFraction = 0.5)
-      .as[(Int, Double, Double, Long)].collect().toSeq
-    val ofSubset = Dedup.jaccardHistogram(subset, col("doc_id"), col("text"),
-        bins = 10, shingleK = 2)
-      .as[(Int, Double, Double, Long)].collect().toSeq
-    assert(sampled === ofSubset)
   }
 
   test("components: chains collapse to the minimum id per component") {
@@ -145,12 +129,13 @@ class DedupSpec extends SparkSpec {
   test("components: a 300-hop chain converges inside the default round " +
       "budget (star rounds are O(log² n), not O(diameter))") {
     // plain min-label propagation needs ~300 rounds here and would return
-    // unconverged labels under maxIter=20; large-star/small-star collapses
-    // the chain in a handful of rounds. localEdgeThreshold = 0 forces the
-    // DISTRIBUTED star loop — the default would collect 300 edges and
-    // union-find them on the driver, testing nothing about the rounds.
+    // unconverged labels under 20 rounds; large-star/small-star collapses
+    // the chain in a handful of rounds. starComponents is the DISTRIBUTED
+    // star loop — components() would collect 300 edges and union-find
+    // them on the driver, testing nothing about the rounds.
     val chain = (0L until 300L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.components(chain, localEdgeThreshold = 0L)
+    val got = Dedup.starComponents(Dedup.downhillEdges(chain),
+        Dedup.ComponentsMaxIter)
       .as[(Long, Long)].collect()
     assert(got.length === 301)
     assert(got.forall(_._2 == 0L))
@@ -162,7 +147,7 @@ class DedupSpec extends SparkSpec {
     // stay one-row-per-node with downhill labels (an over-approximation),
     // never duplicate conflicting rows
     val chain = (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val got = Dedup.components(chain, maxIter = 1, localEdgeThreshold = 0L)
+    val got = Dedup.starComponents(Dedup.downhillEdges(chain), 1)
       .as[(Long, Long)].collect()
     assert(got.length === 41)
     assert(got.map(_._1).distinct.length === 41, "duplicate node rows")
@@ -177,7 +162,8 @@ class DedupSpec extends SparkSpec {
     val pairs = Seq((3L, 1L), (3L, 2L), (7L, 7L), (5L, 4L), (6L, 5L),
       (10L, 12L), (12L, 11L), (20L, 21L)).toDF("id_a", "id_b")
     val local = Dedup.components(pairs).as[(Long, Long)].collect().sortBy(_._1)
-    val dist = Dedup.components(pairs, localEdgeThreshold = 0L)
+    val dist = Dedup.starComponents(Dedup.downhillEdges(pairs),
+        Dedup.ComponentsMaxIter)
       .as[(Long, Long)].collect().sortBy(_._1)
     assert(local === dist)
     assert(local === Array((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 4L),
@@ -190,8 +176,9 @@ class DedupSpec extends SparkSpec {
     assert(Dedup.exact(empty, col("doc_id"), col("text")).count() === 0)
     assert(Dedup.minHashPairs(empty, col("doc_id"), col("text")).count() === 0)
     assert(Dedup.simHashPairs(empty, col("doc_id"), col("text")).count() === 0)
-    assert(Dedup.jaccardPairs(empty, col("doc_id"), col("text"), strategy = "count").count() === 0)
-    assert(Dedup.jaccardPairs(empty, col("doc_id"), col("text"), strategy = "prefix").count() === 0)
+    val emptyIdx = Dedup.shingleIndex(empty, col("doc_id"), col("text"), 3)
+    assert(Dedup.jaccardCount(emptyIdx, 0.8).count() === 0)
+    assert(Dedup.jaccardPrefix(emptyIdx, 0.8).count() === 0)
     assert(Dedup.components(empty.select(col("doc_id").as("id_a"),
       col("doc_id").as("id_b"))).count() === 0)
     val single = docs.filter(col("doc_id") === 1)
@@ -206,8 +193,8 @@ class DedupSpec extends SparkSpec {
       shingleK = 3, numHashes = 64, bands = 16, threshold = 0.5)
       .count() === 3L) // same pairs as without the null row
     assert(Dedup.simHashPairs(withNull, col("doc_id"), col("text")).count() >= 1L)
-    assert(Dedup.jaccardPairs(withNull, col("doc_id"), col("text"),
-      shingleK = 2, threshold = 0.3, strategy = "prefix")
+    assert(Dedup.jaccardPrefix(
+        Dedup.shingleIndex(withNull, col("doc_id"), col("text"), 2), 0.3)
       .filter(col("id_a") === 99 || col("id_b") === 99).count() === 0L)
     assert(Dedup.containmentPairs(
       withNull.filter(col("doc_id") === 99), col("doc_id"), col("text"),
@@ -225,11 +212,10 @@ class DedupSpec extends SparkSpec {
 
   test("jaccard strategies agree on the real documents table (sf0.001)") {
     val real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val a = Dedup.jaccardPairs(real, col("doc_id"), col("text"),
-        threshold = 0.8, strategy = "count")
+    val idx = Dedup.shingleIndex(real, col("doc_id"), col("text"), 3)
+    val a = Dedup.jaccardCount(idx, 0.8)
       .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
-    val b = Dedup.jaccardPairs(real, col("doc_id"), col("text"),
-        threshold = 0.8, strategy = "prefix")
+    val b = Dedup.jaccardPrefix(idx, 0.8)
       .as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2))
     assert(a.toSeq === b.toSeq)
   }
@@ -285,32 +271,55 @@ class DedupSpec extends SparkSpec {
     // end-to-end default (auto) agrees with brute force: no pairs
     assert(Dedup.jaccardPairs(corpus, col("id"), col("text"),
       shingleK = 3, threshold = 0.8).count() === 0L)
-    // auto strategy switch is observable in the plan: the prefix path ranks
-    // postings by rarity (a Window); the count path has none. maxDf here is
-    // 40, so the default cap (1000) picks count and a cap of 10 forces prefix
-    val autoCount = Dedup.jaccardPairs(corpus, col("id"), col("text"),
-      shingleK = 3, threshold = 0.8)
-    assert(!autoCount.queryExecution.executedPlan.toString.contains("Window"))
-    val autoPrefix = Dedup.jaccardPairs(corpus, col("id"), col("text"),
-      shingleK = 3, threshold = 0.8, autoCountMaxDf = 10)
-    assert(autoPrefix.queryExecution.executedPlan.toString.contains("Window"))
-    // sampled statistics still detect the universal stop-shingle: ~half the
-    // docs sampled, scaled estimate ≈ 40 > cap 10 → prefix plan
-    val sampled = Dedup.jaccardPairs(corpus, col("id"), col("text"),
-      shingleK = 3, threshold = 0.8, autoCountMaxDf = 10, autoSampleFraction = 0.5)
-    assert(sampled.queryExecution.executedPlan.toString.contains("Window"))
-    assert(sampled.count() === 0L)
+  }
+
+  test("jaccardPairs picks its path from the measured max shingle df: " +
+      "each side of CountMaxDf gives the other path's exact pairs") {
+    def corpus(n: Int) = ((1 to n).map(i =>
+        (i.toLong, s"the quick fox u$i v$i w$i x$i y$i z$i a$i b$i")) ++
+      Seq((5001L, "the quick fox u1 v1 w1 x1 y1 z1 a1 b1"),
+        (5002L, "the quick fox u2 v2 w2 x2 y2 z2 a2 b2 c2")))
+      .toDF("id", "text")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double)].collect().sortBy(p => (p._1, p._2)).toSeq
+    // the prefix path ranks postings by rarity (a Window); count has none
+    def isPrefix(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString.contains("Window")
+    // "the quick fox" sits in every doc: 42 docs stay under the constant
+    val small = corpus(40)
+    val smallPairs = Dedup.jaccardPairs(small, col("id"), col("text"))
+    assert(!isPrefix(smallPairs))
+    assert(sorted(smallPairs) === sorted(Dedup.jaccardPrefix(
+      Dedup.shingleIndex(small, col("id"), col("text"), 3), 0.8)))
+    // ...and CountMaxDf + 2 docs cross it
+    val big = corpus(Dedup.CountMaxDf.toInt)
+    val bigPairs = Dedup.jaccardPairs(big, col("id"), col("text"))
+    assert(isPrefix(bigPairs))
+    val got = sorted(bigPairs)
+    assert(got === sorted(Dedup.jaccardCount(
+      Dedup.shingleIndex(big, col("id"), col("text"), 3), 0.8)))
+    assert(got.map(p => (p._1, p._2)) === Seq((1L, 5001L), (2L, 5002L)))
   }
 
   test("simHashPairs with blocks=5 (12-bit keys) finds the same hamming<=3 pairs") {
+    // radius 4 takes 5 pigeonhole blocks of 12 bits: its pairs are the
+    // brute-force hamming <= 4 set, and the hamming <= 3 ones among them
+    // are exactly the 4 × 15-bit join's
     val base = Dedup.simHashPairs(docs, col("doc_id"), col("text"), maxHamming = 3)
       .orderBy("id_a", "id_b").as[(Long, Long, Int)].collect()
-    val five = Dedup.simHashPairs(docs, col("doc_id"), col("text"), maxHamming = 3,
-        blocks = 5)
+    val five = Dedup.simHashPairs(docs, col("doc_id"), col("text"), maxHamming = 4)
       .orderBy("id_a", "id_b").as[(Long, Long, Int)].collect()
-    assert(base.toSeq === five.toSeq)
+    assert(base.toSeq === five.filter(_._3 <= 3).toSeq)
+    val sigs = docs.select(col("doc_id"), Dedup.simHash(col("text")).as("sh"))
+      .as[(Long, Long)].collect()
+    val expect = (for {
+      (ia, sa) <- sigs; (ib, sb) <- sigs if ia < ib
+      h = java.lang.Long.bitCount(sa ^ sb) if h <= 4
+    } yield (ia, ib, h)).sortBy(p => (p._1, p._2))
+    assert(five.toSeq === expect.toSeq)
     intercept[IllegalArgumentException] {
-      Dedup.simHashPairs(docs, col("doc_id"), col("text"), maxHamming = 4, blocks = 4)
+      Dedup.simHashPairs(docs, col("doc_id"), col("text"),
+        maxHamming = Dedup.SimHashBits)
     }
   }
 
@@ -382,14 +391,14 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
 
     val (survivors, state1) = Dedup.minHashIncremental(
-      batch, col("doc_id"), col("text"), state0, threshold = 0.7)
+      batch, col("doc_id"), col("text"), state0)
     val ids = survivors.select(col("doc_id")).as[Long].collect().sorted
     // 10 drops (matches state), 12 drops (11 is its cluster's min id)
     assert(ids === Array(11L, 13L))
 
     // replaying the SAME batch against the updated state admits nothing new
     val (replay, _) = Dedup.minHashIncremental(
-      batch, col("doc_id"), col("text"), state1, threshold = 0.7)
+      batch, col("doc_id"), col("text"), state1)
     assert(replay.count() === 0L)
 
     // state grew by exactly the survivors' ids
@@ -414,9 +423,9 @@ class DedupSpec extends SparkSpec {
       (13L, "yet another topic unrelated to every other document in this corpus")
     ).toDF("doc_id", "text")
     val (sMem, _) = Dedup.minHashIncremental(
-      batch, col("doc_id"), col("text"), state0, threshold = 0.7)
+      batch, col("doc_id"), col("text"), state0)
     val (sLoaded, state1) = Dedup.minHashIncremental(
-      batch, col("doc_id"), col("text"), loaded, threshold = 0.7)
+      batch, col("doc_id"), col("text"), loaded)
     assert(sLoaded.select(col("doc_id")).as[Long].collect().sorted ===
       sMem.select(col("doc_id")).as[Long].collect().sorted)
 
@@ -425,7 +434,7 @@ class DedupSpec extends SparkSpec {
     Dedup.NearDupState.save(state1, "ndstate_rt", buckets = 4)
     val reloaded = Dedup.NearDupState.load(spark, "ndstate_rt")
     val (replay, _) = Dedup.minHashIncremental(
-      batch, col("doc_id"), col("text"), reloaded, threshold = 0.7)
+      batch, col("doc_id"), col("text"), reloaded)
     assert(replay.count() === 0L)
   }
 
@@ -469,12 +478,10 @@ class DedupSpec extends SparkSpec {
       (22L, "yet another topic unrelated to every other document in this corpus"))
       .toDF("doc_id", "text")
     val fastJobs = countJobs {
-      Dedup.minHashIncremental(unique, col("doc_id"), col("text"), state0,
-        threshold = 0.7)._1.count(); ()
+      Dedup.minHashIncremental(unique, col("doc_id"), col("text"), state0)._1.count(); ()
     }
     val slowJobs = countJobs {
-      Dedup.minHashIncremental(withDups, col("doc_id"), col("text"), state0,
-        threshold = 0.7)._1.count(); ()
+      Dedup.minHashIncremental(withDups, col("doc_id"), col("text"), state0)._1.count(); ()
     }
     // the empty-pair fast path must save the label-propagation loop's jobs
     assert(fastJobs < slowJobs,
@@ -696,32 +703,10 @@ class DedupSpec extends SparkSpec {
     // the same pair's symmetric Jaccard is 4/6 — invisible at 0.9
     assert(Dedup.jaccardPairs(d, col("doc_id"), col("text"),
       shingleK = 3, threshold = 0.9).count() === 0L)
-    val pf = Dedup.selfContainmentPairs(d, col("doc_id"), col("text"),
-        shingleK = 3, threshold = 0.9, strategy = "prefix")
+    val pf = Dedup.containmentPrefix(
+        Dedup.shingleIndex(d, col("doc_id"), col("text"), 3), 0.9)
       .as[(Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(pf === out)
-  }
-
-  test("selfContainmentPairs: count and prefix agree under maxDocFreq — " +
-      "capped shingles leave the intersection on BOTH strategies, sizes " +
-      "stay the true pre-cap set sizes") {
-    val d = Seq(
-      (1L, "a b c d e f"),        // shingles: abc bcd cde def
-      (2L, "a b c d e f g h"),    // + efg fgh
-      (3L, "a b c x y z")         // shares only abc with 1 and 2
-    ).toDF("doc_id", "text")
-    def run(strategy: String) =
-      Dedup.selfContainmentPairs(d, col("doc_id"), col("text"),
-          shingleK = 3, threshold = 0.7, maxDocFreq = Some(2L),
-          strategy = strategy)
-        .as[(Long, Long, Long, Long, Long, Double)].collect()
-        .sortBy(t => (t._1, t._2)).toSeq
-    // "abc" has df = 3 > 2 and drops from the index: inter(1,2) = 3 of
-    // doc 1's TRUE 4 shingles -> containment 0.75; the (x,3) pairs lose
-    // their only shared shingle and vanish
-    val expect = Seq((1L, 2L, 3L, 4L, 6L, 0.75))
-    assert(run("count") === expect)
-    assert(run("prefix") === expect)
   }
 
   test("pairBudget guard: a planted quadratic corpus trips the budget and " +
@@ -786,7 +771,7 @@ class DedupSpec extends SparkSpec {
     // 3-shingles has df = 120 (the marker tail shingles are unique)
     val idx = Dedup.shinglePostings(quad.select(col("doc_id").as("id"),
       TextFunctions.wordShingleSet(col("text"), 3).as("set")))
-    val (maxDf, est) = Dedup.indexStats(idx, 1.0)
+    val (maxDf, est) = Dedup.indexStats(idx)
     assert(maxDf === 120L)
     assert(est >= 120L * 119 / 2) // at least the shared-shingle cliques
   }

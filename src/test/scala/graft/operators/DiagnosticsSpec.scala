@@ -249,18 +249,19 @@ class DiagnosticsSpec extends SparkSpec {
   }
 
   test("robustStats: hand percentiles, clamped mean resists the outlier") {
-    // group g: 1..10 plus one 1000-outlier
-    val rows = (1L to 10L).map(("g", _)) :+ (("g", 1000L))
+    // group g: 1..100 plus one 100000-outlier
+    val rows = (1L to 100L).map(("g", _)) :+ (("g", 100000L))
     val got = Diagnostics.robustStats(rows.toDF("s", "v"), col("s"),
-        col("v"), pLo = 0.1, pHi = 0.8)
+        col("v"))
       .as[(String, Long, Long, Long, Long, Double)].collect().head
-    // discrete percentiles over 11 values: ceil(0.1*11)=2nd=2,
-    // ceil(0.5*11)=6th=6, ceil(0.8*11)=9th=9
-    assert(got._2 === 11L && got._3 === 2L && got._4 === 6L && got._5 === 9L)
-    // clamp to [2,9]: 2,2,3,4,5,6,7,8,9,9,9 -> sum 64
-    assert(got._6 === 64.0 / 11.0)
-    // the raw mean (~97) is ruined by the outlier; the winsorized one isn't
-    assert(got._6 < 10.0)
+    // discrete percentiles over 101 values: ceil(0.05*101)=6th=6,
+    // ceil(0.5*101)=51st=51, ceil(0.95*101)=96th=96
+    assert(got._2 === 101L && got._3 === 6L && got._4 === 51L &&
+      got._5 === 96L)
+    // clamp to [6,96]: five 6s, 6..96, five 96s -> sum 5151
+    assert(got._6 === 5151.0 / 101.0)
+    // the raw mean (~1040) is ruined by the outlier; the winsorized one isn't
+    assert(got._6 < 60.0)
   }
 
   test("robustStats: per-group independence and exact n") {

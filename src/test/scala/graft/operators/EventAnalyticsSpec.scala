@@ -109,7 +109,7 @@ class EventAnalyticsSpec extends SparkSpec {
       (2L, 50L, "Z", 8L)
     ).toDF("user_id", "ts", "et", "event_id")
     val out = EventAnalytics.nextEventExamples(e, col("user_id"),
-        col("ts"), col("et"), col("event_id"), historyLen = 3)
+        col("ts"), col("et"), col("event_id"))
       .select(col("user_id"), col("tie"), col("next_et"), col("ctx"),
         col("ctx_len"))
       .as[(Long, Long, String, String, Int)].collect().sortBy(_._2).toSeq
@@ -239,13 +239,13 @@ class EventAnalyticsSpec extends SparkSpec {
 
   test("eventTransitions: adjacency within the session gap only, " +
       "equal-ts order fixed by the tiebreak, n_users deduplicates") {
-    val gap = 100L
+    val gap = EventAnalytics.SessionGapNanos
     val e = Seq(
-      // u1: A->B->B (two transitions), then a gap > 100 breaks the
+      // u1: A->B->B (two transitions), then a gap past the cut breaks the
       // session -- C after the break contributes NO (B->C) edge, but the
       // next pair C->A inside the new session does
       (1L, 10L, "A", 1L), (1L, 20L, "B", 2L), (1L, 30L, "B", 3L),
-      (1L, 500L, "C", 4L), (1L, 510L, "A", 5L),
+      (1L, 31L + gap, "C", 4L), (1L, 41L + gap, "A", 5L),
       // u2: equal timestamps -- tiebreak (event_id) orders A(6) then
       // B(7), so the edge is A->B, never B->A; also a second A->B so
       // n_transitions=2 while n_users counts u2 once
@@ -254,7 +254,7 @@ class EventAnalyticsSpec extends SparkSpec {
       // u3: single event -- no transitions
       (3L, 10L, "A", 10L)).toDF("user_id", "ts", "et", "eid")
     val out = EventAnalytics.eventTransitions(e, col("user_id"), col("ts"),
-        col("et"), col("eid"), sessionGapNanos = gap)
+        col("et"), col("eid"))
       .as[(String, String, Long, Long)].collect()
       .sortBy(t => (t._1, t._2)).toSeq
     assert(out === Seq(
@@ -267,7 +267,7 @@ class EventAnalyticsSpec extends SparkSpec {
         (1L, 2 * gap + 1L, "C", 3L))
       .toDF("user_id", "ts", "et", "eid")
     val out2 = EventAnalytics.eventTransitions(edge, col("user_id"),
-        col("ts"), col("et"), col("eid"), sessionGapNanos = gap)
+        col("ts"), col("et"), col("eid"))
       .as[(String, String, Long, Long)].collect().toSeq
     assert(out2 === Seq(("A", "B", 1L, 1L)))
   }

@@ -22,7 +22,7 @@ class MultimodalSpec extends SparkSpec {
   test("decodeMeta appends typed meta struct; batching covers partitions") {
     val df = (1 to 200).map(i => (i.toLong, ("x" * i).getBytes("UTF-8")))
       .toDF("id", "payload").repartition(3)
-    val out = Multimodal.decodeMeta(df, col("payload"), batchSize = 16)
+    val out = Multimodal.decodeMeta(df, col("payload"))
     assert(out.schema.fieldNames.toSeq === Seq("id", "payload", "meta"))
     val rows = out.select($"id", $"meta.n_bytes", $"meta.n_frames")
       .as[(Long, Int, Int)].collect().sortBy(_._1)
@@ -36,10 +36,11 @@ class MultimodalSpec extends SparkSpec {
     MultimodalSpec.batchSizes.clear()
     val df = (1 to 100).map(i => (i, Array[Byte](i.toByte))).toDF("id", "p")
       .repartition(1)
-    Multimodal.decodeMeta(df, col("p"), codec = MultimodalSpec.Recorder,
-      batchSize = 32).count()
+    Multimodal.decodeMeta(df, col("p"), codec = MultimodalSpec.Recorder)
+      .count()
     import scala.jdk.CollectionConverters._
-    assert(MultimodalSpec.batchSizes.asScala.toList.sorted === List(4, 32, 32, 32))
+    assert(Multimodal.DecodeBatch === 64)
+    assert(MultimodalSpec.batchSizes.asScala.toList.sorted === List(36, 64))
   }
 
   test("sampleFrames: evenly spaced fixed-size frames, deduped when short") {

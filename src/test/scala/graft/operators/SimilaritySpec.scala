@@ -168,7 +168,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("trained k-means centroids drive search(Ivf) with exact in-cell ranking") {
     val df = vectors(100, 8, seed = 11).cache()
-    val cents = Similarity.trainCentroids(df, k = 4, seed = 1)
+    val cents = Similarity.trainCentroids(df, k = 4)
     assert(cents.count() === 4)
     val got = Similarity.search(df.filter(col("vec_id") < 5), df, k = 3,
         Index.Ivf(cents, nprobe = 2, Index.Exact))
@@ -229,15 +229,14 @@ class SimilaritySpec extends SparkSpec {
 
   test("sampling quantizers are CAPPED: codebook entries and coarse cells " +
       "stop growing with the corpus (the models-don't-track-data contract)") {
-    // 400 vectors with entryEvery=4/maxEntries=32: uncapped would give 100
-    // entries; the coarse cells are a fixed explicit set of 16
-    val corpus = vectors(400, 16, seed = 11).cache()
-    val codebook = Similarity.pqCodebook(corpus, m = 4, entryEvery = 4,
-      maxEntries = 32)
+    // 600 vectors with entryEvery=4: uncapped would give 150 entries, the
+    // cap is 128; the coarse cells are a fixed explicit set of 16
+    val corpus = vectors(600, 16, seed = 11).cache()
+    val codebook = Similarity.pqCodebook(corpus, m = 4, entryEvery = 4)
     val cb = codebook
       .groupBy(col("sub")).agg(countDistinct(col("entry")).as("j"))
       .select(col("j")).distinct().as[Long].collect()
-    assert(cb === Array(32L), "codebook must be rectangular at exactly maxEntries")
+    assert(cb === Array(128L), "codebook must be rectangular at exactly the cap")
     // capped quantizers still return full, well-formed top-k
     val cents = everyNth(corpus, 4, 16)
     val probes = corpus.filter(col("vec_id") < 2)
@@ -251,7 +250,7 @@ class SimilaritySpec extends SparkSpec {
   test("trained PQ codebook: fixed m×j size, packed ≡ relational, decent recall") {
     val df = vectors(60, 16, seed = 19).cache()
     val qs = df.filter(col("vec_id") < 5)
-    val cb = Similarity.pqCodebookTrained(df, m = 4, j = 8, seed = 3).cache()
+    val cb = Similarity.pqCodebookTrained(df, m = 4, j = 8).cache()
     assert(cb.count() === 4L * 8)
     // entries stay one-byte packable and sub-codes keep subspace width
     val rows = cb.as[(Long, Long, Seq[Int])].collect()
@@ -315,8 +314,8 @@ class SimilaritySpec extends SparkSpec {
       "compose through search(Ivf over Pq)") {
     val df = vectors(60, 16, seed = 29).cache()
     val qs = df.filter(col("vec_id") < 4)
-    val cents = Similarity.trainCentroids(df, k = 3, seed = 5)
-    val cb = Similarity.pqCodebookTrained(df, m = 4, j = 8, seed = 7).cache()
+    val cents = Similarity.trainCentroids(df, k = 3)
+    val cb = Similarity.pqCodebookTrained(df, m = 4, j = 8).cache()
     val got = Similarity.search(qs, df, k = 5, // all 3 cells probed →
         Index.Ivf(cents, nprobe = 3, Index.Pq(cb, m = 4))) // full PQ scan
       .orderBy("query_id", "rank").as[(Long, Long, Int, Long)].collect()
@@ -374,13 +373,12 @@ class SimilaritySpec extends SparkSpec {
     assert(ivfDense.nonEmpty)
     assert(ivfShift === ivfDense.map { case (q, n, r) => (q + off, n + off, r) })
 
-    // PQ: entryEvery=25, maxEntries=8 — entry ids must stay dense 0..7
+    // PQ: entryEvery=25 over 400 ids — entry ids must stay dense 0..15
     // under the offset (rank-based, not vec_id div entryEvery).
-    val cb = Similarity.pqCodebook(shifted, m = 4, entryEvery = 25,
-        maxEntries = 8)
+    val cb = Similarity.pqCodebook(shifted, m = 4, entryEvery = 25)
     val entries = cb.select("entry").distinct()
       .as[Long].collect().toSet
-    assert(entries === (0L until 8L).toSet)
+    assert(entries === (0L until 16L).toSet)
     val noneDivisible = intercept[IllegalArgumentException] {
       Similarity.pqCodebook(shifted.filter(pmod(col("vec_id"), lit(25L)) =!= 0),
         m = 4, entryEvery = 25)
@@ -578,8 +576,7 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Double)].collect()
     assert(kept.length === 1 && kept.head._4 === hi)
     // bitext joins two INDEPENDENT id spaces: a candidate sharing the
-    // query's numeric id must still be minable (default), and the
-    // same-space mode must exclude it
+    // query's numeric id must still be minable
     val csOverlap = Seq((0L, Array(1f, 0f)), (15L, Array(0f, 1f)))
       .toDF("vec_id", "embedding")
     val mined = Similarity.marginMine(qs, csOverlap, Index.Exact, k = 2,
@@ -587,11 +584,6 @@ class SimilaritySpec extends SparkSpec {
       .as[(Long, Long, Double, Double)].collect()
       .map(t => t._1 -> t._2).toMap
     assert(mined(0L) === 0L, "the id-coincident twin must be minable")
-    val minedEx = Similarity.marginMine(qs, csOverlap, Index.Exact, k = 2,
-        threshold = 0.0, excludeSelfIds = true)
-      .as[(Long, Long, Double, Double)].collect()
-      .map(t => t._1 -> t._2).toMap
-    assert(minedEx.get(0L) !== Some(0L))
   }
 
   test("marginMine: degenerate neighborhoods (zero-norm vectors, all-zero " +

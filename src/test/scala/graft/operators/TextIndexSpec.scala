@@ -231,35 +231,41 @@ class TextIndexSpec extends SparkSpec {
 
   test("vocabGrowth: first-seen terms charge their earliest bucket, " +
       "running vocabulary accumulates, empty docs hold their slice") {
-    val docs = Seq(
+    // 20 docs in the 10 deciles: two per bucket
+    val docs = (Seq(
       (1L, "a b a"),   // bucket 1: new {a, b}
       (2L, "b c"),     // bucket 1: new {c}
       (3L, "a d"),     // bucket 2: new {d}
       (4L, "")         // bucket 2: no tokens
-    ).toDF("id", "text")
-    val out = TextIndex.vocabGrowth(docs, col("id"), col("text"),
-        buckets = 2)
+    ) ++ (5L to 20L).map(i => (i, "a"))).toDF("id", "text")
+    val out = TextIndex.vocabGrowth(docs, col("id"), col("text"))
       .as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1)
+    assert(out.length === 10)
     assert(out(0) === ((1, 2L, 5L, 3L, 3L)))
     assert(out(1) === ((2, 2L, 2L, 1L, 4L)))
+    assert(out(9) === ((10, 2L, 2L, 0L, 4L)))
   }
 
   test("vocabGrowthSketchCuts: exact-regime cuts reproduce the NTILE " +
       "curve when the split divides evenly; single bucket degenerates " +
       "to the whole corpus") {
-    // 8 docs, 4 buckets of 2 — the discrete-quantile cuts land exactly
+    // 20 docs, 10 buckets of 2 — the discrete-quantile cuts land exactly
     // on NTILE's boundaries, so both variants must agree bucket-for-bucket
-    val docs = (1 to 8).map(i => (i.toLong, s"w$i shared")).toDF("id", "text")
+    val docs = (1 to 20).map(i => (i.toLong, s"w$i shared")).toDF("id", "text")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.as[(Int, Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    val ntile = rows(TextIndex.vocabGrowth(docs, col("id"), col("text"),
-      buckets = 4))
+    val ntile = rows(TextIndex.vocabGrowth(docs, col("id"), col("text")))
     val kll = rows(TextIndex.vocabGrowthSketchCuts(docs, col("id"),
-      col("text"), buckets = 4))
+      col("text")))
+    assert(ntile.length === 10)
     assert(kll === ntile)
-    val one = rows(TextIndex.vocabGrowthSketchCuts(docs, col("id"),
-      col("text"), buckets = 1))
-    assert(one === Seq((1, 8L, 16L, 9L, 9L))) // 8 w-terms + "shared"
+    // a one-doc corpus fills a single bucket, which then holds the whole
+    // corpus on both variants: 1 doc, 2 tokens, 2 new terms
+    val one = docs.filter(col("id") === 1L)
+    val whole = Seq((1, 1L, 2L, 2L, 2L))
+    assert(rows(TextIndex.vocabGrowthSketchCuts(one, col("id"),
+      col("text"))) === whole)
+    assert(rows(TextIndex.vocabGrowth(one, col("id"), col("text"))) === whole)
   }
 
   test("cooccurrenceCounts: pairs within the window accumulate " +

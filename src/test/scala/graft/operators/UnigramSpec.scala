@@ -12,29 +12,38 @@ class UnigramSpec extends SparkSpec {
   ).filter(_._2 > 0)
 
   test("trainUnigram: coverage, normalization, and EM likelihood ascent") {
-    val pieces = Unigram.trainUnigram(toyDict, vocabExtra = 8,
-      maxPieceLen = 4, seedSize = 64, emIters = 3)
+    val pieces = Unigram.trainUnigram(toyDict)
     val probs = pieces.map { case (p, lnp) => p -> math.exp(lnp) }.toMap
     // every corpus character is a piece (coverage is unconditional)
     val chars = toyDict.flatMap(_._1.toSeq).map(_.toString).toSet
     assert(chars.subsetOf(probs.keySet))
     // probabilities normalize
     assert(math.abs(probs.values.sum - 1.0) < 1e-9)
-    // more EM iterations never decrease corpus likelihood
-    def ll(table: Seq[(String, Double)]): Double = {
-      val costs = Unigram.toCosts(table).toMap
-      // fixed-point total cost is a monotone proxy for -log-likelihood of
-      // the Viterbi segmentation
-      -toyDict.map { case (w, f) =>
-        f * Unigram.segmentCost(w, costs, 4)._2.toDouble
-      }.sum
+    // EM rounds never decrease the corpus likelihood: from a uniform
+    // table over every substring of up to 6 code points, the exact
+    // marginal log-likelihood (forward pass over all segmentations)
+    // ascends round by round
+    val words = toyDict.sortBy(_._1).map { case (w, f) =>
+      (Unigram.codePoints(w), f) }
+    val subs = words.flatMap { case (cps, _) =>
+      for (i <- cps.indices; j <- i + 1 to math.min(cps.length, i + 6))
+        yield cps.slice(i, j).mkString
+    }.distinct
+    def ll(table: Map[String, Double]): Double = words.map { case (cps, f) =>
+      val alpha = new Array[Double](cps.length + 1)
+      alpha(0) = 1.0
+      for (j <- 1 to cps.length; i <- math.max(0, j - 6) until j)
+        alpha(j) += alpha(i) * table.getOrElse(cps.slice(i, j).mkString, 0.0)
+      f * math.log(alpha(cps.length))
+    }.sum
+    val rounds = Iterator.iterate(subs.map(_ -> 1.0 / subs.size).toMap)(
+      Unigram.emStep(words, chars.toSeq.sorted, _)).take(4).toSeq
+    rounds.sliding(2).foreach { case Seq(a, b) =>
+      assert(ll(b) >= ll(a) - 1e-9 * math.abs(ll(a)), s"${ll(a)} -> ${ll(b)}")
     }
-    val early = Unigram.trainUnigram(toyDict, vocabExtra = 8,
-      maxPieceLen = 4, seedSize = 64, emIters = 1)
-    assert(ll(pieces) >= ll(early) - 1e-6 * math.abs(ll(early)))
+    assert(ll(rounds.last) > ll(rounds.head))
     // determinism: same dictionary -> bit-identical table
-    val again = Unigram.trainUnigram(toyDict, vocabExtra = 8,
-      maxPieceLen = 4, seedSize = 64, emIters = 3)
+    val again = Unigram.trainUnigram(toyDict)
     assert(again === pieces)
   }
 
@@ -56,10 +65,9 @@ class UnigramSpec extends SparkSpec {
     // over a trained table every training word tiles at most one piece
     // per code point, and never costs more than its all-single-character
     // tiling (every character is a trained piece, so no UNK is needed)
-    val trained = Unigram.toCosts(Unigram.trainUnigram(toyDict,
-      vocabExtra = 8, maxPieceLen = 4, seedSize = 64, emIters = 3)).toMap
+    val trained = Unigram.toCosts(Unigram.trainUnigram(toyDict)).toMap
     toyDict.foreach { case (w, _) =>
-      val (pieces, cost) = Unigram.segmentCost(w, trained, 4)
+      val (pieces, cost) = Unigram.segmentCost(w, trained, 6)
       assert(pieces >= 1 && pieces <= w.length, w)
       assert(cost <= w.map(c => trained(c.toString)).sum, w)
     }

@@ -68,10 +68,10 @@ class StatefulSpec extends SparkSpec {
       "gap is honored, and the two-batch multiset equals the batch " +
       "operator over the union") {
     implicit val sqlCtx = spark.sqlContext
-    val gap = 100L
+    val gap = graft.operators.EventAnalytics.SessionGapNanos
     val mem = MemoryStream[(Long, Long, String, Long)] // (u, ts, et, eid)
     val out = Streams.transitionsIngest(mem.toDF().toDF("u", "ts", "et", "eid"),
-      $"u", $"ts", $"et", $"eid", sessionGapNanos = gap)
+      $"u", $"ts", $"et", $"eid")
     val q = out.toDF("user_id", "from_type", "to_type").writeStream
       .format("memory").queryName("trans_state").outputMode("update").start()
     // batch 0: u1 A->B (out of arrival order); u2 lone event
@@ -79,7 +79,8 @@ class StatefulSpec extends SparkSpec {
     q.processAllAvailable()
     // batch 1: u1's C at 30 links across the BATCH BOUNDARY to B@20;
     // u2's next event is past the gap (no edge), then one inside it
-    mem.addData((1L, 30L, "C", 4L), (2L, 300L, "B", 5L), (2L, 350L, "C", 6L))
+    mem.addData((1L, 30L, "C", 4L), (2L, 11L + gap, "B", 5L),
+      (2L, 61L + gap, "C", 6L))
     q.processAllAvailable()
     q.stop()
     val streamed = spark.table("trans_state")
@@ -89,10 +90,10 @@ class StatefulSpec extends SparkSpec {
     // multiset equivalence with the batch operator over the union
     val union = Seq(
       (1L, 10L, "A", 1L), (1L, 20L, "B", 2L), (2L, 10L, "A", 3L),
-      (1L, 30L, "C", 4L), (2L, 300L, "B", 5L), (2L, 350L, "C", 6L))
+      (1L, 30L, "C", 4L), (2L, 11L + gap, "B", 5L), (2L, 61L + gap, "C", 6L))
       .toDF("u", "ts", "et", "eid")
     val batch = graft.operators.EventAnalytics.eventTransitions(union,
-        $"u", $"ts", $"et", $"eid", sessionGapNanos = gap)
+        $"u", $"ts", $"et", $"eid")
       .as[(String, String, Long, Long)].collect().sorted.toSeq
     val streamedCounts = streamed.groupBy(t => (t._2, t._3)).view
       .mapValues(v => (v.size.toLong, v.map(_._1).distinct.size.toLong))
