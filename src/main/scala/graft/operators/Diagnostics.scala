@@ -993,7 +993,7 @@ object Diagnostics {
     // an inner join would silently drop both, hiding exactly the
     // imbalanced-split classes the audit exists to surface
     val pc = perClass.withColumnRenamed("truth", "__t")
-    qhat.join(broadcast(pc), col("label") === col("__t"), "full_outer")
+    qhat.join(pc, col("label") === col("__t"), "full_outer")
       .select(coalesce(col("label"), col("__t")).as("grp"),
         coalesce(col("n_cal"), lit(0L)).as("n_cal"),
         (col("__qq").cast("double") / lit(1048576.0)).as("q_hat"),

@@ -249,7 +249,7 @@ object Sampling {
         (col("__sq").cast("double") /
           (col("n_assigned").cast("double") * lit(scale))).as("mean_dist"),
         col("max_dist"))
-    broadcast(ranks).join(assigned, Seq("center_id"), "left")
+    ranks.join(assigned, Seq("center_id"), "left")
       .select(col("rank"), col("center_id"),
         coalesce(col("n_assigned"), lit(0L)).as("n_assigned"),
         col("mean_dist"), col("max_dist"))

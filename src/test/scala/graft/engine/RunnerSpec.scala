@@ -1,17 +1,27 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 import java.time.Duration
+import java.util.UUID
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SaveMode
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 class RunnerSpec extends SparkSpec {
+  import spark.implicits._
 
   private def tmpDir(): String =
     Files.createTempDirectory("graft-journal").toString + "/journal"
 
   test("journal save + lastExecution by path") {
-    val j = new Journal(spark, tmpDir())
+    val dir = tmpDir()
+    val j = new Journal(spark, dir)
     assert(j.lastExecution("jobA").isEmpty)
     j.save(ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"))
     j.save(ExecutionRecord("jobA", 200L, 220L, "r2", "FAILED"))
@@ -19,7 +29,223 @@ class RunnerSpec extends SparkSpec {
     val last = j.lastExecution("jobA").get
     assert(last.startedAt === 200L)
     assert(last.status === "FAILED")
-    assert(j.history("jobA").map(_.startedAt) === Seq(100L, 200L))
+    // every save is a row of the parquet table Spark reads
+    assert(spark.read.parquet(dir).filter(col("path") === "jobA")
+      .orderBy(col("startedAt")).as[ExecutionRecord].collect().toSeq === Seq(
+        ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"),
+        ExecutionRecord("jobA", 200L, 220L, "r2", "FAILED")))
+  }
+
+  /** Data files of a journal directory, as Spark lists them. */
+  private def dataFiles(dir: String): Seq[File] =
+    new File(dir).listFiles().toSeq
+      .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
+
+  /** Spark jobs that `body` starts on this thread. A job of a second
+    * group runs after it: the listener bus delivers in order, so once
+    * that job is seen every job of `body` has been counted. */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val group = s"journal-${UUID.randomUUID()}"
+    val started = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => started.incrementAndGet()
+          case Some(g) if g == s"$group-end" => flushed.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "journal calls")
+      body
+      sc.setJobGroup(s"$group-end", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    started.get
+  }
+
+  test("a lookup on an unchanged journal and a save start no Spark job") {
+    val j = new Journal(spark, tmpDir())
+    j.save(ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"))
+    // the first lookup seeds the index with one read of the directory
+    assert(jobsStartedBy(assert(j.lastExecution("jobA").get.startedAt === 100L)) > 0)
+    val jobs = jobsStartedBy {
+      assert(j.lastExecution("jobA").get.startedAt === 100L)
+      j.save(ExecutionRecord("jobA", 200L, 220L, "r2", "SUCCEED"))
+      assert(j.lastExecution("jobA").get.result === "r2")
+      assert(j.lastExecution("jobB").isEmpty)
+    }
+    assert(jobs === 0)
+  }
+
+  test("restart: a new Journal on an existing directory gates from disk") {
+    val dir = tmpDir()
+    var now = 1000000L
+    var runs = 0
+    val job = Job("tick", Duration.ofMinutes(1), _ => { runs += 1; "ok" })
+    val before = new Runner(spark, new Journal(spark, dir), clock = () => now)
+    before.register(job)
+    assert(before.runOnce() === Seq("tick" -> "SUCCEED"))
+    now += 30000
+    val after = new Runner(spark, new Journal(spark, dir), clock = () => now)
+    after.register(job)
+    assert(after.runOnce() === Seq.empty)
+    now += 40000
+    assert(after.runOnce() === Seq("tick" -> "SUCCEED"))
+    assert(runs === 2)
+  }
+
+  test("a crash between a job's execution and its save re-runs the job " +
+      "on the next tick (at-least-once)") {
+    val dir = tmpDir()
+    var now = 2000000L
+    var runs = 0
+    val job = Job("tick", Duration.ofMinutes(1), _ => { runs += 1; "ok" })
+    val crashing = new Journal(spark, dir) {
+      override def save(rec: ExecutionRecord): Unit =
+        throw new IllegalStateException("crash before the journal write")
+    }
+    val before = new Runner(spark, crashing, clock = () => now)
+    before.register(job)
+    intercept[IllegalStateException](before.runOnce())
+    assert(runs === 1)
+    now += 1000 // well within the interval
+    val after = new Runner(spark, new Journal(spark, dir), clock = () => now)
+    after.register(job)
+    assert(after.runOnce() === Seq("tick" -> "SUCCEED"))
+    assert(runs === 2)
+  }
+
+  test("a file another writer adds is seen on the next lookup") {
+    val dir = tmpDir()
+    val j = new Journal(spark, dir)
+    j.save(ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"))
+    assert(j.lastExecution("jobA").get.startedAt === 100L)
+    new Journal(spark, dir).save(ExecutionRecord("jobA", 200L, 210L, "r2", "SUCCEED"))
+    assert(j.lastExecution("jobA").get.startedAt === 200L)
+    // a Spark append, the layout of journals written before this writer
+    Seq(ExecutionRecord("jobA", 300L, 310L, "r3", "SUCCEED")).toDS()
+      .write.mode(SaveMode.Append).parquet(dir)
+    assert(j.lastExecution("jobA").get.startedAt === 300L)
+  }
+
+  test("a directory deleted and re-copied under the same names reseeds") {
+    val dir = tmpDir()
+    def snapshot(rec: ExecutionRecord): File = {
+      val d = tmpDir()
+      new Journal(spark, d).save(rec)
+      dataFiles(d).head
+    }
+    val older = snapshot(ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"))
+    val newer = snapshot(ExecutionRecord("jobA", 900L, 910L, "r9", "SUCCEED"))
+    assert(older.length === newer.length) // only the mtime tells them apart
+    Files.createDirectories(Paths.get(dir))
+    val live = Paths.get(dir, "part-00000-restored-c000.snappy.parquet")
+    Files.copy(older.toPath, live)
+    val j = new Journal(spark, dir)
+    assert(j.lastExecution("jobA").get.startedAt === 100L)
+    val seededMtime = live.toFile.lastModified()
+    new FsUtils(spark).rm(dir)
+    Files.createDirectories(Paths.get(dir))
+    Files.copy(newer.toPath, live)
+    // a later copy: the same name, a later modification time
+    assert(live.toFile.setLastModified(seededMtime + 1000))
+    assert(j.lastExecution("jobA").get.startedAt === 900L)
+  }
+
+  test("a corrupt file that appears after seeding raises on the next lookup") {
+    val dir = tmpDir()
+    val j = new Journal(spark, dir)
+    j.save(ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"))
+    assert(j.lastExecution("jobA").isDefined)
+    Files.write(Paths.get(s"$dir/part-9.parquet"), "not a parquet file".getBytes("UTF-8"))
+    val e = intercept[Exception](j.lastExecution("jobA"))
+    assert(e.toString.contains("part-9.parquet") ||
+      Option(e.getCause).exists(_.toString.contains("part-9.parquet")), e.toString)
+  }
+
+  test("Spark-written, pyarrow-written and new journal files read together") {
+    val dir = tmpDir()
+    Seq(ExecutionRecord("jobS", 100L, 110L, "spark", "SUCCEED")).toDS()
+      .write.mode(SaveMode.Append).parquet(dir)
+    Files.copy(Paths.get(getClass.getResource("journal-pyarrow.parquet").toURI),
+      Paths.get(dir, "part-00000-pyarrow-c000.snappy.parquet"))
+    val j = new Journal(spark, dir)
+    j.save(ExecutionRecord("jobN", 200L, 210L, "new", "FAILED"))
+    j.save(ExecutionRecord("jobS", 400L, 410L, "new", "SUCCEED"))
+    val fresh = new Journal(spark, dir)
+    assert(fresh.lastExecution("jobS") ===
+      Some(ExecutionRecord("jobS", 400L, 410L, "new", "SUCCEED")))
+    assert(fresh.lastExecution("jobP") ===
+      Some(ExecutionRecord("jobP", 300L, 330L, "pyarrow", "SUCCEED")))
+    assert(fresh.lastExecution("jobN") ===
+      Some(ExecutionRecord("jobN", 200L, 210L, "new", "FAILED")))
+    assert(spark.read.parquet(dir).count() === 4L)
+  }
+
+  private lazy val fullTemplate: String = {
+    val dir = tmpDir()
+    spark.range(0, Journal.CompactAt, 1, Journal.CompactAt)
+      .select(concat(lit("p"), col("id") % 10).as("path"), col("id").as("startedAt"),
+        (col("id") + 5).as("finishedAt"), col("id").cast("string").as("result"),
+        lit("SUCCEED").as("status"))
+      .write.parquet(dir)
+    dir
+  }
+
+  /** A journal directory of `Journal.CompactAt` one-row files, ten paths. */
+  private def fullJournal(): String = {
+    val dir = tmpDir()
+    new FsUtils(spark).cp(fullTemplate, dir)
+    assert(dataFiles(dir).size === Journal.CompactAt)
+    dir
+  }
+
+  private val paths = (0 until 10).map(i => s"p$i")
+
+  test("a lookup that lists more than CompactAt data files compacts the " +
+      "journal to one, every path's last execution unchanged") {
+    val dir = fullJournal()
+    val j = new Journal(spark, dir)
+    val before = paths.map(j.lastExecution)
+    assert(before.forall(_.isDefined))
+    assert(dataFiles(dir).size === Journal.CompactAt) // at the constant: kept
+    val rec = ExecutionRecord("q", 5000L, 5001L, "ok", "SUCCEED")
+    j.save(rec)
+    assert(paths.map(j.lastExecution) === before)
+    assert(j.lastExecution("q") === Some(rec))
+    assert(dataFiles(dir).size === 1)
+    assert(!new File(s"$dir/_compacting").exists())
+    assert(spark.read.parquet(dir).count() === Journal.CompactAt + 1L)
+    // a journal opened on a directory past the constant compacts it first
+    val other = fullJournal()
+    new Journal(spark, other).save(rec)
+    val fresh = new Journal(spark, other)
+    assert(paths.map(fresh.lastExecution) === before)
+    assert(fresh.lastExecution("q") === Some(rec))
+    assert(dataFiles(other).size === 1)
+  }
+
+  test("an interrupted compaction (copy landed, originals kept) gives the " +
+      "same answers") {
+    val dir = tmpDir()
+    val j = new Journal(spark, dir)
+    for (t <- 0L until 20L) j.save(ExecutionRecord(s"p${t % 3}", t, t + 1, "ok", "SUCCEED"))
+    val before = paths.map(j.lastExecution)
+    val staging = s"$dir/_compacting"
+    Compaction.compactParquet(spark, dir, staging)
+    dataFiles(staging).foreach(f => Files.move(f.toPath, Paths.get(dir, f.getName)))
+    assert(dataFiles(dir).size === 21)
+    assert(spark.read.parquet(dir).count() === 40L)
+    assert(paths.map(j.lastExecution) === before)
+    assert(paths.map(new Journal(spark, dir).lastExecution) === before)
   }
 
   test("a journal directory that is absent, or holds no data file, reads " +
