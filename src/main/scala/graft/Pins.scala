@@ -21,7 +21,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Contract: operators route multi-consumer pins through [[pin]]; whoever
   * owns the materialization boundary calls [[unpinAll]] after the terminal
-  * action — the Runner does it after every scheduled job, Verify/Bench
+  * action — the Runner does it after every tick, Verify/Bench
   * between queries (they also blanket-unpersist, which subsumes this).
   * `unpinAll` between an operator call and its action is SAFE but slow:
   * the consumers recompute the un-pinned frame instead of reading it.

@@ -1,10 +1,13 @@
 package graft.engine
 
 import java.time.Duration
+import java.util.concurrent.{CompletableFuture, CompletionException, ConcurrentHashMap}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** The "Spark Runner" restated (reference:
   * data-process/spark-process/src/main/scala/process/InterpreterLoader.scala:106-152,
@@ -25,6 +28,9 @@ final case class Job(
       * (reference: annotation/ProcDescription.java:20).
       */
     interval: Duration,
+    /** Runs on the job's own session ([[Runner.sessionFor]]), not on the
+      * Runner's, possibly at the same time as the tick's other jobs.
+      */
     fn: SparkSession => Any)
 
 class Runner(spark: SparkSession, journal: Journal,
@@ -49,27 +55,76 @@ class Runner(spark: SparkSession, journal: Journal,
       case None => true
     }
 
-  /** One tick: run every ready job, journal each outcome; returns
-    * (name, status) per attempted job.
+  /** One tick: gate every job against the journal, run the due ones at
+    * the same time, journal each outcome; returns (name, status) per
+    * attempted job, in name order.
+    *
+    *  - Gating and every journal call happen on the calling thread. The
+    *    due jobs run on up to `availableProcessors` threads this call
+    *    starts, so they inherit its Spark local properties (job group,
+    *    scheduler pool), and every one of them has ended when it returns.
+    *  - Each job runs on its own session ([[Runner.sessionFor]]), as each
+    *    of the reference's SQL scripts ran on its own Beeline connection
+    *    (reference:
+    *    data-process/spark-process/src/main/scala/hive/HiveBeeLine.scala:94-122,
+    *    SURVEY §3.2): its temp views, `SET` confs and macros are invisible
+    *    to the other jobs and to `spark`, and still there on its next run.
+    *  - Records are saved in name order, each once its job and every job
+    *    before it in that order completed, so a crash in a tick (a failing
+    *    save) re-runs on the next tick every job of this tick that is not
+    *    journaled yet: at-least-once, as before.
+    *  - A job's terminal action is inside `fn` by contract, so the tick's
+    *    end IS the materialization boundary of all its jobs: engine-owned
+    *    operator pins ([[graft.Pins]]) are released once, after the last
+    *    job, or a ticking scheduler stacks MEMORY_AND_DISK blocks faster
+    *    than GC-driven cleanup clears them. User-level `df.cache()` is
+    *    untouched: only pins routed through `Pins.pin`.
     */
-  def runOnce(): Seq[(String, String)] =
-    jobs.values.toSeq.sortBy(_.name).filter(isReady).map { job =>
-      val started = clock()
-      val (status, result) =
-        try { val r = job.fn(spark); ("SUCCEED", String.valueOf(r)) }
-        // NonFatal, not Exception: a script's `???`/assert and a ToolBox
-        // compile failure throw Errors/Throwables, and letting one escape
-        // would skip the journal record and the tick's remaining jobs
-        catch { case NonFatal(e) => ("FAILED", Runner.describe(e)) }
-        // a job's terminal action is inside fn by contract, so this IS the
-        // materialization boundary: release engine-owned operator pins
-        // (graft.Pins) or a ticking scheduler stacks MEMORY_AND_DISK
-        // blocks faster than GC-driven cleanup clears them. User-level
-        // df.cache() is untouched — only pins routed through Pins.pin.
-        finally graft.Pins.unpinAll()
-      journal.save(ExecutionRecord(job.name, started, clock(), result, status))
-      job.name -> status
+  def runOnce(): Seq[(String, String)] = {
+    val due = jobs.values.toSeq.sortBy(_.name).filter(isReady)
+    if (due.isEmpty) return Seq.empty
+    val records = due.map(_ => new CompletableFuture[ExecutionRecord])
+    val next = new AtomicInteger
+    val stop = new AtomicBoolean
+    val workers = Seq.tabulate(math.min(due.size, Runtime.getRuntime.availableProcessors)) { w =>
+      val t = new Thread(() => {
+        var i = next.getAndIncrement()
+        while (i < due.size && !stop.get) {
+          // a fatal error reaches the calling thread through the record
+          try records(i).complete(execute(due(i)))
+          catch { case e: Throwable => records(i).completeExceptionally(e) }
+          i = next.getAndIncrement()
+        }
+      }, s"${Runner.WorkerName}-$w")
+      t.setDaemon(true)
+      t.start()
+      t
     }
+    try due.zip(records).map { case (job, record) =>
+      val rec = try record.join() catch { case e: CompletionException => throw e.getCause }
+      journal.save(rec)
+      job.name -> rec.status
+    } finally {
+      // a failed save leaves the jobs not yet started unstarted
+      stop.set(true)
+      workers.foreach(_.join())
+      graft.Pins.unpinAll()
+    }
+  }
+
+  private def execute(job: Job): ExecutionRecord = {
+    val started = clock()
+    val (status, result) =
+      try {
+        val r = job.fn(Runner.sessionFor(spark, job.name))
+        ("SUCCEED", String.valueOf(r))
+      }
+      // NonFatal, not Exception: a script's `???`/assert and a ToolBox
+      // compile failure throw Errors/Throwables, and letting one escape
+      // would skip the journal record and the tick's remaining jobs
+      catch { case NonFatal(e) => ("FAILED", Runner.describe(e)) }
+    ExecutionRecord(job.name, started, clock(), result, status)
+  }
 }
 
 /** Mtime-keyed hot reload of script jobs
@@ -113,6 +168,38 @@ class ScriptJobs[T](compile: String => T, mtimeOf: String => Long,
 }
 
 object Runner {
+  /** Name prefix of the threads a tick runs its jobs on. */
+  private[engine] val WorkerName = "graft-runner-job"
+
+  /** Per parent session, each job name's own child session. Weak in the
+    * parent, so the children go with it; a child holds no reference to
+    * its parent.
+    */
+  private val children =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, SparkSession]]
+
+  /** The session job `name` runs on under `parent`: made on the job's
+    * first run and reused on every later one, whichever `Runner` runs it.
+    * It is `parent.newSession()` with the engine's settings and functions
+    * ([[GraftSession.configure]]) and then a copy of `parent`'s modifiable
+    * SQL conf as it is at that first run. It shares the SparkContext, the
+    * catalog, cached data and global temp views with `parent`; temp
+    * views, functions and query execution listeners registered on
+    * `parent` are not seen there. One per job name ever run: a deleted
+    * script's session lasts as long as its parent.
+    */
+  private[engine] def sessionFor(parent: SparkSession, name: String): SparkSession = {
+    val named = children.synchronized(
+      children.computeIfAbsent(parent, _ => new ConcurrentHashMap[String, SparkSession]))
+    named.computeIfAbsent(name, _ => {
+      val child = GraftSession.configure(parent.newSession())
+      parent.conf.getAll.foreach { case (k, v) =>
+        if (parent.conf.isModifiable(k)) child.conf.set(k, v)
+      }
+      child
+    })
+  }
+
   /** A failure's journal text: each throwable's class and message
     * (`Throwable.toString`) along its cause chain, outermost first — an
     * NPE without a message still names its class, where `getMessage`

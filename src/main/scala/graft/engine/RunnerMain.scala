@@ -21,7 +21,14 @@ import graft.etl.{SqlRunner, SqlScript}
   *  - per-script interval from a leading `-- interval: PT5M` /
   *    `// interval: PT5M` line, default PT1M
   *    (reference: annotation/ProcDescription.java:20);
-  *  - journal at `<scriptsDir>/.journal` gates re-runs and records results.
+  *  - journal at `<scriptsDir>/.journal` gates re-runs and records results;
+  *  - the scripts due in a tick run at the same time, each on its own
+  *    session, reused from tick to tick (see [[Runner.runOnce]]): like a
+  *    Beeline connection per script (SURVEY §3.2), one script's temp
+  *    views, `SET` confs and macros never reach another, and a script's
+  *    own temp views are still there on its next run;
+  *  - records are saved in script-name order, so a crash in a tick re-runs
+  *    every script of that tick not journaled yet (at-least-once).
   *
   * Usage: `runMain graft.engine.RunnerMain <scriptsDir> [tickMs] [maxTicks]`.
   */

@@ -412,13 +412,18 @@ object Engine {
         unix_timestamp(get_json_object(col("ev"), "$.timestamp"),
           "yyyy-MM-dd'T'HH:mm").as("ts_epoch"),
         get_json_object(col("ev"), "$.type").as("type"))
-    // the journal beside the ORC dir appends to one parquet dir instead of
-    // minting a new pair per run
+    // the journal beside the ORC dir is wiped with it on every run, so it
+    // holds this run's record only instead of one more file per run
     val orcDir = scratchPath("graft-sp-events", dir)
+    val journalDir = s"$orcDir-journal"
+    new graft.engine.FsUtils(s).rm(journalDir)
     events.write.mode("overwrite").orc(orcDir)
-    new graft.engine.Journal(s, s"$orcDir-journal").save(graft.engine.ExecutionRecord(
-      "etl_readme_slice", System.currentTimeMillis(), System.currentTimeMillis(),
-      "ok", "SUCCEED"))
+    val journal = new graft.engine.Journal(s, journalDir)
+    val now = System.currentTimeMillis()
+    val rec = graft.engine.ExecutionRecord("etl_readme_slice", now, now, "ok", "SUCCEED")
+    journal.save(rec)
+    require(journal.lastExecution("etl_readme_slice").contains(rec),
+      s"journal $journalDir does not return the record just saved")
     s.read.orc(orcDir)
       .groupBy(col("type"))
       .agg(count(lit(1)).as("n"),

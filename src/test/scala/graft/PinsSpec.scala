@@ -35,7 +35,7 @@ class PinsSpec extends SparkSpec {
       Seq((0L, 1L)))
   }
 
-  test("Runner releases engine pins after every scheduled job") {
+  test("Runner releases engine pins after every tick") {
     Pins.unpinAll()
     val journal = new engine.Journal(spark,
       Files.createTempDirectory("graft-pins-journal").toString + "/j")
@@ -49,7 +49,7 @@ class PinsSpec extends SparkSpec {
     }))
     val results = runner.runOnce().toMap
     assert(results === Map("bleu" -> "SUCCEED", "boom" -> "FAILED"))
-    // pins are freed after each job — including the failing one
+    // pins are freed after the tick — the failing job's too
     assert(Pins.livePinCount === 0)
   }
 

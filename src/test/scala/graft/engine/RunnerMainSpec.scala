@@ -151,4 +151,65 @@ class RunnerMainSpec extends SparkSpec {
     assert(RunnerMain.tick(spark, dir, journal, scalaJobs, () => now).toMap ===
       Map(badPath -> "FAILED", okPath -> "SUCCEED"))
   }
+
+  private def tickIn(dir: String, now: Long): Map[String, String] = {
+    val scalaJobs = new ScriptJobs[SparkSession => Any](
+      compile = ScriptCompiler.compileTask, mtimeOf = _ => 1L, read = _ => "")
+    RunnerMain.tick(spark, dir, new Journal(spark, s"$dir/.journal"), scalaJobs, () => now)
+      .map { case (p, st) => Paths.get(p).getFileName.toString -> st }.toMap
+  }
+
+  private def values(out: String): Seq[String] =
+    spark.read.parquet(out).collect().map(_.getString(0)).toSeq
+
+  test("scripts of one tick each see their own temp view of the same name, " +
+      "and the Runner's session sees neither") {
+    val dir = Files.createTempDirectory("graft-runner-views").toString
+    for (who <- Seq("a", "b"))
+      Files.writeString(Paths.get(s"$dir/$who.sql"),
+        s"""CREATE OR REPLACE TEMPORARY VIEW rm_iso_v AS SELECT '$who' AS who;
+           |INSERT OVERWRITE DIRECTORY '$dir/out_$who' USING parquet SELECT who FROM rm_iso_v;
+           |""".stripMargin)
+    assert(tickIn(dir, 1000000L) === Map("a.sql" -> "SUCCEED", "b.sql" -> "SUCCEED"))
+    assert(values(s"$dir/out_a") === Seq("a"))
+    assert(values(s"$dir/out_b") === Seq("b"))
+    assert(!spark.catalog.tableExists("rm_iso_v"))
+  }
+
+  test("a script's SET leaves the Runner's session conf unchanged") {
+    val dir = Files.createTempDirectory("graft-runner-set").toString
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    Files.writeString(Paths.get(s"$dir/zone.sql"),
+      s"""SET spark.sql.session.timeZone=America/New_York;
+         |INSERT OVERWRITE DIRECTORY '$dir/out' USING parquet
+         |SELECT current_timezone() AS tz;
+         |""".stripMargin)
+    assert(tickIn(dir, 1000000L) === Map("zone.sql" -> "SUCCEED"))
+    assert(values(s"$dir/out") === Seq("America/New_York"))
+    assert(spark.conf.get("spark.sql.session.timeZone") === zone)
+  }
+
+  test("a macro one script defines is not visible to another script") {
+    val dir = Files.createTempDirectory("graft-runner-macro").toString
+    Files.writeString(Paths.get(s"$dir/def.sql"),
+      "CREATE TEMPORARY MACRO rm_twice(x INT) x * 2;\nSELECT rm_twice(1);")
+    assert(tickIn(dir, 1000000L) === Map("def.sql" -> "SUCCEED"))
+    Files.writeString(Paths.get(s"$dir/use.sql"), "SELECT rm_twice(2);")
+    // def.sql is gated: only use.sql runs, on a session without the macro
+    assert(tickIn(dir, 1010000L) === Map("use.sql" -> "FAILED"))
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql("SELECT rm_twice(3)"))
+  }
+
+  test("a script's session is reused: its temp view is still there on its " +
+      "next run") {
+    val dir = Files.createTempDirectory("graft-runner-reuse").toString
+    val script = Paths.get(s"$dir/keep.sql")
+    Files.writeString(script,
+      "CREATE OR REPLACE TEMPORARY VIEW rm_keep AS SELECT 'kept' AS v;\nSELECT 1;")
+    assert(tickIn(dir, 1000000L) === Map("keep.sql" -> "SUCCEED"))
+    Files.writeString(script,
+      s"INSERT OVERWRITE DIRECTORY '$dir/out' USING parquet SELECT v FROM rm_keep;")
+    assert(tickIn(dir, 1000000L + 60000L) === Map("keep.sql" -> "SUCCEED"))
+    assert(values(s"$dir/out") === Seq("kept"))
+  }
 }

@@ -4,8 +4,9 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import java.time.Duration
 import java.util.UUID
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
@@ -102,25 +103,109 @@ class RunnerSpec extends SparkSpec {
     assert(runs === 2)
   }
 
+  /** Threads of a tick's job pool still alive. */
+  private def liveWorkers(): Set[Thread] =
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.getName.startsWith(Runner.WorkerName) && t.isAlive)
+
   test("a crash between a job's execution and its save re-runs the job " +
       "on the next tick (at-least-once)") {
     val dir = tmpDir()
     var now = 2000000L
-    var runs = 0
-    val job = Job("tick", Duration.ofMinutes(1), _ => { runs += 1; "ok" })
+    val runs = new ConcurrentHashMap[String, Int]()
+    val finished = new AtomicInteger
     val crashing = new Journal(spark, dir) {
       override def save(rec: ExecutionRecord): Unit =
         throw new IllegalStateException("crash before the journal write")
     }
+    def jobs(r: Runner): Unit = Seq("a" -> 0L, "b" -> 300L).foreach { case (n, ms) =>
+      r.register(Job(n, Duration.ofMinutes(1), _ => {
+        runs.merge(n, 1, (a, b) => a + b)
+        Thread.sleep(ms)
+        finished.incrementAndGet()
+      }))
+    }
     val before = new Runner(spark, crashing, clock = () => now)
-    before.register(job)
+    jobs(before)
     intercept[IllegalStateException](before.runOnce())
-    assert(runs === 1)
+    // both jobs started at once; the slow one, still running when the
+    // first save failed, was waited for
+    assert(finished.get === 2)
+    assert(liveWorkers().isEmpty)
     now += 1000 // well within the interval
     val after = new Runner(spark, new Journal(spark, dir), clock = () => now)
-    after.register(job)
-    assert(after.runOnce() === Seq("tick" -> "SUCCEED"))
-    assert(runs === 2)
+    jobs(after)
+    assert(after.runOnce() === Seq("a" -> "SUCCEED", "b" -> "SUCCEED"))
+    assert(runs.asScala.toMap === Map("a" -> 2, "b" -> 2))
+    assert(liveWorkers().isEmpty)
+  }
+
+  test("a tick's due jobs run at the same time") {
+    val both = new CountDownLatch(2)
+    val runner = new Runner(spark, new Journal(spark, tmpDir()), clock = () => 8000000L)
+    Seq("a", "b").foreach(n => runner.register(Job(n, Duration.ZERO, _ => {
+      both.countDown()
+      // only met if the other job is running too
+      assert(both.await(30, TimeUnit.SECONDS), s"$n ran alone")
+      "met"
+    })))
+    assert(runner.runOnce() === Seq("a" -> "SUCCEED", "b" -> "SUCCEED"))
+  }
+
+  test("a tick runs at most availableProcessors jobs at once") {
+    val cpus = Runtime.getRuntime.availableProcessors
+    val running = new AtomicInteger
+    val peak = new AtomicInteger
+    val runner = new Runner(spark, new Journal(spark, tmpDir()), clock = () => 8100000L)
+    (0 until cpus + 2).foreach(i => runner.register(Job(f"job$i%03d", Duration.ZERO, _ => {
+      peak.accumulateAndGet(running.incrementAndGet(), (a, b) => math.max(a, b))
+      Thread.sleep(200)
+      running.decrementAndGet()
+    })))
+    val r = runner.runOnce()
+    assert(r.size === cpus + 2 && r.forall(_._2 == "SUCCEED"), r)
+    assert(peak.get >= 2 && peak.get <= cpus, s"peak ${peak.get} on $cpus cpus")
+  }
+
+  test("gating and saves run on the calling thread, saves in name order; " +
+      "jobs run on other threads that carry its local properties") {
+    val calls = new ConcurrentLinkedQueue[(String, String, Thread)]
+    val j = new Journal(spark, tmpDir()) {
+      override def lastExecution(path: String): Option[ExecutionRecord] = {
+        calls.add(("read", path, Thread.currentThread))
+        super.lastExecution(path)
+      }
+      override def save(rec: ExecutionRecord): Unit = {
+        calls.add(("save", rec.path, Thread.currentThread))
+        super.save(rec)
+      }
+    }
+    val runner = new Runner(spark, j, clock = () => System.currentTimeMillis())
+    val jobThreads = new ConcurrentLinkedQueue[Thread]
+    // the first name finishes last: saves in completion order would reverse
+    Seq("a" -> 400L, "b" -> 200L, "c" -> 0L).foreach { case (n, ms) =>
+      runner.register(Job(n, Duration.ZERO, s => {
+        jobThreads.add(Thread.currentThread)
+        Thread.sleep(ms)
+        s.sparkContext.getLocalProperty("spark.jobGroup.id")
+      }))
+    }
+    val sc = spark.sparkContext
+    sc.setJobGroup("runner-tick", "tick")
+    val r = try runner.runOnce() finally sc.clearJobGroup()
+    assert(r.map(_._1) === Seq("a", "b", "c"))
+    val seen = calls.asScala.toSeq
+    assert(seen.map(c => c._1 -> c._2) === Seq("read" -> "a", "read" -> "b",
+      "read" -> "c", "save" -> "a", "save" -> "b", "save" -> "c"))
+    assert(seen.forall(_._3 eq Thread.currentThread))
+    assert(jobThreads.size === 3)
+    assert(jobThreads.asScala.forall(_ ne Thread.currentThread))
+    val a = j.lastExecution("a").get
+    assert(a.result === "runner-tick")
+    // finishedAt is taken where the job ran, not at its save
+    assert(a.finishedAt - a.startedAt >= 400L)
+    assert(j.lastExecution("c").get.finishedAt < a.finishedAt)
+    assert(liveWorkers().isEmpty)
   }
 
   test("a file another writer adds is seen on the next lookup") {
