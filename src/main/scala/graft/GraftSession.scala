@@ -92,14 +92,8 @@ object GraftSession {
     // nanosecond timestamp type, so read it as BIGINT nanoseconds and
     // convert explicitly where needed (see queries.T.eventsWithTs).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // NOTE on parallelism for per-row signature work: the tempting
-    // declarative knob `spark.sql.files.minPartitionNum` does NOT replace
-    // the operators' widen() repartition — it splits small files into byte
-    // ranges, but parquet assigns each row group to the single range
-    // holding its start offset, so a small (one-row-group) file still
-    // serializes every row onto one core WHILE making the partition count
-    // look wide (which would defeat widen()'s probe). Measured 2-5x on
-    // signature-heavy benchmarks. See Dedup.widen.
+    // per-row kernels over a narrow file scan run widened: see WidenNarrowScans
+    org.apache.spark.sql.graft.WidenNarrowScans.install(spark)
     graft.functions.GraftFunctions.registerAll(spark)
     spark
   }

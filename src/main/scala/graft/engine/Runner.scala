@@ -154,15 +154,21 @@ class ScriptJobs[T](compile: String => T, mtimeOf: String => Long,
     }
   }
 
+  /** Drop (closing the Closeable ones) the instances of paths `gone` names. */
+  def drop(gone: String => Boolean): Unit =
+    cache.keys.filter(gone).foreach(p => cache.remove(p).foreach(c => close(c.instance)))
+
+  private def close(instance: T): Unit = instance match {
+    case c: AutoCloseable => try c.close() catch { case _: Exception => () }
+    case _ =>
+  }
+
   /** Close every cached Closeable instance and drop the cache — the
     * shutdown-hook path (reference closes instances on replacement only;
     * engine TERM handling needs the same cleanup for all of them).
     */
   def closeAll(): Unit = {
-    cache.values.foreach(_.instance match {
-      case c: AutoCloseable => try c.close() catch { case _: Exception => () }
-      case _ =>
-    })
+    cache.values.foreach(c => close(c.instance))
     cache.clear()
   }
 }
@@ -185,8 +191,7 @@ object Runner {
     * SQL conf as it is at that first run. It shares the SparkContext, the
     * catalog, cached data and global temp views with `parent`; temp
     * views, functions and query execution listeners registered on
-    * `parent` are not seen there. One per job name ever run: a deleted
-    * script's session lasts as long as its parent.
+    * `parent` are not seen there. [[dropSessions]] forgets it.
     */
   private[engine] def sessionFor(parent: SparkSession, name: String): SparkSession = {
     val named = children.synchronized(
@@ -199,6 +204,11 @@ object Runner {
       child
     })
   }
+
+  /** Forget the sessions of job names `gone` names: a next run starts afresh. */
+  private[engine] def dropSessions(parent: SparkSession, gone: String => Boolean): Unit =
+    Option(children.synchronized(children.get(parent)))
+      .foreach(_.keySet.removeIf(n => gone(n)))
 
   /** A failure's journal text: each throwable's class and message
     * (`Throwable.toString`) along its cause chain, outermost first — an

@@ -3,6 +3,8 @@ package graft.engine
 import java.time.Duration
 import scala.util.{Failure, Success, Try}
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.SparkSession
 import graft.GraftSession
 import graft.etl.{SqlRunner, SqlScript}
@@ -28,7 +30,9 @@ import graft.etl.{SqlRunner, SqlScript}
   *    views, `SET` confs and macros never reach another, and a script's
   *    own temp views are still there on its next run;
   *  - records are saved in script-name order, so a crash in a tick re-runs
-  *    every script of that tick not journaled yet (at-least-once).
+  *    every script of that tick not journaled yet (at-least-once);
+  *  - a script deleted from the directory loses its compiled instance
+  *    (closed if `AutoCloseable`) and its session on the next tick.
   *
   * Usage: `runMain graft.engine.RunnerMain <scriptsDir> [tickMs] [maxTicks]`.
   */
@@ -51,8 +55,14 @@ object RunnerMain {
       clock: () => Long = () => System.currentTimeMillis()): Seq[(String, String)] = {
     val fs = new FsUtils(spark)
     val runner = new Runner(spark, journal, clock)
-    fs.ls(scriptsDir)
+    val scripts = fs.ls(scriptsDir)
       .filter(p => p.endsWith(".scala") || p.endsWith(".sql"))
+    val dir = new Path(scriptsDir)
+    val qualified = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
+    val gone = (p: String) => new Path(p).getParent == qualified && !scripts.contains(p)
+    scalaJobs.drop(gone)
+    Runner.dropSessions(spark, gone)
+    scripts
       .foreach { path =>
         val src = fs.cat(path)
         val job = Try(intervalOf(src)) match {

@@ -22,27 +22,6 @@ import graft.functions.TextFunctions
   */
 object Dedup {
 
-  /** Ensure at least default parallelism before per-row signature work
-    * (hashing/shingling/embedding math): a narrow input would otherwise put
-    * all per-row compute on a few cores. The declarative knob alone
-    * (`spark.sql.files.minPartitionNum`, set in GraftSession.configure) is
-    * NOT sufficient: it splits a small parquet file into >= cores BYTE
-    * ranges, but parquet assigns each ROW GROUP to the one range holding
-    * its start offset — a single-row-group file still lands every row in
-    * one partition (measured: 2-5x on the signature-heavy benchmarks).
-    * Hence the physical-plan probe + conditional repartition. The probe
-    * costs planning only when the input has no exchange below it: under
-    * AQE, `df.rdd` on an input with an exchange runs that shuffle stage
-    * eagerly to report the post-coalesce partition count, and the real run
-    * then executes it again. Apply it to scan-shaped inputs. At real scale
-    * inputs arrive with >= cores non-empty partitions and this no-ops — no
-    * shuffle added.
-    */
-  private[graft] def widen(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   /** Exact dedup: one row per distinct value of `content`, keeping the
     * minimum `id` and the duplicate-group size.
     *
@@ -121,8 +100,7 @@ object Dedup {
     require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
     val rows = numHashes / bands
     explodeBands(
-      widen(df.select(id.as("id"), text.as("__text")))
-        .select(col("id"), minHashSignature(col("__text"), shingleK, numHashes).as("sig")),
+      df.select(id.as("id"), minHashSignature(text, shingleK, numHashes).as("sig")),
       bands, rows)
   }
 
@@ -150,9 +128,8 @@ object Dedup {
   def minHashPairs(df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
       threshold: Double = 0.8): DataFrame = {
-    val sets = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(col("__text")), shingleK).as("set"))
+    val sets = df.select(id.as("id"), HashFunctions.wordShingleSet(
+      TextFunctions.tokensWs(text), shingleK).as("set"))
     val cand = minHashCandidates(df, id, text, shingleK, numHashes, bands)
     cand
       .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), Seq("id_a"))
@@ -178,11 +155,9 @@ object Dedup {
   /** (id, sig, set): the near-dup state's one signature and shingle pass
     * over a batch's or a bootstrap corpus's text. */
   private def nearDupSigSets(df: DataFrame, id: Column, text: Column): DataFrame =
-    widen(df.select(id.as("id"), text.as("__t")))
-      .select(col("id"),
-        minHashSignature(col("__t"), NearDupShingleK, NearDupHashes).as("sig"),
-        HashFunctions.wordShingleSet(
-          TextFunctions.tokensWs(col("__t")), NearDupShingleK).as("set"))
+    df.select(id.as("id"),
+      minHashSignature(text, NearDupShingleK, NearDupHashes).as("sig"),
+      HashFunctions.wordShingleSet(TextFunctions.tokensWs(text), NearDupShingleK).as("set"))
 
   /** Carried state for [[minHashIncremental]]: the LSH band table and the
     * shingle-fingerprint postings of every document admitted so far. Both
@@ -1016,9 +991,8 @@ object Dedup {
 
   private[operators] def shingleIndex(df: DataFrame, id: Column, text: Column,
       shingleK: Int): ShingleIndex = {
-    val sets = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(col("__text")), shingleK).as("set"))
+    val sets = df.select(id.as("id"), HashFunctions.wordShingleSet(
+      TextFunctions.tokensWs(text), shingleK).as("set"))
     // The postings feed the stats pass AND both sides of the self-join;
     // without a checkpoint each scan re-tokenizes and re-shingles every
     // document (3× the per-row hash work, and the corpus text re-read each
@@ -1184,9 +1158,8 @@ object Dedup {
       shingleK: Int = 3, threshold: Double = 0.8,
       maxDocFreq: Option[Long] = None): DataFrame = {
     def postings(df: DataFrame, id: Column, text: Column, name: String) = {
-      val sets = widen(df.select(id.as(name), text.as("__t")))
-        .select(col(name), HashFunctions.wordShingleSet(
-          TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
+      val sets = df.select(id.as(name), HashFunctions.wordShingleSet(
+        TextFunctions.tokensWs(text), shingleK).as("set"))
       val post0 = sets.select(col(name), size(col("set")).as(s"__sz_$name"),
           explode(col("set")).as("s"))
         .select(col(name), col(s"__sz_$name"),
@@ -1281,12 +1254,10 @@ object Dedup {
   def containmentPairs(needles: DataFrame, nId: Column, nText: Column,
       corpus: DataFrame, cId: Column, cText: Column,
       shingleK: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val nSets = widen(needles.select(nId.as("needle_id"), nText.as("__t")))
-      .select(col("needle_id"), HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
-    val cSets = widen(corpus.select(cId.as("doc_id"), cText.as("__t")))
-      .select(col("doc_id"), HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
+    val nSets = needles.select(nId.as("needle_id"), HashFunctions.wordShingleSet(
+      TextFunctions.tokensWs(nText), shingleK).as("set"))
+    val cSets = corpus.select(cId.as("doc_id"), HashFunctions.wordShingleSet(
+      TextFunctions.tokensWs(cText), shingleK).as("set"))
     val nPost = nSets.select(col("needle_id"), size(col("set")).as("nsz"),
         explode(col("set")).as("s"))
       .select(col("needle_id"), col("nsz"), TextFunctions.fingerprint64(col("s")).as("sfp"))
@@ -1339,18 +1310,16 @@ object Dedup {
     */
   def corpusShingleFps(corpus: DataFrame, cText: Column,
       shingleK: Int = 3): DataFrame =
-    widen(corpus.select(cText.as("__t")))
-      .select(explode(HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(col("__t")), shingleK)).as("s"))
+    corpus.select(explode(HashFunctions.wordShingleSet(
+        TextFunctions.tokensWs(cText), shingleK)).as("s"))
       .select(TextFunctions.fingerprint64(col("s")).as("sfp"))
       .distinct()
 
   /** [[noveltyScores]] against a pre-built (sfp) reference set. */
   def noveltyScoresAgainstFps(batch: DataFrame, bId: Column, bText: Column,
       corpusFps: DataFrame, shingleK: Int = 3): DataFrame = {
-    val bSets = widen(batch.select(bId.as("doc_id"), bText.as("__t")))
-      .select(col("doc_id"), HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(col("__t")), shingleK).as("set"))
+    val bSets = batch.select(bId.as("doc_id"), HashFunctions.wordShingleSet(
+      TextFunctions.tokensWs(bText), shingleK).as("set"))
     val bPost = bSets.select(col("doc_id"), explode(col("set")).as("s"))
       .select(col("doc_id"), TextFunctions.fingerprint64(col("s")).as("sfp"))
     val cFps = corpusFps.select(col("sfp")).distinct()
@@ -1488,7 +1457,7 @@ object Dedup {
     */
   def embeddingPairsExact(df: DataFrame, id: Column, vec: Column,
       threshold: Double): DataFrame = {
-    val v = widen(df.select(id.as("id"), vec.as("v")))
+    val v = df.select(id.as("id"), vec.as("v"))
     val l = v.select(col("id").as("id_a"), col("v").as("va"))
     val r = v.select(col("id").as("id_b"), col("v").as("vb"))
     l.join(r, col("id_a") < col("id_b"))
@@ -1521,7 +1490,7 @@ object Dedup {
   def semanticDedup(df: DataFrame, id: Column, vec: Column,
       centroids: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.graft.VectorFunctions
-    val v = widen(df.select(id.as("id"), vec.as("v")))
+    val v = df.select(id.as("id"), vec.as("v"))
     val assigned =
       Similarity.assignToCentroids(v, col("id"), col("v"), centroids)
     val l = assigned.select(col("cid"), col("id").as("id_a"), col("v").as("va"))
@@ -1559,7 +1528,7 @@ object Dedup {
       needles: DataFrame, needleId: Column, needleVec: Column,
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.graft.VectorFunctions
-    val c = widen(corpus.select(id.as("id"), vec.as("__cv")))
+    val c = corpus.select(id.as("id"), vec.as("__cv"))
     val n = needles.select(needleId.as("__nid"), needleVec.as("__nv"))
     // LEFT join on an always-true condition: with needles present it is
     // the plain broadcast loop, but an EMPTY needle set (a mistyped
@@ -1606,7 +1575,7 @@ object Dedup {
       threshold: Double, bits: Int = 8,
       multiProbe: Boolean = true): DataFrame = {
     import org.apache.spark.sql.graft.VectorFunctions
-    val c = widen(corpus.select(id.as("id"), vec.as("__cv")))
+    val c = corpus.select(id.as("id"), vec.as("__cv"))
       .withColumn("__bkt", Similarity.srpBucket(col("__cv"), bits))
     val n0 = needles.select(needleId.as("__nid"), needleVec.as("__nv"))
       .withColumn("__bkt", Similarity.srpBucket(col("__nv"), bits))
@@ -1650,8 +1619,7 @@ object Dedup {
       s"maxHamming=$maxHamming out of [0, $SimHashBits)")
     val blocks = math.max(SimHashBlocks, maxHamming + 1)
     val bits = SimHashBits / blocks
-    val sh = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), simHash(col("__text")).as("sh"))
+    val sh = df.select(id.as("id"), simHash(text).as("sh"))
     val blk = sh.select(col("id"), col("sh"), posexplode(
       transform(sequence(lit(0), lit(blocks - 1)),
         b => call_function("shiftright", col("sh"), b * bits)
@@ -1687,8 +1655,7 @@ object Dedup {
       s"blocks=$blocks must split 128 bits into word-aligned blocks (2, 4, 8, 16, 32, 64)")
     val width = 128 / blocks
     val mask = if (width == 64) -1L else (1L << width) - 1
-    val sh = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), simHash128(col("__text")).as("sh"))
+    val sh = df.select(id.as("id"), simHash128(text).as("sh"))
     val blk = sh.select(col("id"), col("sh"), posexplode(expr(
       s"""transform(sequence(0, ${blocks - 1}), b ->
          |  shiftright(element_at(sh, CAST((b * $width) div 64 AS INT) + 1),
@@ -1789,8 +1756,7 @@ object Dedup {
     require(window > 0 && stride > 0 && stride <= window,
       s"need 0 < stride <= window, got window=$window stride=$stride")
     import org.apache.spark.sql.expressions.{Window => W}
-    val tiles = widen(df)
-      .select(id.as("__id"), text.as("__t"))
+    val tiles = df.select(id.as("__id"), text.as("__t"))
       .filter(length(col("__t")) >= window)
       .select(col("__id"), col("__t"),
         explode(sequence(lit(0), length(col("__t")) - window, lit(stride)))

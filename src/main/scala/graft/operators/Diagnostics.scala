@@ -256,12 +256,7 @@ object Diagnostics {
     // onDegrade to learn (machine-readably) whether the sample fired
     val pairs = Dedup.jaccardPairs(df, id, text, shingleK, threshold,
       pairBudget = pairBudget, onDegrade = onDegrade)
-    // widen before the signature kernel (the Dedup.widen rationale): the
-    // O(shingles × numHashes) per-doc loop otherwise runs on one core
-    // when the corpus arrives as a single-row-group file; no-op at scale
-    val sigs = Dedup.widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"),
-        Dedup.minHashSignature(col("__text"), shingleK, numHashes).as("sig"))
+    val sigs = df.select(id.as("id"), Dedup.minHashSignature(text, shingleK, numHashes).as("sig"))
     pairs
       .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
@@ -748,9 +743,9 @@ object Diagnostics {
     * ordered by col_name.
     *
     * Scale shape: count/null/min/max/mean for ALL columns in ONE 2-phase
-    * aggregation; medians via [[Quantiles.discPicks]] over the same
-    * widened scan subtree (per-(column, value) count partials, so each
-    * exchange carries distinct values only, and a per-column spillable
+    * aggregation; medians via [[Quantiles.discPicks]] over the same scan
+    * (per-(column, value) count partials, so each exchange carries
+    * distinct values only, and a per-column spillable
     * ordered pick — no single-task distinct-value buffer anywhere). The
     * one-row result then explodes into |cols| output rows
     * driver-side-free. For columns whose DISTINCT count itself is
@@ -792,13 +787,6 @@ object Diagnostics {
           lit(math.pow(10, s).toLong).cast("decimal(19,0)")).cast("double")
       case None => col(s"__p50_$n").cast("double")
     }
-    // widen before the aggregation partials (the Dedup.widen rationale):
-    // a single-row-group parquet scan otherwise runs EVERY percentile
-    // buffer insert and min/max/sum partial on one core — measured 3.1 s
-    // vs 0.7 s at sf0.1 for four columns of lineitem. The exchange
-    // carries only the projected profile columns; at real scale the
-    // input arrives wide and this no-ops.
-    val wide = Dedup.widen(sel)
     val aggs = Seq(count(lit(1)).as("__rows")) ++ cols.flatMap { case (n, _) =>
       Seq(count(col(s"__v_$n")).as(s"__n_$n"),
         min(col(s"__v_$n")).as(s"__min_$n"),
@@ -810,18 +798,13 @@ object Diagnostics {
     // aggregate's final merge would hold EVERY distinct value of every
     // column in one task's OpenHashMap (the flagged OOM at high
     // cardinality); the pick's per-column sort is a spillable window over
-    // (value, count) rows, one column per task. The scaled __q columns are
-    // derived AFTER the shared widen so BOTH consumers prune to the same
-    // four columns below the same repartition — the two exchanges stay
-    // canonically identical and AQE's ReuseExchange runs the scan ONCE
-    // (deriving __q before the widen made the branches prune differently:
-    // two exchanges, two full scans — measured in the executed plan). One
-    // row each, so the crossJoin is a 1x1 attach.
+    // (value, count) rows, one column per task. One row each, so the
+    // crossJoin is a 1x1 attach.
     val picks = Quantiles.discPicks(
-      wide.select(cols.map { case (n, _) => p50Input(n).as(s"__q_$n") }: _*),
+      sel.select(cols.map { case (n, _) => p50Input(n).as(s"__q_$n") }: _*),
       Seq.empty,
       cols.map { case (n, _) => (s"__p50_$n", s"__q_$n", 0.5) })
-    wide.agg(aggs.head, aggs.tail: _*).crossJoin(picks)
+    sel.agg(aggs.head, aggs.tail: _*).crossJoin(picks)
       .select(explode(array(cols.map { case (n, _) =>
         struct(lit(n).as("col_name"),
           col("__rows").as("n"),

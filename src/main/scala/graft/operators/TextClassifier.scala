@@ -71,11 +71,7 @@ object TextClassifier {
     */
   def hashedGramCounts(df: DataFrame, id: Column, text: Column,
       n: Int, dims: Int, family: String = "md5"): DataFrame = {
-    // widen before the per-gram hashing loop (the Dedup.widen rationale:
-    // a single-row-group parquet file lands every document on ONE core
-    // for the kernel pass; at real scale inputs arrive wide and this
-    // no-ops — no shuffle added)
-    val base = Dedup.widen(df.select(id.as("id"), text.as("__text")))
+    val base = df.select(id.as("id"), text.as("__text"))
     family match {
       case "md5" =>
         // ONE compiled pass ([[org.apache.spark.sql.graft

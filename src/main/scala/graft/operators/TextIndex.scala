@@ -13,10 +13,6 @@ import graft.functions.TextFunctions
   */
 object TextIndex {
 
-  // per-row gram hashing widens its input first: a single small parquet
-  // file arrives as ONE partition and would serialize the work on one core
-  import Dedup.widen
-
   /** (doc, term, tf) posting table: one narrow explode + count — the
     * inverted index both similarity joins and retrieval build on. Terms are
     * whitespace tokens (with multiplicity).
@@ -396,8 +392,7 @@ object TextIndex {
     */
   def cdcChunks(df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, maskBits: Int = 6): DataFrame =
-    widen(df)
-      .select(id.as("id"), posexplode(
+    df.select(id.as("id"), posexplode(
         org.apache.spark.sql.graft.HashFunctions.cdcChunks(
           TextFunctions.tokensWs(text), shingleK, maskBits))
         .as(Seq("__pos", "c")))
@@ -417,10 +412,8 @@ object TextIndex {
     */
   private def positionalGrams(df: DataFrame, id: Column, text: Column,
       n: Int): DataFrame =
-    widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"),
-        posexplode(org.apache.spark.sql.graft.HashFunctions.shingleFps60(
-          TextFunctions.tokensWs(col("__text")), n)).as(Seq("pos", "gfp")))
+    df.select(id.as("id"), posexplode(org.apache.spark.sql.graft.HashFunctions.shingleFps60(
+      TextFunctions.tokensWs(text), n)).as(Seq("pos", "gfp")))
 
   /** Corpus-level duplicated-n-gram profile — the measurement half of
     * exact-substring train-set dedup (Lee et al. 2022, "Deduplicating
@@ -473,8 +466,7 @@ object TextIndex {
   def duplicateNgramMask(df: DataFrame, id: Column, text: Column,
       n: Int = 5, minDf: Long = 2): DataFrame = {
     require(minDf >= 2, s"minDf must be >= 2, got $minDf")
-    val base = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
+    val base = df.select(id.as("id"), TextFunctions.tokensWs(text).as("toks"))
     val g = base.select(col("id"),
       posexplode(org.apache.spark.sql.graft.HashFunctions.shingleFps60(
         col("toks"), n)).as(Seq("pos", "gfp")))
@@ -544,7 +536,7 @@ object TextIndex {
     * occurrences; the removal join is gfp-keyed equality (left to AQE —
     * a boilerplate-heavy corpus can have corpus-sized duplicate classes,
     * the no-forced-broadcast lesson); per-doc removal lists are bounded
-    * by doc length. Text never shuffles after widen().
+    * by doc length. Text shuffles only in WidenNarrowScans' widening.
     */
   def exactSubstrDedup(df: DataFrame, id: Column, text: Column,
       n: Int = 50): DataFrame = {
@@ -556,8 +548,7 @@ object TextIndex {
     // (the cooccurrenceCounts lesson); released at the caller's boundary
     // via graft.Pins.unpinAll
     val base = graft.Pins.pin(
-      widen(df.select(id.as("id"), text.as("__text")))
-        .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks")))
+      df.select(id.as("id"), TextFunctions.tokensWs(text).as("toks")))
     val g = graft.Pins.pin(base.filter(size(col("toks")) >= n)
       .select(col("id"),
         posexplode(HashFunctions.shingleFps60(col("toks"), n))
@@ -610,13 +601,11 @@ object TextIndex {
     import org.apache.spark.sql.graft.HashFunctions
     require(n >= 2, s"n must be >= 2, got $n")
     val tb = graft.Pins.pin(
-      widen(train.select(trainId.as("id"), trainText.as("__text")))
-        .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks")))
+      train.select(trainId.as("id"), TextFunctions.tokensWs(trainText).as("toks")))
     val tg = tb.filter(size(col("toks")) >= n)
       .select(col("id"),
         explode(HashFunctions.shingleFps60(col("toks"), n)).as("gfp"))
-    val eg = widen(eval.select(evalText.as("__text")))
-      .select(TextFunctions.tokensWs(col("__text")).as("toks"))
+    val eg = eval.select(TextFunctions.tokensWs(evalText).as("toks"))
       .filter(size(col("toks")) >= n)
       .select(explode(HashFunctions.shingleFps60(col("toks"), n)).as("gfp"))
       .distinct()
@@ -649,17 +638,16 @@ object TextIndex {
     * positional fingerprints in one native
     * [[org.apache.spark.sql.graft.ShingleFps60]] pass (the first version
     * built (w1, w2) STRING structs with an interpreted transform and no
-    * widen(), shuffled the strings through both the count groupBy and the
+    * widening, shuffled the strings through both the count groupBy and the
     * scoring join, and measured 8× slower than the trigram scorer at
     * stress ×4); the count table keys on the fp with map-side partials;
-    * text never shuffles after widen(). Counts are exact modulo 60-bit
-    * fp collisions — the same accepted stance as every other fp-keyed
-    * text operator here, and the oracle hash-gate would catch one.
+    * text shuffles only in WidenNarrowScans' widening. Counts are exact
+    * modulo 60-bit fp collisions — the same accepted stance as every other
+    * fp-keyed text operator here, and the oracle hash-gate would catch one.
     */
   def bigramFamiliarity(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
+    val base = df.select(id.as("id"), TextFunctions.tokensWs(text).as("toks"))
     val bg = base.filter(size(col("toks")) >= 2)
       .select(col("id"),
         explode(HashFunctions.shingleFps60(col("toks"), 2)).as("g2"))
@@ -695,12 +683,11 @@ object TextIndex {
     * native [[org.apache.spark.sql.graft.ShingleFps60]] pass each,
     * position-aligned with arrays_zip (no self-join to pair a trigram
     * with its backoff bigram); both count tables key on 8-byte fps with
-    * map-side partials; text never shuffles after widen().
+    * map-side partials; text shuffles only in WidenNarrowScans' widening.
     */
   def backoffFamiliarity(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
+    val base = df.select(id.as("id"), TextFunctions.tokensWs(text).as("toks"))
     // (g3, g2) pairs aligned by start position: trigram i backs off to
     // the bigram starting at the same token
     val tri = base.filter(size(col("toks")) >= 3)
@@ -764,7 +751,7 @@ object TextIndex {
     * vocabulary-sized fp-keyed aggregations with map-side partials; the
     * corpus token total broadcasts as one row. The position stream
     * (id + three 8-byte fps) makes three key-joins against those count
-    * tables — nothing corpus-text-wide shuffles after widen(). At 100 TB
+    * tables — text shuffles only in WidenNarrowScans' widening. At 100 TB
     * the model tables are the same Heaps-law-bounded dictionaries every
     * text operator here shuffles; scoring a NEW corpus against a FROZEN
     * model is the same plan with the count frames read from storage.
@@ -787,11 +774,11 @@ object TextIndex {
     *
     * Scale shape: two fp-keyed 2-phase aggregations plus a one-row total —
     * the same vocabulary-sized exchanges as the familiarity operators;
-    * text never shuffles after widen().
+    * text shuffles only in WidenNarrowScans' widening.
     */
   def bigramLmCounts(df: DataFrame, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = widen(df.select(text.as("__text")))
+    val base = df.select(text.as("__text"))
       .select(TextFunctions.tokensWs(col("__text")).as("toks"))
     // size-guard: ShingleFps60 on an EMPTY token array emits one
     // whole-text gram (the shingle contract), which here would count a
@@ -849,8 +836,7 @@ object TextIndex {
       .select(col("fp").as("g2"), col("cnt").as("c2"))
     val nTotal = broadcast(model.filter(col("kind") === "n")
       .select(col("cnt").as("n_total")))
-    val base = widen(df.select(id.as("id"), text.as("__text")))
-      .select(col("id"), TextFunctions.tokensWs(col("__text")).as("toks"))
+    val base = df.select(id.as("id"), TextFunctions.tokensWs(text).as("toks"))
     // bigram position stream, each with its prev/cur unigram fps aligned
     // by start position (arrays_zip, no self-join)
     val pos = base.filter(size(col("toks")) >= 2)
@@ -1315,7 +1301,7 @@ object TextIndex {
       patterns: Seq[String]): DataFrame = {
     import org.apache.spark.sql.graft.PatternFunctions
     require(patterns.nonEmpty, "keywordTag: empty pattern set")
-    widen(df.select(id.as("id"), text.as("__text")))
+    df.select(id.as("id"), text.as("__text"))
       .select(col("id"),
         posexplode(PatternFunctions.multiPatternHits(col("__text"), patterns)))
       .filter(col("col") > 0)
@@ -1407,15 +1393,16 @@ object TextIndex {
     * Scale shape: grams hash to positional 60-bit fps in native
     * [[org.apache.spark.sql.graft.ShingleFps60]] passes; per-(pair, gram)
     * counts partial-aggregate, the match join keys on (pair, 8-byte fp),
-    * and every downstream agg is pair-keyed — text never shuffles after
-    * widen(), and nothing is corpus-wide (all work is per pair).
+    * and every downstream agg is pair-keyed — text shuffles only in
+    * WidenNarrowScans' widening, and nothing is corpus-wide (all work is
+    * per pair).
     */
   def rougeN(pairs: DataFrame, pairId: Column, refText: Column,
       candText: Column, n: Int = 2): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
     require(n >= 1, s"n must be >= 1, got $n")
-    val base = widen(pairs.select(pairId.as("pair_id"), refText.as("__r"),
-      candText.as("__c")))
+    val base = pairs.select(pairId.as("pair_id"), refText.as("__r"),
+      candText.as("__c"))
     def sideCounts(c: Column) = {
       val toks = TextFunctions.tokensWs(c)
       base.select(col("pair_id"), toks.as("__t"))
@@ -1470,14 +1457,14 @@ object TextIndex {
     * aggregation (the posting-table exchange every n-gram operator here
     * pays), a vocabulary-sized gram-stats table derived from it in two
     * gram-keyed aggs, one gfp-keyed join of tf against those stats, and
-    * a per-doc sum. Text never shuffles after widen(); nothing is
-    * doc-pair-quadratic — the naive Self-BLEU is O(docs²) text
+    * a per-doc sum. Text shuffles only in WidenNarrowScans' widening;
+    * nothing is doc-pair-quadratic — the naive Self-BLEU is O(docs²) text
     * comparisons, this is O(corpus grams).
     */
   def selfBleu(df: DataFrame, id: Column, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
     val n = 2
-    val base = widen(df.select(id.as("id"), text.as("__text")))
+    val base = df.select(id.as("id"), text.as("__text"))
     val tf = base
       .select(col("id"), TextFunctions.tokensWs(col("__text")).as("__t"))
       .filter(size(col("__t")) >= n)
@@ -1544,7 +1531,7 @@ object TextIndex {
     import org.apache.spark.sql.graft.HashFunctions
     require(window >= 1, s"window must be >= 1, got $window")
     require(k > 0, s"k must be positive, got $k")
-    val base = widen(df.select(text.as("__text")))
+    val base = df.select(text.as("__text"))
       .select(HashFunctions.shingleFps60(
         TextFunctions.tokensWs(col("__text")), 1).as("fps"))
     val nToks = size(col("fps"))
@@ -1588,7 +1575,7 @@ object TextIndex {
     // sliver of the vocabulary (AQE then broadcasts the label joins); in
     // the flat tail (t = 1) nothing prunes and the shuffle-hash path
     // carries it. fp computed AFTER the count agg, on vocabulary rows.
-    val dict = widen(df.select(text.as("__text")))
+    val dict = df.select(text.as("__text"))
       .select(explode(TextFunctions.tokensWs(col("__text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__tc"))
       .join(broadcast(kth), col("__tc") * (2L * window) >= col("__t"))
@@ -1751,7 +1738,7 @@ object TextIndex {
     * exactly this frame incrementally.
     */
   def tokenFpCounts(df: DataFrame, text: Column): DataFrame =
-    widen(df.select(text.as("__text")))
+    df.select(text.as("__text"))
       .select(explode(TextFunctions.tokensWs(col("__text"))).as("__t"))
       .select(TextFunctions.fingerprint64(col("__t")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("c"))

@@ -1063,10 +1063,7 @@ trait PipelineMixtureSketchFam extends PipelineSimilarityFam {
     * recomputes the k-shingle hash sequence and per-window minima in SQL.
     */
   def winnowFps(s: SparkSession, dir: String): DataFrame = {
-    // widen before the per-row fingerprint loop — see Dedup.widen's note on
-    // why a declarative minPartitionNum can't do this for small files
-    graft.operators.Dedup.widen(
-        T(s, dir, "documents").select(col("doc_id"), col("text")))
+    T(s, dir, "documents")
       .select(col("doc_id"),
         explode(graft.operators.Dedup.winnowFingerprints(col("text"), 3, 4)).as("fp"))
       .orderBy(col("doc_id"), col("fp"))

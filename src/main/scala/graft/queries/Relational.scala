@@ -24,14 +24,7 @@ object Relational {
   /** TPC-H Q1-style pricing summary. Single scan, partial agg map-side. */
   def q01PricingSummary(s: SparkSession, dir: String): DataFrame = {
     val li = T(s, dir, "lineitem")
-    // filter + project first (pushdown/pruning reach the scan), then widen
-    // (Dedup.widen's single-row-group rationale): the four-column decimal
-    // multiply chain is the per-row hot loop and otherwise runs on one
-    // core locally; no-op when the scan arrives wide
-    graft.operators.Dedup.widen(
-        li.filter(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
-          .select(col("l_returnflag"), col("l_linestatus"), col("l_quantity"),
-            col("l_extendedprice"), col("l_discount"), col("l_tax")))
+    li.filter(col("l_shipdate") <= lit("2001-09-01").cast("timestamp"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         sum(col("l_quantity").cast(dec)).cast("double").as("sum_qty"),
@@ -840,11 +833,8 @@ object Relational {
     * whole query stays one scan like the aggregate it replaced.
     */
   def q22Percentiles(s: SparkSession, dir: String): DataFrame = {
-    // project to the three consumed columns, then widen (Dedup.widen's
-    // single-row-group rationale): the melt + per-value count partials of
-    // discPicks otherwise run on one core; no-op when the input arrives wide
-    val base = graft.operators.Dedup.widen(T(s, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice")))
+    val base = T(s, dir, "lineitem")
+      .select(col("l_returnflag"), col("l_quantity"), col("l_extendedprice"))
     graft.operators.Quantiles.discPicks(base, Seq("l_returnflag"),
         Seq(("p50_qty", "l_quantity", 0.5), ("p90_qty", "l_quantity", 0.9),
           ("p99_price", "l_extendedprice", 0.99)),

@@ -212,4 +212,44 @@ class RunnerMainSpec extends SparkSpec {
     assert(tickIn(dir, 1000000L + 60000L) === Map("keep.sql" -> "SUCCEED"))
     assert(values(s"$dir/out") === Seq("kept"))
   }
+
+  test("a script deleted from the directory loses its session and its " +
+      "compiled instance, which is closed") {
+    val dir = Files.createTempDirectory("graft-runner-gone").toString
+    val compiled = new java.util.concurrent.atomic.AtomicInteger(0)
+    val closed = new java.util.concurrent.atomic.AtomicInteger(0)
+    // tells whether its session already holds the view it creates
+    class ViewTask extends (SparkSession => Any) with AutoCloseable {
+      def apply(s: SparkSession): Any =
+        if (s.catalog.tableExists("rm_gone_v")) "seen"
+        else { s.range(1).createOrReplaceTempView("rm_gone_v"); "fresh" }
+      def close(): Unit = closed.incrementAndGet()
+    }
+    val scalaJobs = new ScriptJobs[SparkSession => Any](
+      compile = _ => { compiled.incrementAndGet(); new ViewTask }, mtimeOf = _ => 1L,
+      read = _ => "")
+    val journal = new Journal(spark, s"$dir/.journal")
+    val script = Paths.get(s"$dir/gone.scala")
+    val other = Paths.get(s"$dir/stays.scala")
+    Files.writeString(script, "")
+    Files.writeString(other, "")
+    def tickAt(now: Long): Map[String, (String, String)] =
+      RunnerMain.tick(spark, dir, journal, scalaJobs, () => now).map { case (p, st) =>
+        Paths.get(p).getFileName.toString -> (st, journal.lastExecution(p).get.result)
+      }.toMap
+    assert(tickAt(1000000L) === Map("gone.scala" -> ("SUCCEED", "fresh"),
+      "stays.scala" -> ("SUCCEED", "fresh")))
+    assert(tickAt(1060000L) === Map("gone.scala" -> ("SUCCEED", "seen"),
+      "stays.scala" -> ("SUCCEED", "seen")))
+    assert(compiled.get === 2 && closed.get === 0)
+
+    Files.delete(script)
+    assert(tickAt(1120000L) === Map("stays.scala" -> ("SUCCEED", "seen")))
+    assert(closed.get === 1)
+    // back under the same name and mtime: compiled anew, on a new session
+    Files.writeString(script, "")
+    assert(tickAt(1180000L) === Map("gone.scala" -> ("SUCCEED", "fresh"),
+      "stays.scala" -> ("SUCCEED", "seen")))
+    assert(compiled.get === 3 && closed.get === 1)
+  }
 }

@@ -3,12 +3,10 @@ package graft.engine
 import java.io.File
 import java.nio.file.{Files, Paths}
 import java.time.Duration
-import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
@@ -41,36 +39,6 @@ class RunnerSpec extends SparkSpec {
   private def dataFiles(dir: String): Seq[File] =
     new File(dir).listFiles().toSeq
       .filter(f => f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith("."))
-
-  /** Spark jobs that `body` starts on this thread. A job of a second
-    * group runs after it: the listener bus delivers in order, so once
-    * that job is seen every job of `body` has been counted. */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val group = s"journal-${UUID.randomUUID()}"
-    val started = new AtomicInteger
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => started.incrementAndGet()
-          case Some(g) if g == s"$group-end" => flushed.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "journal calls")
-      body
-      sc.setJobGroup(s"$group-end", "listener flush")
-      sc.parallelize(Seq(1), 1).count()
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener bus did not flush")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-    started.get
-  }
 
   test("a lookup on an unchanged journal and a save start no Spark job") {
     val j = new Journal(spark, tmpDir())

@@ -142,8 +142,9 @@ class PlanSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("doc_id"),
       org.apache.spark.sql.functions.col("text"), 3, 32, 8)
     val p = plan(df)
-    // one RoundRobin widen (under-parallel local input) is allowed; no hash
-    // shuffle may appear — signatures are computed in a projection
+    // one RoundRobin exchange (WidenNarrowScans over the one-file input)
+    // is allowed; no hash shuffle may appear — signatures are computed in
+    // a projection
     assert("Exchange".r.findAllIn(p).size <= 2, p) // tree + detail section
     assert(!p.contains("Exchange hashpartitioning"), p)
   }
@@ -264,7 +265,7 @@ class PlanSpec extends SparkSpec {
   test("dup_ngram_profile: shuffles carry gram fingerprints, no text columns") {
     val p = plan(Pipeline.dupNgramProfileQ(spark, dir))
     // every KEYED exchange's payload is ids + the 8-byte gram fingerprint
-    // — gram strings/text die in a projection first. (The widen()
+    // — gram strings/text die in a projection first. (The WidenNarrowScans
     // round-robin exchange is allowed to move (id, text) once, same as
     // the minhash plan contract.)
     val lines = p.linesIterator.toVector
@@ -392,10 +393,10 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("Window"), p)
-    // the groupBy(id) exchange + the orderBy range exchange + widen's
-    // round-robin input widening on the corpus scan (a test-SF artifact:
-    // one small parquet file arrives as one partition); the needle side
-    // is a BroadcastExchange (not matched by this pattern). The
+    // the groupBy(id) exchange + the orderBy range exchange + the
+    // WidenNarrowScans round-robin exchange on the corpus scan (a test-SF
+    // artifact: one small parquet file arrives as one partition); the
+    // needle side is a BroadcastExchange (not matched by this pattern). The
     // aggregation is partial BEFORE its exchange, so only one narrow row
     // per corpus id crosses it — vectors stay put.
     assert("\\(\\d+\\) Exchange".r.findAllIn(p).size <= 3, p)
@@ -685,9 +686,9 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin") &&
       !p.contains("ShuffledHashJoin") && !p.contains("CartesianProduct"), p)
     // the static plan repeats the widened-scan subtree per pick consumer
-    // (bounds + bucket-counts + bases); at runtime the identical widen
-    // exchange dedups to one scan (ReusedExchange in the executed plan,
-    // recorded in plans/r21/table_profile_final.txt)
+    // (bounds + bucket-counts + bases); at runtime the identical
+    // WidenNarrowScans exchange dedups to one scan (ReusedExchange in the
+    // executed plan); the stats aggregation reads the scan unwidened
     assert("Scan parquet".r.findAllIn(p).size <= 12, p)
   }
 
@@ -767,7 +768,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), p)
     assert(!p.contains("HashAggregate"), p)
     assert(p.contains("multi_pattern_hits"), p)
-    // widen() repartition + the orderBy range exchange, nothing else
+    // WidenNarrowScans repartition + the orderBy range exchange, nothing else
     assert("(\\d+) Exchange".r.findAllIn(p).size <= 2, p)
   }
 
