@@ -11,23 +11,28 @@ import org.apache.spark.sql.execution.PartitionedFileUtil
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 
-/** The engine's one widen policy. A one-row-group parquet file is one split
-  * (parquet gives a row group to the split holding its start offset), so
-  * per-row kernels over it would run on one core (measured 2-5x on the
-  * signature-heavy entries). The rule puts `Repartition(defaultParallelism)`
-  * above a batch file scan's Filters and column-selecting Projects (or above
-  * a cached relation over such a scan) when both hold:
-  *  1. an expression of this package, or an explode of a computed array,
-  *     sits above the scan before its first exchange, and an aggregate,
-  *     join or window takes its rows (a map-only plan keeps its scan's
-  *     width). A join Spark will broadcast is no exchange for its streamed
-  *     side. Checked first: a plan without such work pays a tree walk;
-  *  2. Spark's own `FilePartition` arithmetic plans fewer than
-  *     `defaultParallelism` splits over the listed files. No job runs.
-  * Computed columns stay above the exchange, which carries only the columns
-  * they read. Streaming plans are left alone; a second pass adds nothing.
+/** The engine's one widen policy. A one-row-group parquet file is one split,
+  * so per-row kernels over it run on one core. The rule puts
+  * `Repartition(defaultParallelism)` above a batch file scan's Filters and
+  * column-selecting Projects (or above a cache of one) when:
+  *  1. a `Generate` or an expression of this package reads the scan's rows
+  *     before their first exchange, and an aggregate, join or window takes
+  *     them (a broadcast join is no exchange for its streamed side, and no
+  *     consumer of its small build side). Checked first: a plan without
+  *     such work pays a tree walk;
+  *  2. the scan's files hold at least [[MinBytes]], in fewer splits than
+  *     `defaultParallelism` by Spark's own `FilePartition` arithmetic.
+  * Computed columns stay above the exchange. Another read of a widened
+  * scan that prunes it alike gets the same repartition, so both read one
+  * exchange. Streaming plans are left alone; a second pass adds nothing;
+  * no job runs.
   */
 object WidenNarrowScans extends Rule[LogicalPlan] with JoinSelectionHelper {
+
+  /** Below this the shuffle costs more than the cores it adds save (4 cores:
+    * minHash banding of a 65 KB document file ran faster on one task, of a
+    * 595 KB one twice as fast widened). */
+  val MinBytes: Long = 256L << 10
 
   /** Idempotent; `graft.GraftSession.configure` calls it. */
   def install(spark: SparkSession): Unit =
@@ -38,59 +43,75 @@ object WidenNarrowScans extends Rule[LogicalPlan] with JoinSelectionHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (plan.isStreaming || !plan.exists(perRow)) plan
-    else widen(plan, work = false, shuffled = false)
-
-  /** An engine kernel, or an explode of a computed array (exploding a
-    * stored one only moves it). */
-  private def perRow(p: LogicalPlan): Boolean = p match {
-    case g: Generate => !g.generator.children.forall(_.isInstanceOf[Attribute])
-    case _ => p.expressions.exists(_.exists(_.getClass.getPackageName == "org.apache.spark.sql.graft"))
-  }
-
-  /** `work`: per-row engine work sits above `p` with no exchange between.
-    * `shuffled`: an aggregate, join or window consumes `p`'s rows; a
-    * map-only plan (a final sort aside) keeps its scan's width. */
-  private def widen(p: LogicalPlan, work: Boolean, shuffled: Boolean): LogicalPlan = {
-    val w = work || shuffled && perRow(p)
-    (if (work) narrowSource(p) else None) match {
-      case Some(r) => repartition(r, p)
-      case None => p match {
-        case Project(list, c) if w => narrowSource(c) match {
-          case Some(r) =>
-            val read = c.output.filter(p.references.contains)
-            Project(list, repartition(r, if (read == c.output) c else Project(read, c)))
-          case None => p.mapChildren(widen(_, w, shuffled))
+    else {
+      val out = widen(plan, work = false, consumed = false)
+      val wide = out.collect { case r @ Repartition(_, true, Source(_)) => r.canonicalized }.toSet
+      // every other read of a widened scan, pruned alike, reads the same
+      // exchange: Spark reuses it, so the file is read once
+      def share(p: LogicalPlan): LogicalPlan = p match {
+        case _: Repartition => p
+        case _ => p.mapChildren {
+          case c @ Source(r) => Some(repartition(r, pruned(p, c)))
+            .filter(w => wide.contains(w.canonicalized)).getOrElse(share(c))
+          case c => share(c)
         }
-        case _: Project | _: Filter | _: Generate | _: Union | _: Expand | _: Sample =>
-          p.mapChildren(widen(_, w, shuffled))
-        case j: Join =>
-          val streamed = getBroadcastBuildSide(j, hintOnly = false, conf).map {
-            case BuildLeft => j.right
-            case BuildRight => j.left
-          }
-          j.mapChildren(c => widen(c, (w || perRow(j)) && streamed.exists(_ eq c), shuffled = true))
-        case _: Sort => p.mapChildren(widen(_, work = false, shuffled))
-        case _ => p.mapChildren(widen(_, work = false, shuffled = true))
       }
+      if (wide.isEmpty) out else share(out)
+    }
+
+  private def perRow(p: LogicalPlan): Boolean = p.isInstanceOf[Generate] ||
+    p.expressions.exists(_.exists(_.getClass.getPackageName == "org.apache.spark.sql.graft"))
+
+  /** `work`: engine work reads `p`'s rows with no exchange between.
+    * `consumed`: an aggregate, join or window takes them. Other operators
+    * pass both on, except that an exchange (or a limit) ends the work. */
+  private def widen(p: LogicalPlan, work: Boolean, consumed: Boolean): LogicalPlan = {
+    val w = work || consumed && perRow(p)
+    p match {
+      case Source(r) if work && narrow(r) => repartition(r, p)
+      case Project(list, c @ Source(r)) if w && narrow(r) =>
+        Project(list, repartition(r, pruned(p, c)))
+      case _: Project | _: Filter | _: Generate | _: Union | _: Expand | _: Sample =>
+        p.mapChildren(widen(_, w, consumed))
+      case j: Join =>
+        // a broadcast's small build side is collected; its streamed side is
+        // read in the join's own stage
+        val build = getBroadcastBuildSide(j, hintOnly = false, conf).map {
+          case BuildLeft => j.left
+          case BuildRight => j.right
+        }
+        j.mapChildren {
+          case c if build.exists(_ eq c) => widen(c, work = false, consumed = false)
+          case c => widen(c, (w || perRow(j)) && build.isDefined, consumed = true)
+        }
+      case _: Aggregate | _: Window => p.mapChildren(widen(_, work = false, consumed = true))
+      case _ => p.mapChildren(widen(_, work = false, consumed))
     }
   }
 
   private def repartition(r: HadoopFsRelation, child: LogicalPlan): LogicalPlan =
     Repartition(r.sparkSession.sparkContext.defaultParallelism, shuffle = true, child)
 
-  /** A narrow [[Scan]]'s relation; a cached relation holds the partitions
-    * of the scan its cached plan computes over. */
-  private def narrowSource(p: LogicalPlan): Option[HadoopFsRelation] = p match {
-    case Scan(r) => Some(r).filter(narrow)
-    case c: InMemoryRelation =>
-      def scanOf(q: LogicalPlan): LogicalPlan = q match {
-        case Project(_, child) => scanOf(child)
-        case Filter(_, child) => scanOf(child)
-        case leaf => leaf
-      }
-      c.cachedPlan.collectFirst(Function.unlift(_.logicalLink)).map(scanOf)
-        .flatMap(narrowSource)
-    case _ => None
+  /** `c` with only the columns `p` reads. */
+  private def pruned(p: LogicalPlan, c: LogicalPlan): LogicalPlan = {
+    val read = c.output.filter(p.references.contains)
+    if (read == c.output) c else Project(read, c)
+  }
+
+  /** A [[Scan]]'s relation; a cached relation holds the partitions of the
+    * scan its cached plan computes over. */
+  private object Source {
+    def unapply(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Scan(r) => Some(r)
+      case c: InMemoryRelation =>
+        def scanOf(q: LogicalPlan): LogicalPlan = q match {
+          case Project(_, child) => scanOf(child)
+          case Filter(_, child) => scanOf(child)
+          case leaf => leaf
+        }
+        c.cachedPlan.collectFirst(Function.unlift(_.logicalLink)).map(scanOf).flatMap(unapply)
+      case _ => None
+    }
   }
 
   /** A batch file scan's relation, under Filters without engine work and
@@ -107,9 +128,9 @@ object WidenNarrowScans extends Rule[LogicalPlan] with JoinSelectionHelper {
     }
   }
 
-  /** Fewer splits than `defaultParallelism`, as `FileSourceScanExec` plans
-    * the read of every listed file (a partitioned table's pruning aside). */
-  private def narrow(r: HadoopFsRelation): Boolean = {
+  /** Condition 2, splitting every listed file as `FileSourceScanExec` does
+    * (a partitioned table's pruning aside). */
+  private def narrow(r: HadoopFsRelation): Boolean = r.sizeInBytes >= MinBytes && {
     val spark = r.sparkSession
     val dirs = r.location.listFiles(Nil, Nil)
     val maxSplit = FilePartition.maxSplitBytes(spark, dirs)

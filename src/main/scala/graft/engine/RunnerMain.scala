@@ -58,8 +58,11 @@ object RunnerMain {
     val scripts = fs.ls(scriptsDir)
       .filter(p => p.endsWith(".scala") || p.endsWith(".sql"))
     val dir = new Path(scriptsDir)
-    val qualified = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
-    val gone = (p: String) => new Path(p).getParent == qualified && !scripts.contains(p)
+    // by string: the session cache also holds jobs other Runners named,
+    // and a name like `etl:daily` is no Hadoop Path
+    val prefix = s"${dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)}/"
+    val gone = (p: String) =>
+      p.startsWith(prefix) && p.indexOf('/', prefix.length) < 0 && !scripts.contains(p)
     scalaJobs.drop(gone)
     Runner.dropSessions(spark, gone)
     scripts

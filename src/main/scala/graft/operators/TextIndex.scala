@@ -778,8 +778,7 @@ object TextIndex {
     */
   def bigramLmCounts(df: DataFrame, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
-    val base = df.select(text.as("__text"))
-      .select(TextFunctions.tokensWs(col("__text")).as("toks"))
+    val base = df.select(TextFunctions.tokensWs(text).as("toks"))
     // size-guard: ShingleFps60 on an EMPTY token array emits one
     // whole-text gram (the shingle contract), which here would count a
     // phantom token per blank doc
@@ -1301,9 +1300,7 @@ object TextIndex {
       patterns: Seq[String]): DataFrame = {
     import org.apache.spark.sql.graft.PatternFunctions
     require(patterns.nonEmpty, "keywordTag: empty pattern set")
-    df.select(id.as("id"), text.as("__text"))
-      .select(col("id"),
-        posexplode(PatternFunctions.multiPatternHits(col("__text"), patterns)))
+    df.select(id.as("id"), posexplode(PatternFunctions.multiPatternHits(text, patterns)))
       .filter(col("col") > 0)
       .select(col("id"),
         element_at(typedlit(patterns), col("pos") + 1).as("pattern"),
@@ -1531,9 +1528,7 @@ object TextIndex {
     import org.apache.spark.sql.graft.HashFunctions
     require(window >= 1, s"window must be >= 1, got $window")
     require(k > 0, s"k must be positive, got $k")
-    val base = df.select(text.as("__text"))
-      .select(HashFunctions.shingleFps60(
-        TextFunctions.tokensWs(col("__text")), 1).as("fps"))
+    val base = df.select(HashFunctions.shingleFps60(TextFunctions.tokensWs(text), 1).as("fps"))
     val nToks = size(col("fps"))
     // all offsets in ONE array expression; greatest(·, 0) keeps the slice
     // length legal (ANSI throws on a negative length) for docs shorter
@@ -1575,8 +1570,7 @@ object TextIndex {
     // sliver of the vocabulary (AQE then broadcasts the label joins); in
     // the flat tail (t = 1) nothing prunes and the shuffle-hash path
     // carries it. fp computed AFTER the count agg, on vocabulary rows.
-    val dict = df.select(text.as("__text"))
-      .select(explode(TextFunctions.tokensWs(col("__text"))).as("term"))
+    val dict = df.select(explode(TextFunctions.tokensWs(text)).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("__tc"))
       .join(broadcast(kth), col("__tc") * (2L * window) >= col("__t"))
       .select(col("term"), element_at(
@@ -1738,8 +1732,7 @@ object TextIndex {
     * exactly this frame incrementally.
     */
   def tokenFpCounts(df: DataFrame, text: Column): DataFrame =
-    df.select(text.as("__text"))
-      .select(explode(TextFunctions.tokensWs(col("__text"))).as("__t"))
+    df.select(explode(TextFunctions.tokensWs(text)).as("__t"))
       .select(TextFunctions.fingerprint64(col("__t")).as("fp"))
       .groupBy(col("fp")).agg(count(lit(1)).as("c"))
 

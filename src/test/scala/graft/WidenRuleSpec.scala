@@ -22,15 +22,21 @@ class WidenRuleSpec extends SparkSpec {
 
   private def parallelism = spark.sparkContext.defaultParallelism
 
-  private val docs = (1 to 40).map(i =>
-    (i.toLong, s"doc $i shares the words of many other docs here ${i % 7}", i * 3))
+  /** Random words, so that parquet cannot shrink 4000 docs below
+    * `WidenNarrowScans.MinBytes`. */
+  private val docs = {
+    val rnd = new scala.util.Random(7)
+    (1 to 4000).map(i => (i.toLong,
+      Seq.fill(30)(rnd.alphanumeric.take(8).mkString).mkString(" "), i * 3))
+  }
 
-  /** `docs` as parquet in `files` files (one row group each). */
-  private def parquet(files: Int): String = {
+  /** `rows` of `docs` as parquet in `files` files (one row group each). */
+  private def parquet(files: Int, rows: Int = docs.size): String = {
     val dir = Files.createTempDirectory("graft-widen").toString + "/t"
-    docs.toDF("id", "text", "extra").repartition(files).write.parquet(dir)
-    val written = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(written === files)
+    docs.take(rows).toDF("id", "text", "extra").repartition(files).write.parquet(dir)
+    val written = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(written.length === files)
+    assert(rows < docs.size || written.map(_.length).sum >= WidenNarrowScans.MinBytes)
     dir
   }
 
@@ -78,7 +84,9 @@ class WidenRuleSpec extends SparkSpec {
   }
 
   test("a kernel above a broadcast join widens the streamed side only") {
-    val small = broadcast(spark.read.parquet(parquet(1)).select(col("id"), col("extra")))
+    // the build side's own explode does not widen it: it is collected
+    val small = broadcast(spark.read.parquet(parquet(1))
+      .select(col("id"), explode(array(col("extra"), lit(0))).as("extra")))
     val plan = spark.read.parquet(parquet(1)).join(small, "id")
       .select(col("id"), Dedup.minHashSignature(col("text"), 3, 32).as("sig"))
       .groupBy(col("sig")).count().queryExecution.optimizedPlan
@@ -87,13 +95,25 @@ class WidenRuleSpec extends SparkSpec {
     assert(j.left.exists(_ eq r) && !j.right.exists(_ eq r), plan)
   }
 
+  test("another read of a widened scan, pruned alike, gets the same " +
+      "repartition, so the two share one exchange") {
+    val path = parquet(1)
+    val total = spark.read.parquet(path).agg(sum(length(col("text")) + col("id")).as("total"))
+    val plan = signatures(path).crossJoin(total).queryExecution.optimizedPlan
+    val rs = repartitions(plan)
+    assert(rs.size === 2 && rs.map(_.child.canonicalized).distinct.size === 1, plan)
+  }
+
   test("the same plan over defaultParallelism files gets none, and so does " +
-      "a map-only plan over one file") {
+      "one small file, a map-only plan and a limit over one file") {
     assert(repartitions(signatures(parquet(parallelism)).queryExecution.optimizedPlan)
+      .isEmpty)
+    assert(repartitions(signatures(parquet(1, rows = 40)).queryExecution.optimizedPlan)
       .isEmpty)
     val mapOnly = spark.read.parquet(parquet(1))
       .select(col("id"), Dedup.minHashSignature(col("text"), 3, 32).as("sig"))
     assert(repartitions(mapOnly.queryExecution.optimizedPlan).isEmpty)
+    assert(repartitions(mapOnly.limit(5).queryExecution.optimizedPlan).isEmpty)
   }
 
   test("a q01-shaped plan (arithmetic + aggregate) gets none") {

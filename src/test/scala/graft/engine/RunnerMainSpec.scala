@@ -242,10 +242,13 @@ class RunnerMainSpec extends SparkSpec {
     assert(tickAt(1060000L) === Map("gone.scala" -> ("SUCCEED", "seen"),
       "stays.scala" -> ("SUCCEED", "seen")))
     assert(compiled.get === 2 && closed.get === 0)
+    // a job another Runner named on the same session, no Hadoop Path
+    val foreign = Runner.sessionFor(spark, "etl:daily")
 
     Files.delete(script)
     assert(tickAt(1120000L) === Map("stays.scala" -> ("SUCCEED", "seen")))
     assert(closed.get === 1)
+    assert(Runner.sessionFor(spark, "etl:daily") eq foreign)
     // back under the same name and mtime: compiled anew, on a new session
     Files.writeString(script, "")
     assert(tickAt(1180000L) === Map("gone.scala" -> ("SUCCEED", "fresh"),

@@ -142,9 +142,9 @@ class PlanSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("doc_id"),
       org.apache.spark.sql.functions.col("text"), 3, 32, 8)
     val p = plan(df)
-    // one RoundRobin exchange (WidenNarrowScans over the one-file input)
-    // is allowed; no hash shuffle may appear — signatures are computed in
-    // a projection
+    // one RoundRobin exchange (WidenNarrowScans over a narrow input of at
+    // least its MinBytes; none on these small files) is allowed; no hash
+    // shuffle may appear — signatures are computed in a projection
     assert("Exchange".r.findAllIn(p).size <= 2, p) // tree + detail section
     assert(!p.contains("Exchange hashpartitioning"), p)
   }
@@ -394,8 +394,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("Window"), p)
     // the groupBy(id) exchange + the orderBy range exchange + the
-    // WidenNarrowScans round-robin exchange on the corpus scan (a test-SF
-    // artifact: one small parquet file arrives as one partition); the
+    // WidenNarrowScans round-robin exchange a narrow corpus scan of at
+    // least its MinBytes gets (none on these small files); the
     // needle side is a BroadcastExchange (not matched by this pattern). The
     // aggregation is partial BEFORE its exchange, so only one narrow row
     // per corpus id crosses it — vectors stay put.
@@ -685,10 +685,8 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin Cross"), p)
     assert(!p.contains("SortMergeJoin") &&
       !p.contains("ShuffledHashJoin") && !p.contains("CartesianProduct"), p)
-    // the static plan repeats the widened-scan subtree per pick consumer
-    // (bounds + bucket-counts + bases); at runtime the identical
-    // WidenNarrowScans exchange dedups to one scan (ReusedExchange in the
-    // executed plan); the stats aggregation reads the scan unwidened
+    // the static plan repeats the scan subtree per pick consumer
+    // (bounds + bucket-counts + bases)
     assert("Scan parquet".r.findAllIn(p).size <= 12, p)
   }
 
@@ -768,7 +766,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Join"), p)
     assert(!p.contains("HashAggregate"), p)
     assert(p.contains("multi_pattern_hits"), p)
-    // WidenNarrowScans repartition + the orderBy range exchange, nothing else
+    // a WidenNarrowScans repartition (none on these small files) + the
+    // orderBy range exchange, nothing else
     assert("(\\d+) Exchange".r.findAllIn(p).size <= 2, p)
   }
 
