@@ -26,11 +26,6 @@ object Bench {
     // localCheckpoint block is unrecoverable (truncated lineage) — the task
     // retry storm that follows shows up as a 10× outlier on whichever query
     // runs under the resulting memory pressure, not the one that leaked.
-    def freeBlocks(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-
     def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       val elapsed =
@@ -38,7 +33,7 @@ object Bench {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
         } catch { case _: Throwable => -1.0 }
-      freeBlocks() // outside the timed span — inter-query hygiene, not plan cost
+      Pins.releaseAll(spark) // outside the timed span — inter-query hygiene, not plan cost
       elapsed
     }
 

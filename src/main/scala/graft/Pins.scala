@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Registry for engine-owned `persist()` pins, so long-lived sessions can
@@ -21,8 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *
   * Contract: operators route multi-consumer pins through [[pin]]; whoever
   * owns the materialization boundary calls [[unpinAll]] after the terminal
-  * action — the Runner does it after every tick, Verify/Bench
-  * between queries (they also blanket-unpersist, which subsumes this).
+  * action — the Runner does it after every tick, the multi-entry mains
+  * between entries through [[releaseAll]].
   * `unpinAll` between an operator call and its action is SAFE but slow:
   * the consumers recompute the un-pinned frame instead of reading it.
   *
@@ -58,6 +58,19 @@ object Pins {
       ds = pinned.poll()
     }
     released
+  }
+
+  /** Free every block a registry entry left behind: the registered pins,
+    * the session's cached plans, and every persisted RDD (including
+    * localCheckpoint blocks). The mains that run many entries in one JVM
+    * (Verify, Bench, Stress, Plans) call it after each entry, so an entry
+    * never reads, or runs under the memory pressure of, another entry's
+    * pinned frames.
+    */
+  def releaseAll(spark: SparkSession): Unit = {
+    unpinAll()
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
   }
 
   /** Registered pins still persisted — the observability hook the

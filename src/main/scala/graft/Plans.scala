@@ -48,6 +48,8 @@ object Plans {
         sb.append(s"\n================ $name ================\n")
         sb.append(normalizeIds(fn(spark, sfDir).queryExecution
           .explainString(ExplainMode.fromString("formatted"))))
+        // an entry's plan must not read another entry's cached frame
+        Pins.releaseAll(spark)
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), sb.toString)
     println(s"wrote $outFile")

@@ -348,10 +348,7 @@ object Stress {
         (System.nanoTime() - t0) / 1e9
       } catch { case e: Throwable =>
         System.err.println(s"$name failed: ${e.getMessage}"); -1.0
-      } finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      }
+      } finally Pins.releaseAll(spark)
     }
 
     def num(v: Double): String =

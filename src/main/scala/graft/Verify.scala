@@ -28,8 +28,7 @@ object Verify {
       }
       // free blocks the query pinned (cache/localCheckpoint): leftover
       // blocks from ~70 queries otherwise accumulate for the whole run
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Pins.releaseAll(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -113,8 +113,8 @@ object GraftFunctions {
     }, "built-in")
     reg.createOrReplaceTempFunction("shingle_fps32", exprs => {
       arity(exprs, 2, "shingle_fps32(tokens, k)")
-      org.apache.spark.sql.graft.ShingleFps32(exprs(0),
-        litInt(exprs(1), "shingle_fps32 k"))
+      org.apache.spark.sql.graft.ShingleFps(exprs(0),
+        litInt(exprs(1), "shingle_fps32 k"), 32)
     }, "built-in")
     reg.createOrReplaceTempFunction("cdc_chunks", exprs => {
       arity(exprs, 3, "cdc_chunks(tokens, k, maskBits)")

@@ -70,6 +70,38 @@ private[graft] object Md5Hash {
   def hash128(s: String): (Long, Long) = hash128(s.getBytes(StandardCharsets.UTF_8))
 }
 
+/** The word k-gram loop every gram kernel reads: the space-joined grams of
+  * `k` consecutive tokens, gram i starting at token i, and ONE whole-text
+  * gram when there are fewer than `k` tokens — the contract of
+  * graft.functions.TextFunctions.wordShingles.
+  */
+private[graft] object WordGrams {
+  def words(toks: ArrayData): Array[String] =
+    Array.tabulate(toks.numElements())(i => toks.getUTF8String(i).toString)
+
+  def apply(words: Array[String], k: Int): Array[String] = {
+    val n = words.length
+    if (n < k) Array(words.mkString(" "))
+    else {
+      val out = new Array[String](n - k + 1)
+      val sb = new java.lang.StringBuilder
+      var i = 0
+      while (i <= n - k) {
+        sb.setLength(0)
+        var j = 0
+        while (j < k) {
+          if (j > 0) sb.append(' ')
+          sb.append(words(i + j))
+          j += 1
+        }
+        out(i) = sb.toString
+        i += 1
+      }
+      out
+    }
+  }
+}
+
 /** MinHash signature over word k-shingles of a token array, as one compiled
   * loop. Equivalent to the HOF pipeline
   * `transform(sequence(...), j -> aggregate(transform(shingleSet, md5...), min(...)))`
@@ -100,13 +132,9 @@ case class MinHashSignature(child: Expression, shingleK: Int, numHashes: Int)
   private val AMod = 1073741789L
 
   override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val words = Array.tabulate(n)(i => toks.getUTF8String(i).toString)
     // distinct k-shingles; docs shorter than k yield one whole-text shingle
-    val shingles: Iterator[String] =
-      if (n < shingleK) Iterator(words.mkString(" "))
-      else words.sliding(shingleK).map(_.mkString(" ")).distinct
+    val shingles =
+      WordGrams(WordGrams.words(input.asInstanceOf[ArrayData]), shingleK).distinct
     val sig = Array.fill(numHashes)(P)
     shingles.foreach { s =>
       val h = Md5Hash.hash32(s)
@@ -298,117 +326,36 @@ case class JlProject(child: Expression, outDims: Int)
     copy(child = newChild)
 }
 
-/** Distinct word k-shingles of a token array as one compiled pass —
-  * output identical to graft.functions.TextFunctions.wordShingleSet
-  * (docs shorter than k yield one whole-text shingle).
+/** POSITIONAL word k-gram md5 hashes of a token array, one compiled pass:
+  * output[i] hashes the space-joined gram starting at token i (docs
+  * shorter than k yield ONE whole-text hash), with `bits` = 60 the
+  * first 15 md5 hex digits (`shingle_fps60` — bit-identical to
+  * `posexplode(wordShingles(text,k))` + `TextFunctions.fingerprint64(gram)`)
+  * and `bits` = 32 the first 8 (`shingle_fps32` — `TextFunctions.hash32`,
+  * the [0, 2^32) domain of the KMV overlap sketch's estimator). DuckDB
+  * replays both with `('0x' || substring(md5(gram), 1, n))::BIGINT`, but
+  * here the gram strings never leave the loop (no per-gram UTF8String in
+  * the plan, no interpreted lambda). Non-distinct by design: the
+  * profile/mask operators need every occurrence with its position;
+  * `array_distinct` of the 60-bit form is the shingle fingerprint set the
+  * dedup joins read.
   */
-case class WordShingleSet(child: Expression, shingleK: Int)
+case class ShingleFps(child: Expression, shingleK: Int, bits: Int)
     extends UnaryExpression with NativeUnaryCodegen {
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "word_shingle_set"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val words = Array.tabulate(n)(i => toks.getUTF8String(i).toString)
-    val shingles =
-      if (n < shingleK) Array(words.mkString(" "))
-      else words.sliding(shingleK).map(_.mkString(" ")).distinct.toArray
-    new GenericArrayData(shingles.map(s => UTF8String.fromString(s)): Array[Any])
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** POSITIONAL word k-gram 32-bit hashes of a token array — the
-  * [[ShingleFps60]] loop with the [[Md5Hash.hash32]] fold, for consumers
-  * that need the [0, 2^32) hash domain (the KMV overlap sketch's
-  * estimator): output[i] = first-8-md5-hex-digits of the space-joined
-  * gram at token i, docs shorter than k yield one whole-text hash.
-  * Bit-identical to `explode(wordShingles(text,k))` +
-  * `TextFunctions.hash32(gram)` — and to DuckDB
-  * `('0x' || substring(md5(gram), 1, 8))::BIGINT` — but the gram strings
-  * never leave the compiled loop.
-  */
-case class ShingleFps32(child: Expression, shingleK: Int)
-    extends UnaryExpression with NativeUnaryCodegen {
+  require(bits == 32 || bits == 60, s"bits must be 32 or 60, got $bits")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
-  override def prettyName: String = "shingle_fps32"
+  override def prettyName: String = s"shingle_fps$bits"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val words = Array.tabulate(n)(i => toks.getUTF8String(i).toString)
-    val out: Array[Long] =
-      if (n < shingleK) Array(Md5Hash.hash32(words.mkString(" ")))
-      else {
-        val res = new Array[Long](n - shingleK + 1)
-        val sb = new java.lang.StringBuilder
-        var i = 0
-        while (i <= n - shingleK) {
-          sb.setLength(0)
-          var j = 0
-          while (j < shingleK) {
-            if (j > 0) sb.append(' ')
-            sb.append(words(i + j))
-            j += 1
-          }
-          res(i) = Md5Hash.hash32(sb.toString)
-          i += 1
-        }
-        res
-      }
-    new GenericArrayData(out)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** POSITIONAL word k-gram 60-bit fingerprints of a token array, one
-  * compiled pass: output[i] = md5-60 of the space-joined gram starting at
-  * token i (docs shorter than k yield ONE whole-text fingerprint) —
-  * bit-identical to `posexplode(wordShingles(text,k))` +
-  * `TextFunctions.fingerprint64(gram)`, but the gram strings never leave
-  * the loop (no per-gram UTF8String allocation in the plan, no
-  * interpreted lambda). Non-distinct by design: the profile/mask
-  * operators need every occurrence with its position.
-  */
-case class ShingleFps60(child: Expression, shingleK: Int)
-    extends UnaryExpression with NativeUnaryCodegen {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
-  override def prettyName: String = "shingle_fps60"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val words = Array.tabulate(n)(i => toks.getUTF8String(i).toString)
-    val out: Array[Long] =
-      if (n < shingleK) Array(Md5Hash.hash60(words.mkString(" ")))
-      else {
-        val res = new Array[Long](n - shingleK + 1)
-        val sb = new java.lang.StringBuilder
-        var i = 0
-        while (i <= n - shingleK) {
-          sb.setLength(0)
-          var j = 0
-          while (j < shingleK) {
-            if (j > 0) sb.append(' ')
-            sb.append(words(i + j))
-            j += 1
-          }
-          res(i) = Md5Hash.hash60(sb.toString)
-          i += 1
-        }
-        res
-      }
+    val grams = WordGrams(WordGrams.words(input.asInstanceOf[ArrayData]), shingleK)
+    val out = new Array[Long](grams.length)
+    var i = 0
+    while (i < grams.length) {
+      out(i) = if (bits == 60) Md5Hash.hash60(grams(i)) else Md5Hash.hash32(grams(i))
+      i += 1
+    }
     new GenericArrayData(out)
   }
 
@@ -431,28 +378,8 @@ case class WinnowFingerprints(child: Expression, shingleK: Int, window: Int)
   override def prettyName: String = "winnow_fingerprints"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val words = Array.tabulate(n)(i => toks.getUTF8String(i).toString)
-    val hashes: Array[Long] =
-      if (n < shingleK) Array(Md5Hash.hash32(words.mkString(" ")))
-      else {
-        val out = new Array[Long](n - shingleK + 1)
-        val sb = new java.lang.StringBuilder
-        var i = 0
-        while (i <= n - shingleK) {
-          sb.setLength(0)
-          var j = 0
-          while (j < shingleK) {
-            if (j > 0) sb.append(' ')
-            sb.append(words(i + j))
-            j += 1
-          }
-          out(i) = Md5Hash.hash32(sb.toString)
-          i += 1
-        }
-        out
-      }
+    val hashes = WordGrams(WordGrams.words(input.asInstanceOf[ArrayData]), shingleK)
+      .map(Md5Hash.hash32(_))
     val m = hashes.length
     val fps = new java.util.LinkedHashSet[java.lang.Long]()
     if (m <= window) {
@@ -492,7 +419,7 @@ case class WinnowFingerprints(child: Expression, shingleK: Int, window: Int)
   *
   * Output: array<struct<start_tok, n_tok, chunk_text>> with 1-based
   * start positions; docs shorter than k tokens (or empty) yield one
-  * whole-text chunk. Gram hashing is bit-identical to [[ShingleFps32]],
+  * whole-text chunk. Gram hashing is bit-identical to `shingle_fps32`,
   * so DuckDB replays the boundary rule with the same md5-prefix modulus.
   */
 case class CdcChunks(child: Expression, shingleK: Int, maskBits: Int)
@@ -510,25 +437,16 @@ case class CdcChunks(child: Expression, shingleK: Int, maskBits: Int)
   override def prettyName: String = "cdc_chunks"
 
   override protected def nullSafeEval(input: Any): Any = {
-    val toks = input.asInstanceOf[ArrayData]
-    val n = toks.numElements()
-    val words = Array.tabulate(n)(i => toks.getUTF8String(i).toString)
+    val words = WordGrams.words(input.asInstanceOf[ArrayData])
+    val n = words.length
     val mask = (1 << maskBits) - 1
     val starts = scala.collection.mutable.ArrayBuffer(0)
-    if (n >= shingleK) {
-      val sb = new java.lang.StringBuilder
-      var i = 1
-      while (i <= n - shingleK) {
-        sb.setLength(0)
-        var j = 0
-        while (j < shingleK) {
-          if (j > 0) sb.append(' ')
-          sb.append(words(i + j))
-          j += 1
-        }
-        if ((Md5Hash.hash32(sb.toString) & mask) == 0L) starts += i
-        i += 1
-      }
+    // gram 0 is no boundary, and a doc shorter than k has only that one
+    val grams = WordGrams(words, shingleK)
+    var i = 1
+    while (i < grams.length) {
+      if ((Md5Hash.hash32(grams(i)) & mask) == 0L) starts += i
+      i += 1
     }
     val rows = new Array[Any](starts.length)
     var c = 0
@@ -554,10 +472,10 @@ object HashFunctions {
       WinnowFingerprints(ExpressionUtilsShim.expr(tokens), shingleK, window))
   def shingleFps60(tokens: Column, shingleK: Int): Column =
     ExpressionUtilsShim.column(
-      ShingleFps60(ExpressionUtilsShim.expr(tokens), shingleK))
+      ShingleFps(ExpressionUtilsShim.expr(tokens), shingleK, 60))
   def shingleFps32(tokens: Column, shingleK: Int): Column =
     ExpressionUtilsShim.column(
-      ShingleFps32(ExpressionUtilsShim.expr(tokens), shingleK))
+      ShingleFps(ExpressionUtilsShim.expr(tokens), shingleK, 32))
   def cdcChunks(tokens: Column, shingleK: Int, maskBits: Int): Column =
     ExpressionUtilsShim.column(
       CdcChunks(ExpressionUtilsShim.expr(tokens), shingleK, maskBits))
@@ -571,8 +489,6 @@ object HashFunctions {
     ExpressionUtilsShim.column(SrpBucket(ExpressionUtilsShim.expr(vec), bits))
   def jlProject(vec: Column, outDims: Int): Column =
     ExpressionUtilsShim.column(JlProject(ExpressionUtilsShim.expr(vec), outDims))
-  def wordShingleSet(tokens: Column, k: Int): Column =
-    ExpressionUtilsShim.column(WordShingleSet(ExpressionUtilsShim.expr(tokens), k))
 }
 
 private object ExpressionUtilsShim {

@@ -121,27 +121,58 @@ object Dedup {
   }
 
   /** MinHash+LSH near-duplicate pairs, verified: candidates from
-    * `minHashCandidates`, then exact Jaccard over distinct shingle sets,
-    * kept when >= `threshold`. Output: (id_a, id_b, jaccard), exact
-    * integer-ratio doubles.
+    * `minHashCandidates`, then exact Jaccard over the documents' distinct
+    * 60-bit shingle fingerprints ([[shingleFpSet]]), kept when >=
+    * `threshold`. Output: (id_a, id_b, jaccard), exact integer-ratio
+    * doubles.
     */
   def minHashPairs(df: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, numHashes: Int = 128, bands: Int = 16,
-      threshold: Double = 0.8): DataFrame = {
-    val sets = df.select(id.as("id"), HashFunctions.wordShingleSet(
-      TextFunctions.tokensWs(text), shingleK).as("set"))
-    val cand = minHashCandidates(df, id, text, shingleK, numHashes, bands)
+      threshold: Double = 0.8): DataFrame =
+    jaccardScored(verifiedSizes(
+      minHashCandidates(df, id, text, shingleK, numHashes, bands),
+      df.select(id.as("id"), shingleFpSet(text, shingleK).as("set"))), threshold)
+
+  /** THE shingle representation of the dedup joins: a document's distinct
+    * 60-bit word-`shingleK`-shingle fingerprints, in first-occurrence
+    * order, from the native `shingle_fps60` kernel (docs shorter than k
+    * carry one whole-text fingerprint). Same size and intersections as
+    * the distinct shingle strings unless two different shingles of one
+    * document collide in 60 bits — the fingerprint-collision risk every
+    * posting join already takes — and no shingle string is ever built.
+    */
+  private def shingleFpSet(text: Column, shingleK: Int): Column =
+    array_distinct(HashFunctions.shingleFps60(TextFunctions.tokensWs(text), shingleK))
+
+  /** (id, sz, sfp) inverted-index postings from (id, set) rows of
+    * [[shingleFpSet]]: one row per (document, shingle fingerprint), with
+    * the set size carried for the Jaccard arithmetic. Shuffle payloads are
+    * (long, int, long) — never the shingle text.
+    */
+  private def shinglePostings(sets: DataFrame): DataFrame =
+    sets.select(col("id"), size(col("set")).as("sz"), explode(col("set")).as("sfp"))
+
+  /** The one exact verify of candidate pairs (id_a, id_b) against (id,
+    * set) fingerprint sets: (id_a, id_b, inter, sz_a, sz_b), for
+    * [[jaccardScored]] or [[containmentScored]]. */
+  private def verifiedSizes(cand: DataFrame, sets: DataFrame): DataFrame =
     cand
       .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), Seq("id_a"))
       .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
+      .select(col("id_a"), col("id_b"),
+        size(array_intersect(col("set_a"), col("set_b"))).as("inter"),
+        size(col("set_a")).as("sz_a"), size(col("set_b")).as("sz_b"))
+
+  /** (id_a, id_b, jaccard) of sized pairs (inter, sz_a, sz_b) at or above
+    * `threshold`, exact integer-ratio doubles. */
+  private def jaccardScored(sized: DataFrame, threshold: Double): DataFrame =
+    sized
       .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("set_a")) + size(col("set_b")) - col("inter")).cast("double"))
+        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
 
-  /** Word-shingle width of the near-dup state: the 3-word sets the
+  /** Word-shingle width of the near-dup state: the 3-word shingles the
     * `dedup_incremental` oracle replays. */
   private val NearDupShingleK = 3
   /** 128 MinHash rows in 16 bands of 8: the LSH S-curve midpoint
@@ -153,18 +184,21 @@ object Dedup {
   private val NearDupThreshold = 0.8
 
   /** (id, sig, set): the near-dup state's one signature and shingle pass
-    * over a batch's or a bootstrap corpus's text. */
+    * over a batch's or a bootstrap corpus's text — `set` the distinct
+    * 60-bit shingle fingerprints ([[shingleFpSet]]). */
   private def nearDupSigSets(df: DataFrame, id: Column, text: Column): DataFrame =
     df.select(id.as("id"),
       minHashSignature(text, NearDupShingleK, NearDupHashes).as("sig"),
-      HashFunctions.wordShingleSet(TextFunctions.tokensWs(text), NearDupShingleK).as("set"))
+      shingleFpSet(text, NearDupShingleK).as("set"))
 
   /** Carried state for [[minHashIncremental]]: the LSH band table and the
-    * shingle-fingerprint postings of every document admitted so far. Both
-    * are compact long-rows (band keys ~20 B, postings 8 B/shingle) — the
-    * admitted corpus TEXT is never part of the state, which is what makes
-    * continuous near-dup ingestion O(batch), not O(corpus): persist both
-    * tables partitioned/bucketed by their join key between runs.
+    * (id, sz, sfp) postings of every document admitted so far — one row
+    * per distinct 60-bit shingle fingerprint of the document, `sz` their
+    * count. Both are compact long-rows (band keys ~20 B, postings 8 B per
+    * shingle) — the admitted corpus TEXT is never part of the state, which
+    * is what makes continuous near-dup ingestion O(batch), not O(corpus):
+    * persist both tables partitioned/bucketed by their join key between
+    * runs.
     *
     * `cached` is the bootstrap's persisted (id, sig, set) frame, carried so
     * [[NearDupState.save]] can unpersist it once the state lives as tables
@@ -401,8 +435,8 @@ object Dedup {
     val batchBands = explodeBands(combined, NearDupBands, NearDupHashes / NearDupBands)
 
     // 1. within-batch collapse: verified pairs → components → min-id reps.
-    // Same verification as minHashPairs (exact Jaccard over the shingle
-    // arrays), but candidates and sets come from the pinned frame. The pair
+    // Same verification as minHashPairs (exact Jaccard over the fingerprint
+    // sets), but candidates and sets come from the pinned frame. The pair
     // set is checkpointed (id-pair longs — tiny) because components()
     // drives several actions over it; the empty-pair fast path skips the
     // whole propagation loop — at streaming cadence most batches have no
@@ -413,13 +447,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b")).distinct()
     val sets = combined.select(col("id"), col("set"))
-    val pairs = batchCand
-      .join(sets.select(col("id").as("id_a"), col("set").as("set_a")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("set").as("set_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("set_a")) + size(col("set_b")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= NearDupThreshold)
+    val pairs = jaccardScored(verifiedSizes(batchCand, sets), NearDupThreshold)
       .select(col("id_a"), col("id_b"))
       .localCheckpoint()
     val (reps, repIds) =
@@ -681,9 +709,10 @@ object Dedup {
 
   // ------------------------------------------------------- n-gram Jaccard
 
-  /** All-pairs n-gram Jaccard >= threshold, exact on both of its paths.
-    * One statistics pass measures the maximum shingle document frequency
-    * of the input and picks the path from it:
+  /** All-pairs n-gram Jaccard >= threshold over each document's distinct
+    * 60-bit shingle fingerprints ([[shingleFpSet]]), exact on both of its
+    * paths. One statistics pass measures the maximum shingle document
+    * frequency of the input and picks the path from it:
     *
     *  - at most [[CountMaxDf]] ([[jaccardCount]]): inverted-index
     *    self-join with intersections counted directly — `|a ∩ b|` = the
@@ -696,7 +725,7 @@ object Dedup {
     *  - above it ([[jaccardPrefix]]): AllPairs/PPJoin prefix filtering —
     *    only each set's `|s| - ceil(t·|s|) + 1` globally-rarest shingles
     *    are indexed (recall-exact), then candidates verify against full
-    *    shingle sets. Candidate volume is bounded by the prefix postings,
+    *    fingerprint sets. Candidate volume is bounded by the prefix postings,
     *    so a near-universal shingle cannot blow up the self-join.
     *
     * The Σ df² self-join blowup is thus capped at CountMaxDf² per shingle
@@ -736,26 +765,17 @@ object Dedup {
   /** [[jaccardPairs]]' count path over a built index. */
   private[operators] def jaccardCount(idx: ShingleIndex,
       threshold: Double): DataFrame =
-    interSizedPairs(idx.indexed, idx.sizes)
-      .withColumn("jaccard", col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardScored(interSizedPairs(idx.indexed, idx.sizes), threshold)
 
   /** [[jaccardPairs]]' prefix path over a built index. */
   private[operators] def jaccardPrefix(idx: ShingleIndex,
       threshold: Double): DataFrame =
-    prefixCandidates(idx.indexed, threshold)
-      .join(idx.sets.select(col("id").as("id_a"), col("set").as("set_a")), Seq("id_a"))
-      .join(idx.sets.select(col("id").as("id_b"), col("set").as("set_b")), Seq("id_b"))
-      .withColumn("inter", size(array_intersect(col("set_a"), col("set_b"))))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("set_a")) + size(col("set_b")) - col("inter")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardScored(verifiedSizes(prefixCandidates(idx.indexed, threshold), idx.sets),
+      threshold)
 
-  /** Within-corpus CONTAINMENT near-dup join: pairs whose smaller shingle
-    * set is at least `threshold`-covered by the larger —
+  /** Within-corpus CONTAINMENT near-dup join: pairs whose smaller set of
+    * distinct 60-bit shingle fingerprints ([[shingleFpSet]]) is at least
+    * `threshold`-covered by the larger —
     * `|S(a) ∩ S(b)| / min(|S(a)|, |S(b)|)`. The asymmetric dual of
     * [[jaccardPairs]] for the subset-duplicate shapes symmetric Jaccard
     * systematically misses: an article republished inside a digest, a
@@ -818,22 +838,9 @@ object Dedup {
       .select(least(col("id_p"), col("id_f")).as("id_a"),
         greatest(col("id_p"), col("id_f")).as("id_b"))
       .distinct()
-    // verify on the fingerprint sets with the posting sizes — exactly
-    // interSizedPairs' semantics, so the two paths agree pair for pair
-    val fpSets = idx.indexed.groupBy(col("id"))
-      .agg(collect_list(col("sfp")).as("__fps"))
-    containmentScored(cands
-      .join(fpSets.select(col("id").as("id_a"), col("__fps").as("__fa")),
-        Seq("id_a"))
-      .join(fpSets.select(col("id").as("id_b"), col("__fps").as("__fb")),
-        Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("__fa"), col("__fb"))).cast("long")
-          .as("inter"))
-      .join(broadcast(idx.sizes.select(col("id").as("id_a"),
-        col("sz").as("sz_a"))), Seq("id_a"))
-      .join(broadcast(idx.sizes.select(col("id").as("id_b"),
-        col("sz").as("sz_b"))), Seq("id_b")), threshold)
+    // the index's fingerprint sets are its postings, so this verify is
+    // exactly interSizedPairs' semantics: the two paths agree pair for pair
+    containmentScored(verifiedSizes(cands, idx.sets), threshold)
   }
 
   private def containmentScored(sized: DataFrame,
@@ -983,16 +990,16 @@ object Dedup {
     * [[selfContainmentPairs]] and [[jaccardHistogram]] — ONE copy of the
     * candidate machinery, so the histogram that calibrates the join's
     * threshold can never silently diverge from the join itself. `sets`:
-    * (id, set); `indexed`: the (id, sz, sfp) postings; `sizes`: one
-    * (id, sz) row per doc.
+    * (id, set), each document's distinct 60-bit shingle fingerprints
+    * ([[shingleFpSet]]); `indexed`: the (id, sz, sfp) postings of those
+    * sets; `sizes`: one (id, sz) row per doc.
     */
   private[operators] case class ShingleIndex(
       sets: DataFrame, indexed: DataFrame, sizes: DataFrame)
 
   private[operators] def shingleIndex(df: DataFrame, id: Column, text: Column,
       shingleK: Int): ShingleIndex = {
-    val sets = df.select(id.as("id"), HashFunctions.wordShingleSet(
-      TextFunctions.tokensWs(text), shingleK).as("set"))
+    val sets = df.select(id.as("id"), shingleFpSet(text, shingleK).as("set"))
     // The postings feed the stats pass AND both sides of the self-join;
     // without a checkpoint each scan re-tokenizes and re-shingles every
     // document (3× the per-row hash work, and the corpus text re-read each
@@ -1107,16 +1114,6 @@ object Dedup {
       .select(col("sfp"), col("id"))
   }
 
-  /** (id, sz, sfp) inverted-index postings from (id, set) shingle-set rows:
-    * one row per (document, shingle fingerprint), with the set size carried
-    * for Jaccard arithmetic. Shuffle payloads are (long, int, long) — never
-    * the shingle text.
-    */
-  def shinglePostings(sets: DataFrame): DataFrame =
-    sets.select(col("id"), size(col("set")).as("sz"),
-        explode(col("set")).as("s"))
-      .select(col("id"), col("sz"), TextFunctions.fingerprint64(col("s")).as("sfp"))
-
   /** AllPairs/PPJoin candidate pairs from an (id, sz, sfp) posting set:
     * only each set's `|s| - ceil(t·|s|) + 1` globally-rarest shingles are
     * indexed — recall-exact for Jaccard >= t (two sets with Jaccard >= t
@@ -1134,7 +1131,8 @@ object Dedup {
   }
 
   /** Two-table fuzzy (record-linkage) join: pairs (left row, right row)
-    * whose word-k-shingle sets have Jaccard >= `threshold` — the
+    * whose distinct 60-bit word-k-shingle fingerprints have Jaccard >=
+    * `threshold` — the
     * entity-resolution shape (same title worded slightly differently across
     * two catalogs, near-identical documents across two crawls) where neither
     * side is a subset of the other, so symmetric Jaccard is the right score
@@ -1158,12 +1156,9 @@ object Dedup {
       shingleK: Int = 3, threshold: Double = 0.8,
       maxDocFreq: Option[Long] = None): DataFrame = {
     def postings(df: DataFrame, id: Column, text: Column, name: String) = {
-      val sets = df.select(id.as(name), HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(text), shingleK).as("set"))
-      val post0 = sets.select(col(name), size(col("set")).as(s"__sz_$name"),
-          explode(col("set")).as("s"))
-        .select(col(name), col(s"__sz_$name"),
-          TextFunctions.fingerprint64(col("s")).as("sfp"))
+      val sets = df.select(id.as("id"), shingleFpSet(text, shingleK).as("set"))
+      val post0 = shinglePostings(sets)
+        .select(col("id").as(name), col("sz").as(s"__sz_$name"), col("sfp"))
       val post = maxDocFreq.fold(post0) { m =>
         val keep = post0.groupBy(col("sfp")).agg(count(lit(1)).as("df"))
           .filter(col("df") <= m).select(col("sfp"))
@@ -1174,7 +1169,7 @@ object Dedup {
       // with full-set sizes a capped stop-shingle would bias every score
       // downward and silently drop true pairs near the threshold.
       val sizes = maxDocFreq.fold(
-        sets.select(col(name), size(col("set")).as(s"__sz_$name")))(_ =>
+        sets.select(col("id").as(name), size(col("set")).as(s"__sz_$name")))(_ =>
         post.groupBy(col(name)).agg(count(lit(1)).as(s"__sz_$name")))
       (post, sizes)
     }
@@ -1239,7 +1234,8 @@ object Dedup {
 
   /** Containment (decontamination) join: for every needle document, the
     * corpus documents containing at least `threshold` of the needle's
-    * k-shingles — `|S(needle) ∩ S(doc)| / |S(needle)|`. Asymmetric on
+    * distinct 60-bit k-shingle fingerprints — `|S(needle) ∩ S(doc)| /
+    * |S(needle)|`. Asymmetric on
     * purpose: a benchmark prompt quoted verbatim inside a much larger
     * training document scores ~1.0 here while its Jaccard is diluted by the
     * document's extra content — the standard training-data decontamination
@@ -1254,15 +1250,11 @@ object Dedup {
   def containmentPairs(needles: DataFrame, nId: Column, nText: Column,
       corpus: DataFrame, cId: Column, cText: Column,
       shingleK: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val nSets = needles.select(nId.as("needle_id"), HashFunctions.wordShingleSet(
-      TextFunctions.tokensWs(nText), shingleK).as("set"))
-    val cSets = corpus.select(cId.as("doc_id"), HashFunctions.wordShingleSet(
-      TextFunctions.tokensWs(cText), shingleK).as("set"))
-    val nPost = nSets.select(col("needle_id"), size(col("set")).as("nsz"),
-        explode(col("set")).as("s"))
-      .select(col("needle_id"), col("nsz"), TextFunctions.fingerprint64(col("s")).as("sfp"))
-    val cPost = cSets.select(col("doc_id"), explode(col("set")).as("s"))
-      .select(col("doc_id"), TextFunctions.fingerprint64(col("s")).as("sfp"))
+    val nPost = shinglePostings(
+        needles.select(nId.as("id"), shingleFpSet(nText, shingleK).as("set")))
+      .select(col("id").as("needle_id"), col("sz").as("nsz"), col("sfp"))
+    val cPost = corpus.select(cId.as("doc_id"),
+      explode(shingleFpSet(cText, shingleK)).as("sfp"))
     nPost.join(cPost, Seq("sfp"))
       .groupBy(col("needle_id"), col("doc_id"), col("nsz"))
       .agg(count(lit(1)).as("inter"))
@@ -1282,12 +1274,13 @@ object Dedup {
     * ANYWHERE in the corpus" — set membership against the corpus-wide
     * shingle union, not per-pair overlap.
     *
-    * Output: (doc_id, n_shingles, n_seen, novelty) — novelty the exact
-    * integer ratio `(n_shingles − n_seen) / n_shingles`. A blank document
-    * carries one whole-text "" shingle (the sub-k contract of
-    * [[graft.functions.HashFunctions.wordShingleSet]], identical in the
-    * SQL replay), so n_shingles ≥ 1 always; the n_shingles = 0 guard is
-    * defensive only.
+    * Shingles are counted as distinct 60-bit shingle fingerprints
+    * ([[shingleFpSet]]). Output: (doc_id, n_shingles, n_seen, novelty) —
+    * novelty the exact integer ratio `(n_shingles − n_seen) / n_shingles`.
+    * A blank document carries one whole-text "" shingle (the sub-k
+    * contract of [[graft.functions.TextFunctions.wordShingles]], identical
+    * in the SQL replay), so n_shingles ≥ 1 always; the n_shingles = 0
+    * guard is defensive only.
     *
     * Scale shape: the corpus collapses to DISTINCT shingle fingerprints
     * once (8-byte rows — at extreme scale swap in the
@@ -1310,18 +1303,13 @@ object Dedup {
     */
   def corpusShingleFps(corpus: DataFrame, cText: Column,
       shingleK: Int = 3): DataFrame =
-    corpus.select(explode(HashFunctions.wordShingleSet(
-        TextFunctions.tokensWs(cText), shingleK)).as("s"))
-      .select(TextFunctions.fingerprint64(col("s")).as("sfp"))
-      .distinct()
+    corpus.select(explode(shingleFpSet(cText, shingleK)).as("sfp")).distinct()
 
   /** [[noveltyScores]] against a pre-built (sfp) reference set. */
   def noveltyScoresAgainstFps(batch: DataFrame, bId: Column, bText: Column,
       corpusFps: DataFrame, shingleK: Int = 3): DataFrame = {
-    val bSets = batch.select(bId.as("doc_id"), HashFunctions.wordShingleSet(
-      TextFunctions.tokensWs(bText), shingleK).as("set"))
-    val bPost = bSets.select(col("doc_id"), explode(col("set")).as("s"))
-      .select(col("doc_id"), TextFunctions.fingerprint64(col("s")).as("sfp"))
+    val bSets = batch.select(bId.as("doc_id"), shingleFpSet(bText, shingleK).as("set"))
+    val bPost = bSets.select(col("doc_id"), explode(col("set")).as("sfp"))
     val cFps = corpusFps.select(col("sfp")).distinct()
       .select(col("sfp"), lit(1).as("__seen"))
     val counts = bPost.join(cFps, Seq("sfp"), "left")

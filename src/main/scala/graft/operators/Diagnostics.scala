@@ -115,8 +115,10 @@ object Diagnostics {
       shingleK: Int = 3, k: Int = 4096): DataFrame = {
     import graft.functions.{DistinctSketch, TextFunctions}
     import org.apache.spark.sql.graft.HashFunctions
-    // one native compiled pass per document: gram strings never become
-    // rows (explode(wordShingles) + hash32 is the bit-identical spec form,
+    // one native compiled pass per document: the 32-bit width of the
+    // kernel whose distinct 60-bit form is the dedup joins' shingle
+    // fingerprint set, so gram strings never become rows
+    // (explode(wordShingles) + hash32 is the bit-identical spec form,
     // ~4× slower — the n-gram-family lesson from the LM scorers)
     val sk = df
       .select(source.as("source"),

@@ -404,11 +404,11 @@ object TextIndex {
   /** Positional word n-grams hashed to 60-bit fingerprints: (id, pos, gfp)
     * with `pos` the 0-based start token. Shares [[TextFunctions.wordShingles]]
     * semantics (a document shorter than `n` tokens yields ONE whole-text
-    * gram at pos 0), so profiles/masks agree with the shingle-based dedup
-    * family. Gram hashing is the native one-pass
-    * [[org.apache.spark.sql.graft.ShingleFps60]] expression — gram strings
-    * never materialize in the plan, and the explode emits (pos, 8-byte fp)
-    * directly.
+    * gram at pos 0). Gram hashing is the native one-pass `shingle_fps60`
+    * expression — gram strings never materialize in the plan, and the
+    * explode emits (pos, 8-byte fp) directly. The dedup joins read the
+    * distinct 60-bit shingle fingerprints of the same expression, so
+    * profiles/masks and the dedup family hash every gram alike.
     */
   private def positionalGrams(df: DataFrame, id: Column, text: Column,
       n: Int): DataFrame =
@@ -530,7 +530,7 @@ object TextIndex {
     * kept span may itself sit inside a region removed by a DIFFERENT
     * span's dedup; the paper's byte-range union has the same property.
     *
-    * Scale shape: one native ShingleFps60 pass emits (id, pos, 8-byte
+    * Scale shape: one native shingle_fps60 pass emits (id, pos, 8-byte
     * gfp) — gram strings never materialize; ONE gfp-keyed count+min agg
     * (map-side partials) finds duplicated spans and their first
     * occurrences; the removal join is gfp-keyed equality (left to AQE —
@@ -544,7 +544,7 @@ object TextIndex {
     require(n >= 2, s"n must be >= 2, got $n")
     // base feeds the span stream AND the final mask; g feeds the
     // first-occurrence agg AND the removal join — pin both, or the
-    // corpus tokenize (+ ShingleFps60 hash) pass runs once per consumer
+    // corpus tokenize (+ shingle_fps60 hash) pass runs once per consumer
     // (the cooccurrenceCounts lesson); released at the caller's boundary
     // via graft.Pins.unpinAll
     val base = graft.Pins.pin(
@@ -584,7 +584,7 @@ object TextIndex {
     * exact/bloom screens' job.
     *
     * Scale shape: both corpora stream through ONE native
-    * [[org.apache.spark.sql.graft.ShingleFps60]] pass each — gram strings
+    * `shingle_fps60` pass each — gram strings
     * never materialize; the eval side collapses to DISTINCT 8-byte fps
     * (eval suites are MBs against a 100 TB train side — AQE broadcasts it;
     * nothing forces that, the flat-tail lesson); the contamination count
@@ -636,7 +636,7 @@ object TextIndex {
     *
     * Scale shape: same as [[backoffFamiliarity]] — bigrams become 8-byte
     * positional fingerprints in one native
-    * [[org.apache.spark.sql.graft.ShingleFps60]] pass (the first version
+    * `shingle_fps60` pass (the first version
     * built (w1, w2) STRING structs with an interpreted transform and no
     * widening, shuffled the strings through both the count groupBy and the
     * scoring join, and measured 8× slower than the trigram scorer at
@@ -680,7 +680,7 @@ object TextIndex {
     * Output: (id, n_trigrams, n_tri_common, n_backoff, familiarity).
     *
     * Scale shape: positional 3- and 2-gram fingerprints come from one
-    * native [[org.apache.spark.sql.graft.ShingleFps60]] pass each,
+    * native `shingle_fps60` pass each,
     * position-aligned with arrays_zip (no self-join to pair a trigram
     * with its backoff bigram); both count tables key on 8-byte fps with
     * map-side partials; text shuffles only in WidenNarrowScans' widening.
@@ -746,7 +746,7 @@ object TextIndex {
     * Output: (id, n_scored, total_bits, bits_per_token, keep).
     *
     * Scale shape: tokens hash to positional 60-bit fingerprints in native
-    * [[org.apache.spark.sql.graft.ShingleFps60]] passes (gram strings
+    * `shingle_fps60` passes (gram strings
     * never materialize); the bigram and unigram count tables are
     * vocabulary-sized fp-keyed aggregations with map-side partials; the
     * corpus token total broadcasts as one row. The position stream
@@ -779,7 +779,7 @@ object TextIndex {
   def bigramLmCounts(df: DataFrame, text: Column): DataFrame = {
     import org.apache.spark.sql.graft.HashFunctions
     val base = df.select(TextFunctions.tokensWs(text).as("toks"))
-    // size-guard: ShingleFps60 on an EMPTY token array emits one
+    // size-guard: shingle_fps60 on an EMPTY token array emits one
     // whole-text gram (the shingle contract), which here would count a
     // phantom token per blank doc
     val uni = base.filter(size(col("toks")) >= 1)
@@ -1388,7 +1388,7 @@ object TextIndex {
     * Output: (pair_id, n_ref, n_cand, n_match, recall, precision, f1).
     *
     * Scale shape: grams hash to positional 60-bit fps in native
-    * [[org.apache.spark.sql.graft.ShingleFps60]] passes; per-(pair, gram)
+    * `shingle_fps60` passes; per-(pair, gram)
     * counts partial-aggregate, the match join keys on (pair, 8-byte fp),
     * and every downstream agg is pair-keyed — text shuffles only in
     * WidenNarrowScans' widening, and nothing is corpus-wide (all work is

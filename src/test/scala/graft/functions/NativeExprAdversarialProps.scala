@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, BoundReference, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
 import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.graft._
@@ -73,14 +73,12 @@ object NativeExprAdversarialProps extends Properties("NativeExprAdversarial") {
     agreeToks(SimHash60(_))
   property("SimHash128 codegen == interpreted on adversarial Unicode") =
     agreeToks(SimHash128(_))
-  property("WordShingleSet codegen == interpreted on adversarial Unicode") =
-    agreeToks(WordShingleSet(_, shingleK = 2))
   property("WinnowFingerprints codegen == interpreted on adversarial Unicode") =
     agreeToks(WinnowFingerprints(_, shingleK = 3, window = 4))
   property("ShingleFps60 codegen == interpreted on adversarial Unicode") =
-    agreeToks(ShingleFps60(_, shingleK = 3))
+    agreeToks(ShingleFps(_, shingleK = 3, bits = 60))
   property("ShingleFps32 codegen == interpreted on adversarial Unicode") =
-    agreeToks(ShingleFps32(_, shingleK = 3))
+    agreeToks(ShingleFps(_, shingleK = 3, bits = 32))
   property("CdcChunks codegen == interpreted on adversarial Unicode") =
     agreeToks(CdcChunks(_, shingleK = 3, maskBits = 2))
   property("NfcNormalize codegen == interpreted on adversarial Unicode") =
@@ -122,61 +120,69 @@ object NativeExprAdversarialProps extends Properties("NativeExprAdversarial") {
     }
   }
 
-  /** ShingleFps60 must equal the HOF formulation it replaces: positional
-    * space-joined k-grams (whole text when shorter than k) hashed with
-    * fingerprint64's md5-60 truncation. Valid-UTF-16 tokens only — lone
-    * surrogates take different replacement-char paths in String.getBytes
-    * vs UTF8String, which the codegen==interpreted property covers.
+  // ------------------------------------- shingle fingerprint gram model
+
+  /** Valid-UTF-16 tokens for the gram models — lone surrogates take
+    * different replacement-char paths in String.getBytes vs UTF8String,
+    * which the codegen==interpreted properties cover. Non-ASCII, empty
+    * tokens and tokens holding a space are all in.
     */
-  property("ShingleFps60 == positional gram + fingerprint64 model") = {
-    val tokGen = Gen.chooseNum(0, 9).flatMap(n => Gen.listOfN(n,
+  private val gramTokens: Gen[Seq[String]] =
+    Gen.chooseNum(0, 9).flatMap(n => Gen.listOfN(n,
       Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
         Gen.oneOf("the", "über", "😀", "a b", ""))))
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-    def fp60(s: String): Long = java.lang.Long.parseLong(md5hex(s).take(15), 16)
-    val k = 3
-    val expr = ShingleFps60(
-      BoundReference(0, ArrayType(StringType), nullable = true), k)
+  private def md5hex(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map(b => f"$b%02x").mkString
+  private def fp60(s: String): Long = java.lang.Long.parseLong(md5hex(s).take(15), 16)
+  private def h32(s: String): Long = java.lang.Long.parseLong(md5hex(s).take(8), 16)
+  /** Positional space-joined k-grams, the whole text when shorter than k —
+    * the TextFunctions.wordShingles model. */
+  private def grams(toks: Seq[String], k: Int): Seq[String] =
+    if (toks.length < k) Seq(toks.mkString(" "))
+    else toks.sliding(k).map(_.mkString(" ")).toSeq
+
+  private def shingleFps(toks: Seq[String], k: Int, bits: Int): Seq[Long] = {
+    val expr = ShingleFps(
+      BoundReference(0, ArrayType(StringType), nullable = true), k, bits)
     val inConv = CatalystTypeConverters.createToCatalystConverter(ArrayType(StringType))
     val outConv = CatalystTypeConverters.createToScalaConverter(expr.dataType)
-    forAll(tokGen) { toks =>
-      val got = outConv(expr.eval(InternalRow(inConv(toks)))).asInstanceOf[Seq[Long]]
-      val want =
-        if (toks.length < k) Seq(fp60(toks.mkString(" ")))
-        else toks.sliding(k).map(g => fp60(g.mkString(" "))).toSeq
-      got == want
-    }
+    outConv(expr.eval(InternalRow(inConv(toks)))).asInstanceOf[Seq[Long]]
   }
 
-  /** ShingleFps32 must equal the same positional-gram model under the
+  /** shingle_fps60 must equal the HOF formulation it replaces: positional
+    * grams hashed with fingerprint64's md5-60 truncation. */
+  property("ShingleFps60 == positional gram + fingerprint64 model") =
+    forAll(gramTokens) { toks =>
+      shingleFps(toks, 3, 60) == grams(toks, 3).map(fp60)
+    }
+
+  /** shingle_fps32 must equal the same positional-gram model under the
     * hash32 (first-8-md5-hex) fold — the contract the overlap_sketch
     * DuckDB oracle replays.
     */
-  property("ShingleFps32 == positional gram + hash32 model") = {
-    val tokGen = Gen.chooseNum(0, 9).flatMap(n => Gen.listOfN(n,
-      Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
-        Gen.oneOf("the", "über", "😀", "a b", ""))))
-    def md5hex(s: String): String =
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map(b => f"$b%02x").mkString
-    def h32(s: String): Long = java.lang.Long.parseLong(md5hex(s).take(8), 16)
-    val k = 3
-    val expr = ShingleFps32(
-      BoundReference(0, ArrayType(StringType), nullable = true), k)
-    val inConv = CatalystTypeConverters.createToCatalystConverter(ArrayType(StringType))
-    val outConv = CatalystTypeConverters.createToScalaConverter(expr.dataType)
-    forAll(tokGen) { toks =>
-      val got = outConv(expr.eval(InternalRow(inConv(toks)))).asInstanceOf[Seq[Long]]
-      val want =
-        if (toks.length < k) Seq(h32(toks.mkString(" ")))
-        else toks.sliding(k).map(g => h32(g.mkString(" "))).toSeq
-      got == want
+  property("ShingleFps32 == positional gram + hash32 model") =
+    forAll(gramTokens) { toks =>
+      shingleFps(toks, 3, 32) == grams(toks, 3).map(h32)
     }
-  }
+
+  /** The dedup joins' shingle fingerprint set, `array_distinct` of the
+    * 60-bit form, must equal fp60 of the DISTINCT shingle strings in
+    * first-occurrence order (the set the joins read before they went
+    * native): the same size and the same elements. Covers docs shorter
+    * than k (k up to 5 against up to 9 tokens), empty tokens and
+    * non-ASCII text.
+    */
+  property("distinct ShingleFps60 == fp60 of the distinct shingle strings") =
+    forAll(gramTokens, Gen.chooseNum(1, 5)) { (toks, k) =>
+      val set = ArrayDistinct(ShingleFps(
+        BoundReference(0, ArrayType(StringType), nullable = true), k, 60))
+      val got = CatalystTypeConverters.createToScalaConverter(set.dataType)(
+        set.eval(InternalRow(CatalystTypeConverters
+          .createToCatalystConverter(ArrayType(StringType))(toks))))
+      got == grams(toks, k).distinct.map(fp60)
+    }
 
   // --------------------------------------------------- m_add properties
 

@@ -259,9 +259,7 @@ class DedupSpec extends SparkSpec {
     val corpus = (1 to 40)
       .map(i => (i.toLong, s"the quick fox u$i v$i w$i x$i y$i z$i a$i b$i"))
       .toDF("id", "text")
-    val sets = corpus.select(col("id"), org.apache.spark.sql.graft.HashFunctions
-      .wordShingleSet(TextFunctions.tokensWs(col("text")), 3).as("set"))
-    val posting = Dedup.shinglePostings(sets)
+    val posting = Dedup.shingleIndex(corpus, col("id"), col("text"), 3).indexed
     val unbounded = posting.select(col("sfp"), col("id").as("id_a"))
       .join(posting.select(col("sfp"), col("id").as("id_b")), Seq("sfp"))
       .filter(col("id_a") < col("id_b"))
@@ -436,6 +434,30 @@ class DedupSpec extends SparkSpec {
     val (replay, _) = Dedup.minHashIncremental(
       batch, col("doc_id"), col("text"), reloaded)
     assert(replay.count() === 0L)
+  }
+
+  test("NearDupState postings pin the persisted layout: (id, sz, sfp) with " +
+      "sfp the fingerprint64 of each distinct word 3-shingle string and sz " +
+      "their count — changing the state fingerprint must bump " +
+      "StateFormatVersion") {
+    val corpus = Seq(
+      (1L, "the cat sat on the mat the cat sat on the mat"),
+      (2L, "über café 😀 naïve"),
+      (3L, "short")).toDF("doc_id", "text")
+    val state = Dedup.NearDupState.build(corpus, col("doc_id"), col("text"))
+    try {
+      val want = corpus
+        .select(col("doc_id").as("id"),
+          TextFunctions.wordShingleSet(col("text"), 3).as("set"))
+        .select(col("id"), size(col("set")).as("sz"), explode(col("set")).as("s"))
+        .select(col("id"), col("sz"), TextFunctions.fingerprint64(col("s")).as("sfp"))
+        .as[(Long, Int, Long)].collect().sorted.toSeq
+      assert(state.postings.columns.toSeq === Seq("id", "sz", "sfp"))
+      assert(state.postings.as[(Long, Int, Long)].collect().sorted.toSeq === want)
+      // the repeated sentence posts each of its 6 distinct shingles once
+      assert(want.count(_._1 == 1L) === 6 && want.forall(p => p._1 != 1L || p._2 == 6))
+      assert(Dedup.StateFormatVersion === 1)
+    } finally state.close()
   }
 
   test("fingerprint state save/load round-trip") {
@@ -769,8 +791,7 @@ class DedupSpec extends SparkSpec {
     // the estimator itself: at fraction 1 the stats pass counts
     // Σ df(df−1)/2 exactly — on this corpus every one of the 7 shared
     // 3-shingles has df = 120 (the marker tail shingles are unique)
-    val idx = Dedup.shinglePostings(quad.select(col("doc_id").as("id"),
-      TextFunctions.wordShingleSet(col("text"), 3).as("set")))
+    val idx = Dedup.shingleIndex(quad, col("doc_id"), col("text"), 3).indexed
     val (maxDf, est) = Dedup.indexStats(idx)
     assert(maxDf === 120L)
     assert(est >= 120L * 119 / 2) // at least the shared-shingle cliques
@@ -947,5 +968,23 @@ class DedupSpec extends SparkSpec {
           s"t=$t sz=$sz")
       }
     }
+  }
+
+  test("no operator builds a shingle string set: no wordShingleSet( call " +
+      "and no per-shingle fingerprint64(col(\"s\")) under operators") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala/graft/operators")
+    assert(Files.isDirectory(root), s"$root not found from ${Paths.get("").toAbsolutePath}")
+    val hits = Files.walk(root).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { (f: Path) =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("wordShingleSet(") ||
+              l.contains("fingerprint64(col(\"s\"))") =>
+            s"$f:${i + 1}: ${l.trim}"
+        }
+      }
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

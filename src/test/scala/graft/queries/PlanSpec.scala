@@ -76,8 +76,9 @@ class PlanSpec extends SparkSpec {
       metrics.collect()
       minhash.collect()
     } finally spark.conf.set("spark.sql.codegen.fallback", "true")
-    // the native TextStats / MinHashSignature / WordShingleSet expressions
-    // no longer break whole-stage codegen: the projections computing them
+    // the native TextStats / MinHashSignature / shingle_fps60 expressions
+    // (the dedup verify sets are distinct 60-bit shingle fingerprints) no
+    // longer break whole-stage codegen: the projections computing them
     // carry codegen ids in the final plan
     val pm = plan(metrics)
     assert("Project \\[codegen id :".r.findFirstIn(pm).nonEmpty, pm)
@@ -134,6 +135,25 @@ class PlanSpec extends SparkSpec {
     val p = plan(Pipeline.dedupNgramJaccard(spark, dir))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(!p.contains("CartesianProduct"), p)
+    // no shingle string crosses an exchange in any shingle join: postings
+    // and verify sets are 60-bit fingerprints
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    object aqe extends AdaptiveSparkPlanHelper
+    for ((name, q) <- Seq("dedup_ngram_jaccard" -> Pipeline.dedupNgramJaccard _,
+        "dedup_minhash_lsh" -> Pipeline.dedupMinHash _,
+        "fuzzy_join" -> Pipeline.fuzzyJoin _)) {
+      val exchanges = aqe.collect(q(spark, dir).queryExecution.executedPlan) {
+        case e: Exchange => e
+      }
+      assert(exchanges.nonEmpty, name)
+      val strings = exchanges.filter(_.output.exists(_.dataType match {
+        case ArrayType(StringType, _) => true
+        case _ => false
+      }))
+      assert(strings.isEmpty, s"$name: ${strings.map(_.simpleString(200)).mkString("\n")}")
+    }
   }
 
   test("minhash signatures: at most the widening shuffle, which moves (id,text) only") {
