@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.engine.ScriptCompiler
@@ -174,22 +172,20 @@ object Engine {
       |GROUP BY o_orderstatus
       |ORDER BY o_orderstatus""".stripMargin
 
-  private val streamSeq = new AtomicInteger(0)
-
   /** Structured Streaming end-to-end: file-source stream over events,
     * watermarked 1-day tumbling window counts per event type, drained to a
     * memory sink in complete mode (deterministic for finite input), result
-    * read back as a batch table.
+    * read back as a batch table. Runs in the caller's session: a windowed
+    * aggregation holds one state store per shuffle partition, and the
+    * 4-partition stream session measured slower here.
     */
   def streamingWindowCounts(s: SparkSession, dir: String): DataFrame = {
     val batch = T(s, dir, "events")
     val stream = Streams.withEventTime(
-      Streams.parquetStream(s, dir, batch, glob = Some("events.parquet")))
+      Streams.parquetStream(s, dir, batch, "events.parquet"))
     val agg = Streams.windowedCounts(stream, col("event_time"),
       col("event_type"), "1 day", "1 hour")
-    val name = s"graft_stream_${streamSeq.incrementAndGet()}"
-    Streams.drainToMemory(agg, name)
-    s.table(name)
+    StreamGates.drain(agg, "complete", dir, Nil)
       .select(col("w.start").cast("date").as("day"), col("event_type"), col("n"))
       .orderBy(col("day"), col("event_type"))
   }
@@ -214,29 +210,18 @@ object Engine {
   def streamStreamJoin(s: SparkSession, dir: String): DataFrame = {
     // A stateful join materializes 4 state stores per shuffle partition
     // (per side × KeyWithIndex); at this fixture's volume the store setup
-    // IS the cost, so run the stream with fewer partitions. The stream gets
-    // its OWN child session (shared SparkContext/catalog state, private
-    // SQLConf) so the sizing can't race a concurrent query in the caller's
-    // session — per-query conf isolation, not mutate-and-restore. At
-    // cluster scale the partition count should instead track state size
-    // (rows × horizon), exactly like any shuffle sizing.
-    // newSession() starts from SparkConf defaults, not the parent's RUNTIME
-    // conf — re-apply the engine confs (nanosAsLong, UTC, LAST_WIN) first.
-    val ss = graft.GraftSession.configure(s.newSession())
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    // IS the cost, so the stream runs on the 4-partition stream session.
+    val ss = StreamGates.streamSession(s)
     val batch = T(ss, dir, "events")
     def side(tp: String, timeCol: String) = Streams.withEventTime(
-        Streams.parquetStream(ss, dir, batch, glob = Some("events.parquet")))
+        Streams.parquetStream(ss, dir, batch, "events.parquet"))
       .filter(col("event_type") === tp)
       .select(col("user_id"), col("event_time").as(timeCol))
     val joined = Streams.streamStreamJoin(
       side("click", "c_time"), side("purchase", "p_time"), Seq("user_id"),
       leftTime = "c_time", rightTime = "p_time",
       leftDelay = "1 hour", rightDelay = "1 hour", within = "30 MINUTES")
-    val name = s"graft_stream_${streamSeq.incrementAndGet()}"
-    // the memory sink registers its table in the child session's catalog
-    Streams.drainToMemory(joined, name, outputMode = "append")
-    ss.table(name)
+    StreamGates.drain(joined, "append", dir, Nil)
       .select(col("user_id"),
         unix_micros(col("c_time")).as("click_us"),
         unix_micros(col("p_time")).as("purchase_us"))
@@ -267,7 +252,8 @@ object Engine {
     * lag/cumsum batch replay ONLY if the session_window merge, the
     * watermark lifecycle, the (ts, role, content) turn order inside
     * `array_sort(collect_list(...))`, and the NULL-role/content coalesce
-    * are all exact.
+    * are all exact. The split (with its degenerate-span guard), the
+    * child session and the drain are [[StreamGates.twoBatch]]'s.
     *
     * Boundary note: the native session_window starts a NEW session at
     * diff == gap where the batch rule keeps it; like `session_window`'s
@@ -280,44 +266,19 @@ object Engine {
     * (bound upstream with a turn cap where bot sessions are a risk); the
     * memory sink stands in for the production parquet/Kafka sink.
     */
-  def dialogFromStream(s: SparkSession, dir: String): DataFrame = {
-    // child session: private SQLConf for the stateful-shuffle sizing
-    // (see streamStreamJoin's note) without racing concurrent queries
-    val ss = graft.GraftSession.configure(s.newSession())
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val ev = Streams.withEventTime(T.events(ss, dir))
+  def dialogFromStream(s: SparkSession, dir: String): DataFrame =
+    StreamGates.twoBatch(dialog, s, dir)
+
+  private val dialog = Gate("dialog", col("event_time"), "append",
+    (ss, dir) => Streams.withEventTime(T.events(ss, dir))
       .select(col("event_time"), col("user_id"),
-        col("event_type").as("role"), col("props").as("content"))
-    val b = ev.agg(min(col("event_time")).cast("long").as("lo"),
-      max(col("event_time")).cast("long").as("hi")).head()
-    if (b.isNullAt(0)) {
-      // empty events table: no sessions — return the typed empty frame
-      // instead of NPE-ing on the null min/max
-      return ss.range(0).select(lit(0L).as("user_id"),
-        lit(0L).as("start_us"), lit(0L).as("end_us"),
-        lit(0L).as("n_turns"), lit("").as("transcript_md5"))
-    }
-    val (lo, hi) = (b.getLong(0), b.getLong(1)) // epoch seconds
-    val cut = timestamp_seconds(lit((lo + hi) / 2))
-    val streamDir = scratchPath("graft-dialog-stream", dir)
-    ev.filter(col("event_time") <= cut)
-      .write.mode("overwrite").parquet(streamDir)
-    val tr = Streams.sessionTranscripts(
-      Streams.parquetStream(ss, streamDir, ev, glob = Some("*.parquet")),
-      col("event_time"), col("user_id"), col("role"), col("content"),
-      gap = "30 minutes", watermark = "0 seconds")
-    val name = s"graft_stream_${streamSeq.incrementAndGet()}"
-    val q = tr.writeStream.format("memory").queryName(name)
-      .outputMode("append").start()
-    q.processAllAvailable() // micro-batch 1: the early half
-    ev.filter(col("event_time") > cut)
-      .unionByName(ev.sparkSession.range(1).select(
-        timestamp_seconds(lit(hi + 10L * 366 * 24 * 3600)).as("event_time"),
-        lit(-1L).as("user_id"), lit("x").as("role"), lit("x").as("content")))
-      .write.mode("append").parquet(streamDir)
-    q.processAllAvailable() // micro-batch 2 + the no-data emit batch
-    q.stop()
-    ss.table(name)
+        col("event_type").as("role"), col("props").as("content")),
+    Some(far => Seq(timestamp_seconds(lit(far)).as("event_time"),
+      lit(-1L).as("user_id"), lit("x").as("role"), lit("x").as("content"))),
+    src => Streams.sessionTranscripts(src, col("event_time"),
+      col("user_id"), col("role"), col("content"),
+      gap = "30 minutes", watermark = "0 seconds"),
+    (out, _) => out
       // null-safe: a plain =!= would also drop NULL-user sessions the
       // oracle keeps, if the driver ever generates null user_ids
       .filter(!(col("user_id") <=> lit(-1L)))
@@ -326,8 +287,7 @@ object Engine {
         unix_micros(col("session_end")).as("end_us"),
         col("n_turns"),
         md5(col("transcript")).as("transcript_md5"))
-      .orderBy(col("user_id"), col("start_us"))
-  }
+      .orderBy(col("user_id"), col("start_us")))
 
   val dialogFromStreamOracle: String =
     """WITH e AS (

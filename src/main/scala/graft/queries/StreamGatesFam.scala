@@ -4,19 +4,53 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.TimestampType
 
 import graft.streaming.Streams
 
-/** Oracle gates for the streaming handlers that were spec-only through
-  * round 16 — each run as a REAL two-micro-batch Structured Streaming
-  * query (the `dialog_from_stream` pattern: time-split the events corpus
-  * at the midpoint into two parquet files a file-source stream picks up
-  * as two micro-batches, drain to a memory sink, aggregate, and gate the
-  * result against the batch SQL replay). Green only if the cross-batch
-  * state lifecycle is exact: every entry's answer provably depends on
-  * state carried from micro-batch 1 into micro-batch 2 (a transition
-  * spanning the cut, a funnel step completed across it, a day window
-  * straddling it, a duplicate suppressed across it).
+/** What one stream gate streams and answers, shared by its two-batch
+  * and restart entries. `name` scopes its scratch dirs, `key` is its
+  * event-time column (the engine's LONG-nanosecond `ts` or a TIMESTAMP
+  * `event_time`), `events` reads its input, `sentinel` gives the
+  * far-future flush row's columns for a horizon (None when the sink
+  * emits without a watermark flush), `transform` is the stream under
+  * test, and `answer` turns what the sink collected, plus the horizon,
+  * into the entry's result.
+  */
+private[queries] final case class Gate(name: String, key: Column,
+    mode: String, events: (SparkSession, String) => DataFrame,
+    sentinel: Option[Long => Seq[Column]],
+    transform: DataFrame => DataFrame,
+    answer: (DataFrame, Long) => DataFrame) {
+  def stream(ss: SparkSession, dir: String, ev: DataFrame): DataFrame =
+    transform(Streams.parquetStream(ss, dir, ev, "*.parquet"))
+}
+
+/** Oracle gates for the streaming handlers, each run as a REAL
+  * Structured Streaming query, and the one driver every streaming
+  * registry entry (these 11, plus `streaming_window_counts`,
+  * `stream_stream_join` and `dialog_from_stream` in [[Engine]]) runs
+  * through. The driver makes three decisions, once each:
+  *
+  *  - the child session: [[streamSession]], a private-SQLConf child with
+  *    4 shuffle partitions;
+  *  - the time split: [[timeSplit]] probes the event-time bounds once,
+  *    fails fast on a span too narrow to cut, writes the first slice to
+  *    the stream dir and returns the later slices (the last one carrying
+  *    the far-future watermark sentinel where the gate flushes windows);
+  *  - the drain: [[drain]] (memory sink) and [[runWithRestart]]
+  *    (checkpointed foreachBatch sink, stopped and resumed) append each
+  *    later slice, run `processAllAvailable`, and stop the query in
+  *    `finally`.
+  *
+  * A [[Gate]] names what one gate streams and answers; [[twoBatch]] runs
+  * it over a midpoint split, [[restart]] over a data-picked three-way
+  * split across a checkpoint restart. Green only if the cross-batch state
+  * lifecycle is exact: every entry's answer provably depends on state
+  * carried from one micro-batch into the next (a transition spanning the
+  * cut, a funnel step completed across it, a day window straddling it, a
+  * duplicate suppressed across it).
   *
   * Sketch entries run in their EXACT regimes at the oracle SFs
   * (max 371 rows / 100 distinct tokens per day window vs k = 1024), the
@@ -26,94 +60,103 @@ import graft.streaming.Streams
   */
 trait StreamGatesFam {
 
-  private val gateSeq = new AtomicInteger(0)
+  private val drainSeq = new AtomicInteger(0)
 
-  /** Child session (private SQLConf) with small stateful-shuffle sizing —
+  /** The child session of the stream entries (shared SparkContext and
+    * catalog, private SQLConf) with small stateful-shuffle sizing —
     * state stores materialize per shuffle partition, and at fixture
     * volume the store setup IS the cost (the stream_stream_join lesson).
+    * The private conf keeps the sizing from racing a concurrent query in
+    * the caller's session. `newSession()` starts from SparkConf defaults,
+    * not the parent's runtime conf, so the engine confs are re-applied
+    * first. At cluster scale the partition count should track state size
+    * (rows × horizon), like any shuffle sizing.
     */
-  private def streamSession(s: SparkSession): SparkSession = {
+  private[graft] def streamSession(s: SparkSession): SparkSession = {
     val ss = graft.GraftSession.configure(s.newSession())
     ss.conf.set("spark.sql.shuffle.partitions", "4")
     ss
   }
 
-  /** Time-split `ev` at the midpoint of `tsCol` (a LONG column), write
-    * the early half to a scratch stream dir, and return
-    * (streamDir, lateHalf, emptiness). Equal-ts rows land on one side of
-    * the cut, so per-user (ts, tie) delivery order — the cross-batch
-    * contract of the mapGroupsWithState handlers — holds by construction.
-    * Null-ts rows are excluded by contract (both `<= cut` and `> cut`
-    * drop them) — every gate's oracle filters `ts IS NOT NULL` to match;
-    * the driver fixtures have none, the filter pins the contract.
-    */
-  private def splitToStreamDir(ev: DataFrame, tsCol: String,
-      scratch: String): Option[(String, DataFrame)] = {
-    val b = ev.agg(min(col(tsCol)).as("lo"), max(col(tsCol)).as("hi")).head()
-    if (b.isNullAt(0)) return None
-    // lo < hi guarantees BOTH halves of the midpoint cut are non-empty
-    // (rows at lo land early, rows at hi land late); a degenerate
-    // single-batch split would pass the gate while proving nothing about
-    // the cross-batch state carry, so it must fail loudly instead.
-    require(b.getLong(0) < b.getLong(1),
-      s"degenerate stream split: all rows share $tsCol=${b.getLong(0)} — " +
-        "the gate would run as a single micro-batch")
-    val cut = (b.getLong(0) + b.getLong(1)) / 2
-    ev.filter(col(tsCol) <= cut).write.mode("overwrite").parquet(scratch)
-    Some((scratch, ev.filter(col(tsCol) > cut)))
-  }
-
   /** The far-future watermark-flush sentinel's epoch second — a decade
-    * past the last real event, so it closes every real window; ONE copy
-    * so the two-batch and restart window gates cannot drift.
+    * past the last real event, so it closes every real window.
     */
   private def sentinelHorizon(hi: Long): Long = hi + 10L * 366 * 24 * 3600
 
   /** Drop the sentinel's own window from a flushed windowed result —
-    * the inverse of [[sentinelHorizon]], same single-source rule.
+    * the inverse of [[sentinelHorizon]].
     */
   private def realWindows(df: DataFrame, far: Long): DataFrame =
     df.filter(col("win_start") < timestamp_seconds(lit(far - 24 * 3600)))
 
-  /** The event-time twin of [[splitToStreamDir]], shared by the two
-    * watermarked window gates: midpoint split on a TIMESTAMP column,
-    * optionally plus a far-future sentinel row appended to the late half
-    * (its epoch second is returned) to push the watermark past every
-    * real window for the append-mode flush; sentinel-free consumers
-    * (dedup emits rows immediately, no flush needed) pass None — ONE
-    * copy of the cut/sentinel arithmetic, so the gates cannot drift.
+  /** The time split of every stream gate. One probe reads the bounds
+    * (lo, hi) of `key` cast to LONG (nanoseconds for the engine's `ts`,
+    * epoch seconds for a TIMESTAMP); a span under `minSpan` fails fast,
+    * since a gate that cannot cut its micro-batches would pass while
+    * proving nothing about the cross-batch state carry. `cuts(lo, hi)`
+    * gives the ascending cut points; a TIMESTAMP key compares against
+    * them as epoch seconds. Rows with `key <= cuts.head` are written to
+    * `scratch` (the stream dir), and the slices between consecutive cuts
+    * and past the last one come back in order, with the `sentinel` row
+    * (its columns for the horizon) appended to the last. Returns (later
+    * slices, sentinel horizon).
+    *
+    * Equal-key rows land on one side of a cut, so per-user (ts, tie)
+    * delivery order — the cross-batch contract of the mapGroupsWithState
+    * handlers — holds by construction. Null-key rows fall on no side;
+    * every gate's oracle filters `ts IS NOT NULL` to match (the driver
+    * fixtures have none).
     */
-  private def splitWithSentinel(ev: DataFrame, scratch: String,
-      sentinel: Option[Long => DataFrame]): Option[(String, DataFrame, Long)] = {
-    val b = ev.agg(min(col("event_time")).cast("long").as("lo"),
-      max(col("event_time")).cast("long").as("hi")).head()
-    if (b.isNullAt(0)) return None
-    val (lo, hi) = (b.getLong(0), b.getLong(1)) // epoch seconds
-    // Same non-degeneracy contract as splitToStreamDir: equal bounds
-    // would put every row in micro-batch 1 and gate nothing.
-    require(lo < hi,
-      s"degenerate stream split: all rows share event_time epoch $lo — " +
-        "the gate would run as a single micro-batch")
-    val cut = timestamp_seconds(lit((lo + hi) / 2))
+  private[queries] def timeSplit(ev: DataFrame, key: Column, scratch: String,
+      minSpan: Long, sentinel: Option[Long => Seq[Column]])(
+      cuts: (Long, Long) => Seq[Long]): (Seq[DataFrame], Long) = {
+    val b = ev.agg(min(key.cast("long")), max(key.cast("long"))).head()
+    require(!b.isNullAt(0),
+      s"degenerate stream split: no row carries a $key — the gate would " +
+        "run over nothing")
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    require(hi - lo >= minSpan,
+      s"degenerate stream split: $key spans ${hi - lo} from $lo, under " +
+        s"the $minSpan the gate needs to cut its micro-batches")
+    val at: Long => Column = ev.select(key).schema.head.dataType match {
+      case TimestampType => c => timestamp_seconds(lit(c))
+      case _ => c => lit(c)
+    }
+    val cs = cuts(lo, hi).map(at)
+    ev.filter(key <= cs.head).write.mode("overwrite").parquet(scratch)
     val far = sentinelHorizon(hi)
-    ev.filter(col("event_time") <= cut).write.mode("overwrite")
-      .parquet(scratch)
-    val late = ev.filter(col("event_time") > cut)
-    Some((scratch,
-      sentinel.fold(late)(mk => late.unionByName(mk(far))), far))
+    val between = cs.sliding(2).collect {
+      case Seq(c, next) => ev.filter(key > c && key <= next)
+    }.toSeq
+    val last = ev.filter(key > cs.last)
+    (between :+ sentinel.fold(last)(cols =>
+      last.unionByName(ev.sparkSession.range(1).select(cols(far): _*))), far)
   }
 
-  /** The cut-directed three-way split of the restart gates: tercile A
-    * (rows at or before the halfway point to the data-picked `cut`) goes
-    * to the stream dir, the (mid, late) frames come back — `cut` is
-    * chosen by each gate so the crossing it needs exists by
-    * construction, and the c1 arithmetic lives once.
+  /** Drain `q` over the stream dir `dir`: one `processAllAvailable` for
+    * what the dir holds, then per slice an append and another. The query
+    * stops in `finally`: a failed batch or append must not leak an active
+    * stream polling a scratch dir the next invocation overwrites.
     */
-  private def cutSplit(ev: DataFrame, tsLong: Column, scratch: String,
-      lo: Long, cut: Long): (DataFrame, DataFrame) = {
-    val c1 = lo + (cut - lo) / 2 // < cut, >= lo: all three parts non-empty
-    ev.filter(tsLong <= c1).write.mode("overwrite").parquet(scratch)
-    (ev.filter(tsLong > c1 && tsLong <= cut), ev.filter(tsLong > cut))
+  private def drainQuery(q: StreamingQuery, dir: String,
+      slices: Seq[DataFrame]): Unit =
+    try {
+      q.processAllAvailable()
+      slices.foreach { slice =>
+        slice.write.mode("append").parquet(dir)
+        q.processAllAvailable() // + the no-data batch a watermark move runs
+      }
+    } finally q.stop()
+
+  /** Run `stream` into a memory sink through [[drainQuery]] and return
+    * the sink's table, registered in the stream's own session.
+    */
+  private[queries] def drain(stream: DataFrame, mode: String, dir: String,
+      later: Seq[DataFrame]): DataFrame = {
+    val name = s"graft_stream_${drainSeq.incrementAndGet()}"
+    drainQuery(stream.writeStream.format("memory").queryName(name)
+      .outputMode(mode).start(), dir, later)
+    stream.sparkSession.table(name)
   }
 
   /** The batchId-idempotent foreachBatch sink the restart/replay gates
@@ -151,9 +194,11 @@ trait StreamGatesFam {
     * stream lives or dies by (reference intent:
     * `process/KafkaHelper.scala:42-65` persists offsets to ZooKeeper
     * exactly so a restarted job resumes where it stopped). Runs
-    * micro-batches 1–2 of `mkStream` under a PERSISTENT checkpoint, stops
-    * the query, appends the third batch's files, then starts a BRAND-NEW
-    * query incarnation on a FRESH child session from the SAME checkpoint
+    * `mkStream` over the stream dir `dir` under a PERSISTENT checkpoint —
+    * one micro-batch for what `dir` holds, one per slice of `later` but
+    * the last — stops the query, appends the last slice, then starts a
+    * BRAND-NEW query incarnation on a FRESH child session from the SAME
+    * checkpoint
     * — the only carrier of offsets, watermark, and keyed state across the
     * boundary (a new runId forces the state store to reload from the
     * checkpoint files, not reuse in-memory maps). Output accumulates in
@@ -169,7 +214,8 @@ trait StreamGatesFam {
     * the hash gate goes red.
     * Checkpoint and output dirs are wiped at entry (scratch dirs persist
     * across invocations; resuming a checkpoint against an overwritten
-    * source dir would be chaos).
+    * source dir would be chaos). `tune` runs on each incarnation's
+    * session before its query starts.
     *
     * `replayLastBatch = true` additionally simulates the CRASH window the
     * sink's idempotence exists for: the pre-batch-3 checkpoint is
@@ -183,8 +229,7 @@ trait StreamGatesFam {
     */
   private[queries] def runWithRestart(parent: SparkSession,
       mkStream: SparkSession => DataFrame, sinkMode: String,
-      ckpt: String, outDir: String,
-      batch2: => Unit, batch3: => Unit,
+      ckpt: String, outDir: String, dir: String, later: Seq[DataFrame],
       tune: SparkSession => Unit = _ => (),
       replayLastBatch: Boolean = false,
       mkSink: String => (DataFrame, Long) => Unit = idempotentSink)
@@ -196,42 +241,31 @@ trait StreamGatesFam {
     // sink to PROVE it double-appends under the replay window the
     // default idempotent sink survives; registry entries never override
     val sink = mkSink(outDir)
-    def start(ss: SparkSession) =
-      mkStream(ss).writeStream
+    // one incarnation: a fresh session (no in-memory carry), tuned (e.g. a
+    // state-store provider override), draining `slices` from the checkpoint
+    def incarnation(slices: Seq[DataFrame]): SparkSession = {
+      val ss = streamSession(parent)
+      tune(ss)
+      drainQuery(mkStream(ss).writeStream
         .option("checkpointLocation", ckpt)
         .outputMode(sinkMode)
         .foreachBatch(sink)
-        .start()
-    def session(): SparkSession = {
-      val ss = streamSession(parent)
-      tune(ss) // e.g. a state-store provider override (RocksDB)
+        .start(), dir, slices)
       ss
     }
-    val q1 = start(session())
-    try {
-      q1.processAllAvailable() // micro-batch 1: the early tercile
-      batch2
-      q1.processAllAvailable() // micro-batch 2: the middle tercile
-    } finally q1.stop()
-    batch3
+    incarnation(later.init) // every micro-batch but the last
+    later.last.write.mode("append").parquet(dir)
     if (replayLastBatch) fs.cp(ckpt, snap) // the pre-batch-3 generation
-    val ss2 = session() // fresh session: no in-memory carry
-    val q2 = start(ss2)
-    try q2.processAllAvailable() // micro-batch 3, resumed from checkpoint
-    finally q2.stop()
+    val resumed = incarnation(Nil) // the last batch, resumed from checkpoint
     val last =
-      if (!replayLastBatch) ss2
+      if (!replayLastBatch) resumed
       else {
         // crash simulation: roll the checkpoint back to before batch 3's
         // offset commit (sink output KEPT — it was "written pre-crash")
         // and recover; batch 3 re-runs under its original batchId
         fs.rm(ckpt)
         fs.mv(snap, ckpt)
-        val ss3 = session()
-        val q3 = start(ss3)
-        try q3.processAllAvailable()
-        finally q3.stop()
-        ss3
+        incarnation(Nil)
       }
     val out = last.read.parquet(outDir)
     // ADVICE r19: the wipe-detection story rests on batches AFTER the
@@ -253,20 +287,47 @@ trait StreamGatesFam {
     out.drop("batch_id")
   }
 
-  private def runTwoBatches(stream: DataFrame, sinkMode: String,
-      lateBatch: => Unit): (SparkSession, String) = {
-    val name = s"graft_sgate_${gateSeq.incrementAndGet()}"
-    val q = stream.writeStream.format("memory").queryName(name)
-      .outputMode(sinkMode).start()
-    // stop() in finally: a failed batch must not leak an active stream
-    // polling a scratch dir the NEXT gate invocation overwrites
-    try {
-      q.processAllAvailable() // micro-batch 1: the early half
-      lateBatch
-      q.processAllAvailable() // micro-batch 2 (+ no-data finalize batch)
-    } finally q.stop()
-    (stream.sparkSession, name)
+  /** `g` over two micro-batches: the events split at the midpoint of
+    * their event-time span, drained to a memory sink.
+    */
+  private[queries] def twoBatch(g: Gate, s: SparkSession,
+      dir: String): DataFrame = {
+    val ss = streamSession(s)
+    val ev = g.events(ss, dir)
+    val scratch = Engine.scratchPath(s"graft-${g.name}-stream", dir)
+    val (later, far) = timeSplit(ev, g.key, scratch, 1, g.sentinel)(
+      (lo, hi) => Seq((lo + hi) / 2))
+    g.answer(drain(g.stream(ss, scratch, ev), g.mode, scratch, later), far)
   }
+
+  /** `g` over three micro-batches with the query stopped after the
+    * second and resumed from its checkpoint for the third
+    * ([[runWithRestart]]); `replay` adds the crash-replay window. `cuts`
+    * picks the two cut points from the data (the gate's events, its key
+    * as LONG, and the span's bounds) so the crossing the gate needs
+    * exists by construction.
+    */
+  private def restart(g: Gate, s: SparkSession, dir: String,
+      replay: Boolean)(cuts: (DataFrame, Column, Long, Long) => Seq[Long])
+      : DataFrame = {
+    val ss = streamSession(s)
+    val ev = g.events(ss, dir)
+    def scratch(suffix: String) = Engine.scratchPath(
+      s"graft-${g.name}-${if (replay) "replay" else "restart"}$suffix", dir)
+    val src = scratch("")
+    val key = g.key.cast("long")
+    val (later, far) = timeSplit(ev, key, src, 3, g.sentinel)(
+      cuts(ev, key, _, _))
+    g.answer(runWithRestart(s, g.stream(_, src, ev), g.mode,
+      scratch("-ck"), scratch("-out"), src, later,
+      replayLastBatch = replay), far)
+  }
+
+  /** The restart split's first cut halfway from `lo` to the data-picked
+    * restart cut: `lo <= c1 < cut`, so all three parts are non-empty.
+    */
+  private def halfwayTo(lo: Long, cut: Long): Seq[Long] =
+    Seq(lo + (cut - lo) / 2, cut)
 
   /** Session transition mining UNDER STRUCTURED STREAMING
     * ([[graft.streaming.Streams.transitionsIngest]]): per-user
@@ -279,29 +340,19 @@ trait StreamGatesFam {
     * State per user is (last ts, last type); the matrix aggregation is
     * |types|²-bounded.
     */
-  def transitionsFromStreamQ(s: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(s)
-    val ev = T.events(ss, dir).filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-    val scratch = Engine.scratchPath("graft-transitions-stream", dir)
-    splitToStreamDir(ev, "ts", scratch) match {
-      case None =>
-        return ss.range(0).select(lit("").as("from_et"),
-          lit("").as("to_et"), lit(0L).as("n"))
-      case Some((streamDir, late)) =>
-        val src = Streams.parquetStream(ss, streamDir, ev,
-          glob = Some("*.parquet"))
-        val tr = Streams.transitionsIngest(src, col("user_id"), col("ts"),
-            col("event_type"), col("event_id"))
-          .toDF("user_id", "from_et", "to_et")
-        val (sess, name) = runTwoBatches(tr, "update",
-          late.write.mode("append").parquet(streamDir))
-        sess.table(name)
-          .groupBy(col("from_et"), col("to_et"))
-          .agg(count(lit(1)).as("n"))
-          .orderBy(col("from_et"), col("to_et"))
-    }
-  }
+  private val transitions = Gate("transitions", col("ts"), "update",
+    (ss, dir) => T.events(ss, dir).filter(col("ts").isNotNull)
+      .select(col("user_id"), col("ts"), col("event_type"), col("event_id")),
+    sentinel = None,
+    src => Streams.transitionsIngest(src, col("user_id"), col("ts"),
+        col("event_type"), col("event_id"))
+      .toDF("user_id", "from_et", "to_et"),
+    (out, _) => out.groupBy(col("from_et"), col("to_et"))
+      .agg(count(lit(1)).as("n"))
+      .orderBy(col("from_et"), col("to_et")))
+
+  def transitionsFromStreamQ(s: SparkSession, dir: String): DataFrame =
+    twoBatch(transitions, s, dir)
 
   val transitionsFromStreamOracle: String =
     """WITH e AS (
@@ -319,6 +370,8 @@ trait StreamGatesFam {
       |GROUP BY 1, 2
       |ORDER BY from_et, to_et""".stripMargin
 
+  private val funnelSteps = Seq("view", "click", "purchase")
+
   /** Funnel depths UNDER STRUCTURED STREAMING
     * ([[graft.streaming.Streams.funnelIngest]]): each user's greedy
     * strict-order view→click→purchase depth, folded by a REAL
@@ -330,39 +383,26 @@ trait StreamGatesFam {
     * per-user depth is max over the Update-mode emissions. State per
     * user is 12 bytes.
     */
-  def funnelFromStreamQ(s: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(s)
-    import ss.implicits._
-    val steps = Seq("view", "click", "purchase")
-    val ev = T.events(ss, dir).filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_type"))
-    val scratch = Engine.scratchPath("graft-funnel-stream", dir)
-    splitToStreamDir(ev, "ts", scratch) match {
-      case None =>
-        // the oracle (funnelReportOracle) ALWAYS emits its three step
-        // rows — an empty corpus reports zeros, not an empty frame
-        return steps.zipWithIndex
-          .map { case (n, i) => (i + 1, n, 0L) }
-          .toDF("step", "step_name", "users_reached")
-      case Some((streamDir, late)) =>
-        val src = Streams.parquetStream(ss, streamDir, ev,
-          glob = Some("*.parquet"))
-        val fu = Streams.funnelIngest(src, col("user_id"), col("ts"),
-            col("event_type"), steps)
-          .toDF("user_id", "depth")
-        val (sess, name) = runTwoBatches(fu, "update",
-          late.write.mode("append").parquet(streamDir))
-        val depths = sess.table(name).groupBy(col("user_id"))
-          .agg(max(col("depth")).as("d"))
-        val reached = steps.indices.map(i =>
-          sum(when(col("d") >= i + 1, 1L).otherwise(0L)).as(s"u${i + 1}"))
-        depths.agg(reached.head, reached.tail: _*)
-          .select(expr("stack(3, " + steps.zipWithIndex.map {
-            case (n, i) => s"${i + 1}, '$n', coalesce(u${i + 1}, 0L)"
-          }.mkString(", ") + ") AS (step, step_name, users_reached)"))
-          .orderBy(col("step"))
-    }
-  }
+  private val funnel = Gate("funnel", col("ts"), "update",
+    (ss, dir) => T.events(ss, dir).filter(col("ts").isNotNull)
+      .select(col("user_id"), col("ts"), col("event_type")),
+    sentinel = None,
+    src => Streams.funnelIngest(src, col("user_id"), col("ts"),
+        col("event_type"), funnelSteps)
+      .toDF("user_id", "depth"),
+    { (out, _) =>
+      val depths = out.groupBy(col("user_id")).agg(max(col("depth")).as("d"))
+      val reached = funnelSteps.indices.map(i =>
+        sum(when(col("d") >= i + 1, 1L).otherwise(0L)).as(s"u${i + 1}"))
+      depths.agg(reached.head, reached.tail: _*)
+        .select(expr("stack(3, " + funnelSteps.zipWithIndex.map {
+          case (n, i) => s"${i + 1}, '$n', coalesce(u${i + 1}, 0L)"
+        }.mkString(", ") + ") AS (step, step_name, users_reached)"))
+        .orderBy(col("step"))
+    })
+
+  def funnelFromStreamQ(s: SparkSession, dir: String): DataFrame =
+    twoBatch(funnel, s, dir)
 
   /** Trending terms UNDER STRUCTURED STREAMING
     * ([[graft.streaming.Streams.trendingTerms]]): per 1-day event-time
@@ -377,32 +417,21 @@ trait StreamGatesFam {
     * FrequencySketchProps-gated. State per open window is ONE k-bounded
     * buffer.
     */
-  def trendingFromStreamQ(s: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(s)
-    val ev = Streams.withEventTime(T.events(ss, dir))
+  private val trending = Gate("trending", col("event_time"), "append",
+    (ss, dir) => Streams.withEventTime(T.events(ss, dir))
       .filter(col("event_time").isNotNull)
-      .select(col("event_time"), col("props"))
-    val streamDir = Engine.scratchPath("graft-trending-stream", dir)
-    splitWithSentinel(ev, streamDir, Some(far => ev.sparkSession.range(1)
-      .select(timestamp_seconds(lit(far)).as("event_time"),
-        lit("x").as("props")))) match {
-      case None =>
-        return ss.range(0).select(lit(java.sql.Date.valueOf("1970-01-01"))
-          .as("day"), lit(0).as("rank"), lit("").as("term"),
-          lit(0L).as("cnt"))
-      case Some((dir2, late, far)) =>
-        val tt = Streams.trendingTerms(
-          Streams.parquetStream(ss, dir2, ev, glob = Some("*.parquet")),
-          col("event_time"), col("props"), "1 day", "0 seconds",
-          k = 1024, topN = 5)
-        val (sess, name) = runTwoBatches(tt, "append",
-          late.write.mode("append").parquet(dir2))
-        realWindows(sess.table(name), far)
-          .select(col("win_start").cast("date").as("day"), col("rank"),
-            col("term"), col("cnt"))
-          .orderBy(col("day"), col("rank"))
-    }
-  }
+      .select(col("event_time"), col("props")),
+    Some(far => Seq(timestamp_seconds(lit(far)).as("event_time"),
+      lit("x").as("props"))),
+    src => Streams.trendingTerms(src, col("event_time"), col("props"),
+      "1 day", "0 seconds", k = 1024, topN = 5),
+    (out, far) => realWindows(out, far)
+      .select(col("win_start").cast("date").as("day"), col("rank"),
+        col("term"), col("cnt"))
+      .orderBy(col("day"), col("rank")))
+
+  def trendingFromStreamQ(s: SparkSession, dir: String): DataFrame =
+    twoBatch(trending, s, dir)
 
   val trendingFromStreamOracle: String =
     """WITH t AS (
@@ -432,32 +461,21 @@ trait StreamGatesFam {
     * tree — which is exactly what gates the streaming merge path. State
     * per open window is one O(k log(n/k)) buffer.
     */
-  def windowQuantilesFromStreamQ(s: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(s)
-    val ev = Streams.withEventTime(T.events(ss, dir))
+  private val windowQuantiles = Gate("wq", col("event_time"), "append",
+    (ss, dir) => Streams.withEventTime(T.events(ss, dir))
       .filter(col("event_time").isNotNull)
-      .select(col("event_time"), col("value"))
-    val streamDir = Engine.scratchPath("graft-wq-stream", dir)
-    splitWithSentinel(ev, streamDir, Some(far => ev.sparkSession.range(1)
-      .select(timestamp_seconds(lit(far)).as("event_time"),
-        lit(0.0).as("value")))) match {
-      case None =>
-        return ss.range(0).select(lit(java.sql.Date.valueOf("1970-01-01"))
-          .as("day"), lit(0.0).as("p50"), lit(0.0).as("p90"),
-          lit(0.0).as("p99"), lit(0L).as("n"))
-      case Some((dir2, late, far)) =>
-        val wq = Streams.windowQuantiles(
-          Streams.parquetStream(ss, dir2, ev, glob = Some("*.parquet")),
-          col("event_time"), col("value"), "1 day", "0 seconds",
-          probs = Seq(0.5, 0.9, 0.99), k = 1024)
-        val (sess, name) = runTwoBatches(wq, "append",
-          late.write.mode("append").parquet(dir2))
-        realWindows(sess.table(name), far)
-          .select(col("win_start").cast("date").as("day"),
-            col("p50"), col("p90"), col("p99"), col("n"))
-          .orderBy(col("day"))
-    }
-  }
+      .select(col("event_time"), col("value")),
+    Some(far => Seq(timestamp_seconds(lit(far)).as("event_time"),
+      lit(0.0).as("value"))),
+    src => Streams.windowQuantiles(src, col("event_time"), col("value"),
+      "1 day", "0 seconds", probs = Seq(0.5, 0.9, 0.99), k = 1024),
+    (out, far) => realWindows(out, far)
+      .select(col("win_start").cast("date").as("day"),
+        col("p50"), col("p90"), col("p99"), col("n"))
+      .orderBy(col("day")))
+
+  def windowQuantilesFromStreamQ(s: SparkSession, dir: String): DataFrame =
+    twoBatch(windowQuantiles, s, dir)
 
   val windowQuantilesFromStreamOracle: String =
     """SELECT CAST(date_trunc('day', ts) AS DATE) AS day,
@@ -469,6 +487,8 @@ trait StreamGatesFam {
       |WHERE ts IS NOT NULL AND value IS NOT NULL AND NOT isnan(value)
       |GROUP BY 1
       |ORDER BY day""".stripMargin
+
+  private val dedupKeys = Seq("user_id", "event_type")
 
   /** Watermark-bounded streaming dedup
     * ([[graft.streaming.Streams.dedupWithinWatermark]], the built-in
@@ -482,27 +502,19 @@ trait StreamGatesFam {
     * is arrival-order-dependent, the documented dedup contract); the
     * hash gate then fails if any key re-emits across the boundary.
     */
-  def dedupWatermarkFromStreamQ(s: SparkSession, dir: String): DataFrame = {
-    val ss = streamSession(s)
-    val ev = Streams.withEventTime(T.events(ss, dir))
+  private val dedupWatermark = Gate("dwm", col("event_time"), "append",
+    (ss, dir) => Streams.withEventTime(T.events(ss, dir))
       .filter(col("event_time").isNotNull)
-      .select(col("event_time"), col("user_id"), col("event_type"))
-    val streamDir = Engine.scratchPath("graft-dwm-stream", dir)
-    splitWithSentinel(ev, streamDir, None) match {
-      case None =>
-        ss.range(0).select(lit(0L).as("user_id"), lit("").as("event_type"))
-      case Some((dir2, late, _)) =>
-        val dd = Streams.dedupWithinWatermark(
-          Streams.parquetStream(ss, dir2, ev, glob = Some("*.parquet")),
-          keys = Seq("user_id", "event_type"), eventTime = "event_time",
-          delay = "90 days") // horizon > the 31-day corpus: never expires
-        val (sess, name) = runTwoBatches(dd, "append",
-          late.write.mode("append").parquet(dir2))
-        sess.table(name)
-          .select(col("user_id"), col("event_type"))
-          .orderBy(col("user_id"), col("event_type"))
-    }
-  }
+      .select(col("event_time"), col("user_id"), col("event_type")),
+    sentinel = None,
+    src => Streams.dedupWithinWatermark(src, keys = dedupKeys,
+      eventTime = "event_time",
+      delay = "90 days"), // horizon > the 31-day corpus: never expires
+    (out, _) => out.select(col("user_id"), col("event_type"))
+      .orderBy(col("user_id"), col("event_type")))
+
+  def dedupWatermarkFromStreamQ(s: SparkSession, dir: String): DataFrame =
+    twoBatch(dedupWatermark, s, dir)
 
   val dedupWatermarkFromStreamOracle: String =
     """SELECT DISTINCT user_id, event_type
@@ -526,7 +538,7 @@ trait StreamGatesFam {
     * turn the hash red (see [[runWithRestart]]).
     */
   def transitionsRestartQ(s: SparkSession, dir: String): DataFrame =
-    transitionsRestartImpl(s, dir, "restart", replay = false)
+    restart(transitions, s, dir, replay = false)(transitionsCut)
 
   /** [[transitionsRestartQ]] plus the CRASH-REPLAY window: after the
     * restarted incarnation commits batch 3, the checkpoint is rolled back
@@ -539,29 +551,16 @@ trait StreamGatesFam {
     * goes red (RestartGateSpec proves that failure shape directly).
     */
   def transitionsReplayQ(s: SparkSession, dir: String): DataFrame =
-    transitionsRestartImpl(s, dir, "replay", replay = true)
+    restart(transitions, s, dir, replay = true)(transitionsCut)
 
-  private def transitionsRestartImpl(s: SparkSession, dir: String,
-      tag: String, replay: Boolean): DataFrame = {
-    val ss = streamSession(s)
-    val ev = T.events(ss, dir).filter(col("ts").isNotNull)
-      .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-    val scratch = Engine.scratchPath(s"graft-transitions-$tag", dir)
-    val ckpt = Engine.scratchPath(s"graft-transitions-$tag-ck", dir)
-    val outDir = Engine.scratchPath(s"graft-transitions-$tag-out", dir)
-    val b = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
-    if (b.isNullAt(0))
-      return ss.range(0).select(lit("").as("from_et"), lit("").as("to_et"),
-        lit(0L).as("n"))
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    require(hi - lo >= 3,
-      s"degenerate restart split: time span ${hi - lo}")
+  // cut at the from-event of the in-session edge nearest the 2/3 point
+  // (pts >= lo+2 keeps all three terciles non-empty; ts > pts so a cut
+  // can fall strictly between the two events)
+  private def transitionsCut(ev: DataFrame, key: Column, lo: Long,
+      hi: Long): Seq[Long] = {
     val target = lo + 2 * ((hi - lo) / 3)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    // cut at the from-event of the in-session edge nearest the 2/3 point
-    // (pts >= lo+2 keeps all three terciles non-empty; ts > pts so a cut
-    // can fall strictly between the two events)
     val cutRow = ev
       .select(col("ts"), lag(col("ts"), 1).over(w).as("pts"))
       .filter(col("pts").isNotNull &&
@@ -573,20 +572,7 @@ trait StreamGatesFam {
     require(cutRow.nonEmpty,
       "no in-session edge available to span the restart cut — the " +
         "recovery gate would be vacuous")
-    val cut = cutRow(0).getLong(0)
-    val (mid, late) = cutSplit(ev, col("ts"), scratch, lo, cut)
-    def mk(sess: SparkSession): DataFrame =
-      Streams.transitionsIngest(
-        Streams.parquetStream(sess, scratch, ev, glob = Some("*.parquet")),
-        col("user_id"), col("ts"), col("event_type"), col("event_id"))
-        .toDF("user_id", "from_et", "to_et")
-    runWithRestart(s, mk, "update", ckpt, outDir,
-      mid.write.mode("append").parquet(scratch),
-      late.write.mode("append").parquet(scratch),
-      replayLastBatch = replay)
-      .groupBy(col("from_et"), col("to_et"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("from_et"), col("to_et"))
+    halfwayTo(lo, cutRow(0).getLong(0))
   }
 
   /** Watermarked WINDOWED-AGGREGATION state across a checkpoint restart —
@@ -605,7 +591,7 @@ trait StreamGatesFam {
     * all hash-red against the full-corpus oracle (reused VERBATIM).
     */
   def windowQuantilesRestartQ(s: SparkSession, dir: String): DataFrame =
-    windowQuantilesRestartImpl(s, dir, "restart", replay = false)
+    restart(windowQuantiles, s, dir, replay = false)(windowCut)
 
   /** [[windowQuantilesRestartQ]] plus the crash-replay window (the
     * [[transitionsReplayQ]] lifecycle applied to the WINDOWED-AGGREGATION
@@ -620,33 +606,18 @@ trait StreamGatesFam {
     * demonstrates exactly that under a bare append sink).
     */
   def windowQuantilesReplayQ(s: SparkSession, dir: String): DataFrame =
-    windowQuantilesRestartImpl(s, dir, "replay", replay = true)
+    restart(windowQuantiles, s, dir, replay = true)(windowCut)
 
-  private def windowQuantilesRestartImpl(s: SparkSession, dir: String,
-      tag: String, replay: Boolean): DataFrame = {
-    val ss = streamSession(s)
-    val ev = Streams.withEventTime(T.events(ss, dir))
-      .filter(col("event_time").isNotNull)
-      .select(col("event_time"), col("value"))
-    val scratch = Engine.scratchPath(s"graft-wq-$tag", dir)
-    val ckpt = Engine.scratchPath(s"graft-wq-$tag-ck", dir)
-    val outDir = Engine.scratchPath(s"graft-wq-$tag-out", dir)
-    val tsLong = col("event_time").cast("long") // epoch seconds
-    val b = ev.agg(min(tsLong).as("lo"), max(tsLong).as("hi")).head()
-    if (b.isNullAt(0))
-      return ss.range(0).select(lit(java.sql.Date.valueOf("1970-01-01"))
-        .as("day"), lit(0.0).as("p50"), lit(0.0).as("p90"),
-        lit(0.0).as("p99"), lit(0L).as("n"))
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    require(hi - lo >= 3, s"degenerate restart split: time span ${hi - lo}")
+  // cut AT an event that has a LATER same-day event, nearest the 2/3
+  // point — so a day window straddles the restart by construction (a
+  // blind tercile cut landed exactly on a day boundary at sf0.001 and
+  // tripped the vacuity guard); `key` is epoch seconds
+  private def windowCut(ev: DataFrame, key: Column, lo: Long,
+      hi: Long): Seq[Long] = {
     val target = lo + 2 * ((hi - lo) / 3)
-    // cut AT an event that has a LATER same-day event, nearest the 2/3
-    // point — so a day window straddles the restart by construction (a
-    // blind tercile cut landed exactly on a day boundary at sf0.001 and
-    // tripped the vacuity guard)
     val day = date_trunc("day", col("event_time"))
-    val dmax = ev.groupBy(day.as("d")).agg(max(tsLong).as("mx"))
-    val cutRow = ev.select(tsLong.as("t"), day.as("d"))
+    val dmax = ev.groupBy(day.as("d")).agg(max(key).as("mx"))
+    val cutRow = ev.select(key.as("t"), day.as("d"))
       .join(dmax, Seq("d"))
       .filter(col("t") >= lo + 2 && col("t") < col("mx"))
       .select(col("t"))
@@ -655,25 +626,7 @@ trait StreamGatesFam {
     require(cutRow.nonEmpty,
       "no day window can span the restart cut — the windowed-state " +
         "recovery gate would be vacuous")
-    val cut = cutRow(0).getLong(0)
-    val (mid, late) = cutSplit(ev, tsLong, scratch, lo, cut)
-    val far = sentinelHorizon(hi)
-    val sentinel = ss.range(1)
-      .select(timestamp_seconds(lit(far)).as("event_time"),
-        lit(0.0).as("value"))
-    def mk(sess: SparkSession): DataFrame =
-      Streams.windowQuantiles(
-        Streams.parquetStream(sess, scratch, ev, glob = Some("*.parquet")),
-        col("event_time"), col("value"), "1 day", "0 seconds",
-        probs = Seq(0.5, 0.9, 0.99), k = 1024)
-    realWindows(runWithRestart(s, mk, "append", ckpt, outDir,
-      mid.write.mode("append").parquet(scratch),
-      late.unionByName(sentinel).write.mode("append").parquet(scratch),
-      replayLastBatch = replay),
-      far)
-      .select(col("win_start").cast("date").as("day"),
-        col("p50"), col("p90"), col("p99"), col("n"))
-      .orderBy(col("day"))
+    halfwayTo(lo, cutRow(0).getLong(0))
   }
 
   /** Watermark-bounded streaming dedup ACROSS A CHECKPOINT RESTART: the
@@ -696,7 +649,7 @@ trait StreamGatesFam {
     * already arrived in the first tercile).
     */
   def dedupWatermarkRestartQ(s: SparkSession, dir: String): DataFrame =
-    dedupWatermarkRestartImpl(s, dir, "restart", replay = false)
+    restart(dedupWatermark, s, dir, replay = false)(dedupCut)
 
   /** [[dedupWatermarkRestartQ]] plus the crash-replay window — the third
     * state class under the full crash lifecycle (keyed state =
@@ -709,33 +662,16 @@ trait StreamGatesFam {
     * otherwise, as RestartGateSpec shows for the bare append sink).
     */
   def dedupWatermarkReplayQ(s: SparkSession, dir: String): DataFrame =
-    dedupWatermarkRestartImpl(s, dir, "replay", replay = true)
+    restart(dedupWatermark, s, dir, replay = true)(dedupCut)
 
-  private def dedupWatermarkRestartImpl(s: SparkSession, dir: String,
-      tag: String, replay: Boolean): DataFrame = {
-    val ss = streamSession(s)
-    val ev = Streams.withEventTime(T.events(ss, dir))
-      .filter(col("event_time").isNotNull)
-      .select(col("event_time"), col("user_id"), col("event_type"))
-    val scratch = Engine.scratchPath(s"graft-dwm-$tag", dir)
-    val ckpt = Engine.scratchPath(s"graft-dwm-$tag-ck", dir)
-    val outDir = Engine.scratchPath(s"graft-dwm-$tag-out", dir)
-    val tsLong = col("event_time").cast("long") // epoch seconds
-    val keys = Seq("user_id", "event_type")
-    val b = ev.agg(min(tsLong).as("lo"), max(tsLong).as("hi")).head()
-    if (b.isNullAt(0))
-      return ss.range(0).select(lit(0L).as("user_id"),
-        lit("").as("event_type"))
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    require(hi - lo >= 3,
-      s"degenerate restart split: time span ${hi - lo} cannot cut three " +
-        "non-empty micro-batches")
-    // c1 sits just before the INTERIOR first arrival nearest the
-    // midpoint, so that key's first row opens micro-batch 2 (emission by
-    // construction); c2 (the restart boundary) keeps the blind 2/3 point
-    // when it is at or past that arrival, clamped inside the span
+  // c1 sits just before the INTERIOR first arrival nearest the
+  // midpoint, so that key's first row opens micro-batch 2 (emission by
+  // construction); c2 (the restart boundary) keeps the blind 2/3 point
+  // when it is at or past that arrival, clamped inside the span
+  private def dedupCut(ev: DataFrame, key: Column, lo: Long,
+      hi: Long): Seq[Long] = {
     val target = lo + (hi - lo) / 2
-    val fRow = ev.groupBy(keys.map(col): _*).agg(min(tsLong).as("f"))
+    val fRow = ev.groupBy(dedupKeys.map(col): _*).agg(min(key).as("f"))
       .filter(col("f") > lo && col("f") < hi)
       .select(col("f"))
       .orderBy(abs(col("f") - lit(target)), col("f"))
@@ -745,31 +681,18 @@ trait StreamGatesFam {
         "middle micro-batch can emit, and a fully wiped checkpoint " +
         "would be UNDETECTABLE under the batchId-idempotent sink")
     val fstar = fRow(0).getLong(0)
-    val c1 = fstar - 1
     val c2 = math.min(math.max(fstar, lo + 2 * ((hi - lo) / 3)), hi - 1)
-    ev.filter(tsLong <= c1).write.mode("overwrite").parquet(scratch)
-    val mid = ev.filter(tsLong > c1 && tsLong <= c2)
-    val late = ev.filter(tsLong > c2)
     // non-vacuity: some key must occur on BOTH sides of the restart
     // cut, or suppression-by-recovered-state is never exercised
-    val crossing = ev.filter(tsLong <= c2).select(keys.map(col): _*)
+    val crossing = ev.filter(key <= c2).select(dedupKeys.map(col): _*)
       .distinct()
-      .join(late.select(keys.map(col): _*).distinct(), keys, "inner")
+      .join(ev.filter(key > c2).select(dedupKeys.map(col): _*).distinct(),
+        dedupKeys, "inner")
       .count()
     require(crossing > 0,
       "no dedup key spans the restart cut — the recovery gate would " +
         "be vacuous")
-    def mk(sess: SparkSession): DataFrame =
-      Streams.dedupWithinWatermark(
-        Streams.parquetStream(sess, scratch, ev, glob = Some("*.parquet")),
-        keys = keys, eventTime = "event_time",
-        delay = "90 days") // horizon > the corpus span: never expires
-    runWithRestart(s, mk, "append", ckpt, outDir,
-      mid.write.mode("append").parquet(scratch),
-      late.write.mode("append").parquet(scratch),
-      replayLastBatch = replay)
-      .select(col("user_id"), col("event_type"))
-      .orderBy(col("user_id"), col("event_type"))
+    Seq(fstar - 1, c2)
   }
 }
 

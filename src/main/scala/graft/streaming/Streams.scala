@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured Streaming restatement of the reference's micro-batch layer.
   *
@@ -83,10 +82,6 @@ object Streams {
         }
         ()
       }
-
-    def ingest(stream: DataFrame)
-        : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-      stream.writeStream.foreachBatch(handler)
   }
 
   /** Streaming token-unigram-count maintenance: each micro-batch's
@@ -432,10 +427,9 @@ object Streams {
     * pass their parent dir + a glob filter.
     */
   def parquetStream(spark: SparkSession, dir: String, schemaFrom: DataFrame,
-      glob: Option[String] = None): DataFrame = {
-    val r = spark.readStream.schema(schemaFrom.schema)
-    glob.fold(r)(g => r.option("pathGlobFilter", g)).parquet(dir)
-  }
+      glob: String): DataFrame =
+    spark.readStream.schema(schemaFrom.schema)
+      .option("pathGlobFilter", glob).parquet(dir)
 
   /** Streaming pairwise-preference aggregation: fold each micro-batch of
     * comparison ballots into a per-item (wins, n) count state — the
@@ -493,21 +487,5 @@ object Streams {
     /** Training pairs derived from the current counts. */
     def pairs(minMargin: Double = 0.0): DataFrame =
       graft.operators.Preference.dpoFromCounts(current, minMargin)
-  }
-
-  /** Run a streaming DataFrame into an in-memory sink until exhausted;
-    * returns the result table name. Complete mode: deterministic final state
-    * for finite inputs regardless of micro-batch boundaries.
-    */
-  def drainToMemory(df: DataFrame, name: String,
-      outputMode: String = "complete"): StreamingQuery = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode(outputMode)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    q
   }
 }

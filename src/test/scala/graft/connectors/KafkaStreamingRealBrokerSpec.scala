@@ -63,8 +63,7 @@ class KafkaStreamingRealBrokerSpec extends SparkSpec {
   test("dedupWithinWatermark (a stream-gate handler, unchanged) over a " +
       "real Kafka readStream lands on the batch DISTINCT answer") {
     val (host, port, topic) = enabled()
-    val ss = graft.GraftSession.configure(spark.newSession())
-    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    val ss = graft.queries.StreamGates.streamSession(spark)
     def kafkaBatchKeys(): Set[String] =
       ss.read.format("kafka")
         .option("kafka.bootstrap.servers", s"$host:$port")
@@ -130,8 +129,7 @@ class KafkaStreamingRealBrokerSpec extends SparkSpec {
     // realized on the Kafka source: available-now snapshot, dedup
     // handler, batchId-idempotent sink, PERSISTENT checkpoint
     def incarnation(): Unit = {
-      val ss = graft.GraftSession.configure(spark.newSession())
-      ss.conf.set("spark.sql.shuffle.partitions", "4")
+      val ss = graft.queries.StreamGates.streamSession(spark)
       val stream = ss.readStream.format("kafka")
         .option("kafka.bootstrap.servers", servers)
         .option("subscribe", topic)

@@ -56,27 +56,29 @@ class RestartGateSpec extends SparkSpec {
     val out = java.nio.file.Files
       .createTempDirectory(s"graft-rg-$tag-out").toString + "/out"
     val ev = mkCorpus(spark)
-    val sec = col("event_time").cast("long")
-    ev.filter(sec < 4000L).write.mode("overwrite").parquet(scratch)
+    // batch 1: secs < 4000; batch 2: keys 0-9's FIRST duplicate
+    // (suppressed by in-query state, so the checkpoint the restart
+    // resumes from covers two data-carrying batches) plus keys 10-11's
+    // first arrival (emitted), secs < 5000; batch 3: the late duplicates
+    // of every key
+    val (later, _) = StreamGates.timeSplit(ev, col("event_time").cast("long"),
+      scratch, 3, None)((_, _) => Seq(3999L, 4999L))
     def mk(sess: SparkSession): DataFrame =
       Streams.dedupWithinWatermark(
-        Streams.parquetStream(sess, scratch, ev, glob = Some("*.parquet")),
+        Streams.parquetStream(sess, scratch, ev, "*.parquet"),
         keys = Seq("k"), eventTime = "event_time", delay = "3650 days")
     val fsu = new graft.engine.FsUtils(spark)
+    val incarnations = new java.util.concurrent.atomic.AtomicInteger(0)
+    // the sabotaged run wipes the checkpoint as the second incarnation
+    // starts — the new query starts from scratch and re-processes
+    // everything with fresh state
+    def tuneAndSabotage(ss: SparkSession): Unit = {
+      tune(ss)
+      if (incarnations.incrementAndGet() == 2 && sabotage) fsu.rm(ckpt)
+    }
     val result = StreamGates.runWithRestart(spark, mk, "append", ckpt, out,
-      // batch 2: keys 0-9's FIRST duplicate (suppressed by in-query
-      // state, so the checkpoint the restart resumes from covers two
-      // data-carrying batches) plus keys 10-11's first arrival (emitted)
-      ev.filter(sec >= 4000L && sec < 5000L).write.mode("append")
-        .parquet(scratch),
-      {
-        // batch 3: the late duplicates of every key...
-        ev.filter(sec >= 5000L).write.mode("append").parquet(scratch)
-        // ...and, in the sabotaged run, a wiped checkpoint between the
-        // incarnations — the new query starts from scratch and
-        // re-processes everything with fresh state
-        if (sabotage) fsu.rm(ckpt)
-      }, tune, replayLastBatch = replay, mkSink = mkSink)
+      scratch, later, tuneAndSabotage, replayLastBatch = replay,
+      mkSink = mkSink)
     lastCkpt = ckpt
     result.select(col("k")).as[Long].collect().toSeq
   }
@@ -164,18 +166,15 @@ class RestartGateSpec extends SparkSpec {
       (far, 0.0)) // sentinel -> batch 3: closes every real window
     val ev = rows.toDF("sec", "value")
       .select(timestamp_seconds(col("sec")).as("event_time"), col("value"))
-    val sec = col("event_time").cast("long")
-    ev.filter(sec < day).write.mode("overwrite").parquet(scratch)
+    val (later, _) = StreamGates.timeSplit(ev, col("event_time").cast("long"),
+      scratch, 3, None)((_, _) => Seq(day - 1, day + 49999L))
     def mk(sess: SparkSession): DataFrame =
       Streams.windowQuantiles(
-        Streams.parquetStream(sess, scratch, ev, glob = Some("*.parquet")),
+        Streams.parquetStream(sess, scratch, ev, "*.parquet"),
         col("event_time"), col("value"), "1 day", "0 seconds",
         probs = Seq(0.5), k = 1024)
     val result = StreamGates.runWithRestart(spark, mk, "append", ckpt, out,
-      ev.filter(sec >= day && sec < day + 50000L).write.mode("append")
-        .parquet(scratch),
-      ev.filter(sec >= day + 50000L).write.mode("append").parquet(scratch),
-      replayLastBatch = replay, mkSink = mkSink)
+      scratch, later, replayLastBatch = replay, mkSink = mkSink)
     result
       .filter(col("win_start") < timestamp_seconds(lit(far - day)))
       .select(col("win_start").cast("date").as("d"), col("n"))

@@ -2,18 +2,21 @@
 """List main-code members that nothing outside their own declaration uses.
 
 A member is a `def`, `val`, `var`, `object`, `class`, `trait` or `type`
-declared at member indent (column 0 or 2) in a `src/main` Scala file
-outside `queries/` (the registry, which is reached by name). It is
+declared at member indent (column 0 or 2, or 4 for the members of a
+nested class) in a `src/main` Scala file outside `queries/` (the
+registry, which is reached by name). It is
 listed when its name has no reference, comments stripped, anywhere in
 `src/main` or `perfbench/src` apart from the line that declares it.
 Such a member is reached from specs only, or from nothing at all.
 
-`main` methods, top-level objects that declare one, and `override`s
-are skipped: they are reached from the JVM and through their parent
-type. A name shared by two declarations counts each as a reference to
-the other, so overloads and common names (`apply`, `load`) never show;
-nor does a name a string literal mentions. The list errs toward missing
-a member, not toward naming a used one.
+`main` methods, top-level objects that declare one, `override`s and
+`implicit`s are skipped: they are reached from the JVM, through their
+parent type and by type. Column 4 also holds the locals of top-level
+methods; they list only when nothing uses them. A name shared by two
+declarations counts each as a reference to the other, so overloads and
+common names (`apply`, `load`) never show; nor does a name a string
+literal mentions. The list errs toward missing a member, not toward
+naming a used one.
 
 With `--options` it lists parameters instead: each defaulted parameter
 of a public `def` or `class` declared in a `src/main` file outside
@@ -30,7 +33,7 @@ import re
 import sys
 
 DECL = re.compile(
-    r"^( {0,2})(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?|final|"
+    r"^( {0,2}| {4})(?:(?:private(?:\[\w+\])?|protected(?:\[\w+\])?|final|"
     r"implicit|lazy|case|sealed|abstract|override)\s+)*"
     r"(def|val|var|object|class|trait|type)\s+([A-Za-z_][A-Za-z0-9_]*)")
 IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
@@ -267,7 +270,8 @@ def main():
                 counts[name] = counts.get(name, 0) + 1
             m = DECL.match(line)
             if (m and rel.startswith("src/main/") and "/queries/" not in rel
-                    and m.group(3) != "main" and "override" not in line[:m.start(2)]
+                    and m.group(3) != "main"
+                    and not re.search(r"\b(override|implicit)\b", line[:m.start(2)])
                     and not (has_main and m.group(1) == "" and m.group(2) == "object")):
                 decls.append((rel, lineno, m.group(2), m.group(3), line))
 
