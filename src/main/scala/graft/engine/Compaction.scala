@@ -17,26 +17,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Compaction {
 
-  /** Rewrites `inDir` (parquet) into `outDir` as size-targeted files;
-    * returns the file count written. Reads happen once; the only shuffle is
-    * the repartition to the target count.
-    */
-  def compactParquet(spark: SparkSession, inDir: String, outDir: String,
-      targetFileBytes: Long = 128L * 1024 * 1024,
-      sortCols: Seq[String] = Nil,
-      codec: String = "snappy"): Int =
-    compactCore(spark, inDir, outDir, targetFileBytes, sortCols, codec, Nil)
-
-  /** [[compactParquet]] for a batchId-idempotent STREAMING sink output
-    * (`outDir/batch_id=<id>/part-*.parquet`, the shape every
-    * foreachBatch parquet sink in this engine writes — see
-    * `StreamGatesFam.idempotentSink`): a long-running ingest accretes one
-    * small file set per micro-batch, and this is the documented
-    * post-ingest step that folds them into size-targeted files. The
-    * synthetic `batch_id` partition column is DROPPED — it is commit
-    * bookkeeping, not data. Run it at ingest-cycle boundaries, never
-    * concurrently with an active writer: compaction reads a snapshot of
-    * the batch directories, and a replayed batch overwriting a directory
+  /** Rewrites a batchId-idempotent STREAMING sink output
+    * (`inDir/batch_id=<id>/part-*.parquet`, the shape every foreachBatch
+    * parquet sink in this engine writes — see
+    * `StreamGatesFam.idempotentSink`) into `outDir` as size-targeted
+    * files; returns the file count written. A long-running ingest accretes
+    * one small file set per micro-batch, and this is the documented
+    * post-ingest step that folds them. Reads happen once; the only
+    * shuffle is the repartition to the target count. The synthetic
+    * `batch_id` partition column is DROPPED — it is commit bookkeeping,
+    * not data. Run it at ingest-cycle boundaries, never concurrently with
+    * an active writer: compaction reads a snapshot of the batch
+    * directories, and a replayed batch overwriting a directory
     * mid-compaction would be double-counted or lost. The compacted copy
     * is a NEW directory — the live sink dir (and its replay idempotence)
     * stays untouched.
@@ -44,19 +36,13 @@ object Compaction {
   def compactStreamOutput(spark: SparkSession, inDir: String, outDir: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
       sortCols: Seq[String] = Nil,
-      codec: String = "snappy"): Int =
-    compactCore(spark, inDir, outDir, targetFileBytes, sortCols, codec,
-      Seq("batch_id"))
-
-  private def compactCore(spark: SparkSession, inDir: String, outDir: String,
-      targetFileBytes: Long, sortCols: Seq[String], codec: String,
-      dropCols: Seq[String]): Int = {
+      codec: String = "snappy"): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val path = new Path(inDir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(path).getLength
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    val df = dropCols.foldLeft(spark.read.parquet(inDir))(_.drop(_))
+    val df = spark.read.parquet(inDir).drop("batch_id")
     val arranged =
       if (sortCols.isEmpty) df.repartition(nFiles)
       else df.repartition(nFiles)

@@ -7,33 +7,6 @@ import graft.SparkSpec
 class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
-  test("compactParquet collapses many small files into size-targeted ones") {
-    val in = Files.createTempDirectory("graft-compact-in").toString
-    val out = Files.createTempDirectory("graft-compact-out").toString
-    (1 to 2000).map(i => (i.toLong, s"payload-$i"))
-      .toDF("id", "v").repartition(20)
-      .write.mode("overwrite").parquet(in)
-    def parquetFiles(dir: String) =
-      new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(parquetFiles(in) === 20)
-
-    val n = Compaction.compactParquet(spark, in, out,
-      targetFileBytes = 1L << 30) // everything fits one file
-    assert(n === 1)
-    assert(parquetFiles(out) === 1)
-    assert(spark.read.parquet(out).count() === 2000)
-
-    // a small target yields multiple files, rows preserved
-    val out2 = Files.createTempDirectory("graft-compact-out2").toString
-    val n2 = Compaction.compactParquet(spark, in, out2,
-      targetFileBytes = 8 * 1024, sortCols = Seq("id"))
-    assert(n2 > 1)
-    assert(parquetFiles(out2) === n2)
-    val back = spark.read.parquet(out2)
-    assert(back.count() === 2000)
-    assert(back.select("id").distinct().count() === 2000)
-  }
-
   test("compactStreamOutput folds a multi-incarnation batch_id-sink " +
       "directory into size-targeted files, drops the synthetic batch_id " +
       "bookkeeping column, and leaves the live sink dir untouched") {
@@ -60,6 +33,19 @@ class CompactionSpec extends SparkSpec {
     assert(!back.columns.contains("batch_id"))
     assert(back.count() === 600)
     assert(back.filter(col("id") < 0).count() === 0)
+    // a small target yields multiple files, rows preserved
+    val out2 = Files.createTempDirectory("graft-compact-sout2").toString
+    val n2 = Compaction.compactStreamOutput(spark, sinkDir, out2,
+      targetFileBytes = 2 * 1024, sortCols = Seq("id"))
+    assert(n2 > 1)
+    assert(parquetFiles(out2) === n2)
+    val back2 = spark.read.parquet(out2)
+    assert(back2.count() === 600)
+    assert(back2.select("id").distinct().count() === 600)
+    new java.io.File(out2).listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      val ids = spark.read.parquet(f.getPath).select("id").as[Long].collect().toSeq
+      assert(ids === ids.sorted, f.getName)
+    }
     // the live sink dir keeps its batch layout (replay idempotence intact)
     assert(new java.io.File(sinkDir).listFiles()
       .count(_.getName.startsWith("batch_id=")) === 3)

@@ -43,8 +43,8 @@ class RunnerSpec extends SparkSpec {
   test("a lookup on an unchanged journal and a save start no Spark job") {
     val j = new Journal(spark, tmpDir())
     j.save(ExecutionRecord("jobA", 100L, 110L, "r1", "SUCCEED"))
-    // the first lookup seeds the index with one read of the directory
-    assert(jobsStartedBy(assert(j.lastExecution("jobA").get.startedAt === 100L)) > 0)
+    // the first lookup seeds the index, reading the files on the driver
+    assert(jobsStartedBy(assert(j.lastExecution("jobA").get.startedAt === 100L)) === 0)
     val jobs = jobsStartedBy {
       assert(j.lastExecution("jobA").get.startedAt === 100L)
       j.save(ExecutionRecord("jobA", 200L, 220L, "r2", "SUCCEED"))
@@ -286,15 +286,62 @@ class RunnerSpec extends SparkSpec {
     assert(dataFiles(other).size === 1)
   }
 
+  test("a compaction starts no Spark job and leaves no staging or hidden " +
+      "file") {
+    val dir = fullJournal()
+    val j = new Journal(spark, dir)
+    val rec = ExecutionRecord("q", 5000L, 5001L, "ok", "SUCCEED")
+    assert(jobsStartedBy { assert(j.lastExecution("p3").isDefined); j.save(rec) } === 0)
+    val rows = spark.read.parquet(dir).count()
+    assert(rows === Journal.CompactAt + 1L)
+    // past the constant: this lookup compacts
+    assert(jobsStartedBy(assert(j.lastExecution("q") === Some(rec))) === 0)
+    assert(dataFiles(dir).size === 1)
+    assert(!new File(s"$dir/_compacting").exists())
+    assert(!new File(dir).list().exists(_.contains(".tmp-")), new File(dir).list().toSeq)
+    assert(spark.read.parquet(dir).count() === rows)
+  }
+
+  test("a reseed reads a null result or status as null, as Spark does") {
+    val dir = tmpDir()
+    val spark1 = ExecutionRecord("jobS", 100L, 110L, null, "SUCCEED")
+    val spark2 = ExecutionRecord("jobT", 100L, 110L, "r", null)
+    Seq(spark1, spark2).toDS().write.mode(SaveMode.Append).parquet(dir)
+    val saved = ExecutionRecord("jobN", 200L, 210L, null, null)
+    new Journal(spark, dir).save(saved)
+    val fresh = new Journal(spark, dir)
+    assert(Seq("jobS", "jobT", "jobN").map(fresh.lastExecution) ===
+      Seq(Some(spark1), Some(spark2), Some(saved)))
+    assert(spark.read.parquet(dir).as[ExecutionRecord].collect().toSet ===
+      Set(spark1, spark2, saved))
+  }
+
+  test("a startedAt tie returns one fixed record, whatever the file or " +
+      "save order") {
+    // the later of a tie: the greater finishedAt, then status, then result
+    val won = ExecutionRecord("jobT", 100L, 120L, "a", "SUCCEED")
+    val tied = Seq(won, ExecutionRecord("jobT", 100L, 110L, "b", "SUCCEED"),
+      ExecutionRecord("jobT", 100L, 120L, "c", "FAILED"),
+      ExecutionRecord("jobT", 100L, 120L, null, "SUCCEED"))
+    tied.permutations.foreach { order =>
+      val dir = tmpDir()
+      val live = new Journal(spark, dir)
+      assert(live.lastExecution("jobT").isEmpty) // seeded: saves fold into the index
+      order.foreach(live.save)
+      assert(live.lastExecution("jobT") === Some(won), order)
+      assert(new Journal(spark, dir).lastExecution("jobT") === Some(won), order)
+    }
+  }
+
   test("an interrupted compaction (copy landed, originals kept) gives the " +
       "same answers") {
     val dir = tmpDir()
     val j = new Journal(spark, dir)
     for (t <- 0L until 20L) j.save(ExecutionRecord(s"p${t % 3}", t, t + 1, "ok", "SUCCEED"))
     val before = paths.map(j.lastExecution)
-    val staging = s"$dir/_compacting"
-    Compaction.compactParquet(spark, dir, staging)
-    dataFiles(staging).foreach(f => Files.move(f.toPath, Paths.get(dir, f.getName)))
+    val landed = tmpDir()
+    spark.read.parquet(dir).coalesce(1).write.parquet(landed)
+    dataFiles(landed).foreach(f => Files.move(f.toPath, Paths.get(dir, f.getName)))
     assert(dataFiles(dir).size === 21)
     assert(spark.read.parquet(dir).count() === 40L)
     assert(paths.map(j.lastExecution) === before)

@@ -58,6 +58,31 @@ class StreamDriverSpec extends SparkSpec {
     } finally Thread.interrupted() // never leak the flag into later specs
   }
 
+  test("streaming_window_counts leaves no memory-sink view in the " +
+      "caller's session") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-swc").toString
+    def at(day: Int, hour: Int) =
+      java.sql.Timestamp.valueOf(f"2024-01-0$day%d $hour%02d:00:00")
+    Seq((1L, at(1, 10), 7L, "view", 1.0, "a"), (2L, at(1, 12), 8L, "click", 2.0, "b"),
+      (3L, at(1, 14), 9L, "view", 1.0, "c"), (4L, at(2, 11), 7L, "view", 1.0, "d"),
+      (5L, at(3, 13), 9L, "click", 1.0, "e"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .coalesce(1).write.parquet(s"$dir/written")
+    // the stream reads the one file named events.parquet, as the test tables are laid out
+    val part = new java.io.File(s"$dir/written").listFiles().find(_.getName.startsWith("part-")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(dir, "events.parquet"))
+    val s = graft.GraftSession.configure(spark.newSession())
+    def day(d: Int) = java.sql.Date.valueOf(s"2024-01-0$d")
+    val expected = Seq((day(1), "click", 1L), (day(1), "view", 2L),
+      (day(2), "view", 1L), (day(3), "click", 1L))
+    (1 to 3).foreach { _ =>
+      assert(Engine.streamingWindowCounts(s, dir)
+        .as[(java.sql.Date, String, Long)].collect().toSeq === expected)
+    }
+    val views = s.catalog.listTables().collect().map(_.name)
+    assert(!views.exists(_.startsWith("graft_stream_")), views.toSeq)
+  }
+
   test("dialog_from_stream over a one-timestamp events table fails with " +
       "the degenerate-split error instead of passing over one batch") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dialog-1ts")
