@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.queries.T
 
 /** Scale-growth stress harness for the dedup/similarity family: the sf0.1
   * tables are replicated `mult`× with deterministic per-replica
@@ -315,8 +316,8 @@ object Stress {
     // generate (idempotent: reuse if the directory already exists)
     val marker = new java.io.File(s"$outDir/_DONE")
     if (!marker.exists()) {
-      val docs = spark.read.parquet(s"$baseDir/documents.parquet")
-      val embs = spark.read.parquet(s"$baseDir/embeddings.parquet")
+      val docs = T(spark, baseDir, "documents")
+      val embs = T(spark, baseDir, "embeddings")
       scaleDocs(docs, mult)
         .write.mode("overwrite").parquet(s"$outDir/documents.parquet")
       scaleEmbeddings(embs, mult)
@@ -331,14 +332,14 @@ object Stress {
     // EXISTING scaled dirs too (separate marker keeps old dirs reusable)
     val evMarker = new java.io.File(s"$outDir/_DONE_EVENTS")
     if (!evMarker.exists()) {
-      scaleEvents(spark.read.parquet(s"$baseDir/events.parquet"), mult)
+      scaleEvents(T(spark, baseDir, "events"), mult)
         .write.mode("overwrite").parquet(s"$outDir/events.parquet")
       evMarker.getParentFile.mkdirs()
       evMarker.createNewFile()
       ()
     }
 
-    val rows = spark.read.parquet(s"$outDir/documents.parquet").count()
+    val rows = T(spark, outDir, "documents").count()
 
     def timeOnce(name: String): Double = {
       val fn = SparkEntry.queries(name)

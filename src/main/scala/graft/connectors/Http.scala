@@ -5,7 +5,7 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,6 +30,14 @@ import org.apache.spark.sql.types._
   * At-least-once caveat for effectful calls (POST): Spark retries failed
   * tasks, so side effects may repeat — same contract as the reference, which
   * runs under Hive task retries; disable speculation on sink stages.
+  *
+  * [[Http.withGet]]/[[Http.withPost]] call once per row per materialization
+  * of the returned frame: their output goes through [[PartitionAppend]],
+  * whose lazy local checkpoint lets a downstream sort's sampling job and
+  * its shuffle read one set of responses. The scalar `http_get` /
+  * `http_post` SQL functions are expressions and get no such checkpoint:
+  * under a downstream range-partitioned sort they call again in the
+  * second job.
   */
 /** `struct<code, headers, content>` result row; error rows are
   * `(-1, null, message)` (reference: hive-udfs/.../http/HttpHelper.java:41-59).
@@ -210,8 +218,9 @@ object Http {
   }
 
   /** Appends `resp: struct<code,headers,content>` with the GET response
-    * for `url` evaluated per row. mapPartitions-based: rows stream through one
-    * shared client, no collect, scales with the number of partitions.
+    * for `url` evaluated per row, once per row per materialization
+    * ([[PartitionAppend]]): rows stream through one shared client, no
+    * collect, scales with the number of partitions.
     */
   def withGet(df: DataFrame, url: Column, timeoutMs: Int = DefaultTimeoutMs,
       headers: Map[String, String] = Map.empty,
@@ -244,10 +253,7 @@ object Http {
     // cost that is noise next to per-row network round-trips.
     val par = df.sparkSession.sparkContext.defaultParallelism
     val widened = df.repartition(math.max(par, df.rdd.getNumPartitions))
-    val in = widened.withColumn("__graft_url", url).withColumn("__graft_body", body)
-    val n = in.schema.size
-    val outSchema = StructType(df.schema.fields :+ StructField("resp", resultType))
-    in.mapPartitions { rows =>
+    PartitionAppend(widened, Seq(url, body), StructField("resp", resultType)) { () =>
       // per-PARTITION limiter: cluster-wide rate = rps x partitions
       val limiter =
         if (maxRequestsPerSecond > 0) Some(new RateLimiter(maxRequestsPerSecond))
@@ -257,15 +263,13 @@ object Http {
       // (that would multiply the configured rate exactly while the
       // endpoint is signaling overload)
       val gate: () => Unit = () => limiter.foreach(_.acquire())
-      rows.map { r =>
-        val u = r.getString(n - 2)
-        val b = if (post) Option(r.getString(n - 1)) else None
-        val res =
-          if (u == null) Row(-1, null, "null url")
-          else fetch(u, timeoutMs, headers,
-            b.orElse(Some("")).filter(_ => post), retry, gate)
-        Row.fromSeq(r.toSeq.dropRight(2) :+ res)
-      }
-    }(Encoders.row(outSchema))
+      (args => {
+        val u = args(0).asInstanceOf[String]
+        val postBody =
+          if (post) Some(Option(args(1).asInstanceOf[String]).getOrElse("")) else None
+        if (u == null) Row(-1, null, "null url")
+        else fetch(u, timeoutMs, headers, postBody, retry, gate)
+      }, () => ())
+    }
   }
 }

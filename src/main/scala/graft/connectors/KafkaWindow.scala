@@ -158,6 +158,8 @@ object KafkaWindow {
     *
     * Buffers one partition's records in memory — size output partitions
     * accordingly (the reference's transactional sends batch the same way).
+    * Like [[push]], commits once per partition per materialization: the
+    * output is a lazy local checkpoint ([[PartitionAppend.once]]).
     */
   def pushTransactional(df: DataFrame, store: TopicStore.Factory, topic: Column,
       ct: Column, key: Column, value: Column, ack: String = "ack"): DataFrame = {
@@ -165,7 +167,7 @@ object KafkaWindow {
       .withColumn("__k", key).withColumn("__v", value)
     val n = in.schema.size
     val outSchema = StructType(df.schema.fields :+ StructField(ack, recordType))
-    in.mapPartitions { rows =>
+    PartitionAppend.once(in.mapPartitions { rows =>
       val buffered = rows.map { r =>
         val t = String.valueOf(r.get(n - 4))
         val ctMs = r.get(n - 3) match { case null => 0L; case x: Number => x.longValue() }
@@ -177,7 +179,7 @@ object KafkaWindow {
       buffered.iterator.map { case (orig, (t, c, k, v)) =>
         org.apache.spark.sql.Row.fromSeq(orig :+ org.apache.spark.sql.Row(t, c, k, v))
       }
-    }(org.apache.spark.sql.Encoders.row(outSchema))
+    }(org.apache.spark.sql.Encoders.row(outSchema)))
   }
 
   /** Read a stand-in topic back as a message-log DataFrame (partition 0). */

@@ -546,10 +546,12 @@ object KafkaWire {
     * verify its correlation id. Returns a Reader positioned at the body.
     */
   def roundTrip(socket: Socket, payload: Array[Byte], correlationId: Int): Reader = {
-    val out = new DataOutputStream(socket.getOutputStream)
-    out.writeInt(payload.length)
-    out.write(payload)
-    out.flush()
+    // one write per frame: a size prefix sent alone waits out Nagle plus
+    // the broker's delayed ACK (~40 ms) on a socket without TCP_NODELAY
+    val frame = java.nio.ByteBuffer.allocate(4 + payload.length)
+      .putInt(payload.length).put(payload).array()
+    socket.getOutputStream.write(frame)
+    socket.getOutputStream.flush()
     val in = new DataInputStream(socket.getInputStream)
     val size = in.readInt()
     require(size >= 4 && size <= 64 * 1024 * 1024, s"bad kafka frame size $size")
@@ -595,6 +597,9 @@ class KafkaWireClient(bootstrapHost: String, bootstrapPort: Int,
     try {
       plain.connect(new java.net.InetSocketAddress(host, port), timeoutMs)
       plain.setSoTimeout(timeoutMs)
+      // request/response on one connection: no Nagle wait (Kafka's own
+      // client sets it too)
+      plain.setTcpNoDelay(true)
       tls.foreach { ctx =>
         val ss = ctx.getSocketFactory
           .createSocket(plain, host, port, true)

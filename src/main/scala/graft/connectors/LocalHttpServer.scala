@@ -35,6 +35,10 @@ object LocalHttpServer {
   /** Base URL, e.g. `http://127.0.0.1:PORT` — starts the server on first use. */
   lazy val base: String = synchronized {
     if (server == null) {
+      // the JDK server writes headers and body as two segments; without
+      // TCP_NODELAY Nagle holds the body until the client's delayed ACK,
+      // ~40 ms per request. Read once, when the server classes load.
+      System.setProperty("sun.net.httpserver.nodelay", "true")
       server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
       server.setExecutor(Executors.newFixedThreadPool(8, r => {
         val t = new Thread(r, "graft-local-http"); t.setDaemon(true); t

@@ -120,21 +120,19 @@ object Connectors {
       lit("other"), lit("NX"), lit(null).cast("string"), lit(0L), factory, ret = "nx2")
     val afterXx = Kv.withSet5(afterNx2, concat(lit("nk:"), col("n_nationkey")),
       upper(col("n_name")), lit("XX"), lit(null).cast("string"), lit(0L), factory, ret = "xx1")
-    // no orderBy here: range partitioning SAMPLES its input, which would run
-    // the effectful NX/XX chain twice (the second pass sees keys already
-    // created and flips nx1 to null) — the driver's compare is
-    // order-insensitive, so the set-semantics query returns unsorted
     Kv.withMGet(afterXx,
         array(concat(lit("nk:"), col("n_nationkey")), lit("nk:missing")), factory, ret = "vals")
       .select(col("n_nationkey"), col("nx1"), col("nx2"), col("xx1"),
         element_at(col("vals"), 1).as("final_val"),
         element_at(col("vals"), 2).as("missing_val"))
+      .orderBy(col("n_nationkey"))
   }
 
   val kvSetSemanticsOracle: String =
     """SELECT n_nationkey, 'OK' AS nx1, CAST(NULL AS VARCHAR) AS nx2, 'OK' AS xx1,
       |  upper(n_name) AS final_val, CAST(NULL AS VARCHAR) AS missing_val
-      |FROM nation""".stripMargin
+      |FROM nation
+      |ORDER BY n_nationkey""".stripMargin
 
   /** jd_set2 + jd_keys + jd_del lifecycle: create via per-row SET, list with
     * a glob, delete a slice (observing per-row removal counts), list what's

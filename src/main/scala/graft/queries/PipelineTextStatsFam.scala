@@ -1183,7 +1183,7 @@ trait PipelineTextStatsFam extends PipelineMixtureSketchFam {
     */
   def corpusManifestQ(s: SparkSession, dir: String): DataFrame =
     graft.operators.Diagnostics.corpusManifest(
-        s.read.parquet(s"$dir/documents.parquet"), col("text"))
+        T(s, dir, "documents"), col("text"))
       // the operator keys on the FULL path; project the basename only for
       // the oracle gate (the driver table is a single known file)
       // fp_sum is DECIMAL(38,0) (a 21-digit value at sf0.01) — emit it as a

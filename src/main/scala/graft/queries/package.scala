@@ -1,8 +1,9 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, unix_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 package object queries {
 
@@ -26,10 +27,66 @@ package object queries {
       oracle: Option[String],
       lifecycle: Boolean = false)
 
-  /** Parquet table loader for the driver-provided test tables. */
+  /** Parquet table loader for the driver-provided test tables.
+    *
+    * Spark infers a parquet table's schema with a one-task job on every
+    * `spark.read.parquet`, so `T` infers it once per version of a table
+    * and passes the recorded schema to every later read
+    * (`spark.read.schema(s).parquet`), which starts no job. Both reads
+    * build the same relation: Spark makes the data schema nullable either
+    * way.
+    *
+    * A version is the table path's recursive file listing (each file's
+    * qualified path, length and modification time; one listing covers a
+    * single pyarrow-written file and a Spark-written directory alike)
+    * plus the session's explicitly set `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` confs, which change what inference
+    * returns (`nanosAsLong` turns a TIMESTAMP(NANOS) column into BIGINT).
+    * A rewritten table lists differently and is inferred again, except a
+    * file replaced under the same name with the same length within the
+    * same modification-time tick. One entry is kept per path, a new
+    * version replacing the old, so the cache is bounded by the number of
+    * distinct table paths. A path that cannot be listed is read as
+    * before, so a missing table fails with Spark's own error.
+    */
   object T {
-    def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-      spark.read.parquet(s"$dir/$name.parquet")
+    private final case class Version(files: Seq[(String, Long, Long)],
+        confs: Seq[(String, String)])
+
+    private val schemas =
+      new java.util.concurrent.ConcurrentHashMap[String, (Version, StructType)]
+
+    def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+      val file = s"$dir/$name.parquet"
+      version(spark, file) match {
+        case None => spark.read.parquet(file)
+        case Some((key, v)) =>
+          Option(schemas.get(key)) match {
+            case Some((`v`, schema)) => spark.read.schema(schema).parquet(file)
+            case _ =>
+              val df = spark.read.parquet(file)
+              schemas.put(key, (v, df.schema))
+              df
+          }
+      }
+    }
+
+    /** (qualified table path, its version); None if it cannot be listed. */
+    private def version(spark: SparkSession, file: String): Option[(String, Version)] =
+      try {
+        val path = new Path(file)
+        val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val it = fs.listFiles(path, true)
+        val files = Seq.newBuilder[(String, Long, Long)]
+        while (it.hasNext) {
+          val f = it.next()
+          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+        }
+        Some((fs.makeQualified(path).toString, Version(files.result().sorted, confs.sorted)))
+      } catch { case _: java.io.IOException => None }
 
     /** events table with `ts` normalized to BIGINT epoch NANOSECONDS —
       * the engine-wide contract every ts consumer codes against

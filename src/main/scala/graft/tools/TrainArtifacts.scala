@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.queries.T
 
 /** Regenerates the PINNED trained artifacts inlined in
   * [[graft.queries.Pipeline]] (`IvfCentroids16`, `BpeMerges16` and their SQL
@@ -31,7 +32,7 @@ object TrainArtifacts {
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- IVF centroids: k = 16, seed 42 (trainCentroids defaults)
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = T(spark, dir, "embeddings")
     val cents = graft.operators.Similarity.trainCentroids(emb, k = 16)
       .orderBy(col("cid"))
       .collect()
@@ -47,7 +48,7 @@ object TrainArtifacts {
     }
 
     // ---- BPE merges: 16, learned from the documents word dictionary
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = T(spark, dir, "documents")
     val merges = graft.operators.Bpe.trainBpe(
       graft.operators.Bpe.wordCounts(docs, col("text")), numMerges = 16)
 

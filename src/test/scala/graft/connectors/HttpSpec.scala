@@ -97,4 +97,30 @@ class HttpSpec extends SparkSpec {
     rl2.acquire()
     assert((System.nanoTime() - t1) / 1000000L < 1000)
   }
+
+  test("withGet under a downstream sort fetches each row once: a fresh " +
+      "/flaky/1 key answers 503 to its first hit") {
+    val run = java.util.UUID.randomUUID()
+    val out = Http.withGet((1 to 12).toDF("id"),
+        concat(lit(s"$base/flaky/1/once-$run-"), col("id")))
+      .select($"id", $"resp.code").orderBy($"id").as[(Int, Int)].collect()
+    assert(out.toSeq === (1 to 12).map(i => (i, 503)))
+  }
+
+  test("the stand-in answers sequential requests without a Nagle stall: " +
+      "median of 20 /echo round trips under 20 ms") {
+    // a client of its own: one fresh keep-alive connection
+    val client = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    val ms = (1 to 20).map { i =>
+      val t0 = System.nanoTime()
+      val r = client.send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(s"$base/echo?i=$i")).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(r.statusCode() === 200 && r.body() === s"i=$i")
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    val median = (ms(9) + ms(10)) / 2
+    assert(median < 20.0, s"median ${median} ms over ${ms.mkString(", ")}")
+  }
 }

@@ -405,6 +405,22 @@ class KafkaWireSpec extends AnyFunSuite {
       assert(c.offsetsForTimes("ev", 600L) === Map(0 -> -1L, 1 -> 1L))
     } finally { b1.close(); b2.close() }
   }
+
+  test("round trips on one connection do not stall on Nagle: 20 fetches " +
+      "of one-record batches average well under 40 ms") {
+    val broker = new FakeBroker(Map(("ev", 0) -> Seq.tabulate(20)(i => 100L + i)),
+      batchSize = 1)
+    try {
+      val c = new KafkaWireClient("127.0.0.1", broker.port)
+      assert(c.fetchWindow("ev", Map(0 -> (0L, 20L))).size === 20) // warm-up
+      val t0 = System.nanoTime()
+      // one metadata round trip, then 20 fetches on the leader's socket
+      assert(c.fetchWindow("ev", Map(0 -> (0L, 20L))).map(_.offset) ===
+        (0L until 20L))
+      val perRoundTripMs = (System.nanoTime() - t0) / 1e6 / 21
+      assert(perRoundTripMs < 10.0, s"$perRoundTripMs ms per round trip")
+    } finally broker.close()
+  }
 }
 
 /** In-process Kafka broker stand-in for the control- and data-plane APIs.
@@ -509,6 +525,7 @@ final class FakeBroker(logs: Map[(String, Int), Seq[Long]],
 
   private def serve(s: Socket): Unit = {
     try {
+      s.setTcpNoDelay(true) // as a Kafka broker sets it
       val in = new DataInputStream(s.getInputStream)
       val out = new DataOutputStream(s.getOutputStream)
       // SASL state is per-connection, like a real broker's

@@ -103,4 +103,13 @@ class KvSpec extends SparkSpec {
     Kv.seed(f, Seq("a:1" -> "x", "a:2" -> "y", "b:1" -> "z"))
     assert(Kv.keys(spark, f, "a:*").as[String].collect() === Array("a:1", "a:2"))
   }
+
+  test("withSet5 NX under a downstream sort sets each key once: every row " +
+      "answers OK") {
+    val f = freshFactory("kv-nx-sorted")
+    val out = Kv.withSet5((1 to 12).toDF("id"), concat(lit("k:"), col("id")),
+        lit("v"), lit("NX"), lit(null).cast("string"), lit(0L), f, ret = "nx")
+      .select($"id", $"nx").orderBy($"id").as[(Int, String)].collect()
+    assert(out.toSeq === (1 to 12).map(i => (i, "OK")))
+  }
 }
